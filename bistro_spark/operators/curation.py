@@ -3895,6 +3895,13 @@ def step_read_plan_sql(
 # ----------------------------------------------- length-grouped batching ----
 
 
+def _batch_no(batch_size: int) -> Column:
+    """Batch index of a row within its bucket, by integer ``DIV`` as in
+    the DuckDB twin: a float ``/`` rounds once the within-bucket rank
+    passes 2^53."""
+    return F.expr(f"(rank - _off) DIV {int(batch_size)}")
+
+
 def bucketed_batches(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -3944,11 +3951,7 @@ def bucketed_batches(
     )
     return (
         ranked.join(F.broadcast(offs), "bucket_max")
-        .withColumn(
-            "batch_no",
-            ((F.col("rank") - F.col("_off")) / batch_size)
-            .cast("long"),
-        )
+        .withColumn("batch_no", _batch_no(batch_size))
         .groupBy("bucket_max", "batch_no")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_seqs"),

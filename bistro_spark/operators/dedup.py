@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from bistro_spark.session import local_frame
+
 P = 2_147_483_647  # 2^31-1 (Mersenne prime)
 A0, B0 = 2_654_435_761, 0x9E3779B9  # deterministic per-j coefficient bases
 
@@ -1411,7 +1413,8 @@ def _pairwise_mask_overlap(
     G*(G-1)/2 pair list against the histogram."""
     hist = keyed_masks.groupBy("mask").agg(F.count(F.lit(1)).alias("cnt"))
 
-    pairs = spark.createDataFrame(
+    pairs = local_frame(
+        spark,
         [
             (a, b, bit_of[a], bit_of[b])
             for ai, a in enumerate(groups)

@@ -47,6 +47,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from bistro_spark.session import local_frame
+
 
 def preference_pairs(
     df: DataFrame,
@@ -63,11 +65,12 @@ def preference_pairs(
 
     ``best_vs_rest``: chosen is the per-prompt (reward DESC, cand ASC)
     argmax; one row per losing candidate that clears the margin.
-    ``all_pairs``: every ordered pair with margin ≥ ``min_margin``;
-    equal-reward candidates never pair (no preference either way), so
-    the pair set is a strict half-matrix and chosen/rejected labels are
-    unambiguous. NULL rewards raise loudly — under a numeric window max
-    or a `>` join they would silently vanish from one side.
+    ``all_pairs``: every ordered pair of distinct candidates with margin
+    ≥ ``min_margin``; at the default margin equal-reward candidates never
+    pair (no preference either way), so the pair set is a strict
+    half-matrix and chosen/rejected labels are unambiguous. NULL rewards
+    raise loudly — under a numeric window max or a `>` join they would
+    silently vanish from one side.
     """
     if df.filter(F.col(reward_col).isNull()).limit(1).count():
         raise ValueError("preference_pairs: NULL reward")
@@ -115,7 +118,10 @@ def preference_pairs(
         )
         return (
             chosen.join(base, on="prompt")
-            .filter(F.col("c_r") - F.col("r") >= min_margin)
+            .filter(
+                (F.col("cand") != F.col("c_id"))
+                & (F.col("c_r") - F.col("r") >= min_margin)
+            )
             .select(*out_cols)
         )
     raise ValueError(f"preference_pairs: unknown policy {policy!r}")
@@ -166,7 +172,8 @@ def preference_pairs_sql(
                  b.r AS rejected_reward,
                  a.r - b.r AS margin
           FROM c a JOIN c b
-            ON a.prompt = b.prompt AND a.r - b.r >= {min_margin}
+            ON a.prompt = b.prompt AND a.cand <> b.cand
+               AND a.r - b.r >= {min_margin}
         """
     raise ValueError(f"unknown policy {policy!r}")
 
@@ -529,7 +536,8 @@ def bt_ratings(
         max_items=max_items,
     )
     item_type = dict(pairs.dtypes)[winner_col]
-    return pairs.sparkSession.createDataFrame(
+    return local_frame(
+        pairs.sparkSession,
         out,
         f"item {item_type}, n_wins long, n_losses long, rating long, "
         "rank long",

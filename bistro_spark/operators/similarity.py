@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from bistro_spark.session import local_frame
+
 
 
 def cosine_topk(
@@ -259,7 +261,8 @@ def ivf_topk(
         for lst in np.argsort(d)[:n_probe]:
             probe_rows.append((r[query_id_col], int(lst)))
     q_t = dict(queries.dtypes)[query_id_col]
-    probes = corpus.sparkSession.createDataFrame(
+    probes = local_frame(
+        corpus.sparkSession,
         probe_rows, f"{query_id_col} {q_t}, _list int"
     )
 

@@ -39,6 +39,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from bistro_spark.session import local_frame
+
 # ------------------------------------------------- fill-in-the-middle ----
 
 
@@ -329,7 +331,8 @@ def curriculum_schedule(
 
     n_rows = df.count()
     if n_rows == 0:
-        return df.sparkSession.createDataFrame(
+        return local_frame(
+            df.sparkSession,
             [],
             "step long, n_docs long, sig_sum long, sig_min long,"
             " sig_max long",

@@ -53,6 +53,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bistro_spark.operators.bpe import word_frequencies
+from bistro_spark.session import local_frame
 
 BOW = "▁"  # SentencePiece-style word-boundary marker ("▁")
 UNK_SCORE = -10_000_000  # integer fallback score for an out-of-vocab char
@@ -249,7 +250,7 @@ def _expected_counts(
                 }
             )
 
-    wf_df = spark.createDataFrame(wf, "w string, n long").repartition(n_parts)
+    wf_df = local_frame(spark, wf, "w string, n long").repartition(n_parts)
     rows = (
         wf_df.mapInPandas(estep, "piece string, e long")
         .groupBy("piece")

@@ -10,13 +10,24 @@ pre-tokenized sequences, skewed ``source`` key, Arrow-heavy UDF paths):
   512-element int32 token arrays don't blow executor memory,
 - broadcast threshold high enough that dimension tables (sources, date
   ranges) always broadcast instead of shuffling the fact side.
+
+Driver-side rows enter a plan only through :func:`local_frame`, as a JVM
+``LocalRelation``.
 """
 
 from __future__ import annotations
 
 import os
+from datetime import timezone
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    MapType,
+    StructType,
+    TimestampType,
+)
 
 
 def get_spark(
@@ -65,3 +76,67 @@ def _parse_local_cores(master: str) -> int:
         except ValueError:
             return 8
     return 32
+
+
+def local_frame(
+    spark: SparkSession, rows, schema: str | StructType
+) -> DataFrame:
+    """Driver-side rows as a DataFrame over a JVM ``LocalRelation``.
+
+    A Python list handed to ``createDataFrame`` becomes a Python-RDD scan,
+    so every job that reads it starts Python workers just to produce a
+    constant. An Arrow table becomes a ``LocalRelation`` instead: the rows
+    travel with the plan and are scanned inside the JVM, whatever
+    ``spark.sql.execution.arrow.pyspark.enabled`` says, empty input
+    included.
+
+    ``rows`` are tuples or ``Row``s (positional) or dicts (by field name);
+    ``schema`` is a DDL string or a ``StructType``. Naive ``datetime``s in
+    timestamp columns are read as process-local time, as the Python-list
+    path reads them (``collect()`` hands timestamps back that way).
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if not isinstance(schema, StructType):
+        schema = StructType.fromDDL(schema)
+    names = schema.names
+    table_rows = []
+    for r in rows:
+        r = tuple(r.get(n) for n in names) if isinstance(r, dict) else tuple(r)
+        if len(r) != len(names):
+            raise ValueError(
+                f"local_frame: row of {len(r)} values for {len(names)} columns"
+            )
+        table_rows.append(r)
+    columns = list(zip(*table_rows)) or [()] * len(names)
+    arrow = to_arrow_schema(schema)
+    arrays = []
+    for col, f, af in zip(columns, schema.fields, arrow):
+        if "timestamp" in f.dataType.simpleString():
+            col = [_instants(v, f.dataType) for v in col]
+        arrays.append(pa.array(col, type=af.type))
+    table = pa.Table.from_arrays(arrays, schema=arrow)
+    return spark.createDataFrame(table, schema)
+
+
+def _instants(v, dt: DataType):
+    """``v`` with every naive datetime under ``dt`` read as process-local
+    time and pinned to a UTC instant."""
+    if v is None:
+        return None
+    if isinstance(dt, TimestampType):
+        return v.astimezone(timezone.utc) if v.tzinfo is None else v
+    if isinstance(dt, ArrayType):
+        return [_instants(x, dt.elementType) for x in v]
+    if isinstance(dt, MapType):
+        items = v.items() if isinstance(v, dict) else v
+        return [
+            (_instants(k, dt.keyType), _instants(x, dt.valueType))
+            for k, x in items
+        ]
+    if isinstance(dt, StructType):
+        if isinstance(v, dict):
+            v = [v.get(n) for n in dt.names]
+        return {f.name: _instants(x, f.dataType) for f, x in zip(dt.fields, v)}
+    return v

@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bistro_spark.session import local_frame
+
 VOCAB = 50257
 MAX_LEN = 512
 MIX = 2654435761  # Knuth multiplicative hash constant
@@ -135,7 +137,9 @@ def sources_dim(spark: SparkSession) -> DataFrame:
 
     Mirrors the reference's GROUPS fixture (Tests.java link/accu cases):
     includes a group that receives no facts ('archive') so empty-group
-    defaults are exercised.
+    defaults are exercised. Built with :func:`local_frame`, so it is a JVM
+    ``LocalRelation``: queries that link to it scan it without Python
+    workers.
     """
     rows = [
         ("web", 1.0, "crawl"),
@@ -144,4 +148,4 @@ def sources_dim(spark: SparkSession) -> DataFrame:
         ("wiki", 1.5, "dump"),
         ("archive", 9.9, "cold"),  # receives no facts
     ]
-    return spark.createDataFrame(rows, "source string, weight double, origin string")
+    return local_frame(spark, rows, "source string, weight double, origin string")

@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from bistro_spark.operators.text import bm25_apply, bm25_stats
+from bistro_spark.session import local_frame
 
 
 class StreamingBM25:
@@ -67,7 +68,7 @@ class StreamingBM25:
             ["_n_docs long", "_sum_dl long"]
             + [f"_df_{i} long" for i in range(len(self.terms))]
         )
-        return self.spark.createDataFrame([row], schema)
+        return local_frame(self.spark, [row], schema)
 
     def process_batch(self, batch_df: DataFrame) -> DataFrame:
         self.batches_seen += 1

@@ -35,6 +35,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from bistro_spark.session import local_frame
+
 
 class StreamingUpsertStore:
     """Feed per-trigger changelog deltas (rows: key, seq, op, payload...)
@@ -129,4 +131,4 @@ class StreamingUpsertStore:
             for k, v in sorted(self._state.items())
             if v[1] != self.delete_op
         ]
-        return self.spark.createDataFrame(rows, self._out_schema)
+        return local_frame(self.spark, rows, self._out_schema)

@@ -27,6 +27,7 @@ from bistro_spark.operators.similarity import (
     _int_quantize_expr,
     centroid_shift,
 )
+from bistro_spark.session import local_frame
 
 
 class StreamingCentroidShiftMonitor:
@@ -146,7 +147,8 @@ class StreamingCentroidShiftMonitor:
                     decimal.Decimal(num) if num is not None else None,
                 )
             )
-        df = self.spark.createDataFrame(
+        df = local_frame(
+            self.spark,
             rows,
             f"{self.label_col} int, n_old long, n_new long, "
             "shift2_num decimal(38,0)",

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bistro_spark.caching import pin, release
+from bistro_spark.session import local_frame
 
 
 class StreamingCepMatcher:
@@ -249,5 +250,5 @@ class StreamingCepMatcher:
                 f"{self.key} bigint, a_id bigint, a_ts timestamp, "
                 "b_id bigint, b_ts timestamp, gap_us bigint"
             )
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, [], schema)
         return emit

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from bistro_spark.operators.similarity import contrastive_topk
+from bistro_spark.session import local_frame
 
 
 class StreamingContrastiveMiner:
@@ -119,7 +120,8 @@ class StreamingContrastiveMiner:
                 sorted((d, v, lb) for v, (d, lb) in m.items()), 1
             ):
                 rows.append((q, kind, rank, v, lb, d))
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             rows,
             f"query_id long, kind string, rank int, {self.id_col} long, "
             f"{self.label_col} int, l2_sq long",

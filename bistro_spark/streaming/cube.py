@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bistro_spark.caching import pin, release
+from bistro_spark.session import local_frame
 
 _ALL = "(all)"
 
@@ -80,7 +81,8 @@ class StreamingCubeMonitor:
         g = (
             self._grid
             if self._grid is not None
-            else self.spark.createDataFrame(
+            else local_frame(
+                self.spark,
                 [], f"{d1} string, {d2} string, n_rows long, total_len long"
             )
         )
@@ -174,7 +176,8 @@ class StreamingHeatmap:
         g = (
             self._grid
             if self._grid is not None
-            else self.spark.createDataFrame(
+            else local_frame(
+                self.spark,
                 [], "dow long, hour long, n_events long, _sum decimal(30,6)"
             )
         )

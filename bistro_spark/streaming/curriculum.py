@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from bistro_spark.session import local_frame
+
 
 class StreamingCurriculumMonitor:
     """Feed per-trigger deltas to :meth:`process_batch`; read the live
@@ -90,7 +92,8 @@ class StreamingCurriculumMonitor:
                 "StreamingCurriculumMonitor: rank*n_steps would overflow "
                 "BIGINT; reduce n_steps"
             )
-        vc = self.spark.createDataFrame(
+        vc = local_frame(
+            self.spark,
             sorted(self._hist.items()), "v long, c long"
         )
         w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, 0)

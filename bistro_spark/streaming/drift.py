@@ -37,6 +37,7 @@ from bistro_spark.operators.drift import (
     length_counts,
     length_drift_from_counts,
 )
+from bistro_spark.session import local_frame
 
 
 class StreamingDriftMonitor:
@@ -145,8 +146,8 @@ class StreamingKSMonitor:
         g = (
             self._grid
             if self._grid is not None
-            else self.spark.createDataFrame(
-                [], f"{self.group_col} string, _len long, _c long"
+            else local_frame(
+                self.spark, [], f"{self.group_col} string, _len long, _c long"
             )
         )
         return ks_from_grid(g, self.group_col)

@@ -147,8 +147,12 @@ class IncrementalRunner:
             retained = buf.filter(keep) if keep is not None else buf
             # localCheckpoint truncates the ever-growing union lineage —
             # without it plan depth grows per batch (the classic
-            # iterative-union pitfall).
-            self._buffer, ids = pin(retained)
+            # iterative-union pitfall). The union also adds the delta's
+            # partitions each batch; coalesce (a no-op at or below the
+            # target) keeps the buffer at one partition per core.
+            self._buffer, ids = pin(
+                retained.coalesce(self.spark.sparkContext.defaultParallelism)
+            )
             new_ids |= ids
             if self._unfold:
                 from functools import reduce

@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bistro_spark.session import local_frame
+
 
 class StreamingLatenessMonitor:
     """Feed per-trigger deltas to :meth:`process_batch`; read the live
@@ -100,7 +102,8 @@ class StreamingLatenessMonitor:
         rows = [
             (d, self._n_events, self._late[d]) for d in self.delays_s
         ]
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             rows, "delay_s long, n_events long, n_late long"
         ).select(
             "delay_s",

@@ -25,6 +25,8 @@ import hashlib
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bistro_spark.session import local_frame
+
 
 class StreamingLeakMonitor:
     """Feed per-trigger deltas of (id_a, id_b) near-dup edges to
@@ -110,7 +112,8 @@ class StreamingLeakMonitor:
         rows = [
             (lo, hi, n, lo != hi) for (lo, hi), n in cells.items()
         ]
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             rows,
             "split_lo string, split_hi string, n_pairs long, "
             "is_leak boolean",

@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bistro_spark.caching import pin, release
+from bistro_spark.session import local_frame
 
 
 def _ts(us: int):
@@ -176,7 +177,8 @@ class StreamingCompactionMonitor:
             (p, s[2], s[3], s[0] + 1, s[2] - (s[0] + 1), s[4])
             for p, s in sorted(self._state.items())
         ]
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             rows,
             f"{self.partition_col} string, n_files long, n_small_files long, "
             "n_files_after long, files_removed long, bytes_total long",
@@ -289,7 +291,8 @@ class StreamingExpiryMonitor:
                 else:
                     keep.append((ts_us, sid))
             self._live[t] = keep
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             expired_rows,
             f"{self.table_col} string, {self.snapshot_col} long, "
             f"{self.ts_col} timestamp, recency_rank long, status string",
@@ -312,7 +315,8 @@ class StreamingExpiryMonitor:
                     else "expired"  # unreachable: expired rows left state
                 )
                 rows.append((t, sid, _ts(ts_us), rank, status))
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             rows,
             f"{self.table_col} string, {self.snapshot_col} long, "
             f"{self.ts_col} timestamp, recency_rank long, status string",
@@ -483,7 +487,8 @@ class StreamingOrphanTracker:
             (t, fid, st[0], st[1], st[1] == 0)
             for (t, fid), st in sorted(self._files.items())
         ]
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             rows,
             f"{self.table_col} string, {self.file_col} long, "
             "n_refs long, n_live_refs long, deletable boolean",
@@ -526,7 +531,8 @@ def tracker_maintenance_report(tracker: "StreamingOrphanTracker") -> DataFrame:
         )
         for t in sorted(n_snaps)
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         f"{tbl} string, n_snapshots long, n_expired long, n_files long, "
         "n_deletable long, n_refs long, n_live_refs long",

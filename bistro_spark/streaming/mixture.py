@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bistro_spark.session import local_frame
+
 
 class StreamingMixtureScheduler:
     """Feed per-trigger corpus deltas (any frame with a source column) to
@@ -91,7 +93,8 @@ class StreamingMixtureScheduler:
                 cum = q * t + (r * t) // n_total
                 prev = q * (t - 1) + (r * (t - 1)) // n_total
                 out.append((t, s, cum - prev, cum))
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             out,
             f"step long, {self.source_col} string, n_seqs long, "
             "cum_seqs long",

@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bistro_spark.caching import pin, release
+from bistro_spark.session import local_frame
 
 
 def streaming_encode_gate(
@@ -249,8 +250,8 @@ class StreamingBinidxWriter:
         cur_rows = [
             (s, v[0], v[1]) for s, v in self._state.items()
         ] or [(-1, 0, 0)]
-        cursors = self.spark.createDataFrame(
-            cur_rows, "shard long, _cidx long, _coff long"
+        cursors = local_frame(
+            self.spark, cur_rows, "shard long, _cidx long, _coff long"
         )
         out, out_ids = pin(
             delta.join(F.broadcast(cursors), "shard", "left")
@@ -384,8 +385,8 @@ class StreamingConcatChunker:
             ).cast("long"),
         )
         cur_rows = list(self._state.items()) or [(-1, 0)]
-        cursors = self.spark.createDataFrame(
-            cur_rows, "shard int, _coff long"
+        cursors = local_frame(
+            self.spark, cur_rows, "shard int, _coff long"
         )
         laid = delta.join(F.broadcast(cursors), "shard", "left").withColumn(
             "_start", F.col("_dstart") + F.coalesce("_coff", F.lit(0))
@@ -524,8 +525,8 @@ class StreamingChunkReadPlanner:
         cur_rows = [
             (s, v[0], v[1]) for s, v in self._state.items()
         ] or [(-1, 0, 0)]
-        cursors = self.spark.createDataFrame(
-            cur_rows, "shard int, _coff long, _cboff long"
+        cursors = local_frame(
+            self.spark, cur_rows, "shard int, _coff long, _cboff long"
         )
         laid = (
             delta.join(F.broadcast(cursors), "shard", "left")
@@ -713,7 +714,8 @@ class StreamingSftPackMonitor:
             (s, p, n, pl, sup)
             for (s, p), (n, pl, sup) in self._packs.items()
         ]
-        df = self.spark.createDataFrame(
+        df = local_frame(
+            self.spark,
             rows,
             "shard int, pack_id long, n_seqs long, payload_tokens long, "
             "supervised_tokens long",
@@ -795,7 +797,8 @@ class StreamingSftCardMonitor:
             (g, nd, nt, pl, sup)
             for g, (nd, nt, pl, sup) in self._groups.items()
         ]
-        df = self.spark.createDataFrame(
+        df = local_frame(
+            self.spark,
             rows,
             f"{self.group_col} string, n_dialogs long, n_turns long, "
             "payload_tokens long, supervised_tokens long",

@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bistro_spark.session import local_frame
+
 
 class StreamingPreferenceMiner:
     """Feed per-trigger deltas of (prompt, cand, reward) rows to
@@ -128,7 +130,8 @@ class StreamingPreferenceMiner:
             for c, r in m.items():
                 if c != bc and br - r >= self.min_margin:
                     rows.append((p, bc, c, br, r, br - r))
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             rows,
             f"{self.prompt_col} long, chosen long, rejected long, "
             "chosen_reward long, rejected_reward long, margin long",
@@ -155,7 +158,8 @@ class StreamingPreferenceMiner:
                         else None,
                     )
                 )
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             rows,
             f"{self.prompt_col} long, {self.cand_col} long, reward long, "
             "rank long, n_cands long, norm_ppm long",
@@ -189,7 +193,8 @@ class StreamingPreferenceMiner:
                             ((rk - 1) * 1_000_000) // (n - 1),
                         )
                     )
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             rows,
             f"{self.prompt_col} long, chosen long, rejected long, "
             "chosen_reward long, rejected_reward long, margin long, "
@@ -214,7 +219,8 @@ class StreamingPreferenceMiner:
                     br - min(m.values()),
                 )
             )
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             rows,
             f"{self.prompt_col} long, n_cands long, best_reward long, "
             "second_reward long, gap long, reward_range long",

@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from bistro_spark.session import local_frame
+
 
 class StreamingQuantileMonitor:
     """Feed per-trigger deltas to :meth:`process_batch`; read the live
@@ -74,7 +76,8 @@ class StreamingQuantileMonitor:
         """Engine-computed from the integer histogram so rows hash-match
         batch ``histogram_quantiles``."""
         assert self._hist, "no rows absorbed yet"
-        vc = self.spark.createDataFrame(
+        vc = local_frame(
+            self.spark,
             sorted(self._hist.items()), "v long, c long"
         )
         w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, 0)

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bistro_spark.operators.preference import bt_fixpoint
+from bistro_spark.session import local_frame
 
 
 class StreamingBTMonitor:
@@ -105,7 +106,8 @@ class StreamingBTMonitor:
             (lo, hi, g, wl, g - wl, (wl * 1_000_000) // g)
             for (lo, hi), (g, wl) in cells.items()
         ]
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             rows,
             f"item_lo {self.item_type}, item_hi {self.item_type}, "
             "games long, wins_lo long, wins_hi long, "
@@ -120,7 +122,8 @@ class StreamingBTMonitor:
             iters=self.iters,
             max_items=self.max_items,
         )
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             out,
             f"item {self.item_type}, n_wins long, n_losses long, "
             "rating long, rank long",

@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bistro_spark.session import local_frame
+
 
 class StreamingBottomKSampler:
     """Feed per-trigger deltas to :meth:`process_batch`; read the live
@@ -76,7 +78,7 @@ class StreamingBottomKSampler:
         """The live sample — column order matches the batch operator
         (id, keeps, sample_key)."""
         assert self._schema is not None, "no batch processed yet"
-        df = self.spark.createDataFrame(self._best, self._schema)
+        df = local_frame(self.spark, self._best, self._schema)
         return df.select(self.id_col, *self.keep_cols, "sample_key")
 
 
@@ -161,7 +163,8 @@ class StreamingStratifiedSampler:
             f", {c} long" if c == "n_chars" else f", {c} string"
             for c in self.keep_cols
         )
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             rows,
             f"{self.strata_col} string, {self.id_col} long{keeps}, "
             "sample_key string, rk long",

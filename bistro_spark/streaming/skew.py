@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bistro_spark.session import local_frame
+
 
 class StreamingSkewMonitor:
     """Feed per-trigger deltas to :meth:`process_batch`; read the live
@@ -86,7 +88,8 @@ class StreamingSkewMonitor:
             if isinstance(next(iter(self._counts)), str)
             else "long"
         )
-        base = self.spark.createDataFrame(
+        base = local_frame(
+            self.spark,
             sorted(self._counts.items()),
             f"{self.key_col} {ktype}, n long",
         )

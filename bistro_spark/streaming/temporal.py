@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window
 
 from bistro_spark.caching import pin, release
+from bistro_spark.session import local_frame
 
 _SUMT = "decimal(30,6)"
 
@@ -80,7 +81,8 @@ class StreamingTransitionCounter:
         grid = (
             self._grid
             if self._grid is not None
-            else self.spark.createDataFrame(
+            else local_frame(
+                self.spark,
                 [], "from_type string, to_type string, n_transitions long"
             )
         )
@@ -264,7 +266,8 @@ class StreamingSessionizer:
         st = (
             self._open
             if self._open is not None
-            else self.spark.createDataFrame(
+            else local_frame(
+                self.spark,
                 [],
                 f"{k} string, session_idx long, session_start timestamp,"
                 f" last_ts timestamp, n_events long, sum_dec {_SUMT}",
@@ -380,7 +383,8 @@ class StreamingSessionizer:
         """Emit every still-open session (end-of-stream)."""
         if self._open is None:
             return self._emit(
-                self.spark.createDataFrame(
+                local_frame(
+                    self.spark,
                     [],
                     f"{self.key_col} string, session_idx long,"
                     " session_start timestamp, last_ts timestamp,"
@@ -459,7 +463,8 @@ class StreamingZScorer:
         st = (
             self._stats
             if self._stats is not None
-            else self.spark.createDataFrame(
+            else local_frame(
+                self.spark,
                 [], "k long, _n0 long, _sx0 decimal(38,6), _sxx0 decimal(38,12)"
             )
             .withColumnRenamed("k", k)
@@ -650,7 +655,8 @@ class StreamingCohortTracker:
 
     def report(self) -> DataFrame:
         if self._grid is None:
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [],
                 "cohort_week long, week_index long, n_active long,"
                 " cohort_size long, retention double",

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bistro_spark.session import local_frame
+
 
 class StreamingTruncationMonitor:
     """Feed per-trigger deltas of rows carrying ``len_col`` to
@@ -105,7 +107,8 @@ class StreamingTruncationMonitor:
             )
             for L in self.lengths
         ]
-        df = self.spark.createDataFrame(
+        df = local_frame(
+            self.spark,
             rows,
             "context_len long, n_truncated long, tokens_lost long, "
             "total_docs long, total_tokens long",

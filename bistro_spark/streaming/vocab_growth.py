@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bistro_spark.session import local_frame
+
 
 class StreamingVocabGrowth:
     """Feed per-trigger document deltas to :meth:`process_batch`; read
@@ -118,7 +120,8 @@ class StreamingVocabGrowth:
         for fb in self._first.values():
             new[fb] = new.get(fb, 0) + 1
         buckets = sorted(set(self._tok) | set(new))
-        grid = self.spark.createDataFrame(
+        grid = local_frame(
+            self.spark,
             [
                 (b, self._tok.get(b, 0), new.get(b, 0))
                 for b in buckets

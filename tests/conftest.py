@@ -3,6 +3,8 @@
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from bistro_spark.session import get_spark
@@ -10,7 +12,8 @@ from bistro_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(master="local[8]", app_name="bistro_spark_tests",
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "8")
+    s = get_spark(master=f"local[{cpus}]", app_name="bistro_spark_tests",
                   shuffle_partitions=8)
     s.sparkContext.setLogLevel("ERROR")
     yield s

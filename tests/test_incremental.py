@@ -245,3 +245,42 @@ def test_incremental_unfold_auto_fallback(spark):
         IncrementalRunner(
             spark, lambda b: b, ["src"], AGGS, retention_count=10, unfold=True
         )
+
+
+def test_incremental_buffer_partitions_bounded(spark):
+    """The retained buffer is coalesced before each pin: over 24 one-
+    partition deltas it never holds more partitions than there are cores,
+    and the result still equals recompute over the retained rows."""
+    n_deltas, size = 24, 10
+    full = token_table_fast(spark, n_deltas * size).cache()
+    runner = IncrementalRunner(
+        spark,
+        lambda b: prepare_facts(spark, b),
+        ["src"],
+        AGGS,
+        retention_count=35,
+    )
+    cores = spark.sparkContext.defaultParallelism
+    for i in range(n_deltas):
+        lo = i * size
+        runner.add_batch(
+            full.filter(
+                (F.col("batch_ofs") >= lo) & (F.col("batch_ofs") < lo + size)
+            ).coalesce(1)
+        )
+        assert runner.window().rdd.getNumPartitions() <= cores
+    oracle = {
+        r["src"]: r.asDict()
+        for r in prepare_facts(
+            spark, full.filter(F.col("batch_ofs") >= n_deltas * size - 35)
+        )
+        .groupBy("src")
+        .agg(
+            F.expr("count(*)").alias("n_seq"),
+            F.expr("sum(n_tok_calc)").alias("sum_tok"),
+            F.expr("max(n_tok_calc)").alias("max_tok"),
+        )
+        .collect()
+    }
+    assert _res(runner) == oracle
+    full.unpersist()

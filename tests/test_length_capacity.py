@@ -8,6 +8,7 @@ import duckdb
 from pyspark.sql import functions as F
 
 from bistro_spark.operators.curation import (
+    _batch_no,
     bucketed_batches,
     bucketed_batches_sql,
     length_buckets,
@@ -214,6 +215,16 @@ def test_bucketed_batches_sql_twin(spark):
         ).fetchall()
     )
     assert got == duck
+
+
+def test_bucketed_batches_batch_no_exact_past_2_53(spark):
+    """batch_no is integer DIV: at a within-bucket rank of 2^53 + 7 a
+    float divide rounds the rank up to 2^53 + 8 and lands one batch
+    late."""
+    rank = 2**53 + 7
+    df = spark.createDataFrame([(rank, 0)], "rank long, _off long")
+    got = df.select(_batch_no(8).alias("b")).first()["b"]
+    assert got == rank // 8 == 2**50
 
 
 def test_bucketed_batches_empty(spark):

@@ -128,6 +128,26 @@ def test_min_margin_gate(spark):
     }
 
 
+def test_all_pairs_min_margin_zero_has_no_self_pairs(spark):
+    """At min_margin=0 equal-reward candidates pair both ways, but no
+    candidate pairs with itself, on either engine."""
+    base = "SELECT prompt_id, cand_id, reward FROM cands"
+    got = sorted(
+        tuple(r)
+        for r in preference_pairs(
+            _cands_df(spark), policy="all_pairs", min_margin=0
+        ).collect()
+    )
+    duck = sorted(
+        _duck_rows(preference_pairs_sql(base, policy="all_pairs", min_margin=0))
+    )
+    assert got == duck
+    pairs = {(r[1], r[2]) for r in got}
+    assert not any(c == r for c, r in pairs)
+    assert {(20, 21), (21, 20), (40, 41), (41, 40)} <= pairs
+    assert not any(r[0] == 3 for r in got)  # single candidate: no pair
+
+
 # ------------------------------------------------------ preference_stats --
 
 
