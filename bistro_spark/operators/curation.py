@@ -2794,8 +2794,26 @@ def mixture_schedule(
     sequence explode — the output is the #sources x n_steps grid, never
     corpus-sized, and there is no per-step shuffle.
     """
+    return mixture_schedule_from_counts(
+        mixture_counts(df, source_col), source_col, n_steps, batch_size
+    )
+
+
+def mixture_counts(df: DataFrame, source_col: str = "source") -> DataFrame:
+    """The partials of :func:`mixture_schedule`: (source, n) row counts,
+    additive across batches."""
+    return df.groupBy(source_col).agg(F.count("*").cast("long").alias("n"))
+
+
+def mixture_schedule_from_counts(
+    c: DataFrame,
+    source_col: str = "source",
+    n_steps: int = 100,
+    batch_size: int = 1024,
+) -> DataFrame:
+    """The finalizer of :func:`mixture_schedule` over a
+    :func:`mixture_counts` grid."""
     t_, b_ = int(n_steps), int(batch_size)
-    c = df.groupBy(source_col).agg(F.count("*").cast("long").alias("n"))
     tot = c.agg(F.sum("n").cast("long").alias("n_total"))
     qr = c.crossJoin(F.broadcast(tot)).select(
         source_col,
@@ -3664,7 +3682,7 @@ def mixture_manifest(
     the semantics (the binidx argument).
     """
     t_, b_ = int(n_steps), int(batch_size)
-    c = df.groupBy(source_col).agg(F.count("*").cast("long").alias("n"))
+    c = mixture_counts(df, source_col)
     tot = c.agg(F.sum("n").cast("long").alias("n_total"))
     qr = c.crossJoin(F.broadcast(tot)).select(
         source_col,
@@ -4033,6 +4051,18 @@ def context_truncation_sweep(
 
     Exact integers throughout; frac_lost is the one float, rounded 9.
     """
+    return context_truncation_sweep_from_counts(
+        truncation_counts(df, len_col, lengths), lengths
+    )
+
+
+def truncation_counts(
+    df: DataFrame,
+    len_col: str = "n_tok",
+    lengths: tuple[int, ...] = (128, 256, 512, 1024),
+) -> DataFrame:
+    """The partials of :func:`context_truncation_sweep`: one row of
+    additive sums (total_docs, total_tokens, tr_<L>, lost_<L> per L)."""
     n = F.col(len_col).cast("long")
     aggs = [
         F.count(F.lit(1)).cast("long").alias("total_docs"),
@@ -4049,7 +4079,14 @@ def context_truncation_sweep(
             .cast("long")
             .alias(f"lost_{int(L)}")
         )
-    row = df.agg(*aggs)
+    return df.agg(*aggs)
+
+
+def context_truncation_sweep_from_counts(
+    row: DataFrame, lengths: tuple[int, ...] = (128, 256, 512, 1024)
+) -> DataFrame:
+    """The finalizer of :func:`context_truncation_sweep`: stack a
+    :func:`truncation_counts` row to one row per L, plus frac_lost."""
     stack = ", ".join(
         f"{int(L)}L, tr_{int(L)}, lost_{int(L)}" for L in lengths
     )

@@ -1273,11 +1273,26 @@ def histogram_quantiles(
     is the smallest v whose cumulative count reaches ceil(q·N); n_le is
     that cumulative count (ties included).
     """
-    vc = (
+    return histogram_quantiles_from_counts(
+        histogram_counts(df, value_col), quantiles
+    )
+
+
+def histogram_counts(df: DataFrame, value_col: str = "n_chars") -> DataFrame:
+    """The partials of :func:`histogram_quantiles`: the (v, c) value-domain
+    histogram, additive across batches."""
+    return (
         df.select(F.col(value_col).cast("long").alias("v"))
         .groupBy("v")
         .agg(F.count("*").cast("long").alias("c"))
     )
+
+
+def histogram_quantiles_from_counts(
+    vc: DataFrame, quantiles: tuple[float, ...] = (0.25, 0.5, 0.9, 0.99)
+) -> DataFrame:
+    """The finalizer of :func:`histogram_quantiles` over a
+    :func:`histogram_counts` grid."""
     w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, 0)
     grid = vc.select(
         "v", "c", F.sum("c").over(w).cast("long").alias("cum")

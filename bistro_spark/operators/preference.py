@@ -525,11 +525,20 @@ def bt_ratings(
     w = pairs.select(
         F.col(winner_col).alias("a"), F.col(loser_col).alias("b")
     )
+    # more than max_items² distinct (winner, loser) cells imply more than
+    # max_items items: refuse before collecting the rest of the grid
+    cap = int(max_items) ** 2
     grid = (
         w.groupBy("a", "b")
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
+        .limit(cap + 1)
         .collect()
     )
+    if len(grid) > cap:
+        raise ValueError(
+            f"bt_ratings: more than {cap} (winner, loser) cells, so more "
+            f"than max_items={max_items} items"
+        )
     out = bt_fixpoint(
         [(r["a"], r["b"], r["n"]) for r in grid],
         iters=iters,

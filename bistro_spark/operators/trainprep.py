@@ -984,6 +984,19 @@ def sft_corpus_stats(
 
     Scale: one projection + one partial-agg shuffle on the group key;
     output is groups-sized."""
+    return sft_corpus_stats_from_counts(
+        sft_corpus_counts(df, group_col, id_col, text_col), group_col
+    )
+
+
+def sft_corpus_counts(
+    df: DataFrame,
+    group_col: str = "source",
+    id_col: str = "doc_id",
+    text_col: str = "text",
+) -> DataFrame:
+    """The partials of :func:`sft_corpus_stats`: per group, the four
+    additive BIGINT totals."""
     wrd = F.filter(
         F.split(F.col(text_col), " "), lambda x: x != F.lit("")
     )
@@ -997,7 +1010,7 @@ def sft_corpus_stats(
         "WHEN 3 THEN ((2 * _n) DIV 3) - (_n DIV 3) "
         "ELSE ((_n DIV 2) - (_n DIV 4)) + (_n - ((3 * _n) DIV 4)) END"
     )
-    agg = d.select("_g", "_n", "_k", n_sup.alias("_s")).groupBy(
+    return d.select("_g", "_n", "_k", n_sup.alias("_s")).groupBy(
         F.col("_g").alias(group_col)
     ).agg(
         F.count(F.lit(1)).cast("long").alias("n_dialogs"),
@@ -1007,6 +1020,13 @@ def sft_corpus_stats(
         ),
         F.sum("_s").cast("long").alias("supervised_tokens"),
     )
+
+
+def sft_corpus_stats_from_counts(
+    agg: DataFrame, group_col: str = "source"
+) -> DataFrame:
+    """The finalizer of :func:`sft_corpus_stats` over a
+    :func:`sft_corpus_counts` grid: the two rounded fractions."""
     return agg.select(
         group_col,
         "n_dialogs",

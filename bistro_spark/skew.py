@@ -73,8 +73,25 @@ def skew_report(
     exact integer math: ceil(n·K/N) = (n·K + N − 1) DIV N, with the
     uniform multiple also reported as a rounded double for humans.
     """
+    return skew_report_from_counts(
+        skew_counts(df, key_col, weight_col), key_col, hot_multiple
+    )
+
+
+def skew_counts(
+    df: DataFrame, key_col: str, weight_col: str | None = None
+) -> DataFrame:
+    """The partials of :func:`skew_report`: (key, n) load per key, additive
+    across batches."""
     w = F.count("*") if weight_col is None else F.sum(weight_col)
-    per_key = df.groupBy(key_col).agg(w.cast("long").alias("n"))
+    return df.groupBy(key_col).agg(w.cast("long").alias("n"))
+
+
+def skew_report_from_counts(
+    per_key: DataFrame, key_col: str, hot_multiple: float = 2.0
+) -> DataFrame:
+    """The finalizer of :func:`skew_report` over a :func:`skew_counts`
+    grid."""
     tot = per_key.agg(
         F.sum("n").cast("long").alias("n_total"),
         F.count("*").cast("long").alias("n_keys"),

@@ -4,24 +4,15 @@ Exact distinct-counting over an unbounded stream needs state proportional
 to the number of distinct values ever seen — stream-sized, the one thing
 streaming state must never be. The HLL++ sketch path removes the problem
 by construction: a Datasketches HLL sketch is a FIXED-SIZE mergeable
-summary whose union is associative and commutative, so
-
-- per trigger, the delta reduces to one (group, n_rows, sketch-per-col)
-  row per group (`hll_sketch_agg` — partial-aggregated, the only
-  data-sized work);
-- the retained state merges by `sum` + `hll_union_agg` (a union + re-agg
-  over <= 2 x #groups rows);
-- the emitted report applies `hll_sketch_estimate` to the retained
-  sketches — the SAME estimate the batch sketch over the union of all
-  deltas yields, because sketch union is order- and batching-insensitive
-  (pytest pins estimate equality against the batch path at every
-  trigger, plus the error bound against exact distincts).
+summary whose union is associative and commutative, so the state is one
+(group, n_rows, sketch-per-col) row per group, merged by `sum` +
+`hll_union_agg`, and the report applies `hll_sketch_estimate` to the
+merged sketches — the SAME estimate the batch sketch over the union of
+all deltas yields (pytest pins estimate equality against the batch path
+at every trigger, plus the error bound against exact distincts).
 
 State: #groups rows x (8 bytes + ~k bytes per tracked column) — bounded
-by group cardinality, independent of stream length. The pinned-state
-chain swaps one checkpoint per trigger (predecessor released), matching
-the drift/cube/funnel monitors. On a real cluster the state row set is
-checkpoint-sized and the sketches travel as opaque binary columns.
+by group cardinality, independent of stream length.
 """
 
 from __future__ import annotations
@@ -29,10 +20,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bistro_spark.caching import pin, release
+from bistro_spark.streaming.incremental import AggSpec, IncrementalRunner
 
 
-class StreamingCardinalityMonitor:
+class StreamingCardinalityMonitor(IncrementalRunner):
     """Per-trigger cardinality profile (rows, approx distincts, dup
     ratio) of the stream seen so far. Feed micro-batch DataFrames to
     :meth:`process_batch` (foreachBatch-shaped); each call returns the
@@ -46,56 +37,30 @@ class StreamingCardinalityMonitor:
         distinct_cols: tuple[str, ...] = ("text", "lang"),
         lg_config_k: int = 12,
     ):
-        self.spark = spark
+        super().__init__(
+            spark,
+            lambda df: df,
+            [group_col],
+            [AggSpec("n_rows", "count(1)", "sum")]
+            + [
+                AggSpec(
+                    f"sk_{c}",
+                    f"hll_sketch_agg(`{c}`, {int(lg_config_k)})",
+                    "hll_union_agg",
+                )
+                for c in distinct_cols
+            ],
+        )
         self.group_col = group_col
         self.distinct_cols = distinct_cols
-        self.lg_k = lg_config_k
-        self._state: DataFrame | None = None
-        self._pin_ids: set[int] = set()
-        self.batches_seen = 0
-
-    def state_rows(self) -> int:
-        """Bounded by the group cardinality, never stream length."""
-        return 0 if self._state is None else self._state.count()
-
-    def _delta(self, batch_df: DataFrame) -> DataFrame:
-        aggs = [F.count(F.lit(1)).cast("long").alias("n_rows")]
-        for c in self.distinct_cols:
-            aggs.append(
-                F.hll_sketch_agg(F.col(c), F.lit(self.lg_k)).alias(
-                    f"sk_{c}"
-                )
-            )
-        return batch_df.groupBy(self.group_col).agg(*aggs)
 
     def process_batch(self, batch_df: DataFrame) -> DataFrame:
-        self.batches_seen += 1
-        delta = self._delta(batch_df)
-        if self._state is None:
-            merged = delta
-        else:
-            aggs = [F.sum("n_rows").cast("long").alias("n_rows")]
-            for c in self.distinct_cols:
-                aggs.append(
-                    F.hll_union_agg(F.col(f"sk_{c}")).alias(f"sk_{c}")
-                )
-            merged = (
-                self._state.unionByName(delta)
-                .groupBy(self.group_col)
-                .agg(*aggs)
-            )
-        state, ids = pin(merged)
-        old = self._pin_ids
-        self._state = state
-        self._pin_ids = ids
-        release(self.spark, old)
+        self.add_batch(batch_df)
         return self.report()
 
     def report(self) -> DataFrame:
-        if self._state is None:
-            raise ValueError("no batches processed")
         first = self.distinct_cols[0]
-        return self._state.select(
+        return self.result().select(
             self.group_col,
             "n_rows",
             *[
@@ -110,8 +75,3 @@ class StreamingCardinalityMonitor:
                 F.lit(1.0) - F.col(f"n_{first}") / F.col("n_rows"), 6
             ),
         )
-
-    def close(self) -> None:
-        release(self.spark, self._pin_ids)
-        self._pin_ids = set()
-        self._state = None

@@ -6,16 +6,12 @@ filter starts moving class centroids.
 The reference side's per-(label, dim) integer component sums are
 computed ONCE batch-side at construction (labels×dims grid, the same
 cardinality the batch operator aggregates to). The live side's state is
-the identical additive grid: each trigger's delta reduces
-DISTRIBUTED-side through the same quantize→posexplode→conditional-sum
-plan the batch operator runs, and the driver merge is plain BIGINT
-addition — commutative and associative, so full-history parity with
-batch ``similarity.centroid_shift(reference, seen)`` is EXACT at every
-trigger in ANY arrival order (replay protection belongs to the
-foreachBatch epoch guard, as with every additive monitor). The report
-recomputes the DECIMAL numerator from the exact integer grids with the
-batch operator's own formula, and the one float through the engine, so
-rows hash-match the batch columns verbatim.
+the identical grid: each trigger's delta reduces distributed-side
+through the same quantize→posexplode→conditional-sum plan the batch
+operator runs. The report recomputes the DECIMAL numerator from the
+exact integer grids with the batch operator's own formula, and the one
+float through the engine, so rows hash-match the batch columns
+verbatim.
 """
 
 from __future__ import annotations
@@ -28,9 +24,10 @@ from bistro_spark.operators.similarity import (
     centroid_shift,
 )
 from bistro_spark.session import local_frame
+from bistro_spark.streaming.incremental import DriverSumGrid
 
 
-class StreamingCentroidShiftMonitor:
+class StreamingCentroidShiftMonitor(DriverSumGrid):
     """Feed per-trigger deltas of (vec, label) rows to
     :meth:`process_batch`; read the live drift via :meth:`report` —
     same schema and rows as batch ``centroid_shift(reference,
@@ -45,11 +42,13 @@ class StreamingCentroidShiftMonitor:
         scale: int = 10**6,
         max_cells: int = 10_000_000,
     ):
-        self.spark = spark
+        super().__init__(
+            spark, ["lbl", "dim"], ["s", "n"], int(max_cells),
+            "live grid cell count (max_cells)",
+        )
         self.vec_col = vec_col
         self.label_col = label_col
         self.scale = int(scale)
-        self.max_cells = int(max_cells)
         # the reference grid, computed once: (label, dim) -> (sum, n)
         self._ref = {
             (r["lbl"], r["dim"]): (r["s"], r["n"])
@@ -59,9 +58,6 @@ class StreamingCentroidShiftMonitor:
             raise ValueError(
                 "StreamingCentroidShiftMonitor: empty reference snapshot"
             )
-        # the live additive grid
-        self._live: dict = {}
-        self.batches_seen = 0
 
     def _grid(self, df: DataFrame):
         if df.filter(F.col(self.label_col).isNull()).limit(1).count():
@@ -80,50 +76,24 @@ class StreamingCentroidShiftMonitor:
             )
         )
 
-    # ------------------------------------------------------- recovery --
-    def state_snapshot(self) -> dict:
-        return {
-            "live": sorted(
-                [lbl, d, s, n] for (lbl, d), (s, n) in self._live.items()
-            )
-        }
-
-    def restore_state(self, snapshot: dict) -> None:
-        self._live = {
-            (lbl, int(d)): (int(s), int(n))
-            for lbl, d, s, n in snapshot["live"]
-        }
-
     def state_size(self) -> int:
-        return len(self._live)
+        return len(self._cells)
 
-    # ---------------------------------------------------------- fold --
     def process_batch(self, batch_df: DataFrame) -> int:
         """Merge one trigger's delta (reduced distributed-side to its
         own (label, dim) grid); returns cells touched."""
-        self.batches_seen += 1
-        rows = self._grid(batch_df).collect()
-        for r in rows:
-            key = (r["lbl"], r["dim"])
-            s, n = self._live.get(key, (0, 0))
-            self._live[key] = (s + r["s"], n + r["n"])
-        if len(self._live) > self.max_cells:
-            raise ValueError(
-                f"StreamingCentroidShiftMonitor: {len(self._live)} "
-                f"grid cells exceed max_cells={self.max_cells}"
-            )
-        return len(rows)
+        return len(self.add(self._grid(batch_df)))
 
     # --------------------------------------------------------- report --
     def report(self) -> DataFrame:
         """The live drift — columns and rows exactly as the batch
         operator emits them (numerator from exact integer grids; the
         float computed by the ENGINE with the batch expression)."""
-        labels = {k[0] for k in self._ref} | {k[0] for k in self._live}
+        labels = {k[0] for k in self._ref} | {k[0] for k in self._cells}
         rows = []
         for lbl in labels:
             ro = {d: sn for (l2, d), sn in self._ref.items() if l2 == lbl}
-            rn = {d: sn for (l2, d), sn in self._live.items() if l2 == lbl}
+            rn = {d: sn for (l2, d), sn in self._cells.items() if l2 == lbl}
             n_old = next(iter(ro.values()))[1] if ro else 0
             n_new = next(iter(rn.values()))[1] if rn else 0
             if n_old and n_new:

@@ -4,35 +4,20 @@ A live curation pipeline needs the same drop-attribution report the
 batch pass prints — per-rule document/char/word counts — maintained over
 an unbounded ingest stream. The funnel's report IS its sufficient
 statistic: the (rule, n_docs, n_chars_total, n_words_total) grid is
-*additive* across micro-batches and *bounded* at #rules + 1 rows, so the
-monitor keeps nothing else:
-
-- per trigger, run the batch funnel on the delta (the only data-sized
-  work — one partial-aggregated scan of the micro-batch);
-- merge by summation into the retained grid (a union + re-agg over
-  <= 2 x (#rules + 1) rows);
-- the retained grid is the report.
-
-Because counts are additive, the grid after k triggers EQUALS the batch
-``filter_funnel(union of all deltas)`` exactly — full-history
-equivalence with O(#rules) state (pytest-pinned), same contract shape as
-`streaming.drift.StreamingDriftMonitor`. Gate ATTRIBUTION is per-document
-and stateless, so ordering across batches cannot change any bucket.
-
-State is a keep-released localCheckpoint chain (`bistro_spark.caching`),
-swapped per trigger and freed on close().
+bounded at #rules + 1 rows, so the monitor keeps nothing else. Gate
+attribution is per-document and stateless, so ordering across batches
+cannot change any bucket.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from bistro_spark.caching import pin, release
 from bistro_spark.operators.curation import filter_funnel
+from bistro_spark.streaming.incremental import AggSpec, IncrementalRunner
 
 
-class StreamingFunnelMonitor:
+class StreamingFunnelMonitor(IncrementalRunner):
     """Per-trigger drop-attribution report of the stream seen so far.
     Feed micro-batch DataFrames to :meth:`process_batch`
     (foreachBatch-shaped); each call returns the cumulative
@@ -44,40 +29,16 @@ class StreamingFunnelMonitor:
         text_col: str = "text",
         lang_col: str = "lang",
     ):
-        self.spark = spark
-        self.text_col = text_col
-        self.lang_col = lang_col
-        self._grid: DataFrame | None = None
-        self._pin_ids: set[int] = set()
-        self.batches_seen = 0
-
-    def state_rows(self) -> int:
-        """Current retained-grid size — bounded by #rules + 1."""
-        return 0 if self._grid is None else self._grid.count()
+        super().__init__(
+            spark,
+            lambda df: filter_funnel(df, text_col, lang_col),
+            ["rule", "rule_order"],
+            [
+                AggSpec(c, f"sum({c})", "sum")
+                for c in ("n_docs", "n_chars_total", "n_words_total")
+            ],
+        )
 
     def process_batch(self, batch_df: DataFrame) -> DataFrame:
-        self.batches_seen += 1
-        delta = filter_funnel(batch_df, self.text_col, self.lang_col)
-        merged = (
-            delta
-            if self._grid is None
-            else self._grid.unionByName(delta)
-            .groupBy("rule", "rule_order")
-            .agg(
-                F.sum("n_docs").alias("n_docs"),
-                F.sum("n_chars_total").alias("n_chars_total"),
-                F.sum("n_words_total").alias("n_words_total"),
-            )
-        )
-        grid, grid_ids = pin(merged)
-        old_ids = self._pin_ids
-        self._grid = grid
-        self._pin_ids = grid_ids
-        release(self.spark, old_ids)
-        return grid
-
-    def close(self) -> None:
-        """Release the pinned grid (idempotent)."""
-        release(self.spark, self._pin_ids)
-        self._pin_ids = set()
-        self._grid = None
+        self.add_batch(batch_df)
+        return self.result()

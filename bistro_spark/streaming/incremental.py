@@ -25,15 +25,36 @@ re-aggregates). Two state strategies:
 This mode exists for (a) row-for-row parity tests against the oracle with
 scripted batch boundaries, (b) count-based retention, which Structured
 Streaming cannot express (no count-based windows) — SURVEY.md §7.3/§7.4.
+
+The additive streaming monitors are this loop with retention off: per
+trigger a partial aggregate over the delta (the batch operator's own
+partials), merged into a key grid, and a report that is the batch
+operator's finalizer over that grid. Counts and sums commute, so the
+report after k triggers equals the batch operator over the union of all
+deltas, in any arrival order; addition is not idempotent, so replay
+protection belongs to the foreachBatch epoch guard. The grid lives in one
+of two places, chosen by the state type:
+
+- :class:`IncrementalRunner` (``retention=None``) keeps it in executor
+  storage as a pinned checkpoint. Sketch merges (``hll_union_agg``) and
+  vocabulary-sized stores stay in the engine, where they can grow past
+  driver memory.
+- :class:`DriverSumGrid` keeps a small keyed BIGINT grid on the driver.
+  Its finalizers run in Python (``bt_fixpoint``, the exact DECIMAL
+  numerator of the centroid shift) or over a ``local_frame``; it
+  snapshots to JSON for kill/resume, and a trigger costs one collect,
+  with no checkpoint job.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Callable
+from typing import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from bistro_spark.session import local_frame
 
 
 @dataclass
@@ -271,3 +292,132 @@ class IncrementalRunner:
         if self._buffer is None:
             raise ValueError("retention mode only")
         return self._buffer
+
+    def state_rows(self) -> int:
+        """Rows in the merged aggregate state (0 before the first batch)."""
+        return 0 if self._state is None else self._state.count()
+
+    def close(self) -> None:
+        """Release the pinned buffer and state blocks (idempotent)."""
+        from bistro_spark.caching import release
+
+        release(self.spark, self._pin_ids)
+        self._pin_ids = set()
+        self._buffer = self._state = None
+
+
+class DriverSumGrid:
+    """A keyed BIGINT sum grid held on the driver: the accumulate state of
+    an additive monitor whose state is small (see the module docstring).
+
+    ``keys`` and ``values`` name the columns of the per-trigger partial
+    DataFrame; :meth:`add` collects it and adds its value columns into the
+    cell of its key (a NULL partial sum adds nothing). ``cap`` bounds the
+    number of distinct keys: the partial is collected with
+    ``limit(cap + 1)`` and the guard runs before the state changes, so a
+    refused delta leaves the grid as it was. ``what`` names the capped
+    quantity in the guard's message; ``cap=None`` means unbounded.
+
+    Snapshots are JSON-safe: the column names plus one sorted
+    ``[*key, *values]`` row per cell; restoring a snapshot of a grid with
+    other columns raises.
+    """
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        keys: Sequence[str],
+        values: Sequence[str],
+        cap: int | None,
+        what: str,
+    ):
+        self.spark = spark
+        self._keys = tuple(keys)
+        self._values = tuple(values)
+        self._cap = cap
+        self._what = what
+        self._cells: dict[tuple, list[int]] = {}
+        self.batches_seen = 0
+
+    def _collect(self, partial: DataFrame) -> list:
+        """The delta's partial rows; at most ``cap + 1`` reach the driver."""
+        if self._cap is None:
+            return partial.collect()
+        rows = partial.limit(self._cap + 1).collect()
+        self._check_cap(len({self._key(r) for r in rows}))
+        return rows
+
+    def absorb(self, rows) -> None:
+        """Add collected partial rows into the grid; a refused delta leaves
+        the grid unchanged."""
+        merged: dict[tuple, list[int]] = {}
+        for r in rows:
+            k = self._key(r)
+            cur = merged.get(k) or self._cells.get(k) or [0] * len(self._values)
+            merged[k] = [c + int(r[v] or 0) for c, v in zip(cur, self._values)]
+        self._check_cap(
+            len(self._cells) + sum(k not in self._cells for k in merged)
+        )
+        self._cells.update(merged)
+
+    def add(self, partial: DataFrame) -> list:
+        """One trigger: collect ``partial``, check and absorb it; returns
+        its rows."""
+        self.batches_seen += 1
+        rows = self._collect(partial)
+        self._check_delta(rows)
+        self.absorb(rows)
+        return rows
+
+    def _check_delta(self, rows: list) -> None:
+        """Refuse a collected delta before it changes the grid (a subclass
+        hook; the base accepts every delta)."""
+
+    def _key(self, row) -> tuple:
+        return tuple(row[k] for k in self._keys)
+
+    def _check_cap(self, n_keys: int) -> None:
+        if self._cap is not None and n_keys > self._cap:
+            raise ValueError(
+                f"{type(self).__name__}: {self._what} exceeds {self._cap}"
+            )
+
+    def require_rows(self) -> None:
+        """Raise unless some row has been absorbed (read-outs over an empty
+        grid have no defined value)."""
+        if not self._cells:
+            raise ValueError("no rows absorbed yet")
+
+    def rows(self) -> list[tuple]:
+        """``(*key, *values)`` per cell, sorted by key (NULLs first)."""
+        return sorted(
+            (k + tuple(vs) for k, vs in self._cells.items()),
+            key=lambda r: [(v is not None, v) for v in r[: len(self._keys)]],
+        )
+
+    def frame(self, schema: str) -> DataFrame:
+        """The grid as a DataFrame with DDL ``schema`` (keys then values)."""
+        return local_frame(self.spark, self.rows(), schema)
+
+    def state_snapshot(self) -> dict:
+        """JSON-safe full recovery state."""
+        return {
+            "columns": [*self._keys, *self._values],
+            "rows": [list(r) for r in self.rows()],
+        }
+
+    def restore_state(self, snapshot: dict) -> None:
+        """Resume from a :meth:`state_snapshot` taken after the last
+        committed trigger (persist it with the epoch's output)."""
+        cols = [*self._keys, *self._values]
+        if list(snapshot["columns"]) != cols:
+            raise ValueError(
+                f"{type(self).__name__}: snapshot grid "
+                f"{snapshot['columns']} != configured {cols}"
+            )
+        rows = snapshot["rows"]
+        self._check_cap(len(rows))
+        nk = len(self._keys)
+        self._cells = {
+            tuple(r[:nk]): [int(v) for v in r[nk:]] for r in rows
+        }

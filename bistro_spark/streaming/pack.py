@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 
 from bistro_spark.caching import pin, release
 from bistro_spark.session import local_frame
+from bistro_spark.streaming.incremental import DriverSumGrid
 
 
 def streaming_encode_gate(
@@ -611,7 +612,7 @@ def streaming_sft_gate(
     )
 
 
-class StreamingSftPackMonitor:
+class StreamingSftPackMonitor(DriverSumGrid):
     """The live end of the SFT chain: documents arrive → each delta is
     rendered to its dialog stats by the zero-shuffle closed form
     (``trainprep.sft_doc_stats`` — pure projection, stream-safe) →
@@ -640,7 +641,9 @@ class StreamingSftPackMonitor:
         id_col: str = "doc_id",
         text_col: str = "text",
     ):
-        self.spark = spark
+        super().__init__(
+            spark, ["shard", "pack_id"], ["n", "pl", "sup"], None, "packs"
+        )
         self.capacity = int(capacity)
         self.id_col = id_col
         self.text_col = text_col
@@ -651,30 +654,23 @@ class StreamingSftPackMonitor:
             id_col=id_col,
             len_col="n_out",
         )
-        # (shard, pack_id) -> [n_seqs, payload, supervised]
-        self._packs: dict = {}
-        self.batches_seen = 0
 
     # ------------------------------------------------------- recovery --
+    # the packer's cursor is bespoke state beside the counter grid
     def state_snapshot(self) -> dict:
         return {
             "packer": {
                 str(k): list(v)
                 for k, v in self.packer.state_snapshot().items()
             },
-            "packs": {
-                f"{s}|{p}": list(v) for (s, p), v in self._packs.items()
-            },
+            "packs": super().state_snapshot(),
         }
 
     def restore_state(self, snapshot: dict) -> None:
+        super().restore_state(snapshot["packs"])
         self.packer.restore_state(
             {int(k): tuple(v) for k, v in snapshot["packer"].items()}
         )
-        self._packs = {}
-        for key, v in snapshot["packs"].items():
-            s, p = key.split("|")
-            self._packs[(int(s), int(p))] = [int(x) for x in v]
 
     # ---------------------------------------------------------- fold --
     def process_batch(self, batch_df: DataFrame) -> int:
@@ -682,12 +678,11 @@ class StreamingSftPackMonitor:
         number of pack cells touched."""
         from bistro_spark.operators.trainprep import sft_doc_stats
 
-        self.batches_seen += 1
         stats = sft_doc_stats(
             batch_df, id_col=self.id_col, text_col=self.text_col
         )
         assigned = self.packer.process_batch(stats)
-        rows = (
+        cells = (
             assigned.join(
                 stats.select(self.id_col, "n_supervised"), self.id_col
             )
@@ -697,26 +692,14 @@ class StreamingSftPackMonitor:
                 F.sum("len").cast("long").alias("pl"),
                 F.sum("n_supervised").cast("long").alias("sup"),
             )
-            .collect()
         )
-        for r in rows:
-            c = self._packs.setdefault((r["shard"], r["pack_id"]), [0, 0, 0])
-            c[0] += r["n"]
-            c[1] += r["pl"]
-            c[2] += r["sup"]
-        return len(rows)
+        return len(self.add(cells))
 
     # --------------------------------------------------------- report --
     def report(self) -> DataFrame:
         """The live manifest — columns and rows exactly as batch
         ``sft_pack_manifest`` emits them."""
-        rows = [
-            (s, p, n, pl, sup)
-            for (s, p), (n, pl, sup) in self._packs.items()
-        ]
-        df = local_frame(
-            self.spark,
-            rows,
+        df = self.frame(
             "shard int, pack_id long, n_seqs long, payload_tokens long, "
             "supervised_tokens long",
         )
@@ -737,18 +720,16 @@ class StreamingSftPackMonitor:
         )
 
 
-class StreamingSftCardMonitor:
+_SFT_COUNTS = ("n_dialogs", "n_turns", "payload_tokens", "supervised_tokens")
+
+
+class StreamingSftCardMonitor(DriverSumGrid):
     """The SFT dataset-card (``trainprep.sft_corpus_stats``) kept live:
     every column is an additive integer sum per source (dialogs, turns,
     rendered and supervised token totals), so the state is four BIGINTs
     per group — groups-bounded, never stream-bounded — and each
-    trigger's delta reduces DISTRIBUTED-side through the batch
-    operator's own projection + partial agg. Plain addition is
-    commutative and associative: full-history parity with the batch
-    card is EXACT at every trigger in ANY arrival order (replay
-    protection belongs to the foreachBatch epoch guard, as with every
-    additive monitor). Report fractions are computed by the ENGINE with
-    the batch expressions, so rows hash-match verbatim."""
+    trigger's delta reduces distributed-side through the batch
+    operator's own partials; the report is its own finalizer."""
 
     def __init__(
         self,
@@ -757,62 +738,31 @@ class StreamingSftCardMonitor:
         id_col: str = "doc_id",
         text_col: str = "text",
     ):
-        self.spark = spark
+        super().__init__(spark, [group_col], _SFT_COUNTS, None, "groups")
         self.group_col = group_col
         self.id_col = id_col
         self.text_col = text_col
-        # group -> [n_dialogs, n_turns, payload, supervised]
-        self._groups: dict = {}
-        self.batches_seen = 0
 
-    # ------------------------------------------------------- recovery --
-    def state_snapshot(self) -> dict:
-        return {str(g): list(v) for g, v in self._groups.items()}
-
-    def restore_state(self, snapshot: dict) -> None:
-        self._groups = {g: [int(x) for x in v] for g, v in snapshot.items()}
-
-    # ---------------------------------------------------------- fold --
     def process_batch(self, batch_df: DataFrame) -> int:
-        from bistro_spark.operators.trainprep import sft_corpus_stats
+        from bistro_spark.operators.trainprep import sft_corpus_counts
 
-        self.batches_seen += 1
-        rows = sft_corpus_stats(
-            batch_df,
-            group_col=self.group_col,
-            id_col=self.id_col,
-            text_col=self.text_col,
-        ).collect()
-        for r in rows:
-            c = self._groups.setdefault(r[self.group_col], [0, 0, 0, 0])
-            c[0] += r["n_dialogs"]
-            c[1] += r["n_turns"]
-            c[2] += r["payload_tokens"]
-            c[3] += r["supervised_tokens"]
-        return len(rows)
-
-    # --------------------------------------------------------- report --
-    def report(self) -> DataFrame:
-        rows = [
-            (g, nd, nt, pl, sup)
-            for g, (nd, nt, pl, sup) in self._groups.items()
-        ]
-        df = local_frame(
-            self.spark,
-            rows,
-            f"{self.group_col} string, n_dialogs long, n_turns long, "
-            "payload_tokens long, supervised_tokens long",
+        return len(
+            self.add(
+                sft_corpus_counts(
+                    batch_df, self.group_col, self.id_col, self.text_col
+                )
+            )
         )
-        return df.withColumn(
-            "supervised_frac",
-            F.round(
-                F.when(
-                    F.col("payload_tokens") > 0,
-                    F.col("supervised_tokens") / F.col("payload_tokens"),
-                ).otherwise(F.lit(0.0)),
-                6,
+
+    def report(self) -> DataFrame:
+        from bistro_spark.operators.trainprep import (
+            sft_corpus_stats_from_counts,
+        )
+
+        return sft_corpus_stats_from_counts(
+            self.frame(
+                f"{self.group_col} string, "
+                + ", ".join(f"{c} long" for c in _SFT_COUNTS)
             ),
-        ).withColumn(
-            "mean_turns",
-            F.round(F.col("n_turns") / F.col("n_dialogs"), 6),
+            self.group_col,
         )

@@ -2,16 +2,11 @@
 live as game outcomes arrive (an RLHF eval loop's judge verdicts, an
 A/B arena's votes).
 
-State is the (winner, loser) → count win grid — items²-bounded,
-additive: each trigger's delta is aggregated DISTRIBUTED-side to its
-own grid by the batch operator's groupBy, and the driver merge is plain
-addition, commutative and associative, so full-history parity with
-batch ``preference.bt_ratings`` is EXACT at every trigger in ANY
-arrival order. Addition is not idempotent — replay protection belongs
-to the foreachBatch epoch guard, as with every additive monitor here.
-The leaderboard is a pure function of the grid through the SHARED
-:func:`preference.bt_fixpoint` (one code path, so batch/stream parity
-is structural, not coincidental).
+State is the (winner, loser) → count win grid — items²-bounded; each
+trigger's delta is aggregated distributed-side by the batch operator's
+groupBy. The leaderboard is a pure function of the grid through the
+SHARED :func:`preference.bt_fixpoint` (one code path, so batch/stream
+parity is structural, not coincidental).
 """
 
 from __future__ import annotations
@@ -21,9 +16,10 @@ from pyspark.sql import functions as F
 
 from bistro_spark.operators.preference import bt_fixpoint
 from bistro_spark.session import local_frame
+from bistro_spark.streaming.incremental import DriverSumGrid
 
 
-class StreamingBTMonitor:
+class StreamingBTMonitor(DriverSumGrid):
     """Feed per-trigger deltas of (winner, loser) outcomes to
     :meth:`process_batch`; read the live leaderboard via
     :meth:`ratings` — same schema and rows as batch ``bt_ratings``
@@ -38,57 +34,42 @@ class StreamingBTMonitor:
         max_items: int = 256,
         item_type: str = "string",
     ):
-        self.spark = spark
+        super().__init__(
+            spark, ["a", "b"], ["n"], int(max_items) ** 2,
+            "win grid (max_items squared)",
+        )
         self.winner_col = winner_col
         self.loser_col = loser_col
         self.iters = int(iters)
         self.max_items = int(max_items)
         self.item_type = item_type
-        self._grid: dict = {}  # (winner, loser) -> count
-        self.batches_seen = 0
-
-    # ------------------------------------------------------- recovery --
-    def state_snapshot(self) -> dict:
-        return {
-            "grid": sorted([a, b, n] for (a, b), n in self._grid.items())
-        }
-
-    def restore_state(self, snapshot: dict) -> None:
-        self._grid = {(a, b): int(n) for a, b, n in snapshot["grid"]}
 
     def state_size(self) -> int:
-        return len(self._grid)
+        return len(self._cells)
 
-    # ---------------------------------------------------------- fold --
     def process_batch(self, batch_df: DataFrame) -> int:
         """Merge one trigger's delta (aggregated distributed-side
-        first); returns the number of games added. Self-games raise
-        here, at arrival, rather than corrupting the grid."""
-        self.batches_seen += 1
-        delta = (
+        first); returns the number of games added."""
+        rows = self.add(
             batch_df.groupBy(
                 F.col(self.winner_col).alias("a"),
                 F.col(self.loser_col).alias("b"),
-            )
-            .agg(F.count(F.lit(1)).cast("long").alias("n"))
-            .collect()
+            ).agg(F.count(F.lit(1)).cast("long").alias("n"))
         )
-        added = 0
-        for r in delta:
-            if r["a"] == r["b"]:
-                raise ValueError(
-                    "StreamingBTMonitor: self-game (winner == loser)"
-                )
-            key = (r["a"], r["b"])
-            self._grid[key] = self._grid.get(key, 0) + r["n"]
-            added += r["n"]
-        items = {a for a, _b in self._grid} | {b for _a, b in self._grid}
+        return sum(r["n"] for r in rows)
+
+    def _check_delta(self, rows: list) -> None:
+        """Self-games and item overflow raise at arrival, before the
+        grid changes."""
+        if any(r["a"] == r["b"] for r in rows):
+            raise ValueError("StreamingBTMonitor: self-game (winner == loser)")
+        items = {x for k in self._cells for x in k}
+        items |= {r["a"] for r in rows} | {r["b"] for r in rows}
         if len(items) > self.max_items:
             raise ValueError(
                 f"StreamingBTMonitor: {len(items)} items exceed "
                 f"max_items={self.max_items}"
             )
-        return added
 
     # --------------------------------------------------------- report --
     def win_matrix(self) -> DataFrame:
@@ -98,7 +79,7 @@ class StreamingBTMonitor:
         driver-side reshape: per unordered pair, merge both directed
         counts and emit the exact-ppm lo-side win rate."""
         cells: dict = {}
-        for (a, b), n in self._grid.items():
+        for (a, b), (n,) in self._cells.items():
             lo, hi = (a, b) if a <= b else (b, a)
             g, wl = cells.get((lo, hi), (0, 0))
             cells[(lo, hi)] = (g + n, wl + (n if a == lo else 0))
@@ -118,7 +99,7 @@ class StreamingBTMonitor:
         """The live leaderboard — columns and rows exactly as batch
         ``bt_ratings`` emits them (shared fixpoint code path)."""
         out = bt_fixpoint(
-            [(a, b, n) for (a, b), n in self._grid.items()],
+            [(a, b, n) for (a, b), (n,) in self._cells.items()],
             iters=self.iters,
             max_items=self.max_items,
         )

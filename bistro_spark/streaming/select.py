@@ -34,8 +34,10 @@ not corpus-sized).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from bistro_spark.caching import pin, pinned_ids, release, release_new_pins
+from bistro_spark.streaming.incremental import AggSpec, IncrementalRunner
 
 
 class _PoolSelector:
@@ -214,20 +216,13 @@ class StreamingTokenBudgetSelector(_PoolSelector):
         return ["n_tok", "cum_tok"]
 
 
-class StreamingCalibrationMonitor:
+class StreamingCalibrationMonitor(IncrementalRunner):
     """Streaming twin of ``curation.calibrate_signal``'s calibration
-    MAP: maintain the (group, v, count) level-set grid — additive
-    across micro-batches, bounded by #groups x value domain, never
-    stream-sized — and emit the midrank map (group, v, pct) per
-    trigger. Tagging live documents with their calibrated score is then
-    a stateless broadcast join the caller applies inside the same
-    foreachBatch.
-
-    Counts are additive integers, so the map after k triggers EQUALS
-    the batch map over the union of all deltas — exact full-history
-    parity at every trigger (pytest-pinned), the same contract as the
-    drift/cube/funnel monitors. State is one pinned grid, swapped per
-    trigger (predecessor released)."""
+    MAP: maintain the (group, v, count) level-set grid — bounded by
+    #groups x value domain, never stream-sized — and emit the midrank
+    map (group, v, pct) per trigger. Tagging live documents with their
+    calibrated score is then a stateless broadcast join the caller
+    applies inside the same foreachBatch."""
 
     def __init__(
         self,
@@ -235,45 +230,21 @@ class StreamingCalibrationMonitor:
         group_col: str = "source",
         value_col: str = "n_chars",
     ):
-        self.spark = spark
-        self.group_col = group_col
-        self.value_col = value_col
-        self._grid: DataFrame | None = None
-        self._pin_ids: set[int] = set()
-        self.batches_seen = 0
+        from bistro_spark.operators.curation import signal_counts
 
-    def state_rows(self) -> int:
-        return 0 if self._grid is None else self._grid.count()
+        super().__init__(
+            spark,
+            lambda df: signal_counts(
+                df.select(group_col, F.col(value_col).cast("long").alias("v")),
+                group_col,
+            ),
+            [group_col, "v"],
+            [AggSpec("c_eq", "sum(c_eq)", "sum")],
+        )
+        self.group_col = group_col
 
     def process_batch(self, batch_df: DataFrame) -> DataFrame:
-        from pyspark.sql import functions as F
+        from bistro_spark.operators.curation import calibration_map_from_counts
 
-        from bistro_spark.operators.curation import (
-            calibration_map_from_counts,
-            signal_counts,
-        )
-
-        self.batches_seen += 1
-        sig = batch_df.select(
-            self.group_col,
-            F.col(self.value_col).cast("long").alias("v"),
-        )
-        delta = signal_counts(sig, self.group_col)
-        merged = (
-            delta
-            if self._grid is None
-            else self._grid.unionByName(delta)
-            .groupBy(self.group_col, "v")
-            .agg(F.sum("c_eq").cast("long").alias("c_eq"))
-        )
-        grid, grid_ids = pin(merged)
-        old_ids = self._pin_ids
-        self._grid = grid
-        self._pin_ids = grid_ids
-        release(self.spark, old_ids)
-        return calibration_map_from_counts(grid, self.group_col)
-
-    def close(self) -> None:
-        release(self.spark, self._pin_ids)
-        self._pin_ids = set()
-        self._grid = None
+        self.add_batch(batch_df)
+        return calibration_map_from_counts(self.result(), self.group_col)

@@ -1,19 +1,11 @@
 """Streaming vocabulary monitor: entropy + Zipf exponent per trigger.
 
 ``token_entropy`` and ``zipf_alpha`` share one sufficient statistic —
-the (group, term, c) term-frequency store. Counts are additive
-integers, so the store merges across micro-batches by summation and
-every report computed FROM the store equals the batch operator over the
-union of all deltas, exactly, at every trigger (the drift/cube/funnel
-contract).
-
-State is vocabulary-sized (|groups| x |terms-seen|) — bounded by the
-corpus vocabulary, not the stream length (Heaps' law: sublinear growth;
-the same asymptote any exact vocabulary needs). Per trigger the delta
-reduces to its own (group, term, c) grid in one partial-aggregated
-groupBy — the only data-sized work — and the merge is a union + re-agg
-over store ∪ delta. On a real cluster the store is an Iceberg/Delta
-table MERGE'd per trigger, co-partitioned on (group, term).
+the (group, term, c) term-frequency store, vocabulary-sized
+(|groups| x |terms-seen|) — bounded by the corpus vocabulary, not the
+stream length (Heaps' law: sublinear growth; the same asymptote any
+exact vocabulary needs). On a real cluster the store is an
+Iceberg/Delta table MERGE'd per trigger, co-partitioned on (group, term).
 
 One store, two live reports — the pattern that matters operationally:
 entropy collapse and alpha steepening are the two earliest template-
@@ -25,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bistro_spark.caching import pin, release
+from bistro_spark.streaming.incremental import AggSpec, IncrementalRunner
 
 
 def _term_counts(df: DataFrame, group_col: str, text_col: str) -> DataFrame:
@@ -67,10 +59,11 @@ def _entropy_from_counts(counts: DataFrame, group_col: str) -> DataFrame:
     )
 
 
-class StreamingVocabMonitor:
+class StreamingVocabMonitor(IncrementalRunner):
     """Feed micro-batches to :meth:`process_batch`; each call returns
     the current (group, n_terms, n_tokens, entropy, alpha) report for
-    everything seen so far — exact batch parity per trigger."""
+    everything seen so far — exact batch parity per trigger. State is
+    |groups| x |terms seen| rows — vocabulary-, not stream-sized."""
 
     def __init__(
         self,
@@ -78,35 +71,14 @@ class StreamingVocabMonitor:
         group_col: str = "source",
         text_col: str = "text",
     ):
-        self.spark = spark
+        super().__init__(
+            spark,
+            lambda df: _term_counts(df, group_col, text_col),
+            [group_col, "term"],
+            [AggSpec("c", "sum(c)", "sum")],
+        )
         self.group_col = group_col
-        self.text_col = text_col
-        self._store: DataFrame | None = None
-        self._pin_ids: set[int] = set()
-        self.batches_seen = 0
-
-    def state_rows(self) -> int:
-        """|groups| x |terms seen| — vocabulary-, not stream-sized."""
-        return 0 if self._store is None else self._store.count()
 
     def process_batch(self, batch_df: DataFrame) -> DataFrame:
-        self.batches_seen += 1
-        delta = _term_counts(batch_df, self.group_col, self.text_col)
-        merged = (
-            delta
-            if self._store is None
-            else self._store.unionByName(delta)
-            .groupBy(self.group_col, "term")
-            .agg(F.sum("c").cast("long").alias("c"))
-        )
-        store, ids = pin(merged)
-        old = self._pin_ids
-        self._store = store
-        self._pin_ids = ids
-        release(self.spark, old)
-        return _entropy_from_counts(store, self.group_col)
-
-    def close(self) -> None:
-        release(self.spark, self._pin_ids)
-        self._pin_ids = set()
-        self._store = None
+        self.add_batch(batch_df)
+        return _entropy_from_counts(self.result(), self.group_col)

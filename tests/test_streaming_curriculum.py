@@ -75,4 +75,4 @@ def test_curriculum_monitor_domain_guard_and_small_n(spark):
         curriculum_schedule(small, n_steps=5)
     )
     # state is value-domain-bounded, not corpus-bounded
-    assert len(mon2._hist) == 2
+    assert len(mon2.state_snapshot()["rows"]) == 2

@@ -59,4 +59,4 @@ def test_streaming_dsir_state_is_bucket_bounded(spark):
         for b in batches:
             mon.process_batch(b)
     assert mon.state_size() == 64
-    assert len(mon.counts) <= 32  # grid keys can never outgrow B
+    assert len(mon.state_snapshot()["rows"]) <= 32  # keys never outgrow B

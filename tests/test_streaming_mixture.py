@@ -64,8 +64,8 @@ def test_state_source_bounded_and_guard(spark):
     n = sched.process_batch(_df(spark, _rows()))
     assert n == 120
     snap = sched.state_snapshot()
-    assert set(snap) <= {"web", "code", "books", "wiki"}
-    assert sum(snap.values()) == 120
+    assert {s for s, _n in snap["rows"]} <= {"web", "code", "books", "wiki"}
+    assert sum(n for _s, n in snap["rows"]) == 120
     tiny = StreamingMixtureScheduler(spark, max_sources=1)
     try:
         tiny.process_batch(_df(spark, _rows()))

@@ -49,7 +49,7 @@ def test_kill_resume_and_state_bounds(spark):
     fresh.restore_state(snap)
     fresh.process_batch(_df(spark, rows[70:]))
     assert fresh.state_snapshot() == full.state_snapshot()
-    assert len(fresh.state_snapshot()) == 4  # keys, not rows
+    assert len(fresh.state_snapshot()["rows"]) == 4  # keys, not rows
     tiny = StreamingSkewMonitor(spark, key_col="source", max_keys=2)
     try:
         tiny.process_batch(_df(spark, rows))
