@@ -1,6 +1,5 @@
 from bistro_spark.functions.tokens import (
     n_tok_native,
-    n_tok_pandas,
     token_fingerprint,
     token_head,
     token_sum,
@@ -8,7 +7,6 @@ from bistro_spark.functions.tokens import (
 
 __all__ = [
     "n_tok_native",
-    "n_tok_pandas",
     "token_fingerprint",
     "token_head",
     "token_sum",

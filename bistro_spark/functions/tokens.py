@@ -4,36 +4,21 @@ The reference has NO scalar function library — every scalar op is a user
 Java lambda passed to ``Column.java#calc`` (or an exp4j/EvalEx formula
 string, ``formula/.../FormulaExp4j.java``).  Here the calc surface accepts
 any Catalyst expression; these helpers are the token-specific vocabulary,
-all JVM-side (higher-order array functions, whole-stage codegen) except the
-explicitly-pandas variants kept as Arrow-path parity checks.
+all JVM-side (higher-order array functions, whole-stage codegen).
 
 input_hint invariant: everything vectorized, no per-row Python.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 
 def n_tok_native(tokens: str | Column = "tokens") -> Column:
     """Token count — F.size, pure Catalyst."""
     c = F.col(tokens) if isinstance(tokens, str) else tokens
     return F.size(c)
-
-
-def n_tok_pandas(tokens: str | Column = "tokens") -> Column:
-    """Token count via Arrow — parity twin of the reference's per-row
-    lambda (ColumnDefinitionCalc Evaluator), used in tests to prove the
-    pandas calc path returns identical values to the native path.
-
-    Built lazily (pandas_udf registration needs an active session).
-    """
-    udf = pandas_udf(lambda t: t.map(len).astype("int32"), "int")
-    c = F.col(tokens) if isinstance(tokens, str) else tokens
-    return udf(c)
 
 
 def token_sum(tokens: str | Column = "tokens") -> Column:
@@ -57,12 +42,3 @@ def token_fingerprint(tokens: str | Column = "tokens") -> Column:
     c = F.col(tokens) if isinstance(tokens, str) else tokens
     return F.xxhash64(c)
 
-
-def token_ngrams(n: int, tokens: str | Column = "tokens") -> Column:
-    """All n-grams of the token array as array<array<int>> — JVM-side via
-    sequence+transform+slice (shingling primitive for Jaccard/MinHash)."""
-    c = F.col(tokens) if isinstance(tokens, str) else tokens
-    return F.transform(
-        F.sequence(F.lit(1), F.greatest(F.size(c) - (n - 1), F.lit(0))),
-        lambda i: F.slice(c, i, n),
-    )

@@ -33,6 +33,7 @@ columns and accu (C5) for the grouped reports):
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -398,6 +399,58 @@ def chunk_spans_sql(
 
 # ------------------------------------------------------ sequence packing ----
 
+# Rows one shard (or partition) of a next-fit fold may hold: its pandas
+# frame must fit in one task. Sites without a bound parameter read it when
+# the plan is built.
+MAX_ROWS_PER_SHARD = 50_000_000
+
+
+def next_fit(lens, cap, cursor=None):
+    """The greedy no-split next-fit fold over an int64 length vector —
+    the one copy of the rule behind every packer in this repo.
+
+    The first item opens pack 0 at offset 0, or continues ``cursor``'s
+    open pack (``(pack_id, end)`` as the previous fold left it); an item
+    that does not fit opens the next pack at offset 0, so an item longer
+    than ``cap`` gets a pack to itself. Returns int64 ``(pack_ids,
+    offsets)``. Folding ``a + b`` equals folding ``a``, then ``b`` from
+    ``a``'s end cursor: that is why each streaming packer equals its
+    batch operator by construction.
+
+    The fold stays a per-item Python loop over ``tolist()`` (~0.5 µs per
+    item): a vectorized cumsum+searchsorted "jump per pack" rewrite
+    measured 1.4–6.5× slower on 1M lengths (Python overhead per pack)."""
+    pack_id, end = (-1, None) if cursor is None else cursor
+    pack_ids, offsets = [], []
+    for ln in np.asarray(lens, dtype=np.int64).tolist():
+        if end is not None and end + ln <= cap:
+            off = end
+        else:
+            pack_id, off = pack_id + 1, 0
+        end = off + ln
+        pack_ids.append(pack_id)
+        offsets.append(off)
+    return np.array(pack_ids, dtype=np.int64), np.array(offsets, dtype=np.int64)
+
+
+def group_lengths(pdf, order_col, len_col, bound, bound_name, who):
+    """The per-group prologue of every next-fit site: refuse a group too
+    big for one task (before the sort), then order the group and return
+    it with its int64 length vector."""
+    if len(pdf) > bound:
+        raise ValueError(
+            f"{who}: one group holds {len(pdf)} rows > {bound_name}={bound}; "
+            f"spread the rows over more shards or partitions (or smaller "
+            f"deltas) so each group's pandas frame fits in one task"
+        )
+    pdf = pdf.sort_values(order_col).reset_index(drop=True)
+    return pdf, pdf[len_col].to_numpy(dtype=np.int64)
+
+
+def _pack_sums(values, pack_ids):
+    """Per-pack sums of ``values`` for a cursor-less :func:`next_fit`."""
+    return np.add.reduceat(values, np.flatnonzero(np.diff(pack_ids, prepend=-1)))
+
 
 def pack_sequences(
     df: DataFrame,
@@ -417,7 +470,7 @@ def pack_sequences(
 
     The fold is inherently sequential per shard, so this is a grouped-map
     ``applyInPandas`` kernel: each shard's rows arrive as one pandas frame,
-    the greedy scan is a single numpy pass, and shards pack in parallel.
+    fold through :func:`next_fit`, and shards pack in parallel.
     At 100 TB, ``n_shards`` is sized to executor parallelism (thousands) —
     packing quality is unaffected because packs never span shards by
     construction, and determinism is exact: the same (id, len) set packs
@@ -462,25 +515,11 @@ def pack_sequences(
     )
 
     def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(id_col).reset_index(drop=True)
-        lens = pdf["len"].to_numpy()
-        pack_ids = []
-        offsets = []
-        pack_id, end = 0, 0
-        first = True
-        for ln in lens:
-            if first:
-                pack_id, off = 0, 0
-                first = False
-            elif end + ln <= capacity:
-                off = end
-            else:
-                pack_id, off = pack_id + 1, 0
-            end = off + ln
-            pack_ids.append(pack_id)
-            offsets.append(off)
-        pdf["pack_id"] = pack_ids
-        pdf["offset"] = offsets
+        pdf, lens = group_lengths(
+            pdf, id_col, "len", max_rows_per_shard, "max_rows_per_shard",
+            "pack_sequences",
+        )
+        pdf["pack_id"], pdf["offset"] = next_fit(lens, capacity)
         return pdf[[id_col, "shard", "pack_id", "offset", "len"]]
 
     return src.groupBy("shard").applyInPandas(pack, schema=schema)
@@ -2357,10 +2396,10 @@ def pack_capacity_sweep(
     re-shuffle the corpus once per candidate.)
 
     Same sharded fold as :func:`pack_sequences` (id order within ``id %
-    n_shards``); one ``applyInPandas`` kernel replays the greedy fold
-    for every capacity over the shard's length vector (the lengths are
-    already in memory — extra capacities cost numpy loops, not passes)
-    and emits ONE row per (capacity, shard): pack count, exact payload,
+    n_shards``); one ``applyInPandas`` kernel runs :func:`next_fit` once
+    per capacity over the shard's length vector (the lengths are already
+    in memory — extra capacities cost folds, not corpus passes) and
+    emits ONE row per (capacity, shard): pack count, exact payload,
     padding waste Σ max(capacity − fill, 0), overflow-pack count (docs
     longer than the capacity get a pack to themselves — negative waste
     is reported as overflow, not netted), and fill_ratio. Output is
@@ -2368,6 +2407,7 @@ def pack_capacity_sweep(
     import pandas as pd
 
     caps = tuple(int(c) for c in capacities)
+    bound = MAX_ROWS_PER_SHARD
     src = df.select(
         F.col(id_col),
         (F.col(id_col) % n_shards).cast("int").alias("shard"),
@@ -2379,27 +2419,19 @@ def pack_capacity_sweep(
     )
 
     def sweep(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(id_col).reset_index(drop=True)
+        pdf, lens = group_lengths(
+            pdf, id_col, "len", bound, "MAX_ROWS_PER_SHARD",
+            "pack_capacity_sweep",
+        )
         shard = int(pdf["shard"].iloc[0])
-        lens = pdf["len"].to_numpy()
         out = []
         for cap in caps:
-            fills = []
-            end = None
-            for ln in lens:
-                if end is None or end + ln > cap:
-                    fills.append(int(ln))
-                    end = int(ln)
-                else:
-                    fills[-1] += int(ln)
-                    end += int(ln)
-            n_packs = len(fills)
-            payload = int(sum(fills))
-            waste = int(sum(max(cap - f, 0) for f in fills))
-            n_over = int(sum(1 for f in fills if f > cap))
-            out.append(
-                (cap, shard, n_packs, len(lens), payload, waste, n_over)
-            )
+            fills = _pack_sums(lens, next_fit(lens, cap)[0])
+            out.append((
+                cap, shard, len(fills), len(lens), int(fills.sum()),
+                int(np.maximum(cap - fills, 0).sum()),
+                int((fills > cap).sum()),
+            ))
         return pd.DataFrame(
             out,
             columns=[
@@ -4448,14 +4480,15 @@ def attention_cost_sweep(
     savings — the numbers that decide both the context length AND
     whether segment masks are worth shipping at that length.
 
-    One ``applyInPandas`` kernel replays the greedy fold per capacity
-    over the shard's in-memory length vector (the pack_capacity_sweep
-    discipline: extra capacities cost numpy loops, never corpus
-    passes); output is |capacities| × n_shards rows at any corpus size,
-    all integer except nothing — even the savings is integer ppm."""
+    One ``applyInPandas`` kernel runs :func:`next_fit` per capacity over
+    the shard's in-memory length vector (the pack_capacity_sweep
+    discipline: extra capacities cost folds, never corpus passes);
+    output is |capacities| × n_shards rows at any corpus size, all
+    integer except nothing — even the savings is integer ppm."""
     import pandas as pd
 
     caps = tuple(int(c) for c in capacities)
+    bound = MAX_ROWS_PER_SHARD
     src = df.select(
         F.col(id_col),
         (F.col(id_col) % n_shards).cast("int").alias("shard"),
@@ -4467,29 +4500,20 @@ def attention_cost_sweep(
     )
 
     def sweep(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(id_col).reset_index(drop=True)
+        pdf, lens = group_lengths(
+            pdf, id_col, "len", bound, "MAX_ROWS_PER_SHARD",
+            "attention_cost_sweep",
+        )
         shard = int(pdf["shard"].iloc[0])
-        lens = pdf["len"].to_numpy()
+        # Σ len² does not depend on how the docs are packed
+        block = int((lens * lens).sum())
         out = []
         for cap in caps:
-            fills, sqs = [], []
-            end = None
-            for ln in lens:
-                ln = int(ln)
-                if end is None or end + ln > cap:
-                    fills.append(ln)
-                    sqs.append(ln * ln)
-                    end = ln
-                else:
-                    fills[-1] += ln
-                    sqs[-1] += ln * ln
-                    end += ln
-            payload = int(sum(fills))
-            block = int(sum(sqs))
-            full = int(sum(f * f for f in fills))
+            fills = _pack_sums(lens, next_fit(lens, cap)[0])
+            full = int((fills * fills).sum())
             ppm = ((full - block) * 1_000_000) // full if full else 0
             out.append(
-                (cap, shard, len(fills), payload, block, full, ppm)
+                (cap, shard, len(fills), int(fills.sum()), block, full, ppm)
             )
         return pd.DataFrame(
             out,

@@ -307,79 +307,6 @@ def _minhash_flat(flat, lengths, k, shingle, stride, chunk_tokens=16384):
     return out
 
 
-def token_minhash_pandas(
-    tokens: str | Column = "tokens",
-    k: int = 16,
-    shingle: int = 3,
-    stride: int = 1,
-) -> Column:
-    """``token_minhash`` as an Arrow-vectorized pandas UDF (numpy kernel).
-
-    The input_hint's calc shape — "calc columns become vectorized
-    pandas/Arrow UDFs" — and the fast path for rich sketches (k=16 over
-    every shingle): the JVM higher-order-function variant evaluates
-    interpreted per element with boxed allocation (GC-bound at high core
-    counts), while this kernel runs C loops over contiguous buffers in
-    per-worker processes. Same values as token_minhash for equal params."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("array<long>")
-    def mh(s):
-        if len(s) == 0:
-            return pd.Series([], dtype=object)
-        lengths = s.map(len).to_numpy(dtype=np.int64)
-        flat = (
-            np.concatenate(s.to_numpy()) if lengths.sum() else np.empty(0)
-        )
-        if flat.dtype not in (np.int32, np.int64):
-            flat = flat.astype(np.int64)
-        out = _minhash_flat(flat, lengths, k, shingle, stride)
-        return pd.Series(list(out))
-
-    c = F.col(tokens) if isinstance(tokens, str) else tokens
-    return mh(c)
-
-
-def token_minhash_arrow(
-    tokens: str | Column = "tokens",
-    k: int = 16,
-    shingle: int = 3,
-    stride: int = 1,
-) -> Column:
-    """``token_minhash`` as a zero-copy Arrow UDF (pyspark 4 ``arrow_udf``).
-
-    The pandas_udf variant materializes one numpy object PER ROW on both
-    sides of the kernel (ListArray -> Series of ndarrays -> Series of
-    lists), which was measured to cost ~4x the kernel itself. Here the
-    ListArray's flat values/offsets buffers feed the kernel directly and
-    the signature matrix goes back as one ListArray — no per-row objects
-    anywhere. Same values as token_minhash for equal params."""
-    import numpy as np
-    import pyarrow as pa
-    from pyspark.sql.functions import arrow_udf
-
-    @arrow_udf("array<long>")
-    def mh(arr):
-        lo = arr.combine_chunks() if isinstance(arr, pa.ChunkedArray) else arr
-        offsets = lo.offsets.to_numpy().astype(np.int64)
-        n = len(lo)
-        if n == 0:
-            return pa.array([], type=pa.list_(pa.int64()))
-        lengths = np.diff(offsets)
-        # no batch-wide widen: the kernel converts int32 chunk-by-chunk
-        flat = lo.values.to_numpy()[offsets[0] : offsets[-1]]
-        out = _minhash_flat(flat, lengths, k, shingle, stride)
-        return pa.ListArray.from_arrays(
-            np.arange(0, (n + 1) * k, k, dtype=np.int32),
-            pa.array(out.ravel()),
-        )
-
-    c = F.col(tokens) if isinstance(tokens, str) else tokens
-    return mh(c)
-
-
 def sketch_calc_arrow(
     df: DataFrame,
     tokens_col: str = "tokens",

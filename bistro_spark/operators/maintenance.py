@@ -12,8 +12,9 @@ so a maintenance job can be audited and resumed:
   and greedily group them so a group's bytes stay within
   ``target_bytes`` (a file already >= target gets a group of its own —
   it is left alone, not split). The same no-split greedy fold as
-  ``curation.pack_sequences``, applied to (file, bytes) instead of
-  (doc, tokens); sequential per partition, partitions fold in parallel
+  ``curation.pack_sequences`` (the shared ``curation.next_fit`` kernel),
+  applied to (file, bytes) instead of (doc, tokens); sequential per
+  partition, partitions fold in parallel
   via ``applyInPandas`` — manifests are file-count-sized (millions of
   rows at 100 TB, KBs per row), so a per-partition pandas frame is
   small by construction.
@@ -35,6 +36,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from bistro_spark.operators import curation
+
 
 def compaction_plan(
     files_df: DataFrame,
@@ -49,6 +52,7 @@ def compaction_plan(
     group_offset) — group_id is per-partition, group_offset the file's
     byte offset within its group's rewrite buffer."""
     tgt = int(target_bytes)
+    bound = curation.MAX_ROWS_PER_SHARD
     out_schema = (
         files_df.select(partition_col, file_col, bytes_col)
         .withColumn("group_id", F.lit(0).cast("long"))
@@ -57,20 +61,11 @@ def compaction_plan(
     )
 
     def _fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(file_col).reset_index(drop=True)
-        gids, offs = [], []
-        gid, fill = 0, 0
-        first = True
-        for b in pdf[bytes_col].astype("int64"):
-            if not first and fill + b > tgt:
-                gid += 1
-                fill = 0
-            offs.append(fill)
-            gids.append(gid)
-            fill += int(b)
-            first = False
-        pdf["group_id"] = pd.array(gids, dtype="int64")
-        pdf["group_offset"] = pd.array(offs, dtype="int64")
+        pdf, lens = curation.group_lengths(
+            pdf, file_col, bytes_col, bound, "MAX_ROWS_PER_SHARD",
+            "compaction_plan",
+        )
+        pdf["group_id"], pdf["group_offset"] = curation.next_fit(lens, tgt)
         return pdf
 
     return (

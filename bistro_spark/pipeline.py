@@ -3,9 +3,8 @@
 This is the north-rule headline job (BASELINE.json#metric): for a stream or
 batch of pre-tokenized sequences (doc_id, tokens, n_tok, source):
 
-  1. calc:  recompute ``n_tok_calc = size(tokens)`` (vectorized; native
-     Catalyst by default, Arrow pandas UDF variant for parity) plus a
-     content fingerprint — reference ``Column.java#calc``.
+  1. calc:  recompute ``n_tok_calc = size(tokens)`` (native Catalyst)
+     plus a content fingerprint — reference ``Column.java#calc``.
   2. link:  attach the ``sources`` dimension on ``source`` via broadcast
      hash join (no fact shuffle) — reference ``Column.java#link``.
   3. accu:  per-source aggregates (sequence count, token sum, weighted
@@ -27,20 +26,13 @@ from bistro_spark.schema import Schema
 from bistro_spark.sources.tokens import sources_dim
 
 
-def build_pipeline(
-    spark: SparkSession, tokens_df: DataFrame, use_pandas_calc: bool = False
-):
+def build_pipeline(spark: SparkSession, tokens_df: DataFrame):
     """Wire the calc→link→accu recipe; returns (schema, facts, groups)."""
     s = Schema(spark, "token_pipeline")
     dim = s.table("sources", sources_dim(spark), key=["source"])
     facts = s.table("tokens", tokens_df)
 
-    if use_pandas_calc:
-        import pandas as pd  # noqa: F401
-
-        facts.calc_pandas("n_tok_calc", lambda t: t.map(len), ["tokens"], "int")
-    else:
-        facts.calc("n_tok_calc", n_tok_native("tokens"))
+    facts.calc("n_tok_calc", n_tok_native("tokens"))
     facts.calc("fingerprint", token_fingerprint("tokens"))
     facts.calc("tok_sum", token_sum("tokens"))
     facts.link("src", dim, on={"source": "source"}).bring("src", "weight")

@@ -22,7 +22,8 @@ Shape (the ``StreamingPacker`` discipline, applied to files):
 partition — the natural case, file ids are assigned at commit time —
 the union of per-trigger plan outputs EQUALS batch ``compaction_plan``
 over everything seen, and :meth:`report` equals batch
-``compaction_report`` at every trigger: the fold depends only on each
+``compaction_report`` at every trigger: both run the one
+``curation.next_fit`` kernel, whose fold depends only on each
 partition's bytes sequence in file_id order, and monotone arrival makes
 the concatenation of per-batch folds THE single fold. Out-of-order
 arrival diverges by construction (an earlier-id file arriving late
@@ -36,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bistro_spark.caching import pin, release
+from bistro_spark.operators.curation import group_lengths, next_fit
 from bistro_spark.session import local_frame
 
 
@@ -110,30 +112,12 @@ class StreamingCompactionMonitor:
         )
 
         def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-            if len(pdf) > max_files:
-                raise ValueError(
-                    f"StreamingCompactionMonitor: batch partition holds "
-                    f"{len(pdf)} files > {max_files}; split the manifest "
-                    f"delta so per-trigger partition frames fit in one task"
-                )
-            pdf = pdf.sort_values(fcol).reset_index(drop=True)
-            part = pdf[pcol].iloc[0]
-            cur = carry.get(part)
-            gids, offs = [], []
-            if cur is None:
-                gid, fill, first = 0, 0, True
-            else:
-                gid, fill = cur
-                first = False
-            for b in pdf[bcol].astype("int64"):
-                if not first and fill + b > tgt:
-                    gid, fill = gid + 1, 0
-                offs.append(fill)
-                gids.append(gid)
-                fill += int(b)
-                first = False
-            pdf["group_id"] = pd.array(gids, dtype="int64")
-            pdf["group_offset"] = pd.array(offs, dtype="int64")
+            pdf, lens = group_lengths(
+                pdf, fcol, bcol, max_files, "max_files_per_batch_partition",
+                "StreamingCompactionMonitor",
+            )
+            cursor = carry.get(pdf[pcol].iloc[0])
+            pdf["group_id"], pdf["group_offset"] = next_fit(lens, tgt, cursor)
             return pdf
 
         out, out_ids = pin(src.groupBy(pcol).applyInPandas(fold, schema))

@@ -24,14 +24,15 @@ the last mile before a trainer is (a) subword-encode arriving text and
   **Parity contract (pytest-pinned):** under id-monotone arrival — each
   shard's documents arrive in increasing id order across triggers, the
   natural case when ids are assigned at ingest — the union of per-trigger
-  outputs EQUALS batch ``pack_sequences`` over everything seen: the
-  greedy fold depends only on each shard's (len) sequence in id order,
-  and monotone arrival makes the concatenation of per-batch folds THE
-  single fold. Out-of-id-order arrival diverges by construction (a
-  later-arriving smaller id would have packed earlier in the batch
-  fold); the divergence is pinned by counter-example, mirroring the
-  token-budget twin's documented contract, because a packer cannot
-  retroactively reopen an emitted buffer.
+  outputs EQUALS batch ``pack_sequences`` over everything seen: both run
+  the one ``curation.next_fit`` kernel, whose fold depends only on each
+  shard's (len) sequence in id order, and monotone arrival makes the
+  concatenation of per-batch folds THE single fold. Out-of-id-order
+  arrival diverges by construction (a later-arriving smaller id would
+  have packed earlier in the batch fold); the divergence is pinned by
+  counter-example, mirroring the token-budget twin's documented
+  contract, because a packer cannot retroactively reopen an emitted
+  buffer.
 """
 
 from __future__ import annotations
@@ -40,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bistro_spark.caching import pin, release
+from bistro_spark.operators.curation import group_lengths, next_fit
 from bistro_spark.session import local_frame
 from bistro_spark.streaming.incremental import DriverSumGrid
 
@@ -118,34 +120,12 @@ class StreamingPacker:
         schema = f"{id_col} long, shard int, pack_id long, offset long, len long"
 
         def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-            if len(pdf) > max_rows:
-                raise ValueError(
-                    f"StreamingPacker: batch shard holds {len(pdf)} rows > "
-                    f"max_rows_per_batch_shard={max_rows}; raise "
-                    f"n_shards so per-trigger shard frames fit in one task"
-                )
-            pdf = pdf.sort_values(id_col).reset_index(drop=True)
-            shard = int(pdf["shard"].iloc[0])
-            cur = carry.get(shard)
-            pack_ids, offsets = [], []
-            if cur is None:
-                pack_id, end, first = 0, 0, True
-            else:
-                pack_id, end = cur
-                first = False
-            for ln in pdf["len"].to_numpy():
-                if first:
-                    off = 0
-                    first = False
-                elif end + ln <= capacity:
-                    off = end
-                else:
-                    pack_id, off = pack_id + 1, 0
-                end = off + ln
-                pack_ids.append(pack_id)
-                offsets.append(off)
-            pdf["pack_id"] = pack_ids
-            pdf["offset"] = offsets
+            pdf, lens = group_lengths(
+                pdf, id_col, "len", max_rows, "max_rows_per_batch_shard",
+                "StreamingPacker",
+            )
+            cursor = carry.get(int(pdf["shard"].iloc[0]))
+            pdf["pack_id"], pdf["offset"] = next_fit(lens, capacity, cursor)
             return pdf[[id_col, "shard", "pack_id", "offset", "len"]]
 
         out, out_ids = pin(src.groupBy("shard").applyInPandas(pack, schema))

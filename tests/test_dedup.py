@@ -131,11 +131,32 @@ def test_embedding_neardup(spark):
     assert all(4 not in p for p in pairs)
 
 
-def test_token_minhash_jvm_vs_pandas_identical(spark):
+def _assert_kernel_matches_catalyst(df, k, stride):
+    """sketch_calc_arrow's tok_sig (the numpy _minhash_flat kernel) must
+    equal the Catalyst token_minhash row for row."""
+    from bistro_spark.operators.dedup import sketch_calc_arrow, token_minhash
+
+    df = df.select("doc_id", "tokens")
+    want = {
+        r["doc_id"]: r["sig"]
+        for r in df.select(
+            "doc_id", token_minhash("tokens", k=k, stride=stride).alias("sig")
+        ).collect()
+    }
+    got = {
+        r["doc_id"]: r["tok_sig"]
+        for r in sketch_calc_arrow(df, k=k, stride=stride).collect()
+    }
+    assert got.keys() == want.keys()
+    for doc_id, sig in got.items():
+        assert sig == want[doc_id], (k, stride, doc_id)
+    return len(got)
+
+
+def test_token_minhash_jvm_vs_arrow_kernel_identical(spark):
     """The numpy/Arrow kernel must be element-identical to the Catalyst
     higher-order-function variant for the same (k, shingle, stride) —
     including short rows (length < shingle, zero-padded)."""
-    from bistro_spark.operators.dedup import token_minhash, token_minhash_pandas
     from bistro_spark.sources.tokens import token_table_fast
 
     df = token_table_fast(spark, 300, partitions=4)
@@ -148,17 +169,7 @@ def test_token_minhash_jvm_vs_pandas_identical(spark):
     )
     df = df.unionByName(extra)
     for k, stride in ((4, 4), (16, 1)):
-        got = (
-            df.select(
-                "doc_id",
-                token_minhash("tokens", k=k, stride=stride).alias("a"),
-                token_minhash_pandas("tokens", k=k, stride=stride).alias("b"),
-            )
-            .collect()
-        )
-        assert len(got) == 301
-        for r in got:
-            assert r["a"] == r["b"], (k, stride, r["doc_id"])
+        assert _assert_kernel_matches_catalyst(df, k, stride) == 301
 
 
 def test_token_minhash_kernel_randomized_ragged(spark):
@@ -167,8 +178,6 @@ def test_token_minhash_kernel_randomized_ragged(spark):
     shorter than the shingle width, runs of identical tokens, max-id
     tokens (overflow guard), single-row chunk boundaries."""
     import numpy as np
-
-    from bistro_spark.operators.dedup import token_minhash, token_minhash_arrow
 
     rng = np.random.RandomState(7)
     rows = []
@@ -188,17 +197,7 @@ def test_token_minhash_kernel_randomized_ragged(spark):
             toks = [int(x) for x in rng.randint(0, 50257, size=n)]
         rows.append((f"r{i}", toks))
     df = spark.createDataFrame(rows, "doc_id string, tokens array<int>").repartition(5)
-    got = (
-        df.select(
-            "doc_id",
-            token_minhash("tokens", k=8, stride=2).alias("a"),
-            token_minhash_arrow("tokens", k=8, stride=2).alias("b"),
-        )
-        .collect()
-    )
-    assert len(got) == 120
-    for r in got:
-        assert r["a"] == r["b"], r["doc_id"]
+    assert _assert_kernel_matches_catalyst(df, 8, 2) == 120
 
 
 def test_simhash_hamming_pairs(spark):

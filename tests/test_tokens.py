@@ -6,8 +6,8 @@ from __future__ import annotations
 
 import duckdb
 
-from bistro_spark.functions.tokens import n_tok_pandas
-from bistro_spark.pipeline import build_pipeline, flagship
+from bistro_spark.functions.tokens import n_tok_native
+from bistro_spark.pipeline import flagship
 from bistro_spark.sources.tokens import token_table, token_table_duckdb_sql
 
 N = 100
@@ -45,15 +45,14 @@ def test_token_table_fast_identical(spark):
         assert slow[k]["event_time"] == fast[k]["event_time"]
 
 
-def test_n_tok_invariant_native_vs_pandas(spark):
-    """calc twin-paths: F.size (JVM) == pandas_udf len (Arrow) == stored
-    n_tok, for every row."""
+def test_n_tok_invariant_stored_vs_native(spark):
+    """The calc n_tok_native (F.size) == the stored n_tok, for every row."""
     df = token_table(spark, N).select(
         "doc_id",
         "n_tok",
-        n_tok_pandas("tokens").alias("n_pandas"),
+        n_tok_native("tokens").alias("n_native"),
     )
-    bad = df.filter("n_tok <> n_pandas").count()
+    bad = df.filter("n_tok <> n_native").count()
     assert bad == 0
 
 
@@ -83,16 +82,6 @@ def test_flagship_pipeline_vs_duckdb(spark):
         assert g["sum_tok"] == sum_tok, source
         assert abs(g["sum_weighted"] - float(sum_weighted)) < 1e-9, source
     assert out["archive"]["n_seq"] == 0  # empty group -> default
-
-
-def test_pipeline_pandas_calc_parity(spark):
-    """Same pipeline with the Arrow pandas-UDF calc path — identical result."""
-    df = token_table(spark, N)
-    _, _, dim_native = build_pipeline(spark, df, use_pandas_calc=False)
-    _, _, dim_pandas = build_pipeline(spark, df, use_pandas_calc=True)
-    a = {r["source"]: (r["n_seq"], r["sum_tok"]) for r in dim_native.df().collect()}
-    b = {r["source"]: (r["n_seq"], r["sum_tok"]) for r in dim_pandas.df().collect()}
-    assert a == b
 
 
 def test_sketch_calc_arrow_parity(spark):
@@ -137,15 +126,11 @@ def test_sketch_calc_arrow_parity(spark):
 
 def test_empty_input_paths(spark):
     """Degenerate inputs: a 0-row token table flows through the flagship
-    (accu defaults populate every dim row), the fused Arrow sketch stage
-    (empty batches yield empty typed output), and the kernel-backed
-    minhash (no rows, no crash)."""
+    (accu defaults populate every dim row) and the fused Arrow sketch stage
+    (empty batches yield empty typed output)."""
     from pyspark.sql import functions as F
 
-    from bistro_spark.operators.dedup import (
-        sketch_calc_arrow,
-        token_minhash_arrow,
-    )
+    from bistro_spark.operators.dedup import sketch_calc_arrow
     from bistro_spark.pipeline import flagship
     from bistro_spark.sources.tokens import token_table_fast
 
@@ -158,6 +143,3 @@ def test_empty_input_paths(spark):
 
     sk = sketch_calc_arrow(empty)
     assert sk.count() == 0 and "tok_sig" in sk.columns
-
-    mh = empty.select(token_minhash_arrow("tokens", k=4).alias("sig"))
-    assert mh.count() == 0
