@@ -16,12 +16,10 @@ real training pipelines: a learned SUBWORD vocabulary (Sennrich et al.
   Determinism: ties on pair count break lexicographically, so the same
   corpus yields the same merge list on any cluster shape / retry.
 
-- :func:`bpe_encode` — apply the learned merges per document: an
-  Arrow-batched pandas UDF (never a row-at-a-time Python UDF) with a
-  per-batch WORD MEMO — natural text re-uses word types heavily (Zipf
-  again), so the merge loop runs once per distinct word per batch, not
-  once per token. Map-only stage: no shuffle, the merge table ships via
-  closure (vocab-sized).
+- :func:`bpe_encode` — apply the learned merges per document, word by
+  word (:func:`encode_word`), in the memoized Arrow stage the three
+  tokenizers share (``operators/subword.py``). Map-only: no shuffle,
+  the merge table ships via closure (vocab-sized).
 
 Cross-engine note: BPE encoding is iterative-fixpoint per word (apply
 the highest-priority merge until none applies) — genuinely not
@@ -36,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from bistro_spark.operators import subword
+
 END = "</w>"  # end-of-word marker (Sennrich-style)
 
 
@@ -46,8 +46,7 @@ def word_frequencies(
     ``max_words`` types (count DESC, word ASC — deterministic cut).
     The only corpus-scale stage of BPE training."""
     wf = (
-        df.select(F.explode(F.split(F.col(text_col), r"\s+")).alias("w"))
-        .filter(F.col("w") != "")
+        df.select(F.explode(subword.word_array(F.col(text_col))).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy(F.col("n").desc(), F.col("w").asc())
@@ -65,8 +64,13 @@ def _pair_counts(vocab: dict[tuple[str, ...], int]) -> dict:
     return counts
 
 
-def _merge_word(sym: tuple[str, ...], pair: tuple[str, str]) -> tuple[str, ...]:
-    out, i, joined = [], 0, pair[0] + pair[1]
+def _merge_word(
+    sym: tuple[str, ...], pair: tuple[str, str], joined: str
+) -> tuple[str, ...]:
+    """Replace every adjacent ``pair`` in ``sym`` by ``joined``, left to
+    right (WordPiece joins without its ``##`` prefix, BPE by plain
+    concatenation)."""
+    out, i = [], 0
     while i < len(sym):
         if i < len(sym) - 1 and sym[i] == pair[0] and sym[i + 1] == pair[1]:
             out.append(joined)
@@ -98,7 +102,8 @@ def bpe_train(
         if counts[best] < 2:
             break  # every remaining pair is unique — no compression left
         merges.append(best)
-        vocab = {_merge_word(s, best): n for s, n in vocab.items()}
+        joined = best[0] + best[1]
+        vocab = {_merge_word(s, best, joined): n for s, n in vocab.items()}
     return merges
 
 
@@ -114,7 +119,7 @@ def encode_word(word: str, ranks: dict[tuple[str, str], int]) -> list[str]:
                 best, best_rank = (sym[i], sym[i + 1]), r
         if best is None:
             break
-        sym = _merge_word(sym, best)
+        sym = _merge_word(sym, best, best[0] + best[1])
     return list(sym)
 
 
@@ -126,44 +131,17 @@ def bpe_encode(
     keep: list[str] | None = None,
 ) -> DataFrame:
     """Encode each document into BPE pieces under ``merges``:
-    (id, n_pieces, pieces) with ``pieces`` the space-joined subword
-    sequence (``</w>`` marking word ends — lossless round-trip). One
-    map-only Arrow stage; per-batch word memo (see module docstring).
+    (id, n_pieces, pieces, *keep) with ``pieces`` the space-joined
+    subword sequence (``</w>`` marking word ends — lossless round-trip).
+    The memoized Arrow stage is ``subword.encode_stage``."""
+    return subword.encode_stage(
+        df, _word_rule(merges), id_col, text_col, keep
+    ).drop("score")
 
-    ``keep`` passes extra input columns through unchanged (appended
-    after ``pieces``) — lets downstream aggregations (fertility stats)
-    stay in the same map stage instead of re-joining on the id."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
 
+def _word_rule(merges: list[tuple[str, str]]):
     ranks = {p: i for i, p in enumerate(merges)}
-
-    @pandas_udf("array<string>")
-    def encode(texts):
-        memo: dict[str, list[str]] = {}
-
-        def enc_doc(t):
-            out: list[str] = []
-            for w in (t or "").split():
-                got = memo.get(w)
-                if got is None:
-                    got = memo[w] = encode_word(w, ranks)
-                out.extend(got)
-            return out
-
-        return pd.Series([enc_doc(t) for t in texts])
-
-    enc = df.select(
-        F.col(id_col),
-        encode(F.col(text_col)).alias("_pieces"),
-        *[F.col(c) for c in (keep or [])],
-    )
-    return enc.select(
-        id_col,
-        F.size("_pieces").cast("int").alias("n_pieces"),
-        F.concat_ws(" ", "_pieces").alias("pieces"),
-        *(keep or []),
-    )
+    return lambda w: (encode_word(w, ranks), 0.0)
 
 
 def bpe_decode_pieces(pieces: str) -> str:
@@ -231,17 +209,11 @@ def bpe_encode_fixed_sql(
     )
     return f"""
       WITH RECURSIVE
-      w0 AS (
-        SELECT {id_col}, string_split_regex({text_col}, '\\s+') AS ws
-        FROM {table}
-      ),
       base AS (
         SELECT {id_col}, i AS word_idx,
                list_append(list_transform(range(1, length(w) + 1),
                                            j -> w[j]), '</w>') AS sym
-        FROM (SELECT {id_col}, unnest(ws) AS w,
-                     unnest(range(1, len(ws) + 1)) AS i FROM w0)
-        WHERE w <> ''
+        FROM ({subword.doc_words_sql(table, id_col, text_col)})
       ),
       enc AS (
         SELECT {id_col}, word_idx, sym FROM base
@@ -282,58 +254,9 @@ def fertility_stats(
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
-    """Per-group tokenizer fertility report: how many subword pieces the
-    tokenizer spends per word / per character in each corpus slice. THE
-    pre-training sanity check on a tokenizer × mixture pairing — a slice
-    with fertility 2× the rest (unseen script, heavy code, wrong vocab)
-    silently doubles its effective token cost, skewing every
-    token-budgeted mixture decision downstream.
-
-    100 TB shape: ONE map-only Arrow encode stage (the per-doc word/char
-    counts ride the same projection via ``bpe_encode(keep=...)`` — no
-    re-join on the id) into ONE partial-aggregated groupBy; output is
-    group-cardinality. All sums exact BIGINT; the ratios are round-6
-    report columns, never keys.
-
-    Returns (group, n_docs, n_words, n_chars, n_pieces, fertility
-    [pieces/word], chars_per_piece, pieces_per_doc)."""
+    """``subword.fertility`` of the BPE tokenizer."""
     merges = FIXED_MERGES if merges is None else merges
-    pre = df.select(
-        id_col,
-        text_col,
-        F.col(group_col),
-        F.length(text_col).cast("long").alias("_chars"),
-        F.size(F.filter(F.split(F.col(text_col), r"\s+"), lambda w: w != ""))
-        .cast("long")
-        .alias("_words"),
-    )
-    enc = bpe_encode(pre, merges, id_col, text_col, keep=[group_col, "_chars", "_words"])
-    agg = enc.groupBy(group_col).agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum("_words").cast("long").alias("n_words"),
-        F.sum("_chars").cast("long").alias("n_chars"),
-        F.sum("n_pieces").cast("long").alias("n_pieces"),
-    )
-    return agg.select(
-        group_col,
-        "n_docs",
-        "n_words",
-        "n_chars",
-        "n_pieces",
-        F.round(
-            F.when(F.col("n_words") == 0, F.lit(0.0)).otherwise(
-                F.col("n_pieces") / F.col("n_words")
-            ),
-            6,
-        ).alias("fertility"),
-        F.round(
-            F.when(F.col("n_pieces") == 0, F.lit(0.0)).otherwise(
-                F.col("n_chars") / F.col("n_pieces")
-            ),
-            6,
-        ).alias("chars_per_piece"),
-        F.round(F.col("n_pieces") / F.col("n_docs"), 6).alias("pieces_per_doc"),
-    )
+    return subword.fertility(df, _word_rule(merges), group_col, id_col, text_col)
 
 
 def fertility_stats_sql(
@@ -343,37 +266,6 @@ def fertility_stats_sql(
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> str:
-    """DuckDB twin of :func:`fertility_stats`: reuse the recursive-CTE
-    fixed-merge encode (:func:`bpe_encode_fixed_sql`) for per-doc piece
-    counts, join back to the base table for word/char counts (the SQL
-    twin pays an id join the Spark side avoids via ``keep``), aggregate
-    per group. Word count = non-empty whitespace splits, matching
-    Spark's filtered ``split`` exactly."""
+    """DuckDB twin of :func:`fertility_stats`."""
     enc = bpe_encode_fixed_sql(table, merges, id_col, text_col)
-    return f"""
-      WITH enc AS ({enc}),
-      perdoc AS (
-        SELECT d.{group_col} AS grp,
-               len(list_filter(string_split_regex(d.{text_col}, '\\s+'),
-                               w -> w <> '')) AS words,
-               length(d.{text_col}) AS chars,
-               e.n_pieces
-        FROM {table} d JOIN enc e USING ({id_col})
-      ),
-      agg AS (
-        SELECT grp, CAST(count(*) AS BIGINT) AS n_docs,
-               CAST(sum(words) AS BIGINT) AS n_words,
-               CAST(sum(chars) AS BIGINT) AS n_chars,
-               CAST(sum(n_pieces) AS BIGINT) AS n_pieces
-        FROM perdoc GROUP BY grp
-      )
-      SELECT grp AS {group_col}, n_docs, n_words, n_chars, n_pieces,
-             round(CASE WHEN n_words = 0 THEN 0.0
-                        ELSE CAST(n_pieces AS DOUBLE) / n_words END,
-                   6) AS fertility,
-             round(CASE WHEN n_pieces = 0 THEN 0.0
-                        ELSE CAST(n_chars AS DOUBLE) / n_pieces END,
-                   6) AS chars_per_piece,
-             round(CAST(n_pieces AS DOUBLE) / n_docs, 6) AS pieces_per_doc
-      FROM agg
-    """
+    return subword.fertility_sql(table, enc, group_col, id_col, text_col)

@@ -33,6 +33,8 @@ columns and accu (C5) for the grouped reports):
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -1141,6 +1143,27 @@ def mixture_report_sql(
 # ------------------------------------------ bigram LM quality scoring ----
 
 
+def word_ngrams(
+    df: DataFrame, n: int, text_col: str = "text", id_col: str | None = None
+) -> DataFrame:
+    """Adjacent word n-grams of each document: ([id_col,] w1 .. wn), one
+    row per position, single-space split. Documents with fewer than n
+    split parts yield no rows; an n-gram with an empty word (from a
+    double space) is dropped."""
+    words = F.split(F.col(text_col), " ")
+    size = F.size(words)
+    cols = [f"w{j}" for j in range(1, n + 1)]
+    zipped = F.arrays_zip(
+        *[F.slice(words, j, size - (n - 1)).alias(c) for j, c in enumerate(cols, 1)]
+    )
+    ids = [id_col] if id_col else []
+    grams = df.filter(size >= n).select(*ids, F.explode(zipped).alias("p"))
+    nonempty = [F.col(c) != "" for c in cols]
+    return grams.select(*ids, *[F.col(f"p.{c}").alias(c) for c in cols]).filter(
+        functools.reduce(lambda a, b: a & b, nonempty)
+    )
+
+
 def bigram_logprob(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -1158,22 +1181,7 @@ def bigram_logprob(
     model; scoring joins them back (broadcast while they fit); per-pair
     logs are rounded then decimal-summed — order-independent equality.
     """
-    words = F.split(F.col(text_col), " ")
-    n = F.size(words)
-    pairs = (
-        df.filter(n >= 2)
-        .select(
-            F.col(id_col),
-            F.explode(
-                F.arrays_zip(
-                    F.slice(words, 1, n - 1).alias("w1"),
-                    F.slice(words, 2, n - 1).alias("w2"),
-                )
-            ).alias("p"),
-        )
-        .select(id_col, F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
-        .filter((F.col("w1") != "") & (F.col("w2") != ""))
-    )
+    pairs = word_ngrams(df, 2, text_col, id_col)
     bc = pairs.groupBy("w1", "w2").agg(
         F.count("*").cast("long").alias("c")
     )
@@ -2544,22 +2552,7 @@ def kneser_ney_logprob(
     absent (same contract as bigram_logprob).
     """
     d = float(discount)
-    words = F.split(F.col(text_col), " ")
-    n = F.size(words)
-    pairs = (
-        df.filter(n >= 2)
-        .select(
-            F.col(id_col),
-            F.explode(
-                F.arrays_zip(
-                    F.slice(words, 1, n - 1).alias("w1"),
-                    F.slice(words, 2, n - 1).alias("w2"),
-                )
-            ).alias("p"),
-        )
-        .select(id_col, F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
-        .filter((F.col("w1") != "") & (F.col("w2") != ""))
-    )
+    pairs = word_ngrams(df, 2, text_col, id_col)
     bc = pairs.groupBy("w1", "w2").agg(F.count("*").cast("long").alias("c"))
     hc = bc.groupBy("w1").agg(
         F.sum("c").cast("long").alias("h"),
@@ -3435,30 +3428,7 @@ def kneser_ney3_logprob(
     trigrams and are absent.
     """
     d = float(discount)
-    words = F.split(F.col(text_col), " ")
-    n = F.size(words)
-    triples = (
-        df.filter(n >= 3)
-        .select(
-            F.col(id_col),
-            F.explode(
-                F.arrays_zip(
-                    F.slice(words, 1, n - 2).alias("w1"),
-                    F.slice(words, 2, n - 2).alias("w2"),
-                    F.slice(words, 3, n - 2).alias("w3"),
-                )
-            ).alias("p"),
-        )
-        .select(
-            id_col,
-            F.col("p.w1").alias("w1"),
-            F.col("p.w2").alias("w2"),
-            F.col("p.w3").alias("w3"),
-        )
-        .filter(
-            (F.col("w1") != "") & (F.col("w2") != "") & (F.col("w3") != "")
-        )
-    )
+    triples = word_ngrams(df, 3, text_col, id_col)
     tc = triples.groupBy("w1", "w2", "w3").agg(
         F.count("*").cast("long").alias("c")
     )

@@ -809,12 +809,15 @@ def pq_encode(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     scale: int = 10**6,
+    keep: list[str] | None = None,
 ) -> DataFrame:
-    """Encode each vector to m codes: per subspace, the index of the
-    nearest centroid (exact int64 squared L2; ties -> smallest index,
-    numpy argmin's rule == the oracle's ORDER BY dist, j). Map-only:
-    the codebook closes over the Arrow kernel (the numpy analog of
-    F.broadcast), one pass, no shuffle."""
+    """Encode each vector to m codes: (id, *keep, codes). Per subspace,
+    the index of the nearest centroid (exact int64 squared L2; ties ->
+    smallest index, numpy argmin's rule == the oracle's ORDER BY dist, j).
+    Map-only: the codebook closes over the Arrow kernel (the numpy analog
+    of F.broadcast), one pass, no shuffle. ``keep`` lists passthrough
+    columns. Pure projection, so it applies verbatim to a stream
+    (``streaming/pq.pq_gate``)."""
     import numpy as np
 
     C = np.asarray(codebook, dtype=np.int64)
@@ -822,7 +825,10 @@ def pq_encode(
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m}")
     sub = dim // m
-    iq = corpus.select(id_col, _int_quantize_expr(vec_col, scale).alias("_iq"))
+    keep = list(keep or [])
+    iq = corpus.select(
+        id_col, *keep, _int_quantize_expr(vec_col, scale).alias("_iq")
+    )
 
     def enc(batches):
         import pandas as pd
@@ -837,12 +843,13 @@ def pq_encode(
                 Cs = C[:, s * sub : (s + 1) * sub]
                 d = ((Xs[:, None, :] - Cs[None, :, :]) ** 2).sum(-1)
                 codes[:, s] = d.argmin(1)
-            yield pd.DataFrame(
-                {id_col: b[id_col], "codes": list(codes)}
-            )
+            yield b.drop(columns="_iq").assign(codes=list(codes))
 
-    id_t = dict(corpus.dtypes)[id_col]
-    return iq.mapInPandas(enc, f"{id_col} {id_t}, codes array<int>")
+    types = dict(iq.dtypes)
+    schema = ", ".join(
+        [f"{c} {types[c]}" for c in (id_col, *keep)] + ["codes array<int>"]
+    )
+    return iq.mapInPandas(enc, schema)
 
 
 def l2_topk(

@@ -503,32 +503,8 @@ def heavy_hitters(
     keys); here the only wide ops are the candidate-set distinct (bounded
     by k * partitions) and a count over the broadcast-filtered stream.
     """
-    import pandas as pd
-
-    words = F.explode(F.split(F.col(text_col), " ")).alias("word")
-    terms = df.select(words)
-
-    def mg_partition(batches):
-        # vectorized mergeable-summary MG (Agarwal et al. 2012): per batch,
-        # value_counts at C speed, add into the running summary, then cap
-        # to k counters by subtracting the (k+1)-th largest count from all
-        # and dropping the non-positive remainder — the merge rule that
-        # preserves the est >= true - N_p/(k+1) bound, so nothing with
-        # partition frequency > N_p/(k+1) can be evicted.
-        counters = pd.Series(dtype="int64")
-        for b in batches:
-            if not len(b):
-                continue
-            vc = b["word"].value_counts()
-            counters = counters.add(vc, fill_value=0)
-            if len(counters) > k:
-                m = counters.nlargest(k + 1).iloc[-1]
-                counters = counters - m
-                counters = counters[counters > 0]
-        if len(counters):
-            yield pd.DataFrame({"word": counters.index.astype(str)})
-
-    candidates = terms.mapInPandas(mg_partition, "word string").distinct()
+    terms = df.select(F.explode(F.split(F.col(text_col), " ")).alias("word"))
+    candidates = mg_summaries(terms, k).select("word").distinct()
 
     total = terms.select(F.count("*").alias("_n_total"))
     return (
@@ -539,6 +515,39 @@ def heavy_hitters(
         .filter(F.col("cnt") * (k + 1) > F.col("_n_total"))
         .select("word", "cnt")
     )
+
+
+def mg_cap(counters, k: int):
+    """The Misra-Gries merge rule on a word -> count pandas Series: keep
+    at most k counters by subtracting the (k+1)-th largest count from
+    all and dropping the non-positive remainder. The total subtraction
+    is bounded by N/(k+1), so nothing with frequency > N/(k+1) can be
+    evicted (mergeable summaries, Agarwal et al. 2012)."""
+    if len(counters) > k:
+        counters = counters - counters.nlargest(k + 1).iloc[-1]
+        counters = counters[counters > 0]
+    return counters
+
+
+def mg_summaries(terms: DataFrame, k: int) -> DataFrame:
+    """Per-partition Misra-Gries summaries of a ``word`` column: at most
+    k rows (word, est) per partition. Vectorized: per Arrow batch,
+    value_counts at C speed, add into the running summary, then
+    :func:`mg_cap`. The iterator spans the whole partition, so the
+    summary is per-partition, not per-batch."""
+    import pandas as pd
+
+    def mg_partition(batches):
+        counters = pd.Series(dtype="int64")
+        for b in batches:
+            if len(b):
+                counters = mg_cap(counters.add(b["word"].value_counts(), fill_value=0), k)
+        if len(counters):
+            yield pd.DataFrame(
+                {"word": counters.index.astype(str), "est": counters.to_numpy("int64")}
+            )
+
+    return terms.mapInPandas(mg_partition, "word string, est long")
 
 
 def heavy_hitters_sql(

@@ -28,9 +28,10 @@ Spark/driver split, mirroring the BPE design:
   word-boundary marker are never pruned, so every string stays
   segmentable.
 
-- **Encode**: Viterbi DP per word in an Arrow-batched pandas UDF with a
-  per-batch word memo (Zipf reuse, as in ``bpe.bpe_encode``). Map-only:
-  the vocabulary ships via closure, no shuffle, no per-row Python UDF.
+- **Encode**: Viterbi DP per word (:func:`viterbi_segment`) in the
+  memoized Arrow stage the three tokenizers share
+  (``operators/subword.py``). Map-only: the vocabulary ships via
+  closure, no shuffle, no per-row Python UDF.
 
 Cross-engine exactness: float log-probabilities sum in different orders
 on different engines, so the hash-checked contract twin runs on an
@@ -52,6 +53,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bistro_spark.operators import subword
 from bistro_spark.operators.bpe import word_frequencies
 from bistro_spark.session import local_frame
 
@@ -104,57 +106,21 @@ def unigram_encode(
     keep: list[str] | None = None,
 ) -> DataFrame:
     """Encode each document into unigram pieces: (id, n_pieces, pieces,
-    score) with ``pieces`` the space-joined piece sequence (each word
-    BOW-prefixed — lossless round-trip via :func:`unigram_decode_pieces`)
-    and ``score`` the exact total segmentation score (BIGINT for integer
-    vocabs). One map-only Arrow stage; per-batch word memo; the
-    vocabulary ships via closure (vocab-sized).
-
-    ``keep`` passes extra input columns through unchanged, as in
-    ``bpe.bpe_encode`` — downstream per-group stats ride the same map
-    stage instead of re-joining on the id."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
+    score, *keep) with ``pieces`` the space-joined piece sequence (each
+    word BOW-prefixed — lossless round-trip via
+    :func:`unigram_decode_pieces`) and ``score`` the exact total
+    segmentation score (BIGINT for integer vocabs, else rounded to 6
+    places). The memoized Arrow stage is ``subword.encode_stage``."""
     scores = dict(vocab)
     integer = all(isinstance(s, int) for s in scores.values())
+    enc = subword.encode_stage(df, _word_rule(scores), id_col, text_col, keep)
+    score = F.col("score").cast("long") if integer else F.round("score", 6)
+    return enc.withColumn("score", score)
+
+
+def _word_rule(scores: dict[str, float]):
     max_len = max((len(p) for p in scores), default=1)
-
-    @pandas_udf("struct<pieces: array<string>, score: double>")
-    def encode(texts):
-        memo: dict[str, tuple[list[str], float]] = {}
-
-        def enc_doc(t):
-            out: list[str] = []
-            total = 0.0
-            for w in (t or "").split():
-                got = memo.get(w)
-                if got is None:
-                    got = memo[w] = viterbi_segment(BOW + w, scores, max_len)
-                out.extend(got[0])
-                total += got[1]
-            return out, total
-
-        enc = [enc_doc(t) for t in texts]
-        return pd.DataFrame(
-            {"pieces": [e[0] for e in enc], "score": [e[1] for e in enc]}
-        )
-
-    enc = df.select(
-        F.col(id_col),
-        encode(F.col(text_col)).alias("_e"),
-        *[F.col(c) for c in (keep or [])],
-    )
-    score_col = (
-        F.col("_e.score").cast("long") if integer else F.round("_e.score", 6)
-    ).alias("score")
-    return enc.select(
-        id_col,
-        F.size("_e.pieces").cast("int").alias("n_pieces"),
-        F.concat_ws(" ", "_e.pieces").alias("pieces"),
-        score_col,
-        *(keep or []),
-    )
+    return lambda w: viterbi_segment(BOW + w, scores, max_len)
 
 
 def unigram_decode_pieces(pieces: str) -> str:
@@ -409,17 +375,15 @@ def unigram_encode_fixed_sql(
     (training stays pytest-pinned: its vocabulary depends on the data,
     which a static oracle string cannot see).
 
-    Oracle formulation is *definitional*, sharing nothing with the Spark
+    The per-word rule is *definitional*, sharing nothing with the Spark
     plan: enumerate EVERY segmentation of every DISTINCT word type via a
-    recursive CTE (one extension per matching vocab piece per step), keep
-    the argmax by (score DESC, piece-list ASC) per word, then join back
-    to per-document word positions and aggregate. Enumeration is
-    exponential in word length, which is fine for an ORACLE over the
-    distinct-word table at verification scale (sf0.01: 31 word types,
-    max 8 chars); the engine side is the linear Viterbi DP. The fixed
-    vocabulary covers [a-z] as single characters, so the engine's
-    out-of-vocab fallback branch never fires here (it is pinned by
-    pytest against a brute-force reference on adversarial inputs).
+    recursive CTE (one extension per matching vocab piece per step) and
+    keep the argmax by (score DESC, piece-list ASC); the per-document
+    tail is ``subword.doc_pieces_sql``. Enumeration is exponential in
+    word length, fine for an oracle over the distinct-word table at
+    verification scale (sf0.01: 31 word types, max 8 chars). The fixed
+    vocabulary covers [a-z], so the out-of-vocab fallback never fires
+    here (pytest pins it against a brute-force reference).
 
     Integer scores make the two engines' sums identical; DuckDB's binary
     UTF-8 string ordering matches Python's code-point ordering for the
@@ -427,57 +391,31 @@ def unigram_encode_fixed_sql(
     vocab = FIXED_UNIGRAM_VOCAB if vocab is None else vocab
     pieces = "[" + ", ".join("'" + p.replace("'", "''") + "'" for p, _ in vocab) + "]"
     scores = "[" + ", ".join(str(s) for _, s in vocab) + "]"
-    return f"""
-      WITH RECURSIVE
+    perword = f"""
       vocab AS (
         SELECT unnest({pieces}) AS vp, unnest({scores}) AS vs
       ),
-      words AS (
-        SELECT DISTINCT '{BOW}' || w AS w
-        FROM (SELECT unnest(string_split_regex({text_col}, '\\s+')) AS w
-              FROM {table})
-        WHERE w <> ''
-      ),
+      words AS (SELECT DISTINCT w, '{BOW}' || w AS bw FROM docwords),
       seg AS (
-        SELECT w, 0 AS pos, CAST(0 AS BIGINT) AS score,
+        SELECT w, bw, 0 AS pos, CAST(0 AS BIGINT) AS score,
                CAST([] AS VARCHAR[]) AS pieces
         FROM words
         UNION ALL
-        SELECT s.w, s.pos + length(v.vp) AS pos, s.score + v.vs AS score,
+        SELECT s.w, s.bw, s.pos + length(v.vp) AS pos,
+               s.score + v.vs AS score,
                list_append(s.pieces, v.vp) AS pieces
         FROM seg s JOIN vocab v
-          ON substr(s.w, s.pos + 1, length(v.vp)) = v.vp
-        WHERE s.pos < length(s.w)
+          ON substr(s.bw, s.pos + 1, length(v.vp)) = v.vp
+        WHERE s.pos < length(s.bw)
       ),
       best AS (
         SELECT w, score, pieces,
                row_number() OVER (PARTITION BY w
                                   ORDER BY score DESC, pieces ASC) AS rn
-        FROM seg WHERE pos = length(w)
+        FROM seg WHERE pos = length(bw)
       ),
-      perword AS (SELECT w, score, pieces FROM best WHERE rn = 1),
-      docwords AS (
-        SELECT {id_col}, '{BOW}' || w AS w, i
-        FROM (SELECT {id_col},
-                     unnest(string_split_regex({text_col}, '\\s+')) AS w,
-                     unnest(range(1, len(string_split_regex({text_col}, '\\s+')) + 1)) AS i
-              FROM {table})
-        WHERE w <> ''
-      ),
-      agg AS (
-        SELECT d.{id_col},
-               CAST(sum(len(p.pieces)) AS INT) AS n_pieces,
-               string_agg(array_to_string(p.pieces, ' '), ' ' ORDER BY d.i)
-                 AS pieces,
-               CAST(sum(p.score) AS BIGINT) AS score
-        FROM docwords d JOIN perword p USING (w)
-        GROUP BY d.{id_col}
-      )
-      SELECT t.{id_col}, coalesce(a.n_pieces, 0) AS n_pieces,
-             coalesce(a.pieces, '') AS pieces,
-             coalesce(a.score, 0) AS score
-      FROM {table} t LEFT JOIN agg a USING ({id_col})
-    """
+      perword AS (SELECT w, pieces, score FROM best WHERE rn = 1)"""
+    return subword.doc_pieces_sql(table, id_col, text_col, perword)
 
 
 def unigram_fertility_sql(
@@ -487,39 +425,9 @@ def unigram_fertility_sql(
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> str:
-    """DuckDB twin of ``bpe.fertility_stats`` computed over UNIGRAM
-    pieces (fixed integer vocabulary): per-group pieces/word,
-    chars/piece, pieces/doc. Lets the contract compare the two tokenizer
-    families' fertility on the same corpus slice — the concrete question
-    a tokenizer bake-off answers before committing a token budget."""
+    """DuckDB twin of :func:`unigram_fertility`."""
     enc = unigram_encode_fixed_sql(table, vocab, id_col, text_col)
-    return f"""
-      WITH enc AS ({enc}),
-      perdoc AS (
-        SELECT d.{group_col} AS grp,
-               len(list_filter(string_split_regex(d.{text_col}, '\\s+'),
-                               w -> w <> '')) AS words,
-               length(d.{text_col}) AS chars,
-               e.n_pieces
-        FROM {table} d JOIN enc e USING ({id_col})
-      ),
-      agg AS (
-        SELECT grp, CAST(count(*) AS BIGINT) AS n_docs,
-               CAST(sum(words) AS BIGINT) AS n_words,
-               CAST(sum(chars) AS BIGINT) AS n_chars,
-               CAST(sum(n_pieces) AS BIGINT) AS n_pieces
-        FROM perdoc GROUP BY grp
-      )
-      SELECT grp AS {group_col}, n_docs, n_words, n_chars, n_pieces,
-             round(CASE WHEN n_words = 0 THEN 0.0
-                        ELSE CAST(n_pieces AS DOUBLE) / n_words END,
-                   6) AS fertility,
-             round(CASE WHEN n_pieces = 0 THEN 0.0
-                        ELSE CAST(n_chars AS DOUBLE) / n_pieces END,
-                   6) AS chars_per_piece,
-             round(CAST(n_pieces AS DOUBLE) / n_docs, 6) AS pieces_per_doc
-      FROM agg
-    """
+    return subword.fertility_sql(table, enc, group_col, id_col, text_col)
 
 
 def unigram_fertility(
@@ -529,45 +437,7 @@ def unigram_fertility(
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
-    """Per-group fertility of the unigram tokenizer (Spark side of
-    :func:`unigram_fertility_sql`): ONE map-only Arrow encode (word/char
-    counts ride the same projection via ``keep``) into ONE
-    partial-aggregated groupBy. Same shape and guarantees as
-    ``bpe.fertility_stats``."""
+    """``subword.fertility`` of the unigram tokenizer — the bake-off
+    twin of ``bpe.fertility_stats``."""
     vocab = FIXED_UNIGRAM_VOCAB if vocab is None else vocab
-    pre = df.select(
-        id_col,
-        text_col,
-        F.col(group_col),
-        F.length(text_col).cast("long").alias("_chars"),
-        F.size(F.filter(F.split(F.col(text_col), r"\s+"), lambda w: w != ""))
-        .cast("long")
-        .alias("_words"),
-    )
-    enc = unigram_encode(pre, vocab, id_col, text_col, keep=[group_col, "_chars", "_words"])
-    agg = enc.groupBy(group_col).agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum("_words").cast("long").alias("n_words"),
-        F.sum("_chars").cast("long").alias("n_chars"),
-        F.sum("n_pieces").cast("long").alias("n_pieces"),
-    )
-    return agg.select(
-        group_col,
-        "n_docs",
-        "n_words",
-        "n_chars",
-        "n_pieces",
-        F.round(
-            F.when(F.col("n_words") == 0, F.lit(0.0)).otherwise(
-                F.col("n_pieces") / F.col("n_words")
-            ),
-            6,
-        ).alias("fertility"),
-        F.round(
-            F.when(F.col("n_pieces") == 0, F.lit(0.0)).otherwise(
-                F.col("n_chars") / F.col("n_pieces")
-            ),
-            6,
-        ).alias("chars_per_piece"),
-        F.round(F.col("n_pieces") / F.col("n_docs"), 6).alias("pieces_per_doc"),
-    )
+    return subword.fertility(df, _word_rule(dict(vocab)), group_col, id_col, text_col)

@@ -21,8 +21,9 @@ design:
   matching at the cursor — word-initial pieces match bare, word-internal
   pieces carry the ``##`` continuation prefix — and if NO piece matches
   at some cursor (or the word exceeds ``max_chars``), the WHOLE word
-  becomes ``[UNK]``. One map-only Arrow stage with a per-batch word memo
-  (Zipf reuse, as in ``bpe_encode``); the vocabulary ships via closure.
+  becomes ``[UNK]``. The per-word rule runs in the memoized Arrow stage
+  the three tokenizers share (``operators/subword.py``); the vocabulary
+  ships via closure.
 
 Cross-engine exactness: greedy longest-match is DETERMINISTIC (two
 distinct vocab pieces matching the same cursor position are different
@@ -44,7 +45,8 @@ from fractions import Fraction
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from bistro_spark.operators.bpe import word_frequencies
+from bistro_spark.operators import subword
+from bistro_spark.operators.bpe import _merge_word, _pair_counts, word_frequencies
 
 CONT = "##"  # continuation prefix for word-internal pieces (BERT-style)
 UNK = "[UNK]"  # whole-word fallback when no piece matches at a cursor
@@ -101,44 +103,18 @@ def wordpiece_encode(
     max_chars: int = MAX_WORD_CHARS,
 ) -> DataFrame:
     """Encode each document into WordPiece pieces under ``vocab``:
-    (id, n_pieces, pieces) with ``pieces`` the space-joined piece
+    (id, n_pieces, pieces, *keep) with ``pieces`` the space-joined piece
     sequence (``##`` marking continuations — lossless round-trip via
-    :func:`wordpiece_decode_pieces` for fully-covered words). One
-    map-only Arrow stage; per-batch word memo; the vocabulary ships via
-    closure (vocab-sized). ``keep`` passes extra input columns through
-    unchanged, as in ``bpe_encode`` — downstream per-group stats ride
-    the same map stage instead of re-joining on the id."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
+    :func:`wordpiece_decode_pieces` for fully-covered words). The
+    memoized Arrow stage is ``subword.encode_stage``."""
+    return subword.encode_stage(
+        df, _word_rule(vocab, max_chars), id_col, text_col, keep
+    ).drop("score")
 
+
+def _word_rule(vocab: list[str], max_chars: int = MAX_WORD_CHARS):
     initial, cont, max_len = _vocab_maps(vocab)
-
-    @pandas_udf("array<string>")
-    def encode(texts):
-        memo: dict[str, list[str]] = {}
-
-        def enc_doc(t):
-            out: list[str] = []
-            for w in (t or "").split():
-                got = memo.get(w)
-                if got is None:
-                    got = memo[w] = encode_word(w, initial, cont, max_len, max_chars)
-                out.extend(got)
-            return out
-
-        return pd.Series([enc_doc(t) for t in texts])
-
-    enc = df.select(
-        F.col(id_col),
-        encode(F.col(text_col)).alias("_pieces"),
-        *[F.col(c) for c in (keep or [])],
-    )
-    return enc.select(
-        id_col,
-        F.size("_pieces").cast("int").alias("n_pieces"),
-        F.concat_ws(" ", "_pieces").alias("pieces"),
-        *(keep or []),
-    )
+    return lambda w: (encode_word(w, initial, cont, max_len, max_chars), 0.0)
 
 
 def wordpiece_decode_pieces(pieces: str) -> str:
@@ -188,19 +164,12 @@ def wordpiece_train(
     alphabet = sorted({s for sym in vocab_words for s in sym})
     vocab: list[str] = [UNK] + alphabet
 
-    def merged_form(a: str, b: str) -> str:
-        return a + b[len(CONT):]
-
     while len(vocab) < vocab_size:
         sym_counts: dict[str, int] = {}
-        pair_counts: dict[tuple[str, str], int] = {}
         for sym, n in vocab_words.items():
             for s in sym:
                 sym_counts[s] = sym_counts.get(s, 0) + n
-            for i in range(len(sym) - 1):
-                p = (sym[i], sym[i + 1])
-                pair_counts[p] = pair_counts.get(p, 0) + n
-        repeated = {p: c for p, c in pair_counts.items() if c >= 2}
+        repeated = {p: c for p, c in _pair_counts(vocab_words).items() if c >= 2}
         if not repeated:
             break
         best = min(
@@ -210,27 +179,12 @@ def wordpiece_train(
                 kv[0],
             ),
         )[0]
-        vocab.append(merged_form(*best))
-        joined = merged_form(*best)
+        joined = best[0] + best[1][len(CONT):]
+        vocab.append(joined)
         vocab_words = {
-            _merge_sym(sym, best, joined): n for sym, n in vocab_words.items()
+            _merge_word(sym, best, joined): n for sym, n in vocab_words.items()
         }
     return vocab
-
-
-def _merge_sym(
-    sym: tuple[str, ...], pair: tuple[str, str], joined: str
-) -> tuple[str, ...]:
-    out: list[str] = []
-    i = 0
-    while i < len(sym):
-        if i < len(sym) - 1 and sym[i] == pair[0] and sym[i + 1] == pair[1]:
-            out.append(joined)
-            i += 2
-        else:
-            out.append(sym[i])
-            i += 1
-    return tuple(out)
 
 
 # ------------------------------------------ fixed-vocab encode (oracle) --
@@ -277,29 +231,14 @@ def wordpiece_encode_fixed_sql(
     relation. ``substr``/``length`` are character-based in DuckDB,
     matching Python slicing on multi-byte text."""
     vocab = FIXED_WORDPIECE_VOCAB if vocab is None else vocab
-    rows = []
-    seen = set()
-    for p in vocab:
-        if p == UNK or p in seen:
-            continue
-        seen.add(p)
-        if p.startswith(CONT):
-            body, tok, is_cont = p[len(CONT):], p, "TRUE"
-        else:
-            body, tok, is_cont = p, p, "FALSE"
-        b = body.replace("'", "''")
-        t = tok.replace("'", "''")
-        rows.append(f"('{b}', '{t}', {is_cont})")
-    vocab_values = ", ".join(rows)
-    return f"""
-      WITH RECURSIVE
+    q = lambda t: "'" + t.replace("'", "''") + "'"  # noqa: E731
+    vocab_values = ", ".join(
+        f"({q(p.removeprefix(CONT))}, {q(p)}, {p.startswith(CONT)})"
+        for p in dict.fromkeys(vocab) if p != UNK
+    )
+    perword = f"""
       vocab(body, tok, is_cont) AS (VALUES {vocab_values}),
-      words AS (
-        SELECT DISTINCT w
-        FROM (SELECT unnest(string_split_regex({text_col}, '\\s+')) AS w
-              FROM {table})
-        WHERE w <> ''
-      ),
+      words AS (SELECT DISTINCT w FROM docwords),
       seg AS (
         SELECT w, 0 AS pos, CAST([] AS VARCHAR[]) AS pieces
         FROM words WHERE length(w) <= {max_chars}
@@ -320,31 +259,13 @@ def wordpiece_encode_fixed_sql(
                   AND length(v2.body) > length(v.body)))
       ),
       perword AS (
-        SELECT w, pieces FROM seg WHERE pos = length(w)
+        SELECT w, pieces, 0 AS score FROM seg WHERE pos = length(w)
         UNION ALL
-        SELECT w, ['{UNK}'] AS pieces
+        SELECT w, ['{UNK}'] AS pieces, 0 AS score
         FROM words WHERE length(w) > {max_chars}
-      ),
-      docwords AS (
-        SELECT {id_col}, w, i
-        FROM (SELECT {id_col},
-                     unnest(string_split_regex({text_col}, '\\s+')) AS w,
-                     unnest(range(1, len(string_split_regex({text_col}, '\\s+')) + 1)) AS i
-              FROM {table})
-        WHERE w <> ''
-      ),
-      agg AS (
-        SELECT d.{id_col},
-               CAST(sum(len(p.pieces)) AS INT) AS n_pieces,
-               string_agg(array_to_string(p.pieces, ' '), ' ' ORDER BY d.i)
-                 AS pieces
-        FROM docwords d JOIN perword p USING (w)
-        GROUP BY d.{id_col}
-      )
-      SELECT t.{id_col}, coalesce(a.n_pieces, 0) AS n_pieces,
-             coalesce(a.pieces, '') AS pieces
-      FROM {table} t LEFT JOIN agg a USING ({id_col})
-    """
+      )"""
+    enc = subword.doc_pieces_sql(table, id_col, text_col, perword)
+    return f"SELECT {id_col}, n_pieces, pieces FROM ({enc})"
 
 
 def wordpiece_fertility(
@@ -354,47 +275,9 @@ def wordpiece_fertility(
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
-    """Per-group fertility of the WordPiece tokenizer: ONE map-only
-    Arrow encode (word/char counts ride the same projection via
-    ``keep``) into ONE partial-aggregated groupBy — same shape and
-    guarantees as ``bpe.fertility_stats`` / ``unigram_fertility``."""
+    """``subword.fertility`` of the WordPiece tokenizer."""
     vocab = FIXED_WORDPIECE_VOCAB if vocab is None else vocab
-    pre = df.select(
-        id_col,
-        text_col,
-        F.col(group_col),
-        F.length(text_col).cast("long").alias("_chars"),
-        F.size(F.filter(F.split(F.col(text_col), r"\s+"), lambda w: w != ""))
-        .cast("long")
-        .alias("_words"),
-    )
-    enc = wordpiece_encode(pre, vocab, id_col, text_col, keep=[group_col, "_chars", "_words"])
-    agg = enc.groupBy(group_col).agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum("_words").cast("long").alias("n_words"),
-        F.sum("_chars").cast("long").alias("n_chars"),
-        F.sum("n_pieces").cast("long").alias("n_pieces"),
-    )
-    return agg.select(
-        group_col,
-        "n_docs",
-        "n_words",
-        "n_chars",
-        "n_pieces",
-        F.round(
-            F.when(F.col("n_words") == 0, F.lit(0.0)).otherwise(
-                F.col("n_pieces") / F.col("n_words")
-            ),
-            6,
-        ).alias("fertility"),
-        F.round(
-            F.when(F.col("n_pieces") == 0, F.lit(0.0)).otherwise(
-                F.col("n_chars") / F.col("n_pieces")
-            ),
-            6,
-        ).alias("chars_per_piece"),
-        F.round(F.col("n_pieces") / F.col("n_docs"), 6).alias("pieces_per_doc"),
-    )
+    return subword.fertility(df, _word_rule(vocab), group_col, id_col, text_col)
 
 
 def wordpiece_fertility_sql(
@@ -404,35 +287,6 @@ def wordpiece_fertility_sql(
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> str:
-    """DuckDB twin of :func:`wordpiece_fertility`: reuse the recursive
-    fixed-vocab encode for per-doc piece counts, join back to the base
-    table for word/char counts, aggregate per group — same formulation
-    as ``fertility_stats_sql`` / ``unigram_fertility_sql``."""
+    """DuckDB twin of :func:`wordpiece_fertility`."""
     enc = wordpiece_encode_fixed_sql(table, vocab, id_col, text_col)
-    return f"""
-      WITH enc AS ({enc}),
-      perdoc AS (
-        SELECT d.{group_col} AS grp,
-               len(list_filter(string_split_regex(d.{text_col}, '\\s+'),
-                               w -> w <> '')) AS words,
-               length(d.{text_col}) AS chars,
-               e.n_pieces
-        FROM {table} d JOIN enc e USING ({id_col})
-      ),
-      agg AS (
-        SELECT grp, CAST(count(*) AS BIGINT) AS n_docs,
-               CAST(sum(words) AS BIGINT) AS n_words,
-               CAST(sum(chars) AS BIGINT) AS n_chars,
-               CAST(sum(n_pieces) AS BIGINT) AS n_pieces
-        FROM perdoc GROUP BY grp
-      )
-      SELECT grp AS {group_col}, n_docs, n_words, n_chars, n_pieces,
-             round(CASE WHEN n_words = 0 THEN 0.0
-                        ELSE CAST(n_pieces AS DOUBLE) / n_words END,
-                   6) AS fertility,
-             round(CASE WHEN n_pieces = 0 THEN 0.0
-                        ELSE CAST(n_chars AS DOUBLE) / n_pieces END,
-                   6) AS chars_per_piece,
-             round(CAST(n_pieces AS DOUBLE) / n_docs, 6) AS pieces_per_doc
-      FROM agg
-    """
+    return subword.fertility_sql(table, enc, group_col, id_col, text_col)

@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from bistro_spark.operators.text import mg_cap, mg_summaries
+
 
 class StreamingHeavyHitters:
     """O(k)-state heavy-hitter monitor over an unbounded word stream."""
@@ -45,47 +47,17 @@ class StreamingHeavyHitters:
         self.n_total = 0  # words seen across the whole stream
         self.batches_seen = 0
 
-    def _cap(self) -> None:
-        # the MG merge rule: keep at most k counters by subtracting the
-        # (k+1)-th largest from all and dropping the non-positive rest —
-        # the step whose total subtraction is bounded by N/(k+1)
-        if len(self._counters) > self.k:
-            m = self._counters.nlargest(self.k + 1).iloc[-1]
-            self._counters = self._counters - m
-            self._counters = self._counters[self._counters > 0]
-
     def process_batch(self, batch_df: DataFrame) -> "StreamingHeavyHitters":
         """Fold one micro-batch into the summary. Spark-side work is one
-        scan producing per-partition MG summaries (<= k rows each) plus a
-        codegen count; the driver merge touches <= k x (partitions + 1)
-        rows."""
+        scan producing per-partition MG summaries (<= k rows each, the
+        batch operator's ``mg_summaries`` kernel) plus a codegen count;
+        the driver merge touches <= k x (partitions + 1) rows."""
         import pandas as pd
 
-        k = self.k
         terms = batch_df.select(
             F.explode(F.split(F.col(self.text_col), " ")).alias("word")
         )
-
-        def mg_partition(batches):
-            counters = pd.Series(dtype="int64")
-            for b in batches:
-                if not len(b):
-                    continue
-                vc = b["word"].value_counts()
-                counters = counters.add(vc, fill_value=0)
-                if len(counters) > k:
-                    m = counters.nlargest(k + 1).iloc[-1]
-                    counters = counters - m
-                    counters = counters[counters > 0]
-            if len(counters):
-                yield pd.DataFrame(
-                    {
-                        "word": counters.index.astype(str),
-                        "est": counters.to_numpy("int64"),
-                    }
-                )
-
-        rows = terms.mapInPandas(mg_partition, "word string, est long").collect()
+        rows = mg_summaries(terms, self.k).collect()
         self.n_total += terms.count()
         self.batches_seen += 1
         if rows:
@@ -94,8 +66,9 @@ class StreamingHeavyHitters:
                 index=[r["word"] for r in rows],
                 dtype="int64",
             ).groupby(level=0).sum()  # union-add partition summaries
-            self._counters = self._counters.add(batch_sum, fill_value=0)
-            self._cap()
+            self._counters = mg_cap(
+                self._counters.add(batch_sum, fill_value=0), self.k
+            )
         return self
 
     def candidates(self):

@@ -39,6 +39,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from bistro_spark.operators.curation import word_ngrams
+
 
 def fit_kn_model(
     df: DataFrame,
@@ -51,21 +53,7 @@ def fit_kn_model(
     per-word distinct-predecessor counts, and the bigram-type total.
     All are type-vocabulary-sized; ``max_types`` raises with sizing
     guidance instead of materializing an unboundedly large model."""
-    words = F.split(F.col(text_col), " ")
-    n = F.size(words)
-    pairs = (
-        df.filter(n >= 2)
-        .select(
-            F.explode(
-                F.arrays_zip(
-                    F.slice(words, 1, n - 1).alias("w1"),
-                    F.slice(words, 2, n - 1).alias("w2"),
-                )
-            ).alias("p")
-        )
-        .select(F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
-        .filter((F.col("w1") != "") & (F.col("w2") != ""))
-    )
+    pairs = word_ngrams(df, 2, text_col)
     bc = (
         pairs.groupBy("w1", "w2")
         .agg(F.count("*").cast("long").alias("c"))
@@ -179,28 +167,7 @@ def fit_kn3_model(
     (w2,w3) continuation type table with its per-w2 totals, and the
     continuation-unigram counts — all trigram-TYPE-sized, guarded by
     ``max_types``."""
-    words = F.split(F.col(text_col), " ")
-    n = F.size(words)
-    triples = (
-        df.filter(n >= 3)
-        .select(
-            F.explode(
-                F.arrays_zip(
-                    F.slice(words, 1, n - 2).alias("w1"),
-                    F.slice(words, 2, n - 2).alias("w2"),
-                    F.slice(words, 3, n - 2).alias("w3"),
-                )
-            ).alias("p")
-        )
-        .select(
-            F.col("p.w1").alias("w1"),
-            F.col("p.w2").alias("w2"),
-            F.col("p.w3").alias("w3"),
-        )
-        .filter(
-            (F.col("w1") != "") & (F.col("w2") != "") & (F.col("w3") != "")
-        )
-    )
+    triples = word_ngrams(df, 3, text_col)
     tc = (
         triples.groupBy("w1", "w2", "w3")
         .agg(F.count("*").cast("long").alias("c"))

@@ -20,7 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from bistro_spark.operators.similarity import _int_quantize_expr
+from bistro_spark.operators.similarity import pq_encode
 
 
 def pq_gate(
@@ -32,46 +32,8 @@ def pq_gate(
     scale: int = 10**6,
     keep: list[str] | None = None,
 ) -> DataFrame:
-    """Append ``codes array<int>`` to a batch OR streaming DataFrame —
-    per-subspace exact-int64 argmin against the closed-over codebook
-    (numpy argmin: ties -> smallest index, the batch operator's rule).
+    """Append ``codes array<int>`` to a batch OR streaming DataFrame:
+    the batch ``pq_encode`` kernel (per-subspace exact-int64 argmin
+    against the closed-over codebook), which is a pure projection.
     ``keep`` lists passthrough columns for the downstream sink."""
-    import numpy as np
-
-    C = np.asarray(codebook, dtype=np.int64)
-    n_codes, dim = C.shape
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    sub = dim // m
-    keep = list(keep or [])
-    src = df.select(
-        id_col, *keep, _int_quantize_expr(vec_col, scale).alias("_iq")
-    )
-
-    def enc(batches):
-        import pandas as pd
-
-        for b in batches:
-            if not len(b):
-                continue
-            X = np.stack([np.asarray(v, dtype=np.int64) for v in b["_iq"]])
-            codes = np.empty((len(X), m), dtype=np.int32)
-            for s in range(m):
-                Xs = X[:, s * sub : (s + 1) * sub]
-                Cs = C[:, s * sub : (s + 1) * sub]
-                codes[:, s] = (
-                    ((Xs[:, None, :] - Cs[None, :, :]) ** 2).sum(-1).argmin(1)
-                )
-            out = {id_col: b[id_col]}
-            for c in keep:
-                out[c] = b[c]
-            out["codes"] = list(codes)
-            yield pd.DataFrame(out)
-
-    types = dict(src.dtypes)
-    schema = ", ".join(
-        [f"{id_col} {types[id_col]}"]
-        + [f"{c} {types[c]}" for c in keep]
-        + ["codes array<int>"]
-    )
-    return src.mapInPandas(enc, schema)
+    return pq_encode(df, codebook, m, id_col, vec_col, scale, keep=keep)

@@ -12,9 +12,10 @@ order.
 State: one (term → first_bucket) entry per distinct term plus
 #checkpoints token counters — vocabulary-bounded, which is exactly what
 Heaps' law itself promises stays sublinear (the monitor measures the
-growth of its own state). The report rebuilds the batch grid and the
-decimal-summed log-log regression via the ENGINE, so rows hash-match
-batch ``vocab_growth``.
+growth of its own state). The fold tags tokens with the batch
+operator's ``vocab_growth_terms``, and the report hands the rebuilt
+(b, n_tokens, new_terms) grid to its finalizer
+``vocab_growth_from_grid``, so rows hash-match batch ``vocab_growth``.
 """
 
 from __future__ import annotations
@@ -22,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bistro_spark.operators.olap import vocab_growth_from_grid, vocab_growth_terms
 from bistro_spark.session import local_frame
 
 
@@ -64,23 +66,7 @@ class StreamingVocabGrowth:
         counts, both reduced DISTRIBUTED-side before the driver merge
         (delta-vocabulary-sized collect, never delta-row-sized)."""
         self.batches_seen += 1
-        bucket = (
-            F.conv(
-                F.substring(
-                    F.md5(F.col(self.id_col).cast("string")), 1, 8
-                ),
-                16,
-                10,
-            ).cast("bigint")
-            % self.nb
-        )
-        terms = (
-            batch_df.select(
-                bucket.alias("b"),
-                F.explode(F.split(F.col(self.text_col), " ")).alias("term"),
-            )
-            .filter(F.col("term") != "")
-        )
+        terms = vocab_growth_terms(batch_df, self.id_col, self.text_col, self.nb)
         agg = terms.groupBy("term").agg(
             F.min("b").alias("fb"), F.count("*").cast("long").alias("c")
         )
@@ -111,10 +97,8 @@ class StreamingVocabGrowth:
 
     # -------------------------------------------------------- report --
     def report(self) -> DataFrame:
-        """Engine-computed from the integer state so rows hash-match the
-        batch operator (same grid windows, same decimal-summed fit)."""
-        from pyspark.sql import Window
-
+        """The batch finalizer over the grid rebuilt from the integer
+        state, so rows hash-match the batch operator."""
         assert self._tok, "no rows absorbed yet"
         new: dict[int, int] = {}
         for fb in self._first.values():
@@ -122,55 +106,7 @@ class StreamingVocabGrowth:
         buckets = sorted(set(self._tok) | set(new))
         grid = local_frame(
             self.spark,
-            [
-                (b, self._tok.get(b, 0), new.get(b, 0))
-                for b in buckets
-            ],
+            [(b, self._tok.get(b, 0), new.get(b, 0)) for b in buckets],
             "b long, n_tokens long, new_terms long",
         )
-        w = Window.orderBy("b").rowsBetween(Window.unboundedPreceding, 0)
-        curve = grid.select(
-            F.col("b").cast("long").alias("checkpoint"),
-            "n_tokens",
-            "new_terms",
-            F.sum("n_tokens").over(w).cast("long").alias("cum_tokens"),
-            F.sum("new_terms").over(w).cast("long").alias("cum_vocab"),
-        )
-        pts = curve.select(
-            "*",
-            F.round(F.log("cum_tokens"), 9).alias("x"),
-            F.round(F.log("cum_vocab"), 9).alias("y"),
-        )
-        dec = lambda c: F.sum(F.col(c).cast("decimal(30,15)")).cast(  # noqa: E731
-            "double"
-        )
-        fit = pts.select(
-            "x",
-            "y",
-            F.round(F.col("x") * F.col("y"), 9).alias("xy"),
-            F.round(F.col("x") * F.col("x"), 9).alias("xx"),
-        ).agg(
-            F.count("*").cast("double").alias("n"),
-            dec("x").alias("sx"),
-            dec("y").alias("sy"),
-            dec("xy").alias("sxy"),
-            dec("xx").alias("sxx"),
-        )
-        beta = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")) / (
-            F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
-        )
-        fit1 = fit.select(
-            (F.round(beta, 6) + F.lit(0.0)).alias("heaps_beta"),
-            F.round(
-                F.exp((F.col("sy") - beta * F.col("sx")) / F.col("n")), 6
-            ).alias("heaps_k"),
-        )
-        return pts.crossJoin(F.broadcast(fit1)).select(
-            "checkpoint",
-            "n_tokens",
-            "new_terms",
-            "cum_tokens",
-            "cum_vocab",
-            "heaps_beta",
-            "heaps_k",
-        )
+        return vocab_growth_from_grid(grid)
