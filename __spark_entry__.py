@@ -1,18 +1,24 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
-Each ``queries()`` entry exercises one operator of the bistro_spark column
-calculus (SURVEY.md §2) over the driver-provided parquet tables; the matching
-``oracle_sql()`` entry is the ANSI-SQL equivalent DuckDB runs on the same
-tables. Aliases match exactly on both sides (the driver hashes values with
-columns sorted by name).
+Each contract query exercises one operator of the bistro_spark column
+calculus (SURVEY.md §2) over the driver-provided parquet tables. It is
+registered once, in ``_contracts()``: its Spark builder ``q_<name>`` and the
+ANSI-SQL oracle DuckDB runs on the same tables (none for the two rows-only
+queries). ``queries()`` and ``oracle_sql()`` derive from that one table, in
+its order. Aliases match exactly on both sides (the driver hashes values with
+columns sorted by name), and every output column is a type the driver can
+hash: no array, map, struct, binary or decimal, which ``queries()`` enforces
+from each result's schema.
 """
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from bistro_spark.pipeline import flagship
 from bistro_spark.schema import Schema
@@ -46,6 +52,18 @@ def entry(spark: SparkSession) -> DataFrame:
     smoke-checked alongside sf0.001 parquet reachability."""
     load_table(spark, "lineitem", "/root/testdata/sf0.001").count()  # sanity
     return flagship(spark, token_table_fast(spark, 500, partitions=4))
+
+
+def _json_arrays(df: DataFrame, *cols: str) -> DataFrame:
+    """The array columns ``cols`` as JSON text (``[1,2]``, ``[true]``,
+    ``[]``), which the driver can hash; :func:`_json_arrays_sql` is the
+    DuckDB twin and prints the same text."""
+    return df.withColumns({c: F.to_json(c) for c in cols})
+
+
+def _json_arrays_sql(sql: str, *cols: str) -> str:
+    as_json = ", ".join(f"to_json({c})::VARCHAR AS {c}" for c in cols)
+    return f"SELECT * REPLACE ({as_json}) FROM ({sql})"
 
 
 # --------------------------------------------------------------------------
@@ -1454,7 +1472,7 @@ def q_load_heatmap(spark: SparkSession, sf: str) -> DataFrame:
     return load_heatmap(load_table(spark, "events", sf))
 
 
-def q_collocations(spark: SparkSession, sf: str) -> DataFrame:
+def q_collocations_pmi(spark: SparkSession, sf: str) -> DataFrame:
     """Top-20 adjacent-word PMI collocations: linear pair explode, two
     partial-agg groupBys, broadcast unigram counts, distributed top-k
     (TakeOrderedAndProject) ranked on exact (count, pair) keys — PMI is
@@ -1515,7 +1533,7 @@ def q_source_kl(spark: SparkSession, sf: str) -> DataFrame:
     return source_kl(load_table(spark, "documents", sf))
 
 
-def q_contingency(spark: SparkSession, sf: str) -> DataFrame:
+def q_contingency_report(spark: SparkSession, sf: str) -> DataFrame:
     """χ² contingency of language × log₂-length-bucket: exact bit-length
     buckets, one partial-agg groupBy to the ≤|langs|×|buckets| grid,
     margins as grid-sized window sums, expected/contrib as single
@@ -1826,7 +1844,7 @@ def q_rrf_fusion(spark: SparkSession, sf: str) -> DataFrame:
     return rrf_fusion(load_table(spark, "documents", sf))
 
 
-def q_dsir(spark: SparkSession, sf: str) -> DataFrame:
+def q_dsir_weights(spark: SparkSession, sf: str) -> DataFrame:
     """DSIR importance weights (Xie et al. 2023) toward the English
     slice: hashed-ngram bag-of-words log-likelihood ratio per document.
     Fit = one partial-aggregated groupBy down to 64 bucket rows; score =
@@ -1929,7 +1947,7 @@ BM25_QUERIES = {0: ["spark", "stream"], 1: ["hash", "join", "table"],
                 2: ["window", "batch"]}
 
 
-def q_bm25(spark: SparkSession, sf: str) -> DataFrame:
+def q_bm25_scores(spark: SparkSession, sf: str) -> DataFrame:
     """Query-relevance selection: BM25 over whitespace terms, Lucene-form
     positive idf so 'matches' is the integer condition sum(tf) > 0 (floats
     never gate or order a row — score is a round-6 report column). ALL
@@ -1970,9 +1988,11 @@ def q_manifest_diff(spark: SparkSession, sf: str) -> DataFrame:
 
     import hashlib
 
+    from pyspark import SparkFiles
+
+    # the session's own temp dir: never the checkout, removed at stop
     snap = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)),
-        "spark-warehouse",
+        SparkFiles.getRootDirectory(),
         "manifest_snapshots",
         hashlib.md5(os.path.abspath(sf).encode()).hexdigest()[:12],
     )
@@ -2145,7 +2165,10 @@ def q_pack_segments(spark: SparkSession, sf: str) -> DataFrame:
     docs = load_table(spark, "documents", sf).select(
         "doc_id", F.size(F.split("text", " ")).alias("n_words")
     )
-    return pack_segments(docs, capacity=256, n_shards=4)
+    return _json_arrays(
+        pack_segments(docs, capacity=256, n_shards=4),
+        "doc_ids", "offsets", "seg_lens",
+    )
 
 
 def _changelog(spark: SparkSession, sf: str) -> DataFrame:
@@ -2369,7 +2392,9 @@ def q_step_read_plan(spark: SparkSession, sf: str) -> DataFrame:
     docs = load_table(spark, "documents", sf).select(
         "doc_id", "source", F.size(F.split("text", " ")).alias("n_words")
     )
-    return step_read_plan(docs, n_steps=12, batch_size=40)
+    return _json_arrays(
+        step_read_plan(docs, n_steps=12, batch_size=40), "offsets", "sizes"
+    )
 
 
 def q_mixture_manifest(spark: SparkSession, sf: str) -> DataFrame:
@@ -2473,7 +2498,10 @@ def q_chunk_manifest(spark: SparkSession, sf: str) -> DataFrame:
     docs = load_table(spark, "documents", sf).select(
         "doc_id", F.size(F.split("text", " ")).alias("n_words")
     )
-    return _trainprep.chunk_manifest(docs, capacity=256, n_shards=4)
+    return _json_arrays(
+        _trainprep.chunk_manifest(docs, capacity=256, n_shards=4),
+        "doc_ids", "starts_in_chunk", "starts_in_doc", "seg_lens", "eod_flags",
+    )
 
 
 def q_fim_spans(spark: SparkSession, sf: str) -> DataFrame:
@@ -2496,7 +2524,10 @@ def q_chunk_read_plan(spark: SparkSession, sf: str) -> DataFrame:
     docs = load_table(spark, "documents", sf).select(
         "doc_id", F.size(F.split("text", " ")).alias("n_words")
     )
-    return _trainprep.chunk_read_plan(docs, capacity=256, n_shards=4)
+    return _json_arrays(
+        _trainprep.chunk_read_plan(docs, capacity=256, n_shards=4),
+        "offsets", "sizes",
+    )
 
 
 def q_sft_turn_spans(spark: SparkSession, sf: str) -> DataFrame:
@@ -2676,14 +2707,15 @@ def q_centroid_shift(spark: SparkSession, sf: str) -> DataFrame:
     """Embedding-space drift between two deterministic snapshot halves
     (vec_id parity): per label, the exact integer-cross-multiplied
     squared centroid distance (DECIMAL(38,0) numerator — each term
-    passes BIGINT) plus the one rounded float. One posexplode →
-    (label, dim) partial agg; corpus never joins corpus."""
+    passes BIGINT — emitted as its digit string) plus the one rounded
+    float. One posexplode → (label, dim) partial agg; corpus never
+    joins corpus."""
     from bistro_spark.operators.similarity import centroid_shift
 
     emb = load_table(spark, "embeddings", sf)
     return centroid_shift(
         emb.filter("vec_id % 2 = 0"), emb.filter("vec_id % 2 = 1")
-    )
+    ).withColumn("shift2_num", F.col("shift2_num").cast("string"))
 
 
 def _source_games(spark: SparkSession, sf: str) -> DataFrame:
@@ -2786,190 +2818,6 @@ def q_attention_cost_sweep(spark: SparkSession, sf: str) -> DataFrame:
         "doc_id", F.size(F.split("text", " ")).alias("n_tok")
     )
     return attention_cost_sweep(docs, capacities=(128, 256, 512))
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-        "sft_turn_spans": q_sft_turn_spans,
-        "preference_pairs": q_preference_pairs,
-        "preference_stats": q_preference_stats,
-        "leakage_safe_split": q_leakage_safe_split,
-        "bucketed_batches": q_bucketed_batches,
-        "sft_pack_manifest": q_sft_pack_manifest,
-        "reward_normalize": q_reward_normalize,
-        "context_truncation_sweep": q_context_truncation_sweep,
-        "split_leakage_audit": q_split_leakage_audit,
-        "batching_strategy_report": q_batching_strategy_report,
-        "preference_pipeline": q_preference_pipeline,
-        "bt_ratings": q_bt_ratings,
-        "centroid_shift": q_centroid_shift,
-        "win_rate_matrix": q_win_rate_matrix,
-        "sft_export_manifest": q_sft_export_manifest,
-        "sft_corpus_stats": q_sft_corpus_stats,
-        "pack_attention_cost": q_pack_attention_cost,
-        "attention_cost_sweep": q_attention_cost_sweep,
-        "chunk_read_plan": q_chunk_read_plan,
-        "fim_spans": q_fim_spans,
-        "ann_l2_topk": q_ann_l2_topk,
-        "ann_pq_topk": q_ann_pq_topk,
-        "pq_recall": q_pq_recall,
-        "hard_negatives": q_hard_negatives,
-        "pq_distortion_sweep": q_pq_distortion_sweep,
-        "fim_transform": q_fim_transform,
-        "chunk_manifest": q_chunk_manifest,
-        "concat_chunks": q_concat_chunks,
-        "curriculum_schedule": q_curriculum_schedule,
-        "apply_changelog": q_apply_changelog,
-        "step_read_plan": q_step_read_plan,
-        "mixture_manifest": q_mixture_manifest,
-        "stratified_bottomk": q_stratified_bottomk,
-        "changelog_history": q_changelog_history,
-        "bottomk_sample": q_bottomk_sample,
-        "maintenance_report": q_maintenance_report,
-        "histogram_quantiles": q_histogram_quantiles,
-        "vocab_truncation_sweep": q_vocab_truncation_sweep,
-        "vocab_growth": q_vocab_growth,
-        "skew_report": q_skew_report,
-        "kneser_ney3_logprob": q_kneser_ney3_logprob,
-        "binidx_manifest": q_binidx_manifest,
-        "anneal_schedule": q_anneal_schedule,
-        "repetition_budget": q_repetition_budget,
-        "watermark_audit": q_watermark_audit,
-        "snapshot_expiry_plan": q_snapshot_expiry_plan,
-        "orphan_files": q_orphan_files,
-        "heldout_perplexity": q_heldout_perplexity,
-        "mixture_schedule": q_mixture_schedule,
-        "kneser_ney_logprob": q_kneser_ney_logprob,
-        "ccnet_buckets": q_ccnet_buckets,
-        "pack_segments": q_pack_segments,
-        "compaction_plan": q_compaction_plan,
-        "compaction_report": q_compaction_report,
-        "length_buckets": q_length_buckets,
-        "pack_capacity_sweep": q_pack_capacity_sweep,
-        "wordpiece_encode_fixed": q_wordpiece_encode_fixed,
-        "wordpiece_fertility": q_wordpiece_fertility,
-        "unigram_encode_fixed": q_unigram_encode_fixed,
-        "unigram_fertility": q_unigram_fertility,
-        "tokenizer_bakeoff": q_tokenizer_bakeoff,
-        "global_shuffle": q_global_shuffle,
-        "training_prep_pipeline": q_training_prep_pipeline,
-        "incremental_dedup": q_incremental_dedup,
-        "materialized_packs": q_materialized_packs,
-        "split_corpus": q_split_corpus,
-        "mixture_report": q_mixture_report,
-        "repeated_substrings": q_repeated_substrings,
-        "strip_repeated": q_strip_repeated,
-        "random_projection": q_random_projection,
-        "group_centroids": q_group_centroids,
-        "bigram_logprob": q_bigram_logprob,
-        "link_asof": q_link_asof,
-        "cep_pattern": q_cep_pattern,
-        "length_drift": q_length_drift,
-        "token_novelty": q_token_novelty,
-        "semantic_dedup": q_semantic_dedup,
-        "classifier_score": q_classifier_score,
-        "heavy_hitters": q_heavy_hitters,
-        "source_overlap": q_source_overlap,
-        "bpe_encode_fixed": q_bpe_encode_fixed,
-        "shard_manifest": q_shard_manifest,
-        "url_normalize": q_url_normalize,
-        "domain_stats": q_domain_stats,
-        "normalize_text": q_normalize_text,
-        "filter_funnel": q_filter_funnel,
-        "manifest_diff": q_manifest_diff,
-        "cluster_sizes": q_cluster_sizes,
-        "bm25_scores": q_bm25,
-        "domain_quota": q_domain_quota,
-        "dup_matrix": q_dup_matrix,
-        "pack_stats": q_pack_stats,
-        "fertility": q_fertility,
-        "dsir_weights": q_dsir,
-        "dsir_select": q_dsir_select,
-        "vocab_coverage": q_vocab_coverage,
-        "oov_rate": q_oov_rate,
-        "sessionize": q_sessionize,
-        "transition_matrix": q_transition_matrix,
-        "cohort_retention": q_cohort_retention,
-        "rollup_report": q_rollup_report,
-        "pivot_report": q_pivot_report,
-        "decile_report": q_decile_report,
-        "token_entropy": q_token_entropy,
-        "signal_correlations": q_signal_correlations,
-        "expanding_zscore": q_expanding_zscore,
-        "length_gini": q_length_gini,
-        "funnel_conversion": q_funnel_conversion,
-        "collocations_pmi": q_collocations,
-        "load_heatmap": q_load_heatmap,
-        "ks_drift": q_ks_drift,
-        "source_kl": q_source_kl,
-        "contingency_report": q_contingency,
-        "minhash_calibration": q_minhash_calibration,
-        "winsorized_stats": q_winsorized_stats,
-        "spine_growth": q_spine_growth,
-        "pareto_frontier": q_pareto_frontier,
-        "rrf_fusion": q_rrf_fusion,
-        "cardinality_report": q_cardinality_report,
-        "pii_redact": q_pii_redact,
-        "ann_recall": q_ann_recall,
-        "ingest_pipeline": q_ingest_pipeline,
-        "zipf_alpha": q_zipf_alpha,
-        "corpus_health": q_corpus_health,
-        "cross_perplexity": q_cross_perplexity,
-        "quantize_embeddings": q_quantize_embeddings,
-        "signal_calibration": q_signal_calibration,
-        "centroid_similarity": q_centroid_similarity,
-        "bpe_encode": q_bpe_encode,  # rows-only (iterative fixpoint, no SQL twin)
-        "partition_lineage": q_partition_lineage,  # rows-only (partition ids)
-        "calc_lineitem": q_calc_lineitem,
-        "link_orders_customer": q_link_orders_customer,
-        "accu_revenue_per_customer": q_accu_revenue_per_customer,
-        "project_doc_dims": q_project_doc_dims,
-        "roll_events_moving": q_roll_events_moving,
-        "roll_range_events": q_roll_range_events,
-        "range_bin_events": q_range_bin_events,
-        "range_interval_join": q_range_interval_join,
-        "link_two_hop": q_link_two_hop,
-        "prod_where": q_prod_where,
-        "formula_expr": q_formula_expr,
-        "formula_bracket": q_formula_bracket,
-        "tokens_flagship": q_tokens_flagship,
-        "tokens_rowlevel": q_tokens_rowlevel,
-        "tumbling_window_events": q_tumbling_window_events,
-        "sliding_window_events": q_sliding_window_events,
-        "session_window_events": q_session_window_events,
-        "dedup_exact": q_dedup_exact,
-        "dedup_minhash_lsh": q_dedup_minhash_lsh,
-        "dedup_verified_pairs": q_dedup_verified_pairs,
-        "simhash": q_simhash,
-        "text_features": q_text_features,
-        "quality_filter_stats": q_quality_filter_stats,
-        "ann_cosine_topk": q_ann_cosine_topk,
-        "ann_cosine_topk_lsh": q_ann_cosine_topk_lsh,
-        "embedding_neardup": q_embedding_neardup,
-        "simhash_hamming": q_simhash_hamming,
-        "dedup_clusters": q_dedup_clusters,
-        "dedup_survivors": q_dedup_survivors,
-        "text_winnow_fp": q_text_winnow_fp,
-        "dedup_ngram_jaccard": q_dedup_ngram_jaccard,
-        "tokens_minhash": q_tokens_minhash,
-        "ewma_user_value": q_ewma_user_value,
-        "multimodal_features": q_multimodal_features,
-        "ann_ivf_topk": q_ann_ivf_topk,
-        "sample_stratified": q_sample_stratified,
-        "decontaminate": q_decontaminate,
-        "tfidf_top_terms": q_tfidf_top_terms,
-        "corpus_length_stats": q_corpus_length_stats,
-        "repetition_signals": q_repetition_signals,
-        "curation_pipeline": q_curation_pipeline,
-        "chunk_documents": q_chunk_documents,
-        "pack_sequences": q_pack_sequences,
-        "unigram_logprob": q_unigram_logprob,
-        "source_quota": q_source_quota,
-        "dedup_spans": q_dedup_spans,
-        "token_budget": q_token_budget,
-        "temperature_resample": q_temperature_resample,
-        "encode_tokens": q_encode_tokens,
-    }
 
 
 # --------------------------------------------------------------------------
@@ -3092,7 +2940,19 @@ def _text_features_sql() -> str:
     """
 
 
-def oracle_sql() -> dict[str, str]:
+# --------------------------------------------------------------------------
+# the contract registry
+# --------------------------------------------------------------------------
+
+Builder = Callable[[SparkSession, str], DataFrame]
+
+
+def _contracts() -> list[tuple[Builder, str | None]]:
+    """Every contract query, registered once and in the driver's order
+    (the driver picks its correctness window by position): its Spark
+    builder and its DuckDB oracle, or ``None`` for a rows-only query.
+    A query's name is its builder's name without the ``q_`` prefix.
+    """
     from bistro_spark.operators.dedup import (
         ngram_jaccard_sql,
         ngram_set_sql,
@@ -3104,80 +2964,77 @@ def oracle_sql() -> dict[str, str]:
         quality_score_sql,
         winnow_fingerprint_sql,
     )
-
-    from bistro_spark.operators.preference import (
-        preference_pairs_sql,
-        preference_stats_sql,
-        reward_normalize_sql,
-    )
     from bistro_spark.operators.preference import (
         bt_ratings_sql,
+        preference_pairs_sql,
         preference_pipeline_sql,
+        preference_stats_sql,
+        reward_normalize_sql,
         win_rate_matrix_sql,
     )
 
-    return {
-        "sft_turn_spans": _trainprep.sft_turn_spans_sql("documents"),
-        "sft_pack_manifest": _trainprep.sft_pack_manifest_sql(
+    games = _SOURCE_GAMES_SQL.format(
+        pairs=preference_pairs_sql(
+            "SELECT doc_id // 5 AS prompt_id, doc_id AS cand_id,"
+            " n_chars AS reward FROM documents"
+        )
+    )
+    n_tok = "SELECT doc_id, len(string_split(text, ' ')) AS n_tok FROM documents"
+    # the near-duplicate components (simhash Hamming <= 2, transitive)
+    # behind _dedup_assignments
+    components = f"""
+            WITH RECURSIVE
+            s AS (
+              SELECT doc_id, {simhash_sql('text', 16)} AS sh FROM documents),
+            e AS (
+              SELECT a.doc_id AS src, b.doc_id AS dst
+              FROM s a JOIN s b
+                ON a.doc_id <> b.doc_id
+               AND bit_count(xor(a.sh, b.sh)) <= 2),
+            cc(id, lbl) AS (
+              SELECT doc_id, doc_id FROM s
+              UNION
+              SELECT e.dst, cc.lbl FROM cc JOIN e ON e.src = cc.id
+            ),
+            comp AS (SELECT id, CAST(min(lbl) AS BIGINT) AS component
+                     FROM cc GROUP BY id)"""
+
+    def packed(docs: str, sfx: str = "") -> str:
+        """CTEs enc, packs, mat (+ ``sfx``): encode -> pack ->
+        materialize ``docs``, as materialized_packs builds it."""
+        return (
+            f"enc{sfx} AS ({_ranking.encode_tokens_sql(docs)}), packs{sfx} AS ("
+            + _curation.pack_sequences_sql(
+                f"enc{sfx}", len_expr="n_tok", capacity=256, n_shards=4
+            )
+            + f"), mat{sfx} AS ("
+            + _curation.materialize_packs_sql(f"packs{sfx}", f"enc{sfx}")
+            + ")"
+        )
+
+    return [
+        (q_sft_turn_spans, _trainprep.sft_turn_spans_sql("documents")),
+        (q_preference_pairs, preference_pairs_sql(_PREF_CANDIDATES_SQL)),
+        (q_preference_stats, preference_stats_sql(_PREF_CANDIDATES_SQL)),
+        (q_leakage_safe_split, f"""
+            {components}
+            SELECT id AS doc_id, component,
+                   {_curation.split_corpus_sql('component')} AS split
+            FROM comp
+        """),
+        (q_bucketed_batches, _curation.bucketed_batches_sql(
+            n_tok,
+            batch_size=8,
+        )),
+        (q_sft_pack_manifest, _trainprep.sft_pack_manifest_sql(
             "documents", capacity=256, n_shards=4
-        ),
-        "bucketed_batches": _curation.bucketed_batches_sql(
-            "SELECT doc_id, len(string_split(text, ' ')) AS n_tok "
-            "FROM documents",
-            batch_size=8,
-        ),
-        "preference_pairs": preference_pairs_sql(_PREF_CANDIDATES_SQL),
-        "preference_stats": preference_stats_sql(_PREF_CANDIDATES_SQL),
-        "reward_normalize": reward_normalize_sql(_PREF_CANDIDATES_SQL),
-        "preference_pipeline": preference_pipeline_sql(
-            _PREF_CANDIDATES_SQL
-        ),
-        "centroid_shift": _similarity.centroid_shift_sql(
-            "SELECT * FROM embeddings WHERE vec_id % 2 = 0",
-            "SELECT * FROM embeddings WHERE vec_id % 2 = 1",
-        ),
-        "bt_ratings": bt_ratings_sql(
-            _SOURCE_GAMES_SQL.format(
-                pairs=preference_pairs_sql(
-                    "SELECT doc_id // 5 AS prompt_id, doc_id AS cand_id,"
-                    " n_chars AS reward FROM documents"
-                )
-            )
-        ),
-        "sft_corpus_stats": _trainprep.sft_corpus_stats_sql("documents"),
-        "pack_attention_cost": _curation.pack_attention_cost_sql(
-            "documents",
-            len_expr="len(string_split(text, ' '))",
-            capacity=256,
-        ),
-        "attention_cost_sweep": _curation.attention_cost_sweep_sql(
-            "documents",
-            capacities=(128, 256, 512),
-            len_expr="len(string_split(text, ' '))",
-        ),
-        "sft_export_manifest": _curation.binidx_manifest_sql(
-            "(" + _trainprep._sft_stats_sql("documents") + ")",
-            len_expr="n_out",
-        ),
-        "win_rate_matrix": win_rate_matrix_sql(
-            _SOURCE_GAMES_SQL.format(
-                pairs=preference_pairs_sql(
-                    "SELECT doc_id // 5 AS prompt_id, doc_id AS cand_id,"
-                    " n_chars AS reward FROM documents"
-                )
-            )
-        ),
-        "batching_strategy_report": _curation.batching_strategy_report_sql(
-            "SELECT doc_id, len(string_split(text, ' ')) AS n_tok "
-            "FROM documents",
-            capacity=256,
-            batch_size=8,
-        ),
-        "context_truncation_sweep": _curation.context_truncation_sweep_sql(
+        )),
+        (q_reward_normalize, reward_normalize_sql(_PREF_CANDIDATES_SQL)),
+        (q_context_truncation_sweep, _curation.context_truncation_sweep_sql(
             "SELECT len(string_split(text, ' ')) AS n_tok FROM documents",
             lengths=(32, 64, 128, 256),
-        ),
-        "split_leakage_audit": f"""
+        )),
+        (q_split_leakage_audit, f"""
             WITH s AS (
               SELECT doc_id, {simhash_sql('text', 16)} AS sh
               FROM documents),
@@ -3197,39 +3054,47 @@ def oracle_sql() -> dict[str, str]:
             FROM e JOIN asg x ON e.id_a = x.doc_id
                    JOIN asg y ON e.id_b = y.doc_id
             GROUP BY 1, 2
-        """,
-        "leakage_safe_split": f"""
-            WITH RECURSIVE
-            s AS (
-              SELECT doc_id, {simhash_sql('text', 16)} AS sh FROM documents),
-            e AS (
-              SELECT a.doc_id AS src, b.doc_id AS dst
-              FROM s a JOIN s b
-                ON a.doc_id <> b.doc_id
-               AND bit_count(xor(a.sh, b.sh)) <= 2),
-            cc(id, lbl) AS (
-              SELECT doc_id, doc_id FROM s
-              UNION
-              SELECT e.dst, cc.lbl FROM cc JOIN e ON e.src = cc.id
-            ),
-            comp AS (SELECT id, CAST(min(lbl) AS BIGINT) AS component
-                     FROM cc GROUP BY id)
-            SELECT id AS doc_id, component,
-                   {_curation.split_corpus_sql('component')} AS split
-            FROM comp
-        """,
-        "fim_transform": _trainprep.fim_transform_sql("documents"),
-        "chunk_read_plan": _trainprep.chunk_read_plan_sql(
-            "documents", capacity=256, n_shards=4
-        ),
-        "fim_spans": _trainprep.fim_spans_sql("documents"),
-        "ann_l2_topk": _similarity.l2_topk_sql("embeddings"),
-        "ann_pq_topk": _similarity.pq_topk_sql("embeddings"),
-        "hard_negatives": _similarity.contrastive_topk_sql("embeddings"),
-        "pq_distortion_sweep": _similarity.pq_distortion_sweep_sql(
-            "embeddings"
-        ),
-        "pq_recall": (
+        """),
+        (q_batching_strategy_report, _curation.batching_strategy_report_sql(
+            n_tok,
+            capacity=256,
+            batch_size=8,
+        )),
+        (q_preference_pipeline, preference_pipeline_sql(
+            _PREF_CANDIDATES_SQL
+        )),
+        (q_bt_ratings, bt_ratings_sql(games)),
+        (q_centroid_shift, (
+            "SELECT * REPLACE (CAST(shift2_num AS VARCHAR) AS shift2_num)"
+            " FROM (" + _similarity.centroid_shift_sql(
+                "SELECT * FROM embeddings WHERE vec_id % 2 = 0",
+                "SELECT * FROM embeddings WHERE vec_id % 2 = 1",
+            ) + ")"
+        )),
+        (q_win_rate_matrix, win_rate_matrix_sql(games)),
+        (q_sft_export_manifest, _curation.binidx_manifest_sql(
+            "(" + _trainprep._sft_stats_sql("documents") + ")",
+            len_expr="n_out",
+        )),
+        (q_sft_corpus_stats, _trainprep.sft_corpus_stats_sql("documents")),
+        (q_pack_attention_cost, _curation.pack_attention_cost_sql(
+            "documents",
+            len_expr="len(string_split(text, ' '))",
+            capacity=256,
+        )),
+        (q_attention_cost_sweep, _curation.attention_cost_sweep_sql(
+            "documents",
+            capacities=(128, 256, 512),
+            len_expr="len(string_split(text, ' '))",
+        )),
+        (q_chunk_read_plan, _json_arrays_sql(
+            _trainprep.chunk_read_plan_sql("documents", capacity=256, n_shards=4),
+            "offsets", "sizes",
+        )),
+        (q_fim_spans, _trainprep.fim_spans_sql("documents")),
+        (q_ann_l2_topk, _similarity.l2_topk_sql("embeddings")),
+        (q_ann_pq_topk, _similarity.pq_topk_sql("embeddings")),
+        (q_pq_recall, (
             "WITH ex AS (SELECT * FROM ("
             + _similarity.l2_topk_sql("embeddings")
             + ") t),\n     ap AS (SELECT * FROM ("
@@ -3243,415 +3108,69 @@ def oracle_sql() -> dict[str, str]:
             "FROM ex LEFT JOIN ap\n"
             "  ON ex.query_id = ap.query_id AND ex.vec_id = ap.vec_id\n"
             "GROUP BY ex.query_id"
-        ),
-        "chunk_manifest": _trainprep.chunk_manifest_sql(
+        )),
+        (q_hard_negatives, _similarity.contrastive_topk_sql("embeddings")),
+        (q_pq_distortion_sweep, _similarity.pq_distortion_sweep_sql(
+            "embeddings"
+        )),
+        (q_fim_transform, _trainprep.fim_transform_sql("documents")),
+        (q_chunk_manifest, _json_arrays_sql(
+            _trainprep.chunk_manifest_sql("documents", capacity=256, n_shards=4),
+            "doc_ids", "starts_in_chunk", "starts_in_doc", "seg_lens", "eod_flags",
+        )),
+        (q_concat_chunks, _trainprep.concat_chunks_sql(
             "documents", capacity=256, n_shards=4
-        ),
-        "concat_chunks": _trainprep.concat_chunks_sql(
-            "documents", capacity=256, n_shards=4
-        ),
-        "curriculum_schedule": _trainprep.curriculum_schedule_sql(
+        )),
+        (q_curriculum_schedule, _trainprep.curriculum_schedule_sql(
             "documents", n_steps=20
-        ),
-        "text_winnow_fp": f"""
-            SELECT doc_id,
-                   array_to_string({winnow_fingerprint_sql('text')}, ',')
-                     AS winnow_fp
-            FROM documents
-        """,
-        "dedup_ngram_jaccard": f"""
-            WITH ng AS (
-              SELECT doc_id, {ngram_set_sql('text')} AS ng FROM documents)
-            SELECT l.doc_id AS id_a, r.doc_id AS id_b,
-                   round({ngram_jaccard_sql('l.ng', 'r.ng')}, 6) AS jaccard
-            FROM ng l JOIN ng r ON r.doc_id = l.doc_id + 1
-        """,
-        "tokens_minhash": f"""
-            WITH t AS ({_TOKENS_CTE})
-            SELECT doc_id,
-                   array_to_string({token_minhash_sql('tokens', 4)}, ',')
-                     AS sig
-            FROM t
-        """,
-        "ewma_user_value": """
-            WITH o AS (
-              SELECT user_id, value,
-                     row_number() OVER (
-                       PARTITION BY user_id
-                       ORDER BY CAST(floor(epoch(ts)) AS BIGINT) * 1000000
-                                + event_id)                      AS rn,
-                     count(*) OVER (PARTITION BY user_id)        AS n
-              FROM events)
-            SELECT user_id,
-                   round(sum(CASE WHEN rn = 1
-                                  THEN value * power(0.9, n - 1)
-                                  ELSE 0.1 * power(0.9, n - rn) * value
-                             END), 6)       AS ewma,
-                   CAST(max(n) AS BIGINT)   AS n
-            FROM o GROUP BY user_id
-        """,
-        "tumbling_window_events": """
-            SELECT CAST(floor(epoch(ts) / 3600) * 3600 AS BIGINT) AS ws,
-                   event_type,
-                   count(*) AS n_events,
-                   CAST(sum(CAST(value AS DECIMAL(20,6))) AS DOUBLE)
-                     AS sum_value
-            FROM events
-            GROUP BY 1, 2
-        """,
-        "sliding_window_events": """
-            SELECT CAST(floor((epoch(ts) - k.k * 3600) / 7200) * 7200
-                        + k.k * 3600 AS BIGINT) AS ws,
-                   event_type,
-                   count(*) AS n_events,
-                   CAST(sum(CAST(value AS DECIMAL(20,6))) AS DOUBLE)
-                     AS sum_value
-            FROM events, (SELECT unnest(range(2)) AS k) k
-            GROUP BY 1, 2
-        """,
-        "session_window_events": """
-            WITH marked AS (
-              SELECT user_id, ts, value,
-                     CASE WHEN epoch(ts) - epoch(lag(ts) OVER
-                            (PARTITION BY user_id ORDER BY ts)) >= 21600
-                          THEN 1 ELSE 0 END AS brk
-              FROM events),
-            sess AS (
-              SELECT *, sum(brk) OVER (PARTITION BY user_id ORDER BY ts
-                         ROWS UNBOUNDED PRECEDING) AS sid
-              FROM marked)
-            SELECT CAST(floor(epoch(min(ts))) AS BIGINT)          AS ws,
-                   CAST(floor(epoch(max(ts)) + 21600) AS BIGINT)  AS we,
-                   user_id,
-                   count(*) AS n_events,
-                   CAST(sum(CAST(value AS DECIMAL(20,6))) AS DOUBLE)
-                     AS sum_value
-            FROM sess
-            GROUP BY user_id, sid
-        """,
-        "dedup_exact": f"""
-            WITH {_DUP_CTE}
-            SELECT md5(text) AS fp, min(doc_id) AS keep_id,
-                   count(*) AS n_dups
-            FROM u GROUP BY 1
-        """,
-        "dedup_minhash_lsh": _minhash_lsh_sql(),
-        "dedup_verified_pairs": f"""
-            WITH cand AS ({_minhash_lsh_sql(bands=2, rows=8)}),
-            {_DUP_CTE},
-            ng AS (
-              SELECT doc_id, {ngram_set_sql('text')} AS ng FROM u)
-            SELECT c.id_a, c.id_b,
-                   round({ngram_jaccard_sql('a.ng', 'b.ng')}, 6) AS jaccard
-            FROM cand c
-            JOIN ng a ON a.doc_id = c.id_a
-            JOIN ng b ON b.doc_id = c.id_b
-            WHERE round({ngram_jaccard_sql('a.ng', 'b.ng')}, 6) >= 0.5
-        """,
-        "simhash": f"""
-            SELECT doc_id, {simhash_sql('text', 16)} AS simhash
-            FROM documents
-        """,
-        "simhash_hamming": f"""
-            WITH s AS (
-              SELECT doc_id, {simhash_sql('text', 16)} AS sh FROM documents)
-            SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                   CAST(bit_count(xor(a.sh, b.sh)) AS INTEGER) AS hamming
-            FROM s a JOIN s b ON b.doc_id > a.doc_id
-            WHERE bit_count(xor(a.sh, b.sh)) <= 2
-        """,
-        "dedup_clusters": f"""
-            WITH RECURSIVE
-            s AS (
-              SELECT doc_id, {simhash_sql('text', 16)} AS sh FROM documents),
-            e AS (
-              SELECT a.doc_id AS src, b.doc_id AS dst
-              FROM s a JOIN s b
-                ON a.doc_id <> b.doc_id
-               AND bit_count(xor(a.sh, b.sh)) <= 2),
-            cc(id, lbl) AS (
-              SELECT doc_id, doc_id FROM s
-              UNION
-              SELECT e.dst, cc.lbl FROM cc JOIN e ON e.src = cc.id
-            )
-            SELECT id, CAST(min(lbl) AS BIGINT) AS component
-            FROM cc GROUP BY id
-        """,
-        "dedup_survivors": f"""
-            WITH RECURSIVE
-            s AS (
-              SELECT doc_id, {simhash_sql('text', 16)} AS sh FROM documents),
-            e AS (
-              SELECT a.doc_id AS src, b.doc_id AS dst
-              FROM s a JOIN s b
-                ON a.doc_id <> b.doc_id
-               AND bit_count(xor(a.sh, b.sh)) <= 2),
-            cc(id, lbl) AS (
-              SELECT doc_id, doc_id FROM s
-              UNION
-              SELECT e.dst, cc.lbl FROM cc JOIN e ON e.src = cc.id
-            ),
-            comp AS (SELECT id, min(lbl) AS component FROM cc GROUP BY id)
-            SELECT d.doc_id, d.source, d.n_chars
-            FROM documents d JOIN comp ON comp.id = d.doc_id
-            WHERE comp.id = comp.component
-        """,
-        "embedding_neardup": """
-            WITH u AS (
-              SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-              FROM embeddings
-              UNION ALL
-              SELECT vec_id + 100000, CAST(embedding AS DOUBLE[])
-              FROM embeddings WHERE vec_id < 20),
-            scored AS (
-              SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-                     round(list_dot_product(a.v, b.v) /
-                           (sqrt(list_dot_product(a.v, a.v)) *
-                            sqrt(list_dot_product(b.v, b.v))), 6) AS cos_sim
-              FROM u a JOIN u b ON b.vec_id > a.vec_id)
-            SELECT id_a, id_b, cos_sim FROM scored WHERE cos_sim >= 0.99
-        """,
-        "multimodal_features": """
-            WITH m AS (
-              SELECT i AS media_id,
-                     CASE WHEN i % 3 = 0 THEN 'image'
-                          WHEN i % 3 = 1 THEN 'audio'
-                          ELSE 'video' END AS kind,
-                     sha256(printf('%X', i)) AS h
-              FROM range(0, 200) t(i))
-            SELECT media_id, kind,
-                   CAST(32 AS INTEGER) AS n_bytes,
-                   list_sum(list_transform(range(0, 32),
-                     j -> CAST(concat('0x', substr(h, 2*j+1, 2)) AS INTEGER)
-                   )) / 32.0 AS mean_byte
-            FROM m
-        """,
-        "text_features": _text_features_sql(),
-        "quality_filter_stats": f"""
-            WITH scored AS (
-              SELECT n_chars, source,
-                     CAST(len(string_split(text, ' ')) AS INTEGER) AS n_words,
-                     CAST({quality_score_sql('text')} AS DOUBLE)   AS quality,
-                     {lang_pred_sql('text')}                       AS lang_pred
-              FROM documents)
-            SELECT lang_pred, source,
-                   count(*)                                        AS n_docs,
-                   CAST(sum(n_chars) AS BIGINT)                    AS sum_chars,
-                   round(CAST(sum(CAST(quality AS DECIMAL(20,10)))
-                              AS DOUBLE) / count(*), 6)            AS avg_quality
-            FROM scored
-            WHERE quality >= 1.0 AND n_words >= 30
-            GROUP BY lang_pred, source
-        """,
-        "ann_cosine_topk": _COSINE_TOPK_SQL,
-        "ann_cosine_topk_lsh": _COSINE_TOPK_LSH_SQL,
-        # full-probe IVF (n_probe = n_lists) searches every list, so its
-        # contract is exactly the brute-force top-k
-        "ann_ivf_topk": _COSINE_TOPK_SQL,
-        "calc_lineitem": """
-            SELECT l_orderkey, l_linenumber,
-                   l_extendedprice * (1 - l_discount) AS revenue,
-                   l_extendedprice * (1 - l_discount) * (1 + l_tax) AS charged
-            FROM lineitem
-        """,
-        "link_orders_customer": """
-            SELECT o.o_orderkey,
-                   c.c_custkey     AS cust_key,
-                   c.c_mktsegment  AS mktsegment,
-                   c.c_acctbal     AS acctbal
-            FROM orders o LEFT JOIN customer c ON o.o_custkey = c.c_custkey
-        """,
-        "accu_revenue_per_customer": """
-            SELECT c.c_custkey,
-                   coalesce(CAST(sum(CAST(o.o_totalprice AS DECIMAL(20,6)))
-                                 AS DOUBLE), 0.0)     AS total_spent,
-                   count(o.o_orderkey)                AS n_orders
-            FROM customer c LEFT JOIN orders o ON o.o_custkey = c.c_custkey
-            GROUP BY c.c_custkey
-        """,
-        "project_doc_dims": """
-            SELECT source, lang,
-                   count(*)                      AS n_docs,
-                   CAST(sum(n_chars) AS BIGINT)  AS sum_chars
-            FROM documents
-            GROUP BY source, lang
-        """,
-        "roll_events_moving": """
-            SELECT event_id, user_id,
-                   CAST(sum(CAST(value AS DECIMAL(20,6))) OVER w AS DOUBLE)
-                     AS msum,
-                   CAST(sum(CAST(value AS DECIMAL(20,6))) OVER w AS DOUBLE)
-                     / count(*) OVER w AS mavg
-            FROM events
-            WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-                         ROWS BETWEEN 2 PRECEDING AND CURRENT ROW)
-        """,
-        "roll_range_events": """
-            SELECT event_id, user_id,
-                   CAST(sum(CAST(value AS DECIMAL(20,6))) OVER (
-                     PARTITION BY user_id ORDER BY epoch_us(ts)
-                     RANGE BETWEEN 600000000 PRECEDING AND CURRENT ROW)
-                     AS DOUBLE) AS wsum
-            FROM events
-        """,
-        "range_bin_events": """
-            SELECT CAST(floor(epoch(ts) / 600) * 600 AS BIGINT) AS bin_start,
-                   count(*) AS n_events,
-                   CAST(sum(CAST(value AS DECIMAL(20,6))) AS DOUBLE)
-                     AS sum_value
-            FROM events
-            GROUP BY 1
-        """,
-        "prod_where": """
-            SELECT n_nationkey, n_name, r_name
-            FROM nation CROSS JOIN region
-            WHERE n_regionkey = r_regionkey
-        """,
-        "range_interval_join": """
-            WITH b AS (SELECT unnest(range(20)) AS k),
-            e AS (
-              SELECT CAST(floor(value / 50) AS BIGINT) AS k,
-                     count(*) AS n,
-                     CAST(sum(CAST(value AS DECIMAL(20,6))) AS DOUBLE) AS s
-              FROM events
-              WHERE value >= 0 AND value < 1000
-              GROUP BY 1)
-            SELECT CAST(b.k AS DOUBLE) * 50       AS lo,
-                   CAST(b.k + 1 AS DOUBLE) * 50   AS hi,
-                   coalesce(e.n, 0)               AS n_events,
-                   coalesce(e.s, 0.0)             AS sum_value
-            FROM b LEFT JOIN e ON e.k = b.k
-        """,
-        "link_two_hop": """
-            SELECT o.o_orderkey,
-                   c.c_custkey AS cust_key,
-                   n.n_name    AS nation_name
-            FROM orders o
-            LEFT JOIN customer c ON o.o_custkey = c.c_custkey
-            LEFT JOIN nation n   ON c.c_nationkey = n.n_nationkey
-        """,
-        "formula_expr": """
-            SELECT p_partkey,
-                   p_retailprice / (p_size + 1)      AS value_density,
-                   concat(p_brand, '#', p_type)      AS brand_type
-            FROM part
-        """,
-        "formula_bracket": """
-            SELECT p_partkey,
-                   p_retailprice / (p_size + 1)            AS density,
-                   (p_retailprice / (p_size + 1)) * 2      AS double_density
-            FROM part
-        """,
-        "tokens_flagship": f"""
-            WITH t AS ({_TOKENS_CTE}), {_DIM_CTE}
-            SELECT dim.source,
-                   count(t.doc_id)                             AS n_seq,
-                   CAST(coalesce(sum(t.n_tok), 0) AS BIGINT)   AS sum_tok,
-                   CAST(coalesce(sum(CAST(t.n_tok * dim.weight
-                                          AS DECIMAL(20,6))), 0) AS DOUBLE)
-                                                               AS sum_weighted
-            FROM dim LEFT JOIN t USING (source)
-            GROUP BY dim.source
-        """,
-        "tokens_rowlevel": f"""
-            WITH t AS ({_TOKENS_CTE})
-            SELECT doc_id,
-                   CAST(len(tokens) AS INTEGER)      AS n_tok_calc,
-                   tokens[1]                         AS first_tok,
-                   tokens[-1]                        AS last_tok,
-                   CAST(list_sum(tokens) AS BIGINT)  AS tok_sum,
-                   array_to_string(tokens[1:5], ',') AS head5
-            FROM t
-        """,
-        "sample_stratified": (
-            "SELECT doc_id, lang, source, n_chars FROM documents WHERE "
-            + _curation.hash_sample_sql(
-                "doc_id", {"en": 0.25}, "lang", default_rate=0.75
-            )
-        ),
-        "decontaminate": _curation.contamination_sql(
-            "doc_id % 101 != 0", "doc_id % 101 = 0", n=4
-        ),
-        "tfidf_top_terms": _curation.top_terms_sql("lang", k=10),
-        "corpus_length_stats": _curation.length_stats_sql("lang"),
-        "repetition_signals": (
-            "SELECT doc_id, n_words, n_distinct_words, dup_word_fraction, "
-            "top_bigram_count, top_bigram_fraction FROM ("
-            + _text.repetition_signals_sql("documents")
-            + ")"
-        ),
-        "curation_pipeline": f"""
-            WITH sampled AS (
-              SELECT * FROM documents
-              WHERE {_curation.hash_sample_sql(
-                  "doc_id", {"en": 0.25}, "lang", default_rate=0.75)}
-            ),
-            rep AS ({_text.repetition_signals_sql("sampled")}),
-            gated AS (
-              SELECT *, CAST({quality_score_sql("text")} AS DOUBLE) AS quality
-              FROM rep WHERE dup_word_fraction <= 0.6
-            )
-            SELECT lang,
-                   CAST(count(*) AS BIGINT)      AS n_docs,
-                   CAST(sum(n_words) AS BIGINT)  AS total_words,
-                   round(CAST(sum(CAST(dup_word_fraction AS DECIMAL(20,10)))
-                              AS DOUBLE) / count(*), 6) AS avg_dup_fraction
-            FROM gated WHERE quality >= 1.0
-            GROUP BY lang
-        """,
-        "chunk_documents": _curation.chunk_spans_sql(
-            "documents", size=32, overlap=8
-        ),
-        "pack_sequences": _curation.pack_sequences_sql(
-            "documents", capacity=256, n_shards=4
-        ),
-        "unigram_logprob": _curation.unigram_logprob_sql("documents"),
-        "apply_changelog": _cdc.apply_changelog_sql(
+        )),
+        (q_apply_changelog, _cdc.apply_changelog_sql(
             "changelog", extra_ctes=_CHANGELOG_CTE
-        ),
-        "step_read_plan": _curation.step_read_plan_sql(
+        )),
+        (q_step_read_plan, _json_arrays_sql(
+            _curation.step_read_plan_sql("documents", n_steps=12, batch_size=40),
+            "offsets", "sizes",
+        )),
+        (q_mixture_manifest, _curation.mixture_manifest_sql(
             "documents", n_steps=12, batch_size=40
-        ),
-        "mixture_manifest": _curation.mixture_manifest_sql(
-            "documents", n_steps=12, batch_size=40
-        ),
-        "stratified_bottomk": _curation.stratified_bottomk_sql(
+        )),
+        (q_stratified_bottomk, _curation.stratified_bottomk_sql(
             "documents", k=8
-        ),
-        "changelog_history": _cdc.changelog_history_sql(
+        )),
+        (q_changelog_history, _cdc.changelog_history_sql(
             "changelog", extra_ctes=_CHANGELOG_CTE
-        ),
-        "bottomk_sample": _curation.bottomk_sample_sql("documents", k=60),
-        "maintenance_report": (
+        )),
+        (q_bottomk_sample, _curation.bottomk_sample_sql("documents", k=60)),
+        (q_maintenance_report, (
             f"WITH {_SNAPSHOTS_CTE} {_REFS_CTE[:-1]} "
             + _maintenance.maintenance_report_sql(
                 "snapshots", "refs", retain_last=3, older_than="2024-01-25"
             )
-        ),
-        "histogram_quantiles": _olap.histogram_quantiles_sql("documents"),
-        "vocab_truncation_sweep": _ranking.vocab_truncation_sweep_sql(
+        )),
+        (q_histogram_quantiles, _olap.histogram_quantiles_sql("documents")),
+        (q_vocab_truncation_sweep, _ranking.vocab_truncation_sweep_sql(
             "documents"
-        ),
-        "vocab_growth": _olap.vocab_growth_sql("documents"),
-        "skew_report": _skew.skew_report_sql("events", "user_id"),
-        "kneser_ney3_logprob": _curation.kneser_ney3_logprob_sql(
+        )),
+        (q_vocab_growth, _olap.vocab_growth_sql("documents")),
+        (q_skew_report, _skew.skew_report_sql("events", "user_id")),
+        (q_kneser_ney3_logprob, _curation.kneser_ney3_logprob_sql(
             "documents"
-        ),
-        "binidx_manifest": _curation.binidx_manifest_sql("documents"),
-        "anneal_schedule": _curation.anneal_schedule_sql(
+        )),
+        (q_binidx_manifest, _curation.binidx_manifest_sql("documents")),
+        (q_anneal_schedule, _curation.anneal_schedule_sql(
             "documents", weight_expr="n_chars", n_steps=40, batch_size=1000
-        ),
-        "repetition_budget": _curation.repetition_budget_sql(
+        )),
+        (q_repetition_budget, _curation.repetition_budget_sql(
             "documents", weight_expr="n_chars", n_steps=40, batch_size=1000
-        ),
-        "watermark_audit": _temporal.watermark_audit_sql("events"),
-        "snapshot_expiry_plan": _maintenance.snapshot_expiry_plan_sql(
+        )),
+        (q_watermark_audit, _temporal.watermark_audit_sql("events")),
+        (q_snapshot_expiry_plan, _maintenance.snapshot_expiry_plan_sql(
             "snapshots",
             retain_last=3,
             older_than="2024-01-25",
             extra_ctes=_SNAPSHOTS_CTE,
-        ),
-        "orphan_files": (
+        )),
+        (q_orphan_files, (
             f"WITH {_SNAPSHOTS_CTE} {_REFS_CTE[:-1]} "
             + _maintenance.orphan_files_sql(
                 "refs",
@@ -3659,73 +3178,67 @@ def oracle_sql() -> dict[str, str]:
                     "snapshots", retain_last=3, older_than="2024-01-25"
                 ),
             )
-        ),
-        "heldout_perplexity": _curation.heldout_perplexity_sql("documents"),
-        "mixture_schedule": _curation.mixture_schedule_sql(
+        )),
+        (q_heldout_perplexity, _curation.heldout_perplexity_sql("documents")),
+        (q_mixture_schedule, _curation.mixture_schedule_sql(
             "documents", n_steps=50, batch_size=1000
-        ),
-        "kneser_ney_logprob": _curation.kneser_ney_logprob_sql("documents"),
-        "compaction_plan": _maintenance.compaction_plan_sql(
+        )),
+        (q_kneser_ney_logprob, _curation.kneser_ney_logprob_sql("documents")),
+        (q_ccnet_buckets, _curation.ccnet_buckets_sql("documents")),
+        (q_pack_segments, _json_arrays_sql(
+            _curation.pack_segments_sql("documents", capacity=256, n_shards=4),
+            "doc_ids", "offsets", "seg_lens",
+        )),
+        (q_compaction_plan, _maintenance.compaction_plan_sql(
             "files", partition_col="part", target_bytes=32768,
             extra_ctes=_MANIFEST_CTE,
-        ),
-        "compaction_report": _maintenance.compaction_report_sql(
+        )),
+        (q_compaction_report, _maintenance.compaction_report_sql(
             "files", partition_col="part", target_bytes=32768,
             extra_ctes=_MANIFEST_CTE,
-        ),
-        "ccnet_buckets": _curation.ccnet_buckets_sql("documents"),
-        "pack_segments": _curation.pack_segments_sql(
-            "documents", capacity=256, n_shards=4
-        ),
-        "bigram_logprob": _curation.bigram_logprob_sql("documents"),
-        "dedup_spans": _curation.dedup_spans_sql("documents", size=8),
-        "token_budget": _curation.token_budget_select_sql(
-            "documents", "source", "n_chars", budget=600,
-            out_cols="doc_id, source, n_chars",
-        ),
-        "temperature_resample": _curation.temperature_resample_sql(
-            "documents", "lang", temperature=2.0,
-            out_cols="doc_id, lang",
-        ),
-        "encode_tokens": _ranking.encode_tokens_sql("documents"),
-        "split_corpus": (
-            "SELECT doc_id, "
-            + _curation.split_corpus_sql("doc_id")
-            + " AS split FROM documents"
-        ),
-        "mixture_report": _curation.mixture_report_sql(
-            "documents",
-            "lang",
-            {"en": 0.3, "de": 0.175, "es": 0.175, "fr": 0.175, "zh": 0.175},
-        ),
-        "repeated_substrings": _dedup.repeated_substrings_sql(
-            "documents", size=8
-        ),
-        "strip_repeated": _dedup.strip_repeated_substrings_sql(
-            "documents", size=8
-        ),
-        "random_projection": _similarity.random_projection_sql(
-            "embeddings", out_dim=4, dim=64
-        ),
-        "group_centroids": _similarity.group_centroids_sql("embeddings"),
-        "incremental_dedup": _dedup.incremental_span_dedup_sql(
-            "documents",
-            new_pred="doc_id % 2 = 1",
-            old_pred="doc_id % 2 = 0",
-            size=8,
-            threshold=0.5,
-        ),
-        "materialized_packs": (
+        )),
+        (q_length_buckets, (
             "WITH enc AS ("
             + _ranking.encode_tokens_sql("documents")
-            + "), packs AS ("
-            + _curation.pack_sequences_sql(
-                "enc", len_expr="n_tok", capacity=256, n_shards=4
-            )
-            + ") "
-            + _curation.materialize_packs_sql("packs", "enc")
-        ),
-        "training_prep_pipeline": _curation.pack_sequences_sql(
+            + "), j AS (SELECT d.source, e.n_tok FROM documents d "
+            "JOIN enc e USING (doc_id)) "
+            + _curation.length_buckets_sql("j", group_col="source", len_col="n_tok")
+        )),
+        (q_pack_capacity_sweep, _curation.pack_capacity_sweep_sql(
+            "enc",
+            capacities=(128, 256, 512, 1024),
+            len_expr="n_tok",
+            n_shards=4,
+            extra_ctes=(
+                "enc AS (" + _ranking.encode_tokens_sql("documents") + "),"
+            ),
+        )),
+        (q_wordpiece_encode_fixed, _wordpiece.wordpiece_encode_fixed_sql("documents")),
+        (q_wordpiece_fertility, _wordpiece.wordpiece_fertility_sql("documents")),
+        (q_unigram_encode_fixed, _unigram.unigram_encode_fixed_sql("documents")),
+        (q_unigram_fertility, _unigram.unigram_fertility_sql("documents")),
+        (q_tokenizer_bakeoff, f"""
+          WITH b AS ({_bpe.fertility_stats_sql("documents")}),
+          u AS ({_unigram.unigram_fertility_sql("documents")}),
+          w AS ({_wordpiece.wordpiece_fertility_sql("documents")})
+          SELECT b.source, b.n_words,
+                 b.n_pieces AS bpe_pieces, u.n_pieces AS uni_pieces,
+                 w.n_pieces AS wp_pieces,
+                 b.fertility AS bpe_fertility, u.fertility AS uni_fertility,
+                 w.fertility AS wp_fertility,
+                 round(CAST(u.n_pieces - b.n_pieces AS DOUBLE)
+                       / b.n_pieces, 6) AS uni_vs_bpe_cost,
+                 round(CAST(w.n_pieces - b.n_pieces AS DOUBLE)
+                       / b.n_pieces, 6) AS wp_vs_bpe_cost
+          FROM b JOIN u USING (source) JOIN w USING (source)
+        """),
+        (q_global_shuffle, _ranking.global_rank_sql(
+            "documents",
+            order_by="md5(CAST(doc_id AS VARCHAR)), doc_id",
+            out_cols="doc_id",
+            rank_col="shuffle_rank",
+        )),
+        (q_training_prep_pipeline, _curation.pack_sequences_sql(
             "enc",
             len_expr="n_tok",
             capacity=256,
@@ -3738,25 +3251,39 @@ def oracle_sql() -> dict[str, str]:
                 + _ranking.encode_tokens_sql("gated")
                 + "),"
             ),
-        ),
-        "global_shuffle": _ranking.global_rank_sql(
+        )),
+        (q_incremental_dedup, _dedup.incremental_span_dedup_sql(
             "documents",
-            order_by="md5(CAST(doc_id AS VARCHAR)), doc_id",
-            out_cols="doc_id",
-            rank_col="shuffle_rank",
-        ),
-        "source_quota": """
-            SELECT doc_id, source, n_chars,
-                   CAST(row_number() OVER (
-                     PARTITION BY source
-                     ORDER BY n_chars DESC, doc_id ASC) AS INTEGER)
-                     AS quota_rank
-            FROM documents
-            QUALIFY quota_rank <= 10
-        """,
+            new_pred="doc_id % 2 = 1",
+            old_pred="doc_id % 2 = 0",
+            size=8,
+            threshold=0.5,
+        )),
+        (q_materialized_packs, f"WITH {packed('documents')} SELECT * FROM mat"),
+        (q_split_corpus, (
+            "SELECT doc_id, "
+            + _curation.split_corpus_sql("doc_id")
+            + " AS split FROM documents"
+        )),
+        (q_mixture_report, _curation.mixture_report_sql(
+            "documents",
+            "lang",
+            {"en": 0.3, "de": 0.175, "es": 0.175, "fr": 0.175, "zh": 0.175},
+        )),
+        (q_repeated_substrings, _dedup.repeated_substrings_sql(
+            "documents", size=8
+        )),
+        (q_strip_repeated, _dedup.strip_repeated_substrings_sql(
+            "documents", size=8
+        )),
+        (q_random_projection, _similarity.random_projection_sql(
+            "embeddings", out_dim=4, dim=64
+        )),
+        (q_group_centroids, _similarity.group_centroids_sql("embeddings")),
+        (q_bigram_logprob, _curation.bigram_logprob_sql("documents")),
         # mirrors the Spark plan exactly: tag-union, per-key running
         # last(IGNORE NULLS), 1-hour staleness horizon in integer µs
-        "link_asof": """
+        (q_link_asof, """
             WITH u AS (
               SELECT user_id, ts, 0 AS tag, CAST(NULL AS BIGINT) AS lid,
                      value AS rv, ts AS rts
@@ -3779,8 +3306,8 @@ def oracle_sql() -> dict[str, str]:
                    CASE WHEN epoch_us(mts) >= epoch_us(ts) - 3600000000
                         THEN mts END AS asof_ts
             FROM w WHERE tag = 1
-        """,
-        "cep_pattern": """
+        """),
+        (q_cep_pattern, """
             WITH a AS (
               SELECT user_id, event_id AS a_id, ts AS a_ts
               FROM events WHERE event_type = 'view'
@@ -3800,10 +3327,10 @@ def oracle_sql() -> dict[str, str]:
             SELECT user_id, a_id, a_ts, b_id, b_ts,
                    CAST(gap_us AS BIGINT) AS gap_us
             FROM pairs WHERE rn = 1
-        """,
-        "length_drift": _drift.length_drift_sql("documents"),
-        "token_novelty": _drift.token_novelty_sql("documents"),
-        "semantic_dedup": _similarity.semdedup_sql(
+        """),
+        (q_length_drift, _drift.length_drift_sql("documents")),
+        (q_token_novelty, _drift.token_novelty_sql("documents")),
+        (q_semantic_dedup, _similarity.semdedup_sql(
             threshold=0.95,
             source_sql=(
                 "SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v"
@@ -3812,61 +3339,16 @@ def oracle_sql() -> dict[str, str]:
                 " SELECT vec_id + 100000, CAST(embedding AS DOUBLE[])"
                 " FROM embeddings WHERE vec_id < 20"
             ),
-        ),
-        "classifier_score": _text.classifier_score_sql("documents"),
-        "heavy_hitters": _text.heavy_hitters_sql("documents", k=50),
-        "source_overlap": _dedup.source_overlap_sql("documents", n=3),
-        "bpe_encode_fixed": _bpe.bpe_encode_fixed_sql("documents"),
-        "unigram_encode_fixed": _unigram.unigram_encode_fixed_sql("documents"),
-        "unigram_fertility": _unigram.unigram_fertility_sql("documents"),
-        "length_buckets": (
-            "WITH enc AS ("
-            + _ranking.encode_tokens_sql("documents")
-            + "), j AS (SELECT d.source, e.n_tok FROM documents d "
-            "JOIN enc e USING (doc_id)) "
-            + _curation.length_buckets_sql("j", group_col="source", len_col="n_tok")
-        ),
-        "pack_capacity_sweep": _curation.pack_capacity_sweep_sql(
-            "enc",
-            capacities=(128, 256, 512, 1024),
-            len_expr="n_tok",
-            n_shards=4,
-            extra_ctes=(
-                "enc AS (" + _ranking.encode_tokens_sql("documents") + "),"
-            ),
-        ),
-        "wordpiece_encode_fixed": _wordpiece.wordpiece_encode_fixed_sql("documents"),
-        "wordpiece_fertility": _wordpiece.wordpiece_fertility_sql("documents"),
-        "tokenizer_bakeoff": f"""
-          WITH b AS ({_bpe.fertility_stats_sql("documents")}),
-          u AS ({_unigram.unigram_fertility_sql("documents")}),
-          w AS ({_wordpiece.wordpiece_fertility_sql("documents")})
-          SELECT b.source, b.n_words,
-                 b.n_pieces AS bpe_pieces, u.n_pieces AS uni_pieces,
-                 w.n_pieces AS wp_pieces,
-                 b.fertility AS bpe_fertility, u.fertility AS uni_fertility,
-                 w.fertility AS wp_fertility,
-                 round(CAST(u.n_pieces - b.n_pieces AS DOUBLE)
-                       / b.n_pieces, 6) AS uni_vs_bpe_cost,
-                 round(CAST(w.n_pieces - b.n_pieces AS DOUBLE)
-                       / b.n_pieces, 6) AS wp_vs_bpe_cost
-          FROM b JOIN u USING (source) JOIN w USING (source)
-        """,
-        "shard_manifest": (
-            "WITH enc AS ("
-            + _ranking.encode_tokens_sql("documents")
-            + "), packs AS ("
-            + _curation.pack_sequences_sql(
-                "enc", len_expr="n_tok", capacity=256, n_shards=4
-            )
-            + "), mat AS ("
-            + _curation.materialize_packs_sql("packs", "enc")
-            + ") "
-            + _curation.shard_manifest_sql("mat")
-        ),
-        "url_normalize": _web.url_normalize_report_sql("documents"),
-        "domain_stats": _web.domain_stats_sql("documents"),
-        "normalize_text": f"""
+        )),
+        (q_classifier_score, _text.classifier_score_sql("documents")),
+        (q_heavy_hitters, _text.heavy_hitters_sql("documents", k=50)),
+        (q_source_overlap, _dedup.source_overlap_sql("documents", n=3)),
+        (q_bpe_encode_fixed, _bpe.bpe_encode_fixed_sql("documents")),
+        (q_shard_manifest, f"WITH {packed('documents')} "
+         + _curation.shard_manifest_sql("mat")),
+        (q_url_normalize, _web.url_normalize_report_sql("documents")),
+        (q_domain_stats, _web.domain_stats_sql("documents")),
+        (q_normalize_text, f"""
           WITH m AS (
             SELECT doc_id, {_text.messy_text_sql('text')} AS messy
             FROM documents)
@@ -3874,49 +3356,20 @@ def oracle_sql() -> dict[str, str]:
                  {_text.normalize_text_sql('messy')} AS text_norm,
                  length({_text.normalize_text_sql('messy')}) AS n_chars_norm
           FROM m
-        """,
-        "filter_funnel": _curation.filter_funnel_sql("documents"),
-        "manifest_diff": (
+        """),
+        (q_filter_funnel, _curation.filter_funnel_sql("documents")),
+        (q_manifest_diff, (
             "WITH docs_old AS ("
             "  SELECT * FROM documents WHERE doc_id % 10 <> 0"
-            "), enc_o AS ("
-            + _ranking.encode_tokens_sql("docs_old")
-            + "), packs_o AS ("
-            + _curation.pack_sequences_sql(
-                "enc_o", len_expr="n_tok", capacity=256, n_shards=4
-            )
-            + "), mat_o AS ("
-            + _curation.materialize_packs_sql("packs_o", "enc_o")
-            + "), man_o AS ("
+            f"), {packed('docs_old', '_o')}, man_o AS ("
             + _curation.shard_manifest_sql("mat_o")
-            + "), enc_n AS ("
-            + _ranking.encode_tokens_sql("documents")
-            + "), packs_n AS ("
-            + _curation.pack_sequences_sql(
-                "enc_n", len_expr="n_tok", capacity=256, n_shards=4
-            )
-            + "), mat_n AS ("
-            + _curation.materialize_packs_sql("packs_n", "enc_n")
-            + "), man_n AS ("
+            + f"), {packed('documents', '_n')}, man_n AS ("
             + _curation.shard_manifest_sql("mat_n")
             + ") "
             + _curation.manifest_diff_sql("man_o", "man_n")
-        ),
-        "cluster_sizes": f"""
-            WITH RECURSIVE
-            s AS (
-              SELECT doc_id, {simhash_sql('text', 16)} AS sh FROM documents),
-            e AS (
-              SELECT a.doc_id AS src, b.doc_id AS dst
-              FROM s a JOIN s b
-                ON a.doc_id <> b.doc_id
-               AND bit_count(xor(a.sh, b.sh)) <= 2),
-            cc(id, lbl) AS (
-              SELECT doc_id, doc_id FROM s
-              UNION
-              SELECT e.dst, cc.lbl FROM cc JOIN e ON e.src = cc.id
-            ),
-            comp AS (SELECT id, min(lbl) AS component FROM cc GROUP BY id),
+        )),
+        (q_cluster_sizes, f"""
+            {components},
             sizes AS (
               SELECT component, count(*) AS cluster_size
               FROM comp GROUP BY component)
@@ -3924,31 +3377,54 @@ def oracle_sql() -> dict[str, str]:
                    count(*) AS n_clusters,
                    CAST(cluster_size * count(*) AS BIGINT) AS n_docs
             FROM sizes GROUP BY cluster_size
-        """,
-        "bm25_scores": _text.bm25_scores_sql("documents", BM25_QUERIES),
-        "dup_matrix": _dedup.dup_matrix_sql("documents"),
-        "fertility": _bpe.fertility_stats_sql("documents"),
-        "dsir_weights": _curation.dsir_logweights_sql("documents", "lang = 'en'"),
-        "dsir_select": _curation.dsir_select_sql("documents", "lang = 'en'", n=200),
-        "vocab_coverage": _ranking.vocab_coverage_sql("documents"),
-        "oov_rate": _ranking.oov_rate_sql("documents", k=10),
-        "sessionize": _temporal.sessionize_sql("events", gap_s=1800.0),
-        "transition_matrix": _temporal.transition_matrix_sql("events"),
-        "cohort_retention": _temporal.cohort_retention_sql("events"),
-        "rollup_report": _olap.rollup_report_sql("documents"),
-        "pivot_report": _olap.pivot_report_sql("documents", values=PIVOT_LANGS),
-        "decile_report": _olap.decile_report_sql("documents"),
-        "token_entropy": _olap.token_entropy_sql("documents"),
-        "signal_correlations": _olap.signal_correlations_sql("documents"),
-        "expanding_zscore": _temporal.expanding_zscore_sql("events"),
-        "length_gini": _olap.length_gini_sql("documents"),
-        "funnel_conversion": _temporal.funnel_conversion_sql(
+        """),
+        (q_bm25_scores, _text.bm25_scores_sql("documents", BM25_QUERIES)),
+        (q_domain_quota, f"""
+          WITH raw AS (
+            SELECT doc_id, n_chars, {_web.synth_url_sql('doc_id')} AS url_raw
+            FROM documents),
+          norm AS (
+            SELECT doc_id, n_chars,
+                   {_web.normalize_url_sql('url_raw')} AS url_norm
+            FROM raw),
+          wd AS (
+            SELECT doc_id, n_chars,
+                   {_web.registered_domain_sql('url_norm')} AS domain
+            FROM norm)
+          SELECT doc_id, domain, n_chars,
+                 CAST(row_number() OVER (
+                   PARTITION BY domain
+                   ORDER BY n_chars DESC, doc_id) AS INTEGER) AS quota_rank
+          FROM wd
+          QUALIFY quota_rank <= 20
+        """),
+        (q_dup_matrix, _dedup.dup_matrix_sql("documents")),
+        (q_pack_stats, f"WITH {packed('documents')} "
+         + _curation.pack_stats_sql("mat", capacity=256)),
+        (q_fertility, _bpe.fertility_stats_sql("documents")),
+        (q_dsir_weights, _curation.dsir_logweights_sql("documents", "lang = 'en'")),
+        (q_dsir_select, _curation.dsir_select_sql("documents", "lang = 'en'", n=200)),
+        (q_vocab_coverage, _ranking.vocab_coverage_sql("documents")),
+        (q_oov_rate, _ranking.oov_rate_sql("documents", k=10)),
+        (q_sessionize, _temporal.sessionize_sql("events", gap_s=1800.0)),
+        (q_transition_matrix, _temporal.transition_matrix_sql("events")),
+        (q_cohort_retention, _temporal.cohort_retention_sql("events")),
+        (q_rollup_report, _olap.rollup_report_sql("documents")),
+        (q_pivot_report, _olap.pivot_report_sql("documents", values=PIVOT_LANGS)),
+        (q_decile_report, _olap.decile_report_sql("documents")),
+        (q_token_entropy, _olap.token_entropy_sql("documents")),
+        (q_signal_correlations, _olap.signal_correlations_sql("documents")),
+        (q_expanding_zscore, _temporal.expanding_zscore_sql("events")),
+        (q_length_gini, _olap.length_gini_sql("documents")),
+        (q_funnel_conversion, _temporal.funnel_conversion_sql(
             "events", steps=FUNNEL_STEPS
-        ),
-        "collocations_pmi": _text.collocations_pmi_sql("documents"),
-        "load_heatmap": _temporal.load_heatmap_sql("events"),
-        "spine_growth": _temporal.activity_spine_sql("events"),
-        "minhash_calibration": f"""
+        )),
+        (q_collocations_pmi, _text.collocations_pmi_sql("documents")),
+        (q_load_heatmap, _temporal.load_heatmap_sql("events")),
+        (q_ks_drift, _olap.ks_drift_sql("documents")),
+        (q_source_kl, _olap.source_kl_sql("documents")),
+        (q_contingency_report, _olap.contingency_report_sql("documents")),
+        (q_minhash_calibration, f"""
             WITH cand AS ({_minhash_lsh_sql(bands=2, rows=8)}),
             {_DUP_CTE},
             feat AS (
@@ -3973,20 +3449,26 @@ def oracle_sql() -> dict[str, str]:
                    round(CAST(min(j) AS DOUBLE), 6) AS min_exact,
                    round(CAST(max(j) AS DOUBLE), 6) AS max_exact
             FROM scored GROUP BY est_matches
-        """,
-        "ks_drift": _olap.ks_drift_sql("documents"),
-        "source_kl": _olap.source_kl_sql("documents"),
-        "contingency_report": _olap.contingency_report_sql("documents"),
-        "winsorized_stats": _curation.winsorized_stats_sql("documents"),
-        "pareto_frontier": _curation.pareto_frontier_sql("documents"),
-        "rrf_fusion": _ranking.rrf_fusion_sql("documents"),
-        "cardinality_report": _olap.cardinality_report_sql("documents"),
-        "pii_redact": _text.redact_pii_sql("documents"),
-        "zipf_alpha": _olap.zipf_alpha_sql("documents"),
-        "corpus_health": _olap.corpus_health_sql("documents"),
-        "cross_perplexity": _curation.cross_perplexity_sql("documents"),
-        "quantize_embeddings": _similarity.quantize_embeddings_sql("embeddings"),
-        "ingest_pipeline": (
+        """),
+        (q_winsorized_stats, _curation.winsorized_stats_sql("documents")),
+        (q_spine_growth, _temporal.activity_spine_sql("events")),
+        (q_pareto_frontier, _curation.pareto_frontier_sql("documents")),
+        (q_rrf_fusion, _ranking.rrf_fusion_sql("documents")),
+        (q_cardinality_report, _olap.cardinality_report_sql("documents")),
+        (q_pii_redact, _text.redact_pii_sql("documents")),
+        (q_ann_recall, (
+            "WITH ex AS (SELECT * FROM (" + _COSINE_TOPK_SQL + ") t),\n"
+            "     ls AS (SELECT * FROM (" + _COSINE_TOPK_LSH_SQL + ") t)\n"
+            "SELECT ex.query_id,\n"
+            "       CAST(count(*) AS BIGINT) AS n_exact,\n"
+            "       CAST(count(ls.vec_id) AS BIGINT) AS n_hit,\n"
+            "       round(CAST(count(ls.vec_id) AS DOUBLE) / count(*), 6)\n"
+            "         AS recall\n"
+            "FROM ex LEFT JOIN ls\n"
+            "  ON ex.query_id = ls.query_id AND ex.vec_id = ls.vec_id\n"
+            "GROUP BY ex.query_id"
+        )),
+        (q_ingest_pipeline, (
             "WITH u0 AS (SELECT doc_id, doc_id % 100000 AS skey, source,"
             " text FROM (SELECT doc_id, source, text FROM documents"
             " UNION ALL SELECT doc_id + 100000, source, text"
@@ -4017,50 +3499,403 @@ def oracle_sql() -> dict[str, str]:
             "       CAST(sum(nred) AS BIGINT) AS n_redactions,\n"
             "       CAST(sum(nw) AS BIGINT) AS total_words\n"
             "FROM s GROUP BY source"
-        ),
-        "ann_recall": (
-            "WITH ex AS (SELECT * FROM (" + _COSINE_TOPK_SQL + ") t),\n"
-            "     ls AS (SELECT * FROM (" + _COSINE_TOPK_LSH_SQL + ") t)\n"
-            "SELECT ex.query_id,\n"
-            "       CAST(count(*) AS BIGINT) AS n_exact,\n"
-            "       CAST(count(ls.vec_id) AS BIGINT) AS n_hit,\n"
-            "       round(CAST(count(ls.vec_id) AS DOUBLE) / count(*), 6)\n"
-            "         AS recall\n"
-            "FROM ex LEFT JOIN ls\n"
-            "  ON ex.query_id = ls.query_id AND ex.vec_id = ls.vec_id\n"
-            "GROUP BY ex.query_id"
-        ),
-        "signal_calibration": _curation.calibrate_signal_sql("documents"),
-        "centroid_similarity": _similarity.centroid_similarity_sql("embeddings"),
-        "pack_stats": (
-            "WITH enc AS ("
-            + _ranking.encode_tokens_sql("documents")
-            + "), packs AS ("
-            + _curation.pack_sequences_sql(
-                "enc", len_expr="n_tok", capacity=256, n_shards=4
+        )),
+        (q_zipf_alpha, _olap.zipf_alpha_sql("documents")),
+        (q_corpus_health, _olap.corpus_health_sql("documents")),
+        (q_cross_perplexity, _curation.cross_perplexity_sql("documents")),
+        (q_quantize_embeddings, _similarity.quantize_embeddings_sql("embeddings")),
+        (q_signal_calibration, _curation.calibrate_signal_sql("documents")),
+        (q_centroid_similarity, _similarity.centroid_similarity_sql("embeddings")),
+        (q_bpe_encode, None),  # rows-only: iterative fixpoint, no SQL twin
+        (q_partition_lineage, None),  # rows-only: partition ids
+        (q_calc_lineitem, """
+            SELECT l_orderkey, l_linenumber,
+                   l_extendedprice * (1 - l_discount) AS revenue,
+                   l_extendedprice * (1 - l_discount) * (1 + l_tax) AS charged
+            FROM lineitem
+        """),
+        (q_link_orders_customer, """
+            SELECT o.o_orderkey,
+                   c.c_custkey     AS cust_key,
+                   c.c_mktsegment  AS mktsegment,
+                   c.c_acctbal     AS acctbal
+            FROM orders o LEFT JOIN customer c ON o.o_custkey = c.c_custkey
+        """),
+        (q_accu_revenue_per_customer, """
+            SELECT c.c_custkey,
+                   coalesce(CAST(sum(CAST(o.o_totalprice AS DECIMAL(20,6)))
+                                 AS DOUBLE), 0.0)     AS total_spent,
+                   count(o.o_orderkey)                AS n_orders
+            FROM customer c LEFT JOIN orders o ON o.o_custkey = c.c_custkey
+            GROUP BY c.c_custkey
+        """),
+        (q_project_doc_dims, """
+            SELECT source, lang,
+                   count(*)                      AS n_docs,
+                   CAST(sum(n_chars) AS BIGINT)  AS sum_chars
+            FROM documents
+            GROUP BY source, lang
+        """),
+        (q_roll_events_moving, """
+            SELECT event_id, user_id,
+                   CAST(sum(CAST(value AS DECIMAL(20,6))) OVER w AS DOUBLE)
+                     AS msum,
+                   CAST(sum(CAST(value AS DECIMAL(20,6))) OVER w AS DOUBLE)
+                     / count(*) OVER w AS mavg
+            FROM events
+            WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
+                         ROWS BETWEEN 2 PRECEDING AND CURRENT ROW)
+        """),
+        (q_roll_range_events, """
+            SELECT event_id, user_id,
+                   CAST(sum(CAST(value AS DECIMAL(20,6))) OVER (
+                     PARTITION BY user_id ORDER BY epoch_us(ts)
+                     RANGE BETWEEN 600000000 PRECEDING AND CURRENT ROW)
+                     AS DOUBLE) AS wsum
+            FROM events
+        """),
+        (q_range_bin_events, """
+            SELECT CAST(floor(epoch(ts) / 600) * 600 AS BIGINT) AS bin_start,
+                   count(*) AS n_events,
+                   CAST(sum(CAST(value AS DECIMAL(20,6))) AS DOUBLE)
+                     AS sum_value
+            FROM events
+            GROUP BY 1
+        """),
+        (q_range_interval_join, """
+            WITH b AS (SELECT unnest(range(20)) AS k),
+            e AS (
+              SELECT CAST(floor(value / 50) AS BIGINT) AS k,
+                     count(*) AS n,
+                     CAST(sum(CAST(value AS DECIMAL(20,6))) AS DOUBLE) AS s
+              FROM events
+              WHERE value >= 0 AND value < 1000
+              GROUP BY 1)
+            SELECT CAST(b.k AS DOUBLE) * 50       AS lo,
+                   CAST(b.k + 1 AS DOUBLE) * 50   AS hi,
+                   coalesce(e.n, 0)               AS n_events,
+                   coalesce(e.s, 0.0)             AS sum_value
+            FROM b LEFT JOIN e ON e.k = b.k
+        """),
+        (q_link_two_hop, """
+            SELECT o.o_orderkey,
+                   c.c_custkey AS cust_key,
+                   n.n_name    AS nation_name
+            FROM orders o
+            LEFT JOIN customer c ON o.o_custkey = c.c_custkey
+            LEFT JOIN nation n   ON c.c_nationkey = n.n_nationkey
+        """),
+        (q_prod_where, """
+            SELECT n_nationkey, n_name, r_name
+            FROM nation CROSS JOIN region
+            WHERE n_regionkey = r_regionkey
+        """),
+        (q_formula_expr, """
+            SELECT p_partkey,
+                   p_retailprice / (p_size + 1)      AS value_density,
+                   concat(p_brand, '#', p_type)      AS brand_type
+            FROM part
+        """),
+        (q_formula_bracket, """
+            SELECT p_partkey,
+                   p_retailprice / (p_size + 1)            AS density,
+                   (p_retailprice / (p_size + 1)) * 2      AS double_density
+            FROM part
+        """),
+        (q_tokens_flagship, f"""
+            WITH t AS ({_TOKENS_CTE}), {_DIM_CTE}
+            SELECT dim.source,
+                   count(t.doc_id)                             AS n_seq,
+                   CAST(coalesce(sum(t.n_tok), 0) AS BIGINT)   AS sum_tok,
+                   CAST(coalesce(sum(CAST(t.n_tok * dim.weight
+                                          AS DECIMAL(20,6))), 0) AS DOUBLE)
+                                                               AS sum_weighted
+            FROM dim LEFT JOIN t USING (source)
+            GROUP BY dim.source
+        """),
+        (q_tokens_rowlevel, f"""
+            WITH t AS ({_TOKENS_CTE})
+            SELECT doc_id,
+                   CAST(len(tokens) AS INTEGER)      AS n_tok_calc,
+                   tokens[1]                         AS first_tok,
+                   tokens[-1]                        AS last_tok,
+                   CAST(list_sum(tokens) AS BIGINT)  AS tok_sum,
+                   array_to_string(tokens[1:5], ',') AS head5
+            FROM t
+        """),
+        (q_tumbling_window_events, """
+            SELECT CAST(floor(epoch(ts) / 3600) * 3600 AS BIGINT) AS ws,
+                   event_type,
+                   count(*) AS n_events,
+                   CAST(sum(CAST(value AS DECIMAL(20,6))) AS DOUBLE)
+                     AS sum_value
+            FROM events
+            GROUP BY 1, 2
+        """),
+        (q_sliding_window_events, """
+            SELECT CAST(floor((epoch(ts) - k.k * 3600) / 7200) * 7200
+                        + k.k * 3600 AS BIGINT) AS ws,
+                   event_type,
+                   count(*) AS n_events,
+                   CAST(sum(CAST(value AS DECIMAL(20,6))) AS DOUBLE)
+                     AS sum_value
+            FROM events, (SELECT unnest(range(2)) AS k) k
+            GROUP BY 1, 2
+        """),
+        (q_session_window_events, """
+            WITH marked AS (
+              SELECT user_id, ts, value,
+                     CASE WHEN epoch(ts) - epoch(lag(ts) OVER
+                            (PARTITION BY user_id ORDER BY ts)) >= 21600
+                          THEN 1 ELSE 0 END AS brk
+              FROM events),
+            sess AS (
+              SELECT *, sum(brk) OVER (PARTITION BY user_id ORDER BY ts
+                         ROWS UNBOUNDED PRECEDING) AS sid
+              FROM marked)
+            SELECT CAST(floor(epoch(min(ts))) AS BIGINT)          AS ws,
+                   CAST(floor(epoch(max(ts)) + 21600) AS BIGINT)  AS we,
+                   user_id,
+                   count(*) AS n_events,
+                   CAST(sum(CAST(value AS DECIMAL(20,6))) AS DOUBLE)
+                     AS sum_value
+            FROM sess
+            GROUP BY user_id, sid
+        """),
+        (q_dedup_exact, f"""
+            WITH {_DUP_CTE}
+            SELECT md5(text) AS fp, min(doc_id) AS keep_id,
+                   count(*) AS n_dups
+            FROM u GROUP BY 1
+        """),
+        (q_dedup_minhash_lsh, _minhash_lsh_sql()),
+        (q_dedup_verified_pairs, f"""
+            WITH cand AS ({_minhash_lsh_sql(bands=2, rows=8)}),
+            {_DUP_CTE},
+            ng AS (
+              SELECT doc_id, {ngram_set_sql('text')} AS ng FROM u)
+            SELECT c.id_a, c.id_b,
+                   round({ngram_jaccard_sql('a.ng', 'b.ng')}, 6) AS jaccard
+            FROM cand c
+            JOIN ng a ON a.doc_id = c.id_a
+            JOIN ng b ON b.doc_id = c.id_b
+            WHERE round({ngram_jaccard_sql('a.ng', 'b.ng')}, 6) >= 0.5
+        """),
+        (q_simhash, f"""
+            SELECT doc_id, {simhash_sql('text', 16)} AS simhash
+            FROM documents
+        """),
+        (q_text_features, _text_features_sql()),
+        (q_quality_filter_stats, f"""
+            WITH scored AS (
+              SELECT n_chars, source,
+                     CAST(len(string_split(text, ' ')) AS INTEGER) AS n_words,
+                     CAST({quality_score_sql('text')} AS DOUBLE)   AS quality,
+                     {lang_pred_sql('text')}                       AS lang_pred
+              FROM documents)
+            SELECT lang_pred, source,
+                   count(*)                                        AS n_docs,
+                   CAST(sum(n_chars) AS BIGINT)                    AS sum_chars,
+                   round(CAST(sum(CAST(quality AS DECIMAL(20,10)))
+                              AS DOUBLE) / count(*), 6)            AS avg_quality
+            FROM scored
+            WHERE quality >= 1.0 AND n_words >= 30
+            GROUP BY lang_pred, source
+        """),
+        (q_ann_cosine_topk, _COSINE_TOPK_SQL),
+        (q_ann_cosine_topk_lsh, _COSINE_TOPK_LSH_SQL),
+        (q_embedding_neardup, """
+            WITH u AS (
+              SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
+              FROM embeddings
+              UNION ALL
+              SELECT vec_id + 100000, CAST(embedding AS DOUBLE[])
+              FROM embeddings WHERE vec_id < 20),
+            scored AS (
+              SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+                     round(list_dot_product(a.v, b.v) /
+                           (sqrt(list_dot_product(a.v, a.v)) *
+                            sqrt(list_dot_product(b.v, b.v))), 6) AS cos_sim
+              FROM u a JOIN u b ON b.vec_id > a.vec_id)
+            SELECT id_a, id_b, cos_sim FROM scored WHERE cos_sim >= 0.99
+        """),
+        (q_simhash_hamming, f"""
+            WITH s AS (
+              SELECT doc_id, {simhash_sql('text', 16)} AS sh FROM documents)
+            SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+                   CAST(bit_count(xor(a.sh, b.sh)) AS INTEGER) AS hamming
+            FROM s a JOIN s b ON b.doc_id > a.doc_id
+            WHERE bit_count(xor(a.sh, b.sh)) <= 2
+        """),
+        (q_dedup_clusters, f"""
+            {components}
+            SELECT id, component FROM comp
+        """),
+        (q_dedup_survivors, f"""
+            {components}
+            SELECT d.doc_id, d.source, d.n_chars
+            FROM documents d JOIN comp ON comp.id = d.doc_id
+            WHERE comp.id = comp.component
+        """),
+        (q_text_winnow_fp, f"""
+            SELECT doc_id,
+                   array_to_string({winnow_fingerprint_sql('text')}, ',')
+                     AS winnow_fp
+            FROM documents
+        """),
+        (q_dedup_ngram_jaccard, f"""
+            WITH ng AS (
+              SELECT doc_id, {ngram_set_sql('text')} AS ng FROM documents)
+            SELECT l.doc_id AS id_a, r.doc_id AS id_b,
+                   round({ngram_jaccard_sql('l.ng', 'r.ng')}, 6) AS jaccard
+            FROM ng l JOIN ng r ON r.doc_id = l.doc_id + 1
+        """),
+        (q_tokens_minhash, f"""
+            WITH t AS ({_TOKENS_CTE})
+            SELECT doc_id,
+                   array_to_string({token_minhash_sql('tokens', 4)}, ',')
+                     AS sig
+            FROM t
+        """),
+        (q_ewma_user_value, """
+            WITH o AS (
+              SELECT user_id, value,
+                     row_number() OVER (
+                       PARTITION BY user_id
+                       ORDER BY CAST(floor(epoch(ts)) AS BIGINT) * 1000000
+                                + event_id)                      AS rn,
+                     count(*) OVER (PARTITION BY user_id)        AS n
+              FROM events)
+            SELECT user_id,
+                   round(sum(CASE WHEN rn = 1
+                                  THEN value * power(0.9, n - 1)
+                                  ELSE 0.1 * power(0.9, n - rn) * value
+                             END), 6)       AS ewma,
+                   CAST(max(n) AS BIGINT)   AS n
+            FROM o GROUP BY user_id
+        """),
+        (q_multimodal_features, """
+            WITH m AS (
+              SELECT i AS media_id,
+                     CASE WHEN i % 3 = 0 THEN 'image'
+                          WHEN i % 3 = 1 THEN 'audio'
+                          ELSE 'video' END AS kind,
+                     sha256(printf('%X', i)) AS h
+              FROM range(0, 200) t(i))
+            SELECT media_id, kind,
+                   CAST(32 AS INTEGER) AS n_bytes,
+                   list_sum(list_transform(range(0, 32),
+                     j -> CAST(concat('0x', substr(h, 2*j+1, 2)) AS INTEGER)
+                   )) / 32.0 AS mean_byte
+            FROM m
+        """),
+        # full-probe IVF (n_probe = n_lists) searches every list, so its
+        # contract is exactly the brute-force top-k
+        (q_ann_ivf_topk, _COSINE_TOPK_SQL),
+        (q_sample_stratified, (
+            "SELECT doc_id, lang, source, n_chars FROM documents WHERE "
+            + _curation.hash_sample_sql(
+                "doc_id", {"en": 0.25}, "lang", default_rate=0.75
             )
-            + "), mat AS ("
-            + _curation.materialize_packs_sql("packs", "enc")
-            + ") "
-            + _curation.pack_stats_sql("mat", capacity=256)
-        ),
-        "domain_quota": f"""
-          WITH raw AS (
-            SELECT doc_id, n_chars, {_web.synth_url_sql('doc_id')} AS url_raw
-            FROM documents),
-          norm AS (
-            SELECT doc_id, n_chars,
-                   {_web.normalize_url_sql('url_raw')} AS url_norm
-            FROM raw),
-          wd AS (
-            SELECT doc_id, n_chars,
-                   {_web.registered_domain_sql('url_norm')} AS domain
-            FROM norm)
-          SELECT doc_id, domain, n_chars,
-                 CAST(row_number() OVER (
-                   PARTITION BY domain
-                   ORDER BY n_chars DESC, doc_id) AS INTEGER) AS quota_rank
-          FROM wd
-          QUALIFY quota_rank <= 20
-        """,
-    }
+        )),
+        (q_decontaminate, _curation.contamination_sql(
+            "doc_id % 101 != 0", "doc_id % 101 = 0", n=4
+        )),
+        (q_tfidf_top_terms, _curation.top_terms_sql("lang", k=10)),
+        (q_corpus_length_stats, _curation.length_stats_sql("lang")),
+        (q_repetition_signals, (
+            "SELECT doc_id, n_words, n_distinct_words, dup_word_fraction, "
+            "top_bigram_count, top_bigram_fraction FROM ("
+            + _text.repetition_signals_sql("documents")
+            + ")"
+        )),
+        (q_curation_pipeline, f"""
+            WITH sampled AS (
+              SELECT * FROM documents
+              WHERE {_curation.hash_sample_sql(
+                  "doc_id", {"en": 0.25}, "lang", default_rate=0.75)}
+            ),
+            rep AS ({_text.repetition_signals_sql("sampled")}),
+            gated AS (
+              SELECT *, CAST({quality_score_sql("text")} AS DOUBLE) AS quality
+              FROM rep WHERE dup_word_fraction <= 0.6
+            )
+            SELECT lang,
+                   CAST(count(*) AS BIGINT)      AS n_docs,
+                   CAST(sum(n_words) AS BIGINT)  AS total_words,
+                   round(CAST(sum(CAST(dup_word_fraction AS DECIMAL(20,10)))
+                              AS DOUBLE) / count(*), 6) AS avg_dup_fraction
+            FROM gated WHERE quality >= 1.0
+            GROUP BY lang
+        """),
+        (q_chunk_documents, _curation.chunk_spans_sql(
+            "documents", size=32, overlap=8
+        )),
+        (q_pack_sequences, _curation.pack_sequences_sql(
+            "documents", capacity=256, n_shards=4
+        )),
+        (q_unigram_logprob, _curation.unigram_logprob_sql("documents")),
+        (q_source_quota, """
+            SELECT doc_id, source, n_chars,
+                   CAST(row_number() OVER (
+                     PARTITION BY source
+                     ORDER BY n_chars DESC, doc_id ASC) AS INTEGER)
+                     AS quota_rank
+            FROM documents
+            QUALIFY quota_rank <= 10
+        """),
+        (q_dedup_spans, _curation.dedup_spans_sql("documents", size=8)),
+        (q_token_budget, _curation.token_budget_select_sql(
+            "documents", "source", "n_chars", budget=600,
+            out_cols="doc_id, source, n_chars",
+        )),
+        (q_temperature_resample, _curation.temperature_resample_sql(
+            "documents", "lang", temperature=2.0,
+            out_cols="doc_id, lang",
+        )),
+        (q_encode_tokens, _ranking.encode_tokens_sql("documents")),
+    ]
+
+
+
+_NOT_HASHABLE = (
+    T.ArrayType, T.MapType, T.StructType, T.BinaryType, T.DecimalType
+)
+
+
+def _driver_hashable(build: Builder) -> Builder:
+    """``build`` behind the contract's one output rule: the driver hashes
+    scalar values only, so an array, map, struct, binary or decimal
+    output column raises, naming the query and the column. Read from the
+    schema alone, which runs no Spark job."""
+    name = _name(build)
+
+    @functools.wraps(build)
+    def checked(spark: SparkSession, sf: str) -> DataFrame:
+        df = build(spark, sf)
+        bad = [
+            f"{f.name} ({f.dataType.simpleString()})"
+            for f in df.schema.fields
+            if isinstance(f.dataType, _NOT_HASHABLE)
+        ]
+        if bad:
+            raise TypeError(
+                f"contract query {name!r}: column {', '.join(bad)} is not "
+                "driver-hashable; project arrays to JSON text and decimals "
+                "to strings"
+            )
+        return df
+
+    return checked
+
+
+def _name(build: Builder) -> str:
+    return build.__name__.removeprefix("q_")
+
+
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    return {_name(fn): _driver_hashable(fn) for fn, _ in _contracts()}
+
+
+def oracle_sql() -> dict[str, str]:
+    return {_name(fn): sql for fn, sql in _contracts() if sql is not None}

@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from bistro_spark.operators.subword import split_sql, word_array
+
 _N_BUCKETS = 16  # log2 buckets: [2^k, 2^(k+1)) chars, k clamped to 0..15
 
 
@@ -191,8 +193,8 @@ def token_novelty(
     def toks(df):
         return df.select(
             F.col(group_col),
-            F.explode(F.split(F.col(text_col), r"\s+")).alias("term"),
-        ).filter(F.col("term") != "")
+            F.explode(word_array(F.col(text_col))).alias("term"),
+        )
 
     old_vocab = toks(old_df).distinct().withColumn("_seen", F.lit(1))
     probed = toks(new_df).join(old_vocab, [group_col, "term"], "left")
@@ -217,16 +219,16 @@ def token_novelty_sql(
     group_col: str = "source",
     text_col: str = "text",
 ) -> str:
-    """DuckDB twin of :func:`token_novelty` (regex split mirrors Spark's
-    ``split`` on whitespace runs; empty terms dropped on both sides)."""
+    """DuckDB twin of :func:`token_novelty` (terms split by the same
+    ``subword.WORD_SEP`` rule; empty terms dropped on both sides)."""
     return f"""
       WITH newt AS (
         SELECT {group_col},
-               unnest(regexp_split_to_array({text_col}, '\\s+')) AS term
+               unnest({split_sql(text_col)}) AS term
         FROM {table} WHERE {new_pred}
       ), oldv AS (
         SELECT DISTINCT {group_col},
-               unnest(regexp_split_to_array({text_col}, '\\s+')) AS term
+               unnest({split_sql(text_col)}) AS term
         FROM {table} WHERE {old_pred}
       )
       SELECT n.{group_col},

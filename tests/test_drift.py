@@ -94,3 +94,21 @@ def test_token_novelty_vocab_is_group_scoped(spark):
     new = _docs(spark, [(2, "code", 1, "alpha")])
     got = {r["source"]: r["novelty"] for r in token_novelty(old, new).collect()}
     assert got == {"code": 1.0}
+
+
+def test_token_novelty_unicode_whitespace_parity(spark):
+    """Terms split by one rule on both engines: ``\\x0b`` (Java ``\\s``
+    only), NBSP and U+3000 (neither engine's ``\\s``) and tab all
+    separate words, so old = {a, b, c} and new = a b c d e."""
+    rows = [(0, "web", 1, "a\x0bb c"), (1, "web", 1, "a b\xa0c　d\te")]
+    got = [tuple(r) for r in token_novelty(
+        _docs(spark, [rows[0]]), _docs(spark, [rows[1]])
+    ).collect()]
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE documents (doc_id BIGINT, source VARCHAR,"
+        " n_chars BIGINT, text VARCHAR)"
+    )
+    con.executemany("INSERT INTO documents VALUES (?, ?, ?, ?)", rows)
+    want = [tuple(r) for r in con.sql(token_novelty_sql()).fetchall()]
+    assert got == want == [("web", 5, 2, 0.4)]

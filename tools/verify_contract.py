@@ -1,21 +1,26 @@
 """Local stand-in for the driver's correctness gate: run every
 __spark_entry__.queries() entry on Spark at sf0.01 and the matching
 oracle_sql() on DuckDB over the same parquet, compare row count + column
-names + an order-insensitive value hash (values canonicalized: floats
-rounded to 9 significant digits, rows sorted).
+names + an order-insensitive value hash. Values are canonicalized in the
+driver's terms: floats by ``repr`` (no rounding), rows sorted, and a
+value the driver cannot hash (list, tuple/struct, dict, Decimal, bytes)
+fails the query instead of being stringified.
 
 Usage: python tools/verify_contract.py [sf_dir] [query ...]
+The Spark session is sized by SPARK_GRAFT_CPUS.
 """
 
 from __future__ import annotations
 
-import math
+import hashlib
 import sys
 from datetime import datetime
+from decimal import Decimal
+from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 import __spark_entry__ as ent  # noqa: E402
 from bistro_spark.caching import pin_scope  # noqa: E402
@@ -23,36 +28,39 @@ from bistro_spark.session import get_spark  # noqa: E402
 from bistro_spark.sources.io import TESTDATA_TABLES  # noqa: E402
 
 
+class Unhashable(TypeError):
+    """A value of a type the driver's canonicalizer cannot hash."""
+
+
 def canon(v):
+    if isinstance(v, (list, tuple, dict, Decimal, bytes, bytearray)):
+        raise Unhashable(
+            f"{type(v).__name__} value {str(v)[:60]} is not driver-hashable"
+        )
     if isinstance(v, float):
-        if math.isnan(v):
-            return "nan"
-        return f"{v:.9g}"
+        return repr(v)
     if isinstance(v, datetime):
         return v.replace(tzinfo=None).isoformat()
-    if isinstance(v, list):
-        return "[" + ",".join(canon(x) for x in v) + "]"
     if v is None:
         return ""
     return str(v)
 
 
-def table_sig(cols, rows):
+def canon_lines(cols, rows):
+    """Rows as sorted canonical lines, columns in name order."""
     order = sorted(range(len(cols)), key=lambda i: cols[i])
-    lines = sorted(
-        "|".join(canon(r[i]) for i in order) for r in rows
-    )
-    import hashlib
+    return sorted("|".join(canon(r[i]) for i in order) for r in rows)
 
-    h = hashlib.sha256("\n".join(lines).encode()).hexdigest()[:16]
-    return h
+
+def table_sig(cols, rows):
+    lines = canon_lines(cols, rows)
+    return hashlib.sha256("\n".join(lines).encode()).hexdigest()[:16]
 
 
 def main():
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
-    spark = get_spark(master="local[8]", app_name="verify_contract",
-                      shuffle_partitions=8)
+    spark = get_spark(app_name="verify_contract", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
     for t in TESTDATA_TABLES:
@@ -92,15 +100,16 @@ def main():
                 failures.append(name)
                 if not ok_hash and ok_rows and ok_cols:
                     # show first differing canonical row
-                    order_s = sorted(range(len(scols)), key=lambda i: scols[i])
-                    order_o = sorted(range(len(ocols)), key=lambda i: ocols[i])
-                    a = sorted("|".join(canon(r[scols[i]]) for i in order_s) for r in srows)
-                    b = sorted("|".join(canon(r[i]) for i in order_o) for r in orows)
+                    a = canon_lines(scols, [[r[c] for c in scols] for r in srows])
+                    b = canon_lines(ocols, orows)
                     for x, y in zip(a, b):
                         if x != y:
                             print(f"   spark : {x[:200]}")
                             print(f"   oracle: {y[:200]}")
                             break
+        except Unhashable as e:
+            failures.append(name)
+            print(f"{name:32s} FAIL  {e}")
         except Exception as e:  # noqa: BLE001
             failures.append(name)
             print(f"{name:32s} ERROR {type(e).__name__}: {str(e)[:300]}")
