@@ -23,6 +23,18 @@ not Spark Connect) and releases them once their last consumer is done:
   each independent query execution in one; any ``localCheckpoint``
   created inside — by this module or not — is freed at exit.
 - :func:`release` — free a specific id set (the keep-cache's hook).
+- :class:`PinOwner` — the base of every streaming twin that pins state:
+  it owns the twin's pinned blocks by lifetime, so no twin keeps its own
+  id bookkeeping. A **state** pin (``_pin(df)``) joins the generation
+  being built; ``_commit()`` makes it current and frees the generation
+  it replaces, or, with ``hold=True``, keeps that one until the next
+  trigger starts (when the frame just returned still reads it). A
+  **trigger** pin (``_pin(df, trigger=True)``: deltas and outputs) is
+  freed by the next ``_begin()``, called when a trigger starts.
+  ``_sweep()`` frees whatever the twin's batch operator pinned
+  internally and the owner does not own; ``close()`` frees everything,
+  drops the twin's frames and is idempotent; ``owned_ids`` is the owned
+  set, read-only.
 
 CAUTION: a released checkpoint CANNOT be recomputed (the executor raises
 ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``) — only release after every
@@ -112,3 +124,63 @@ def pin_scope(spark: SparkSession):
         yield
     finally:
         release_new_pins(spark, before)
+
+
+class PinOwner:
+    """Owner of a streaming twin's pinned executor blocks (see the module
+    docstring for the two lifetimes). A twin subclasses it and calls
+    ``super().__init__(spark)``; it then never touches an id."""
+
+    def __init__(self, spark: SparkSession):
+        self.spark = spark
+        self._gen: set[int] = set()  # the current state generation
+        self._next_gen: set[int] = set()  # pinned since the last commit
+        self._trigger: set[int] = set()  # freed when the next trigger starts
+
+    @property
+    def owned_ids(self) -> frozenset[int]:
+        """Ids of every block this twin owns now (read-only)."""
+        return frozenset(self._gen | self._next_gen | self._trigger)
+
+    def _begin(self) -> None:
+        """A trigger starts: free the previous trigger's blocks."""
+        release(self.spark, self._trigger)
+        self._trigger = set()
+
+    def _pin(self, df: DataFrame, trigger: bool = False) -> DataFrame:
+        """:func:`pin` ``df`` into the generation being built, or with
+        trigger lifetime."""
+        out, ids = pin(df)
+        (self._trigger if trigger else self._next_gen).update(ids)
+        return out
+
+    def _commit(self, hold: bool = False) -> None:
+        """The generation being built replaces the current one, which is
+        freed now, or at the next :meth:`_begin` when ``hold``. Call it
+        after the last read of the old generation."""
+        old, self._gen, self._next_gen = self._gen, self._next_gen, set()
+        if hold:
+            self._trigger |= old
+        else:
+            release(self.spark, old)
+
+    @contextmanager
+    def _sweep(self):
+        """Free, on exit, every block pinned inside that this owner does
+        not own (keep-pinned shared caches excepted: a raw set-difference
+        release would free them, and a released checkpoint cannot be
+        recomputed)."""
+        before = pinned_ids(self.spark)
+        try:
+            yield
+        finally:
+            release_new_pins(self.spark, before, exclude=self.owned_ids)
+
+    def close(self) -> None:
+        """Free every block this twin owns and drop the twin's frames,
+        which read them; a second call is a no-op."""
+        release(self.spark, self.owned_ids)
+        self._gen, self._next_gen, self._trigger = set(), set(), set()
+        for name, value in list(vars(self).items()):
+            if isinstance(value, DataFrame):
+                setattr(self, name, None)

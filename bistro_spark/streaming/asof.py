@@ -29,8 +29,8 @@ exact full-history parity for every left within the watermark
 (pytest-pinned), which is the same guarantee Spark gives its
 stream-stream joins.
 
-Checkpoint chain uses ``bistro_spark.caching`` pin/release — one state
-checkpoint alive at a time, like the other streaming runners.
+The checkpoint chain is owned by ``bistro_spark.caching.PinOwner`` — one
+state generation alive at a time, like the other streaming runners.
 """
 
 from __future__ import annotations
@@ -38,10 +38,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bistro_spark.caching import pin, release
+from bistro_spark.caching import PinOwner
 
 
-class StreamingAsofLinker:
+class StreamingAsofLinker(PinOwner):
     """Per-trigger as-of enrichment with watermark-bounded right state.
 
     ``process_batch(left_delta, right_delta)`` returns the enriched left
@@ -61,7 +61,7 @@ class StreamingAsofLinker:
         watermark_s: float = 0.0,
         prefix: str = "asof_",
     ):
-        self.spark = spark
+        super().__init__(spark)
         self.keys = [on] if isinstance(on, str) else list(on)
         self.left_ts = left_ts
         self.right_ts = right_ts
@@ -71,7 +71,6 @@ class StreamingAsofLinker:
         self.prefix = prefix
         self._state: DataFrame | None = None  # retained right rows
         self._max_ts_us: int | None = None  # max event time seen (µs)
-        self._pin_ids: set[int] = set()
         self.batches_seen = 0
 
     def state_size(self) -> int:
@@ -96,7 +95,7 @@ class StreamingAsofLinker:
         # pin the (delta-sized) enriched output BEFORE the old state is
         # released below — it reads the old state's checkpoint blocks;
         # its own blocks are recycled on the next trigger
-        out, out_ids = pin(
+        out = self._pin(
             link_asof(
                 left_delta,
                 cands,
@@ -147,8 +146,6 @@ class StreamingAsofLinker:
             )
             new_state = recent.unionByName(latest_below)
 
-        old_ids = self._pin_ids
-        self._state, state_ids = pin(new_state)
-        release(self.spark, old_ids)
-        self._pin_ids = state_ids | out_ids
+        self._state = self._pin(new_state)
+        self._commit()
         return out

@@ -33,11 +33,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bistro_spark.caching import pin, release
+from bistro_spark.caching import PinOwner
 from bistro_spark.session import local_frame
 
 
-class StreamingCepMatcher:
+class StreamingCepMatcher(PinOwner):
     """Feed event deltas (mixed types) via ``process_batch``; it returns
     the matches FINALIZED by this trigger — (key, a_id, a_ts, b_id, b_ts,
     gap_us), b-fields null when the A event's horizon closed with no B.
@@ -56,7 +56,7 @@ class StreamingCepMatcher:
         watermark_s: float = 0.0,
         emit_unmatched: bool = False,
     ):
-        self.spark = spark
+        super().__init__(spark)
         self.key = key
         self.ts_col = ts_col
         self.type_col = type_col
@@ -69,7 +69,6 @@ class StreamingCepMatcher:
         self._pending: DataFrame | None = None  # A's + best-B-so-far
         self._bpool: DataFrame | None = None  # B's with ts > wm
         self._max_ts_us: int | None = None
-        self._pin_ids: set[int] = set()
         self.batches_seen = 0
 
     # ---------------------------------------------------------- helpers --
@@ -228,23 +227,11 @@ class StreamingCepMatcher:
         return self._swap(emit, still, bpool)
 
     def _swap(self, emit, still, bpool) -> DataFrame:
-        old_ids = self._pin_ids
-        new_ids: set[int] = set()
         if emit is not None:
-            emit, ids = pin(self._emit_cols(emit))
-            new_ids |= ids
-        if still is not None:
-            self._pending, ids = pin(still)
-            new_ids |= ids
-        else:
-            self._pending = None
-        if bpool is not None:
-            self._bpool, ids = pin(bpool)
-            new_ids |= ids
-        else:
-            self._bpool = None
-        release(self.spark, old_ids)
-        self._pin_ids = new_ids
+            emit = self._pin(self._emit_cols(emit))
+        self._pending = None if still is None else self._pin(still)
+        self._bpool = None if bpool is None else self._pin(bpool)
+        self._commit()
         if emit is None:
             schema = (
                 f"{self.key} bigint, a_id bigint, a_ts timestamp, "

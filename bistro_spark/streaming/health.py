@@ -36,11 +36,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bistro_spark.caching import pin, release
+from bistro_spark.caching import PinOwner
+from bistro_spark.streaming.incremental import merge_grid
 from bistro_spark.streaming.vocab import _entropy_from_counts, _term_counts
 
 
-class StreamingCorpusHealth:
+class StreamingCorpusHealth(PinOwner):
     """Feed micro-batches to :meth:`process_batch`; each call returns
     the CURRENT full-history (group, n_rows, n_distinct, dup_ratio,
     n_terms, n_tokens, entropy, alpha, mean_quality) dashboard — valid
@@ -53,14 +54,12 @@ class StreamingCorpusHealth:
         group_col: str = "source",
         text_col: str = "text",
     ):
-        self.spark = spark
+        super().__init__(spark)
         self.group_col = group_col
         self.text_col = text_col
         self._grid: DataFrame | None = None  # (group, n_rows, sum_q)
         self._members: DataFrame | None = None  # (group, fp)
         self._terms: DataFrame | None = None  # (group, term, c)
-        self._pin_ids: set[int] = set()
-        self._trigger_ids: set[int] = set()
         self.batches_seen = 0
 
     def state_rows(self) -> tuple[int, int, int]:
@@ -76,7 +75,7 @@ class StreamingCorpusHealth:
         from bistro_spark.operators.text import quality_score
 
         self.batches_seen += 1
-        release(self.spark, self._trigger_ids)
+        self._begin()
         g, t = self.group_col, self.text_col
 
         delta_grid = batch_df.groupBy(g).agg(
@@ -85,16 +84,7 @@ class StreamingCorpusHealth:
                 F.round(quality_score(F.col(t)), 9).cast("decimal(38,9)")
             ).alias("sum_q"),
         )
-        grid = (
-            delta_grid
-            if self._grid is None
-            else self._grid.unionByName(delta_grid)
-            .groupBy(g)
-            .agg(
-                F.sum("n_rows").cast("long").alias("n_rows"),
-                F.sum("sum_q").cast("decimal(38,9)").alias("sum_q"),
-            )
-        )
+        grid = merge_grid(self._grid, delta_grid, [g])
         delta_members = batch_df.select(
             F.col(g), F.md5(F.col(t)).alias("fp")
         ).distinct()
@@ -103,21 +93,14 @@ class StreamingCorpusHealth:
             if self._members is None
             else self._members.unionByName(delta_members).distinct()
         )
-        delta_terms = _term_counts(batch_df, g, t)
-        terms = (
-            delta_terms
-            if self._terms is None
-            else self._terms.unionByName(delta_terms)
-            .groupBy(g, "term")
-            .agg(F.sum("c").cast("long").alias("c"))
+        terms = merge_grid(
+            self._terms, _term_counts(batch_df, g, t), [g, "term"]
         )
 
-        old = self._pin_ids
-        self._grid, grid_ids = pin(grid)
-        self._members, mem_ids = pin(members)
-        self._terms, term_ids = pin(terms)
-        self._pin_ids = grid_ids | mem_ids | term_ids
-        release(self.spark, old)
+        self._grid = self._pin(grid)
+        self._members = self._pin(members)
+        self._terms = self._pin(terms)
+        self._commit()
 
         card = self._members.groupBy(g).agg(
             F.count(F.lit(1)).cast("long").alias("n_distinct")
@@ -134,7 +117,7 @@ class StreamingCorpusHealth:
             ).alias("mean_quality"),
         )
         ent = _entropy_from_counts(self._terms, g)
-        report, rep_ids = pin(
+        return self._pin(
             vol.join(ent, g).select(
                 g,
                 "n_rows",
@@ -145,13 +128,6 @@ class StreamingCorpusHealth:
                 "entropy",
                 "alpha",
                 "mean_quality",
-            )
+            ),
+            trigger=True,
         )
-        self._trigger_ids = rep_ids
-        return report
-
-    def close(self) -> None:
-        release(self.spark, self._pin_ids | self._trigger_ids)
-        self._pin_ids = set()
-        self._trigger_ids = set()
-        self._grid = self._members = self._terms = None

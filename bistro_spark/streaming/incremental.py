@@ -49,12 +49,33 @@ of two places, chosen by the state type:
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Callable, Sequence
+from typing import Callable, Mapping, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bistro_spark.caching import PinOwner
 from bistro_spark.session import local_frame
+
+
+def merge_grid(
+    state: DataFrame | None,
+    delta: DataFrame,
+    keys: Sequence[str],
+    merge: Mapping[str, str] | None = None,
+) -> DataFrame:
+    """The additive grid merge: ``delta`` itself on the first trigger,
+    else state ∪ delta regrouped by ``keys``, each other column of
+    ``delta`` folded by its ``merge`` aggregate (``sum`` when unnamed).
+    Columns leave as keys then values in ``delta``'s order; a sum keeps
+    the BIGINT and DECIMAL(38, s) types of the grids that use it."""
+    if state is None:
+        return delta
+    merge = merge or {}
+    values = [c for c in delta.columns if c not in keys]
+    return state.unionByName(delta).groupBy(*keys).agg(
+        *[F.expr(f"{merge.get(c, 'sum')}(`{c}`)").alias(c) for c in values]
+    )
 
 
 @dataclass
@@ -79,7 +100,7 @@ class AggSpec:
     invertible: bool = False
 
 
-class IncrementalRunner:
+class IncrementalRunner(PinOwner):
     """Scripted micro-batch evaluation of a grouped accumulate pipeline.
 
     Parameters
@@ -108,7 +129,7 @@ class IncrementalRunner:
         time_col: str = "event_time",
         unfold: bool | None = None,  # None = auto (on iff all invertible)
     ):
-        self.spark = spark
+        super().__init__(spark)
         self.prepare = prepare
         self.group_keys = group_keys
         self.aggs = aggs
@@ -118,7 +139,6 @@ class IncrementalRunner:
         self.time_col = time_col
         self._buffer: DataFrame | None = None  # retained window (retention mode)
         self._state: DataFrame | None = None  # merged aggregates (add-only mode)
-        self._pin_ids: set[int] = set()  # executor blocks owned by buffer+state
         # un-fold mode: retention active AND every fold is invertible →
         # aggregate state is updated by (add delta partial, subtract evicted
         # partial); per-batch AGGREGATION work ∝ |delta| + |evicted| instead
@@ -152,15 +172,8 @@ class IncrementalRunner:
 
     def add_batch(self, batch_df: DataFrame) -> None:
         """ActionAdd(delta) + ActionRemove(retention) + ActionEval."""
-        from bistro_spark.caching import pin, release
-
         self.batches_seen += 1
         prepared = self.prepare(batch_df)
-        # previous batch's pinned buffer/state blocks: still read while the
-        # new state derives from them, released once the new pins are eager-
-        # materialized — without this, a long-running stream leaks one
-        # checkpoint per micro-batch (round-3 storage-lifecycle fix)
-        old_ids, new_ids = self._pin_ids, set()
 
         if self._needs_buffer():
             buf = prepared if self._buffer is None else self._buffer.unionByName(prepared)
@@ -171,10 +184,9 @@ class IncrementalRunner:
             # iterative-union pitfall). The union also adds the delta's
             # partitions each batch; coalesce (a no-op at or below the
             # target) keeps the buffer at one partition per core.
-            self._buffer, ids = pin(
+            self._buffer = self._pin(
                 retained.coalesce(self.spark.sparkContext.defaultParallelism)
             )
-            new_ids |= ids
             if self._unfold:
                 from functools import reduce
 
@@ -203,29 +215,22 @@ class IncrementalRunner:
                     # from the retained buffer if bit-parity matters.
                     .filter(F.col(self._N) != 0)
                 )
-                self._state, ids = pin(merged)
-                new_ids |= ids
+                self._state = self._pin(merged)
         else:
             partial = prepared.groupBy(*self.group_keys).agg(
                 *[F.expr(a.batch_expr).alias(a.name) for a in self.aggs]
             )
-            if self._state is None:
-                merged = partial
-            else:
-                merged = (
-                    self._state.unionByName(partial)
-                    .groupBy(*self.group_keys)
-                    .agg(
-                        *[
-                            F.expr(f"{a.merge_expr}({a.name})").alias(a.name)
-                            for a in self.aggs
-                        ]
-                    )
+            self._state = self._pin(
+                merge_grid(
+                    self._state,
+                    partial,
+                    self.group_keys,
+                    {a.name: a.merge_expr for a in self.aggs},
                 )
-            self._state, ids = pin(merged)
-            new_ids |= ids
-        release(self.spark, old_ids)
-        self._pin_ids = new_ids
+            )
+        # the previous buffer/state fed the pins above; freeing them here
+        # keeps a long-running stream at one checkpoint generation
+        self._commit()
 
     def _needs_buffer(self) -> bool:
         return self.retention_count is not None or self.retention_age is not None
@@ -296,14 +301,6 @@ class IncrementalRunner:
     def state_rows(self) -> int:
         """Rows in the merged aggregate state (0 before the first batch)."""
         return 0 if self._state is None else self._state.count()
-
-    def close(self) -> None:
-        """Release the pinned buffer and state blocks (idempotent)."""
-        from bistro_spark.caching import release
-
-        release(self.spark, self._pin_ids)
-        self._pin_ids = set()
-        self._buffer = self._state = None
 
 
 class DriverSumGrid:

@@ -33,10 +33,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bistro_spark.caching import pin, release
+from bistro_spark.caching import PinOwner
+from bistro_spark.streaming.incremental import merge_grid
 
 
-class StreamingIngestPipeline:
+class StreamingIngestPipeline(PinOwner):
     """Feed micro-batches of (id, source, text) rows to
     :meth:`process_batch`; each call returns the cumulative
     (source, n_docs, n_redactions, total_words) audit report."""
@@ -50,7 +51,7 @@ class StreamingIngestPipeline:
         min_words: int = 20,
         min_quality: float = 1.05,
     ):
-        self.spark = spark
+        super().__init__(spark)
         self.id_col = id_col
         self.source_col = source_col
         self.text_col = text_col
@@ -58,7 +59,6 @@ class StreamingIngestPipeline:
         self.min_quality = min_quality
         self._seen: DataFrame | None = None  # (_fp) store
         self._grid: DataFrame | None = None  # per-source sums
-        self._pin_ids: set[int] = set()
         self.batches_seen = 0
 
     def store_rows(self) -> int:
@@ -117,30 +117,12 @@ class StreamingIngestPipeline:
             F.sum("s._nred").cast("long").alias("n_redactions"),
             F.sum("s._nw").cast("long").alias("total_words"),
         )
-        merged_grid = (
-            delta_grid
-            if self._grid is None
-            else self._grid.unionByName(delta_grid)
-            .groupBy(self.source_col)
-            .agg(
-                F.sum("n_docs").cast("long").alias("n_docs"),
-                F.sum("n_redactions").cast("long").alias("n_redactions"),
-                F.sum("total_words").cast("long").alias("total_words"),
-            )
-        )
         merged_seen = batch_surv.select("_fp")
         if self._seen is not None:
             merged_seen = self._seen.unionByName(merged_seen)
-        grid, grid_ids = pin(merged_grid)
-        seen, seen_ids = pin(merged_seen)
-        old = self._pin_ids
-        self._grid, self._seen = grid, seen
-        self._pin_ids = grid_ids | seen_ids
-        release(self.spark, old)
-        return grid
-
-    def close(self) -> None:
-        release(self.spark, self._pin_ids)
-        self._pin_ids = set()
-        self._seen = None
-        self._grid = None
+        self._grid = self._pin(
+            merge_grid(self._grid, delta_grid, [self.source_col])
+        )
+        self._seen = self._pin(merged_seen)
+        self._commit()
+        return self._grid

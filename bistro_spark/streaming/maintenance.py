@@ -36,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bistro_spark.caching import pin, release
+from bistro_spark.caching import PinOwner
 from bistro_spark.operators.curation import group_lengths, next_fit
 from bistro_spark.session import local_frame
 
@@ -49,7 +49,7 @@ def _ts(us: int):
     return datetime(1970, 1, 1) + timedelta(microseconds=int(us))
 
 
-class StreamingCompactionMonitor:
+class StreamingCompactionMonitor(PinOwner):
     """Feed per-trigger manifest deltas to :meth:`process_batch` (rows:
     partition, file_id, bytes); each call returns the delta's merge-group
     assignments — same schema as batch ``compaction_plan`` — valid until
@@ -66,7 +66,7 @@ class StreamingCompactionMonitor:
         small_bytes: int | None = None,
         max_files_per_batch_partition: int = 50_000_000,
     ):
-        self.spark = spark
+        super().__init__(spark)
         self.partition_col = partition_col
         self.file_col = file_col
         self.bytes_col = bytes_col
@@ -77,7 +77,6 @@ class StreamingCompactionMonitor:
         self.max_files = max_files_per_batch_partition
         # partition -> [group_id, fill, n_files, n_small, bytes_total]
         self._state: dict[str, list[int]] = {}
-        self._trigger_ids: set[int] = set()
         self.batches_seen = 0
 
     # ------------------------------------------------------- recovery --
@@ -96,7 +95,7 @@ class StreamingCompactionMonitor:
         import pandas as pd
 
         self.batches_seen += 1
-        release(self.spark, self._trigger_ids)
+        self._begin()
         pcol, fcol, bcol = self.partition_col, self.file_col, self.bytes_col
         tgt, max_files = self.target, self.max_files
         # cursor only (the additive counters stay driver-side)
@@ -120,7 +119,9 @@ class StreamingCompactionMonitor:
             pdf["group_id"], pdf["group_offset"] = next_fit(lens, tgt, cursor)
             return pdf
 
-        out, out_ids = pin(src.groupBy(pcol).applyInPandas(fold, schema))
+        out = self._pin(
+            src.groupBy(pcol).applyInPandas(fold, schema), trigger=True
+        )
         # one row per touched partition: cursor advance + additive stats
         upd = (
             out.groupBy(pcol)
@@ -149,7 +150,6 @@ class StreamingCompactionMonitor:
                 st[3] + r["ns"],
                 st[4] + r["bt"],
             ]
-        self._trigger_ids = out_ids
         return out
 
     # -------------------------------------------------------- report --

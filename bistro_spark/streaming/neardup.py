@@ -33,14 +33,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bistro_spark.caching import pin, release
+from bistro_spark.caching import PinOwner
 from bistro_spark.operators.dedup import (
     _banded_sign_buckets_np,
     _pair_cosine_np,
 )
 
 
-class StreamingNeardupLinker:
+class StreamingNeardupLinker(PinOwner):
     """Feed micro-batches of (id, embedding) rows to
     :meth:`process_batch`; each call returns the qualifying
     (id_a, id_b, cos_sim) pairs involving at least one batch vector
@@ -55,15 +55,13 @@ class StreamingNeardupLinker:
         n_tables: int = 4,
         bits_per_table: int = 8,
     ):
-        self.spark = spark
+        super().__init__(spark)
         self.threshold = threshold
         self.id_col = id_col
         self.vec_col = vec_col
         self.n_tables = n_tables
         self.bits = bits_per_table
         self._store: DataFrame | None = None
-        self._pin_ids: set[int] = set()
-        self._trigger_ids: set[int] = set()  # delta blocks, freed next call
         self.batches_seen = 0
 
     def store_rows(self) -> int:
@@ -84,8 +82,8 @@ class StreamingNeardupLinker:
     def process_batch(self, batch_df: DataFrame) -> DataFrame:
         self.batches_seen += 1
         # previous trigger's delta blocks are consumable until now
-        release(self.spark, self._trigger_ids)
-        delta, delta_ids = pin(self._bucketize(batch_df))
+        self._begin()
+        delta = self._pin(self._bucketize(batch_df), trigger=True)
         l, r = delta.alias("l"), delta.alias("r")
         within = l.join(
             r,
@@ -134,19 +132,9 @@ class StreamingNeardupLinker:
             if self._store is None
             else self._store.unionByName(delta)
         )
-        store, store_ids = pin(merged)
-        old = self._pin_ids
-        self._store = store
-        self._pin_ids = store_ids
+        self._store = self._pin(merged)
         # the returned pairs still read `delta`'s checkpoint AND the
         # previous store (cross candidates + vector lookup) — keep both
         # pinned until the next trigger (consumed-within-trigger)
-        self._trigger_ids = delta_ids | old
+        self._commit(hold=True)
         return out
-
-    def close(self) -> None:
-        release(self.spark, self._pin_ids)
-        release(self.spark, self._trigger_ids)
-        self._pin_ids = set()
-        self._trigger_ids = set()
-        self._store = None

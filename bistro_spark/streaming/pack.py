@@ -40,7 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bistro_spark.caching import pin, release
+from bistro_spark.caching import PinOwner
 from bistro_spark.operators.curation import group_lengths, next_fit
 from bistro_spark.session import local_frame
 from bistro_spark.streaming.incremental import DriverSumGrid
@@ -64,7 +64,7 @@ def streaming_encode_gate(
     return wordpiece_encode(stream_df, vocab, id_col, text_col, keep=keep)
 
 
-class StreamingPacker:
+class StreamingPacker(PinOwner):
     """Feed micro-batches to :meth:`process_batch`; each call returns the
     batch's pack assignments (id, shard, pack_id, offset, len) — same
     schema as batch ``pack_sequences`` — valid until the next call
@@ -79,7 +79,7 @@ class StreamingPacker:
         len_col: str = "n_tok",
         max_rows_per_batch_shard: int = 50_000_000,
     ):
-        self.spark = spark
+        super().__init__(spark)
         self.capacity = capacity
         self.n_shards = n_shards
         self.id_col = id_col
@@ -88,7 +88,6 @@ class StreamingPacker:
         # shard -> (open pack_id, filled length of that pack); absent =
         # shard untouched (first doc opens pack 0 at offset 0)
         self._state: dict[int, tuple[int, int]] = {}
-        self._trigger_ids: set[int] = set()
         self.batches_seen = 0
 
     def state_snapshot(self) -> dict[int, tuple[int, int]]:
@@ -108,7 +107,7 @@ class StreamingPacker:
         import pandas as pd
 
         self.batches_seen += 1
-        release(self.spark, self._trigger_ids)
+        self._begin()
         id_col, capacity, max_rows = self.id_col, self.capacity, self.max_rows
         carry = dict(self._state)  # ships via closure: n_shards-sized
 
@@ -128,7 +127,9 @@ class StreamingPacker:
             pdf["pack_id"], pdf["offset"] = next_fit(lens, capacity, cursor)
             return pdf[[id_col, "shard", "pack_id", "offset", "len"]]
 
-        out, out_ids = pin(src.groupBy("shard").applyInPandas(pack, schema))
+        out = self._pin(
+            src.groupBy("shard").applyInPandas(pack, schema), trigger=True
+        )
         # advance each shard's cursor to its max-id row — n_shards rows
         upd = (
             out.groupBy("shard")
@@ -145,11 +146,10 @@ class StreamingPacker:
         )
         for r in upd:
             self._state[r["shard"]] = (r["c"]["pack_id"], r["c"]["end"])
-        self._trigger_ids = out_ids
         return out
 
 
-class StreamingBinidxWriter:
+class StreamingBinidxWriter(PinOwner):
     """Streaming twin of ``operators/curation.binidx_manifest``: the
     ``.bin``/``.idx`` layout assigned live, so an ingest loop can append
     serialized tokens to shard files as documents arrive instead of
@@ -179,14 +179,13 @@ class StreamingBinidxWriter:
         id_col: str = "doc_id",
         len_col: str = "n_tok",
     ):
-        self.spark = spark
+        super().__init__(spark)
         self.n_shards = int(n_shards)
         self.bpt = int(bytes_per_token)
         self.id_col = id_col
         self.len_col = len_col
         # shard -> [next_index, next_offset]
         self._state: dict[int, list[int]] = {}
-        self._trigger_ids: set[int] = set()
         self.batches_seen = 0
 
     # ------------------------------------------------------- recovery --
@@ -200,10 +199,8 @@ class StreamingBinidxWriter:
     def process_batch(self, batch_df: DataFrame) -> DataFrame:
         from pyspark.sql import Window
 
-        from bistro_spark.caching import pin, release
-
         self.batches_seen += 1
-        release(self.spark, self._trigger_ids)
+        self._begin()
         base = batch_df.select(
             self.id_col,
             F.expr(f"{self.id_col} % {self.n_shards}")
@@ -234,7 +231,7 @@ class StreamingBinidxWriter:
         cursors = local_frame(
             self.spark, cur_rows, "shard long, _cidx long, _coff long"
         )
-        out, out_ids = pin(
+        out = self._pin(
             delta.join(F.broadcast(cursors), "shard", "left")
             .select(
                 self.id_col,
@@ -247,7 +244,8 @@ class StreamingBinidxWriter:
                 (F.col("_doff") + F.coalesce("_coff", F.lit(0)))
                 .cast("long")
                 .alias("byte_offset"),
-            )
+            ),
+            trigger=True,
         )
         upd = (
             out.groupBy("shard")
@@ -267,7 +265,6 @@ class StreamingBinidxWriter:
                 int(r["m"]["seq_index"]) + 1,
                 int(r["m"]["e"]),
             ]
-        self._trigger_ids = out_ids
         return out
 
 
@@ -292,7 +289,7 @@ def streaming_fim_gate(
     )
 
 
-class StreamingConcatChunker:
+class StreamingConcatChunker(PinOwner):
     """Streaming twin of ``trainprep.concat_chunks``: the GPT-style
     concat-and-cut chunk layout assigned live as documents arrive.
 
@@ -323,14 +320,13 @@ class StreamingConcatChunker:
         id_col: str = "doc_id",
         len_col: str = "n_tok",
     ):
-        self.spark = spark
+        super().__init__(spark)
         self.capacity = int(capacity)
         self.n_shards = int(n_shards)
         self.sep = int(sep_tokens)
         self.id_col = id_col
         self.len_col = len_col
         self._state: dict[int, int] = {}  # shard -> next token offset
-        self._trigger_ids: set[int] = set()
         self.batches_seen = 0
 
     # ------------------------------------------------------- recovery --
@@ -348,7 +344,7 @@ class StreamingConcatChunker:
         from pyspark.sql import Window
 
         self.batches_seen += 1
-        release(self.spark, self._trigger_ids)
+        self._begin()
         cap = self.capacity
         base = batch_df.select(
             self.id_col,
@@ -387,7 +383,7 @@ class StreamingConcatChunker:
         c0 = F.col("chunk_id") * cap
         lo = F.greatest(F.col("_start"), c0)
         hi = F.least(F.col("_start") + F.col("_span"), c0 + cap)
-        out, out_ids = pin(
+        out = self._pin(
             ex.select(
                 "shard",
                 F.col("chunk_id").cast("long").alias("chunk_id"),
@@ -399,7 +395,8 @@ class StreamingConcatChunker:
                     F.expr(f"(_start + _span - 1) DIV {cap}")
                     == F.col("chunk_id")
                 ).alias("has_eod"),
-            )
+            ),
+            trigger=True,
         )
         # each (doc, chunk) row carries the doc's tokens landing in that
         # chunk, so per-shard sum(n_tok) over the pinned output equals
@@ -412,11 +409,10 @@ class StreamingConcatChunker:
         for r in upd:
             s = int(r["shard"])
             self._state[s] = self._state.get(s, 0) + int(r["mass"])
-        self._trigger_ids = out_ids
         return out
 
 
-class StreamingChunkReadPlanner:
+class StreamingChunkReadPlanner(PinOwner):
     """Streaming twin of ``trainprep.chunk_read_plan``: the loader's
     per-chunk I/O entries emitted LIVE as documents arrive — the read
     side of the live tokenize→pack→export chain
@@ -454,7 +450,7 @@ class StreamingChunkReadPlanner:
         id_col: str = "doc_id",
         len_col: str = "n_tok",
     ):
-        self.spark = spark
+        super().__init__(spark)
         self.capacity = int(capacity)
         self.n_shards = int(n_shards)
         self.sep = int(sep_tokens)
@@ -463,7 +459,6 @@ class StreamingChunkReadPlanner:
         self.len_col = len_col
         # shard -> [next token offset (incl. EOD), next byte offset]
         self._state: dict[int, list[int]] = {}
-        self._trigger_ids: set[int] = set()
         self.batches_seen = 0
 
     # ------------------------------------------------------- recovery --
@@ -481,7 +476,7 @@ class StreamingChunkReadPlanner:
         from pyspark.sql import Window
 
         self.batches_seen += 1
-        release(self.spark, self._trigger_ids)
+        self._begin()
         cap, bpt = self.capacity, self.bpt
         base = batch_df.select(
             self.id_col,
@@ -538,14 +533,15 @@ class StreamingChunkReadPlanner:
             "_start"
         )
         nb = (F.least(send, F.col("_n")) - sid) * bpt
-        out, out_ids = pin(
+        out = self._pin(
             ex.select(
                 "shard",
                 F.col("chunk_id").cast("long").alias("chunk_id"),
                 self.id_col,
                 (F.col("_boff") + sid * bpt).cast("long").alias("off"),
                 nb.cast("long").alias("nb"),
-            ).filter(F.col("nb") > 0)
+            ).filter(F.col("nb") > 0),
+            trigger=True,
         )
         # cursor update: delta-bounded shard aggregate over the cheap
         # base projection (the emitted reads exclude EOD spans, so the
@@ -565,7 +561,6 @@ class StreamingChunkReadPlanner:
                 cur[0] + int(r["tmass"]),
                 cur[1] + int(r["bmass"]),
             ]
-        self._trigger_ids = out_ids
         return out
 
 
@@ -674,6 +669,10 @@ class StreamingSftPackMonitor(DriverSumGrid):
             )
         )
         return len(self.add(cells))
+
+    def close(self) -> None:
+        """Free the packer's pinned output (idempotent)."""
+        self.packer.close()
 
     # --------------------------------------------------------- report --
     def report(self) -> DataFrame:

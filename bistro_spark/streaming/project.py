@@ -24,8 +24,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
+from bistro_spark.caching import PinOwner
 
-class StreamingProjector:
+
+class StreamingProjector(PinOwner):
     def __init__(
         self,
         spark: SparkSession,
@@ -33,7 +35,7 @@ class StreamingProjector:
         order_col: str = "batch_ofs",
         link_name: str = "dim_id",
     ):
-        self.spark = spark
+        super().__init__(spark)
         self.keys = keys
         self.order_col = order_col
         self.link_name = link_name
@@ -41,7 +43,6 @@ class StreamingProjector:
         self._n = 0  # dim cardinality, tracked driver-side (no per-batch
         # count() over the whole dim — only the small per-batch delta is
         # ever counted)
-        self._pin_ids: set[int] = set()  # blocks owned by the current dim
 
     def dim(self) -> DataFrame:
         if self._dim is None:
@@ -71,19 +72,16 @@ class StreamingProjector:
             if self._dim is None
             else self._dim.unionByName(appended)
         )
-        from bistro_spark.caching import pin, release
-
         # the new dim pin reads the old one (union) — pin eagerly first,
         # then free last batch's blocks so a long stream holds exactly one
         # dim checkpoint, not one per micro-batch. The PREVIOUS batch's
         # returned join is invalid after this (consumed within its trigger
         # under foreachBatch, which is the contract here).
-        old_ids = self._pin_ids
-        self._dim, self._pin_ids = pin(dim)
+        self._dim = self._pin(dim)
         # delta-sized count (the checkpoint materialized the rows already);
         # `appended` still reads the OLD dim, so release only after it
         self._n = base + appended.count()
-        release(self.spark, old_ids)
+        self._commit()
         return batch_df.join(
             F.broadcast(self._dim.select(*self.keys, self.link_name)),
             self.keys,
@@ -115,7 +113,7 @@ def streaming_exact_dedup(
 # ----------------------------------------- cross-batch span-dedup store ----
 
 
-class StreamingSpanDeduper:
+class StreamingSpanDeduper(PinOwner):
     """Streaming twin of ``operators.dedup.incremental_span_dedup`` — the
     incremental-crawl flow as a foreachBatch stage: every micro-batch's
     documents are scored against the span-hash store accumulated from all
@@ -145,13 +143,12 @@ class StreamingSpanDeduper:
     ):
         from fractions import Fraction
 
-        self.spark = spark
+        super().__init__(spark)
         self.size = size
         self.id_col = id_col
         self.text_col = text_col
         self._frac = Fraction(threshold).limit_denominator(10**6)
         self._store: DataFrame | None = None  # distinct span hashes
-        self._pin_ids: set[int] = set()  # blocks owned by store + last stats
 
     def store_size(self) -> int:
         return 0 if self._store is None else self._store.count()
@@ -162,7 +159,6 @@ class StreamingSpanDeduper:
         The returned stats (and any join against them) are valid until the
         NEXT ``process_batch`` call — their pinned blocks are recycled then
         (consumed-within-trigger, the foreachBatch contract)."""
-        from bistro_spark.caching import pin, release
         from bistro_spark.operators.curation import chunk_spans
 
         spans = chunk_spans(
@@ -197,7 +193,7 @@ class StreamingSpanDeduper:
             )
         )
         # score once: read out AND store
-        stats, stats_ids = pin(stats)
+        stats = self._pin(stats)
         survivors = stats.filter(F.col("is_dup") == 0).select(self.id_col)
         surv_spans = (
             spans.join(survivors, self.id_col, "left_semi")
@@ -209,9 +205,7 @@ class StreamingSpanDeduper:
             if self._store is None
             else self._store.unionByName(surv_spans).distinct()
         )
-        old_ids = self._pin_ids
-        self._store, store_ids = pin(new_store)
+        self._store = self._pin(new_store)
         # previous batch's store AND stats blocks have no consumers left
-        release(self.spark, old_ids)
-        self._pin_ids = store_ids | stats_ids
+        self._commit()
         return stats

@@ -36,17 +36,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bistro_spark.caching import pin, pinned_ids, release, release_new_pins
+from bistro_spark.caching import PinOwner
 from bistro_spark.streaming.incremental import AggSpec, IncrementalRunner
 
 
-class _PoolSelector:
+class _PoolSelector(PinOwner):
     """Shared pool-union-reselect loop; subclasses supply the batch op."""
 
     def __init__(self, spark: SparkSession):
-        self.spark = spark
+        super().__init__(spark)
         self._pool: DataFrame | None = None  # retained winners, input cols
-        self._pin_ids: set[int] = set()
         self.batches_seen = 0
 
     def _select(self, candidates: DataFrame) -> DataFrame:
@@ -71,20 +70,14 @@ class _PoolSelector:
             if self._pool is None
             else self._pool.unionByName(batch_df)
         )
-        before = pinned_ids(self.spark)
-        out, out_ids = pin(self._select(cands))
-        old_ids = self._pin_ids
-        self._pool = out.drop(*self._derived_cols())
-        # the pool view shares `out`'s blocks — no second checkpoint needed
-        self._pin_ids = out_ids
-        release(self.spark, old_ids)
-        # free any pins the batch op created internally (e.g. the skyline
-        # level set): `out` is checkpointed, so they have no consumer
-        # left. release_new_pins honors the _KEEP exemption — a raw
-        # set-difference release() would irrecoverably free keep-pinned
-        # shared caches created inside _select (released localCheckpoints
-        # cannot be recomputed).
-        release_new_pins(self.spark, before, exclude=out_ids)
+        # the sweep frees any pins the batch op created internally (e.g.
+        # the skyline level set): `out` is checkpointed, so they have no
+        # consumer left
+        with self._sweep():
+            out = self._pin(self._select(cands))
+            # the pool view shares `out`'s blocks — no second checkpoint
+            self._pool = out.drop(*self._derived_cols())
+            self._commit()
         return out
 
 

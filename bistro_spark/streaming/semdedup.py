@@ -36,11 +36,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bistro_spark.caching import pin, release
+from bistro_spark.caching import PinOwner
 from bistro_spark.operators.similarity import _semdedup_centroids
 
 
-class StreamingSemDedup:
+class StreamingSemDedup(PinOwner):
     """Feed micro-batches of (id, embedding) rows to
     :meth:`process_batch`; each call returns (id, cluster, is_dup) for
     the batch rows (valid until the next call — consumed-within-trigger,
@@ -55,15 +55,13 @@ class StreamingSemDedup:
         threshold: float = 0.99,
         dim: int = 64,
     ):
-        self.spark = spark
+        super().__init__(spark)
         self.id_col = id_col
         self.vec_col = vec_col
         self.n_clusters = n_clusters
         self.threshold = threshold
         self.dim = dim
         self._store: DataFrame | None = None  # (id, vec, cluster)
-        self._pin_ids: set[int] = set()
-        self._trigger_ids: set[int] = set()
         self.batches_seen = 0
 
     def store_rows(self) -> int:
@@ -105,8 +103,8 @@ class StreamingSemDedup:
         import pandas as pd
 
         self.batches_seen += 1
-        release(self.spark, self._trigger_ids)
-        delta, delta_ids = pin(self._assign(batch_df))
+        self._begin()
+        delta = self._pin(self._assign(batch_df), trigger=True)
         flagged = delta.withColumn("_new", F.lit(True))
         if self._store is not None:
             # cluster-pruned: only store rows in clusters the delta
@@ -152,18 +150,8 @@ class StreamingSemDedup:
             if self._store is None
             else self._store.unionByName(delta)
         )
-        store, store_ids = pin(merged)
-        old = self._pin_ids
-        self._store = store
-        self._pin_ids = store_ids
+        self._store = self._pin(merged)
         # `out` still reads delta's checkpoint and the previous store —
         # both stay pinned until the next trigger
-        self._trigger_ids = delta_ids | old
+        self._commit(hold=True)
         return out
-
-    def close(self) -> None:
-        release(self.spark, self._pin_ids)
-        release(self.spark, self._trigger_ids)
-        self._pin_ids = set()
-        self._trigger_ids = set()
-        self._store = None

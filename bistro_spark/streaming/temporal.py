@@ -33,13 +33,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
-from bistro_spark.caching import pin, release
+from bistro_spark.caching import PinOwner
 from bistro_spark.session import local_frame
+from bistro_spark.streaming.incremental import merge_grid
 
 _SUMT = "decimal(30,6)"
 
 
-class StreamingTransitionCounter:
+class StreamingTransitionCounter(PinOwner):
     """Per-trigger first-order Markov transition report of the stream
     seen so far — the streaming twin of
     :func:`operators.temporal.transition_matrix`.
@@ -59,14 +60,13 @@ class StreamingTransitionCounter:
         id_col: str = "event_id",
         type_col: str = "event_type",
     ):
-        self.spark = spark
+        super().__init__(spark)
         self.key_col = key_col
         self.ts_col = ts_col
         self.id_col = id_col
         self.type_col = type_col
         self._grid: DataFrame | None = None
         self._last: DataFrame | None = None
-        self._pin_ids: set[int] = set()
         self.batches_seen = 0
 
     def state_rows(self) -> int:
@@ -117,13 +117,7 @@ class StreamingTransitionCounter:
             .groupBy("from_type", "to_type")
             .agg(F.count(F.lit(1)).cast("long").alias("n_transitions"))
         )
-        merged = (
-            new_pairs
-            if self._grid is None
-            else self._grid.unionByName(new_pairs)
-            .groupBy("from_type", "to_type")
-            .agg(F.sum("n_transitions").cast("long").alias("n_transitions"))
-        )
+        merged = merge_grid(self._grid, new_pairs, ["from_type", "to_type"])
         # next lag seed: per-key latest event (max-struct partial agg —
         # no window; the lag window above is the only key shuffle)
         last = (
@@ -136,21 +130,13 @@ class StreamingTransitionCounter:
                 F.col(f"_p.{y}").alias(y),
             )
         )
-        old = self._pin_ids
-        self._grid, g_ids = pin(merged)
-        self._last, l_ids = pin(last)
-        self._pin_ids = g_ids | l_ids
-        release(self.spark, old)
+        self._grid = self._pin(merged)
+        self._last = self._pin(last)
+        self._commit()
         return self._report()
 
-    def close(self) -> None:
-        release(self.spark, self._pin_ids)
-        self._pin_ids = set()
-        self._grid = None
-        self._last = None
 
-
-class StreamingSessionizer:
+class StreamingSessionizer(PinOwner):
     """Exactly-once sessionization — the streaming twin of
     :func:`operators.temporal.sessionize` (same gaps-and-islands
     semantics, same output schema and per-key 1-based session_idx).
@@ -186,7 +172,7 @@ class StreamingSessionizer:
         val_col: str = "value",
         watermark_s: float | None = None,
     ):
-        self.spark = spark
+        super().__init__(spark)
         self.gap_us = int(round(gap_s * 1_000_000))
         self.key_col = key_col
         self.ts_col = ts_col
@@ -195,7 +181,6 @@ class StreamingSessionizer:
         self.watermark_s = watermark_s
         self._open: DataFrame | None = None
         self._max_ts_us: int | None = None
-        self._pin_ids: set[int] = set()
         self.batches_seen = 0
 
     # ---- helpers ---------------------------------------------------
@@ -370,13 +355,11 @@ class StreamingSessionizer:
             wm_closed = open_cand.limit(0)
             still_open = open_cand
 
-        out, out_ids = pin(
+        out = self._pin(
             self._emit(closed_by_succ.unionByName(closed_in_batch).unionByName(wm_closed))
         )
-        old = self._pin_ids
-        self._open, open_ids = pin(still_open)
-        self._pin_ids = open_ids | out_ids
-        release(self.spark, old)
+        self._open = self._pin(still_open)
+        self._commit()
         return out
 
     def flush(self) -> DataFrame:
@@ -392,11 +375,6 @@ class StreamingSessionizer:
                 )
             )
         return self._emit(self._open)
-
-    def close(self) -> None:
-        release(self.spark, self._pin_ids)
-        self._pin_ids = set()
-        self._open = None
 
 
 def _first_merges(j: DataFrame, gap_us: int):
@@ -418,7 +396,7 @@ def _first_merges(j: DataFrame, gap_us: int):
     return F.max(first_merge).over(_W.partitionBy(j.columns[0])) == 1
 
 
-class StreamingZScorer:
+class StreamingZScorer(PinOwner):
     """Exactly-once per-event anomaly scoring — the streaming twin of
     :func:`operators.temporal.expanding_zscore`. The batch op is
     prior-EXCLUSIVE by design, which makes it perfectly incremental: an
@@ -444,14 +422,13 @@ class StreamingZScorer:
         val_col: str = "value",
         min_prev: int = 2,
     ):
-        self.spark = spark
+        super().__init__(spark)
         self.key_col = key_col
         self.ts_col = ts_col
         self.id_col = id_col
         self.val_col = val_col
         self.min_prev = min_prev
         self._stats: DataFrame | None = None  # (key, _n0, _sx0, _sxx0)
-        self._pin_ids: set[int] = set()
         self.batches_seen = 0
 
     def state_rows(self) -> int:
@@ -504,7 +481,7 @@ class StreamingZScorer:
             - F.col("_sx").cast("double") * F.col("_sx").cast("double") / n
         ) / n
         z = (F.col(v) - mean) / F.sqrt(var)
-        out, out_ids = pin(
+        out = self._pin(
             seeded.select(
                 i,
                 k,
@@ -540,19 +517,12 @@ class StreamingZScorer:
                 + F.coalesce(F.col("_dsxx"), F.lit(0).cast("decimal(38,12)"))
             ).cast("decimal(38,12)").alias("_sxx0"),
         )
-        old = self._pin_ids
-        self._stats, st_ids = pin(merged)
-        self._pin_ids = st_ids | out_ids
-        release(self.spark, old)
+        self._stats = self._pin(merged)
+        self._commit()
         return out
 
-    def close(self) -> None:
-        release(self.spark, self._pin_ids)
-        self._pin_ids = set()
-        self._stats = None
 
-
-class StreamingCohortTracker:
+class StreamingCohortTracker(PinOwner):
     """Per-trigger cohort-retention triangle of the stream seen so far —
     the streaming twin of :func:`operators.temporal.cohort_retention`.
 
@@ -582,13 +552,12 @@ class StreamingCohortTracker:
         key_col: str = "user_id",
         ts_col: str = "ts",
     ):
-        self.spark = spark
+        super().__init__(spark)
         self.key_col = key_col
         self.ts_col = ts_col
         self._cohorts: DataFrame | None = None
         self._seen: DataFrame | None = None
         self._grid: DataFrame | None = None
-        self._pin_ids: set[int] = set()
         self.batches_seen = 0
 
     def state_rows(self) -> int:
@@ -633,24 +602,16 @@ class StreamingCohortTracker:
             )
             .agg(F.count(F.lit(1)).cast("long").alias("n_active"))
         )
-        grid = (
-            bump
-            if self._grid is None
-            else self._grid.unionByName(bump)
-            .groupBy("cohort_week", "week_index")
-            .agg(F.sum("n_active").cast("long").alias("n_active"))
-        )
+        grid = merge_grid(self._grid, bump, ["cohort_week", "week_index"])
         seen = (
             new_pairs
             if self._seen is None
             else self._seen.unionByName(new_pairs)
         )
-        old = self._pin_ids
-        self._cohorts, c_ids = pin(cohorts)
-        self._seen, s_ids = pin(seen)
-        self._grid, g_ids = pin(grid)
-        self._pin_ids = c_ids | s_ids | g_ids
-        release(self.spark, old)
+        self._cohorts = self._pin(cohorts)
+        self._seen = self._pin(seen)
+        self._grid = self._pin(grid)
+        self._commit()
         return self.report()
 
     def report(self) -> DataFrame:
@@ -673,10 +634,3 @@ class StreamingCohortTracker:
                 "retention"
             ),
         )
-
-    def close(self) -> None:
-        release(self.spark, self._pin_ids)
-        self._pin_ids = set()
-        self._cohorts = None
-        self._seen = None
-        self._grid = None

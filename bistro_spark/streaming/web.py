@@ -36,8 +36,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bistro_spark.caching import pin, release
+from bistro_spark.caching import PinOwner
 from bistro_spark.operators.web import with_normalized_urls
+from bistro_spark.streaming.incremental import merge_grid
 
 
 def streaming_url_gate(
@@ -50,19 +51,17 @@ def streaming_url_gate(
     return with_normalized_urls(stream_df, url_col=url_col, id_col=id_col)
 
 
-class StreamingDomainStats:
+class StreamingDomainStats(PinOwner):
     """Feed micro-batches of documents to :meth:`process_batch`; each
     call merges the delta and returns the CURRENT full-history
     (domain, n_pages, n_docs, dup_ratio) grid (valid until the next
     call — consumed-within-trigger, as foreachBatch does)."""
 
     def __init__(self, spark: SparkSession, id_col: str = "doc_id"):
-        self.spark = spark
+        super().__init__(spark)
         self.id_col = id_col
         self._seen: DataFrame | None = None  # (url_norm) membership
         self._grid: DataFrame | None = None  # (domain, n_pages, n_docs)
-        self._pin_ids: set[int] = set()
-        self._trigger_ids: set[int] = set()
         self.batches_seen = 0
 
     def grid_rows(self) -> int:
@@ -70,14 +69,15 @@ class StreamingDomainStats:
 
     def process_batch(self, batch_df: DataFrame) -> DataFrame:
         self.batches_seen += 1
-        release(self.spark, self._trigger_ids)
+        self._begin()
         norm = streaming_url_gate(batch_df, id_col=self.id_col)
         # delta-bounded: one partial agg collapses the batch to its URL
         # grid before any state is touched
-        delta_urls, delta_ids = pin(
+        delta_urls = self._pin(
             norm.groupBy("url_norm", "domain").agg(
                 F.count(F.lit(1)).alias("_n")
-            )
+            ),
+            trigger=True,
         )
         if self._seen is None:
             new_urls = delta_urls
@@ -96,42 +96,21 @@ class StreamingDomainStats:
             F.coalesce("n_pages", F.lit(0)).cast("long").alias("n_pages"),
             F.coalesce("n_docs", F.lit(0)).cast("long").alias("n_docs"),
         )
-        merged_grid = (
-            delta_grid
-            if self._grid is None
-            else self._grid.unionByName(delta_grid)
-            .groupBy("domain")
-            .agg(
-                F.sum("n_pages").cast("long").alias("n_pages"),
-                F.sum("n_docs").cast("long").alias("n_docs"),
-            )
-        )
+        merged_grid = merge_grid(self._grid, delta_grid, ["domain"])
         merged_seen = (
             new_urls.select("url_norm")
             if self._seen is None
             else self._seen.unionByName(new_urls.select("url_norm"))
         )
-        old = self._pin_ids
-        grid, grid_ids = pin(merged_grid)
-        seen, seen_ids = pin(merged_seen)
-        self._grid, self._seen = grid, seen
-        self._pin_ids = grid_ids | seen_ids
+        self._grid = self._pin(merged_grid)
+        self._seen = self._pin(merged_seen)
         # the old stores fed the merges above (already materialized by the
         # eager pins); the delta checkpoint is free once the caller is done
         # with this trigger's returned grid
-        release(self.spark, old)
-        self._trigger_ids = delta_ids
-        return grid.select(
+        self._commit()
+        return self._grid.select(
             "domain",
             "n_pages",
             "n_docs",
             F.round(F.col("n_docs") / F.col("n_pages"), 6).alias("dup_ratio"),
         )
-
-    def close(self) -> None:
-        release(self.spark, self._pin_ids)
-        release(self.spark, self._trigger_ids)
-        self._pin_ids = set()
-        self._trigger_ids = set()
-        self._seen = None
-        self._grid = None

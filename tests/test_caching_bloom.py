@@ -95,7 +95,7 @@ def test_streaming_state_pins_bounded_over_batches(spark):
         runner.add_batch(batch)
         sizes.append(len(pinned_ids(spark) - base))
     assert max(sizes) == sizes[0]  # steady per-batch pin count, no growth
-    release(spark, runner._pin_ids)
+    runner.close()
 
 
 # ----------------------------------------------------------- bloom filter --

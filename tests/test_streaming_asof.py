@@ -8,7 +8,7 @@ from datetime import datetime
 
 from pyspark.sql import functions as F
 
-from bistro_spark.caching import pinned_ids, release
+from bistro_spark.caching import pinned_ids
 from bistro_spark.operators.temporal import link_asof
 from bistro_spark.streaming.asof import StreamingAsofLinker
 
@@ -52,7 +52,7 @@ def test_streaming_asof_full_history_parity_within_watermark(spark):
             for r in link_asof(ld, rights_seen, on="k").collect()
         )
         assert got == want
-    release(spark, linker._pin_ids)
+    linker.close()
 
 
 def test_streaming_asof_state_bounded_by_watermark(spark):
@@ -71,7 +71,7 @@ def test_streaming_asof_state_bounded_by_watermark(spark):
     assert linker.state_size() == 1
     # and that surviving row is the per-key LATEST, so as-of still exact
     assert out.collect()[0]["asof_value"] == 9.0
-    release(spark, linker._pin_ids)
+    linker.close()
 
 
 def test_streaming_asof_out_of_order_left_within_watermark_exact(spark):
@@ -90,7 +90,7 @@ def test_streaming_asof_out_of_order_left_within_watermark_exact(spark):
         _mk_right(spark, []),
     )
     assert out.collect()[0]["asof_value"] == 10.0
-    release(spark, linker._pin_ids)
+    linker.close()
 
 
 def test_streaming_asof_one_state_checkpoint_alive(spark):
@@ -106,5 +106,5 @@ def test_streaming_asof_one_state_checkpoint_alive(spark):
         )
         sizes.append(len(pinned_ids(spark) - base))
     assert max(sizes) == sizes[0]
-    release(spark, linker._pin_ids)
+    linker.close()
     assert pinned_ids(spark) - base == set()

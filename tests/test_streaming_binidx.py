@@ -88,5 +88,5 @@ def test_state_and_pin_bounds(spark):
     assert set(snap) <= {0, 1, 2, 3}
     assert all(len(v) == 2 for v in snap.values())
     extra = pinned_ids(spark) - before
-    assert extra == wr._trigger_ids and len(extra) <= 2
+    assert extra == wr.owned_ids and len(extra) <= 2
     release(spark, extra)

@@ -79,7 +79,7 @@ def test_streaming_cardinality_state_bound_and_pin_lifecycle(spark):
     for b in batches:
         mon.process_batch(b).count()
         assert mon.state_rows() <= n_groups
-        assert len(set(pinned_ids(spark)) - before) == len(mon._pin_ids)
+        assert len(set(pinned_ids(spark)) - before) == len(mon.owned_ids)
     assert mon.batches_seen == 4
     mon.close()
     assert set(pinned_ids(spark)) - before == set()

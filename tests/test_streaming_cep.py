@@ -8,7 +8,7 @@ from datetime import datetime, timedelta
 
 from pyspark.sql import functions as F
 
-from bistro_spark.caching import pinned_ids, release
+from bistro_spark.caching import pinned_ids
 from bistro_spark.operators.temporal import cep_followed_by
 from bistro_spark.streaming.cep import StreamingCepMatcher
 
@@ -26,7 +26,7 @@ def _collect_stream(spark, batches, **kw):
     for b in batches:
         got += [tuple(r) for r in matcher.process_batch(b).collect()]
     got += [tuple(r) for r in matcher.flush().collect()]
-    release(spark, matcher._pin_ids)
+    matcher.close()
     return sorted(got), matcher
 
 
@@ -60,7 +60,7 @@ def test_cep_stream_exactly_once_no_reemission(spark):
     for b in (b1, b2, b3):
         seen.append([r["a_id"] for r in matcher.process_batch(b).collect()])
     tail = [r["a_id"] for r in matcher.flush().collect()]
-    release(spark, matcher._pin_ids)
+    matcher.close()
     # a=1 finalizes once its 10-min horizon closes (trigger 2's watermark
     # at minute 39); a=3 has no purchase within 10 min -> never emitted
     assert seen == [[], [1], []] and tail == []
@@ -87,7 +87,7 @@ def test_cep_stream_out_of_order_B_still_exact(spark):
             for r in matcher.process_batch(b).collect()
         ]
     out += [(r["a_id"], r["b_id"]) for r in matcher.flush().collect()]
-    release(spark, matcher._pin_ids)
+    matcher.close()
     assert out == [(1, 3), (9, None)] or out == [(1, 3)]
 
 
@@ -99,7 +99,7 @@ def test_cep_stream_unmatched_emission_and_flush(spark):
     )
     assert matcher.process_batch(b1).count() == 0  # horizon still open
     got = matcher.flush().collect()
-    release(spark, matcher._pin_ids)
+    matcher.close()
     assert len(got) == 1
     assert got[0]["a_id"] == 1 and got[0]["b_id"] is None
 
@@ -126,5 +126,5 @@ def test_cep_stream_state_bounded_and_pins_recycled(spark):
     # old A's horizons have closed and old B's fell below the watermark
     assert matcher.pending_size() <= 2
     assert matcher.bpool_size() <= 2
-    release(spark, matcher._pin_ids)
+    matcher.close()
     assert pinned_ids(spark) - base == set()

@@ -88,7 +88,7 @@ def test_streaming_ingest_state_and_pin_lifecycle(spark):
     before = set(pinned_ids(spark))
     for i in range(2):
         pipe.process_batch(docs.filter(f"doc_id % 2 = {i}")).count()
-        assert len(set(pinned_ids(spark)) - before) == len(pipe._pin_ids)
+        assert len(set(pinned_ids(spark)) - before) == len(pipe.owned_ids)
     # the store holds one fingerprint per retained distinct text
     assert pipe.store_rows() == sum(
         r["n_docs"] for r in pipe._grid.collect()

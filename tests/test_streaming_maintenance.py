@@ -120,7 +120,7 @@ def test_state_and_pin_bounds(spark):
     assert all(len(v) == 5 for v in snap.values())
     # pins: only the live trigger's output stays pinned
     extra = pinned_ids(spark) - before
-    assert extra == mon._trigger_ids and len(extra) <= 2
+    assert extra == mon.owned_ids and len(extra) <= 2
     from bistro_spark.caching import release
 
     release(spark, extra)

@@ -62,8 +62,6 @@ def test_streaming_neardup_state_and_pin_lifecycle(spark):
     # store holds n_tables rows per retained vector
     assert linker.store_rows() == 4 * n_total
     # pinned: current store + the last trigger's consumables, nothing else
-    assert set(pinned_ids(spark)) - before == (
-        linker._pin_ids | linker._trigger_ids
-    )
+    assert set(pinned_ids(spark)) - before == linker.owned_ids
     linker.close()
     assert set(pinned_ids(spark)) - before == set()

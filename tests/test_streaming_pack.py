@@ -148,9 +148,7 @@ def test_streaming_packer_state_and_pin_bounds(spark):
         assert len(packer.state_snapshot()) <= 4
         sizes.append(len(set(pinned_ids(spark)) - before))
     assert max(sizes) <= max(sizes[0], sizes[1])  # no per-trigger growth
-    from bistro_spark.caching import release
-
-    release(spark, packer._trigger_ids)
+    packer.close()
     assert set(pinned_ids(spark)) - before == set()
 
 

@@ -5,7 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from bistro_spark.caching import pinned_ids, release
+from bistro_spark.caching import pinned_ids
 from bistro_spark.streaming.select import (
     StreamingQuotaSelector,
     StreamingTokenBudgetSelector,
@@ -113,7 +113,7 @@ def test_streaming_selectors_state_pins_bounded(spark):
         sel.process_batch(b).count()
         sizes.append(len(pinned_ids(spark) - base))
     assert max(sizes) == sizes[0]
-    release(spark, sel._pin_ids)
+    sel.close()
     assert pinned_ids(spark) - base == set()
 
 
@@ -177,8 +177,8 @@ def test_streaming_skyline_releases_previous_pool_pins(spark):
         )
         sel.process_batch(bdf).collect()
     leaked = set(pinned_ids(spark)) - before
-    assert len(leaked) == len(sel._pin_ids)
-    release(spark, sel._pin_ids)
+    assert len(leaked) == len(sel.owned_ids)
+    sel.close()
     assert set(pinned_ids(spark)) - before == set()
 
 
@@ -217,6 +217,6 @@ def test_streaming_calibration_exact_full_history_parity(spark):
         seen.select("source", "n_chars").distinct().count()
     )
     assert mon.state_rows() == n_levels
-    assert len(set(pinned_ids(spark)) - before) == len(mon._pin_ids)
+    assert len(set(pinned_ids(spark)) - before) == len(mon.owned_ids)
     mon.close()
     assert set(pinned_ids(spark)) - before == set()

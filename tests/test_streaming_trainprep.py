@@ -142,9 +142,7 @@ def test_streaming_chunker_state_and_pin_bounds(spark):
     ).collect()[0]["s"]
     assert sum(ch._state.values()) == total
     # pins: only the last trigger's output may remain pinned
-    from bistro_spark.caching import release
-
-    release(spark, ch._trigger_ids)
+    ch.close()
     assert pinned_ids(spark) - before == set()
 
 

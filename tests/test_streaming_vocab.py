@@ -58,7 +58,7 @@ def test_streaming_vocab_state_bound_and_pins(spark):
     before = set(pinned_ids(spark))
     for b in batches:
         mon.process_batch(b).count()
-        assert len(set(pinned_ids(spark)) - before) == len(mon._pin_ids)
+        assert len(set(pinned_ids(spark)) - before) == len(mon.owned_ids)
     assert mon.state_rows() == vocab_rows
     mon.close()
     assert set(pinned_ids(spark)) - before == set()

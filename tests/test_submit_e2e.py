@@ -13,15 +13,18 @@ import json
 import os
 import subprocess
 import sys
+import zipfile
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_spark_submit_stream_pipeline(spark, tmp_path):
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO)
     from tools.bench_scaling import build_zip
 
     from bistro_spark.sources.tokens import token_table_fast
 
-    zpath = build_zip()
+    zpath = build_zip(str(tmp_path))
     inp = str(tmp_path / "in")
     token_table_fast(spark, 20_000, partitions=8).write.parquet(inp)
 
@@ -33,7 +36,7 @@ def test_spark_submit_stream_pipeline(spark, tmp_path):
         "--conf", "spark.sql.session.timeZone=UTC",
         "--conf", "spark.ui.enabled=false",
         "--py-files", zpath,
-        "/root/repo/bistro_spark/jobs/stream_pipeline.py",
+        os.path.join(REPO, "bistro_spark", "jobs", "stream_pipeline.py"),
         "--input", inp,
         "--checkpoint", os.path.join(work, "ck"),
         "--sink", os.path.join(work, "out"),
@@ -58,3 +61,19 @@ def test_spark_submit_stream_pipeline(spark, tmp_path):
             json.loads(l) for l in f if '"event": "progress"' in l
         ]
     assert sum(e.get("num_input_rows") or 0 for e in progress) == 20_000
+
+
+def test_dist_zip_matches_package_source():
+    """The committed ``dist/bistro_spark.zip`` holds exactly the
+    package's ``.py`` files, byte for byte (no Spark needed)."""
+    want = {}
+    for base, _dirs, files in os.walk(os.path.join(REPO, "bistro_spark")):
+        for fn in files:
+            if fn.endswith(".py"):
+                p = os.path.join(base, fn)
+                with open(p, "rb") as f:
+                    want[os.path.relpath(p, REPO)] = f.read()
+    with zipfile.ZipFile(os.path.join(REPO, "dist", "bistro_spark.zip")) as z:
+        got = {n: z.read(n) for n in z.namelist()}
+    assert sorted(got) == sorted(want)
+    assert got == want

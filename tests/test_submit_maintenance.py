@@ -12,6 +12,7 @@ import sys
 
 from pyspark.sql import functions as F
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 RETAIN, CUTOFF = 2, "2024-01-10"
 
 
@@ -41,7 +42,7 @@ def _run(zpath, commits_dir, work):
         "--conf", "spark.sql.session.timeZone=UTC",
         "--conf", "spark.ui.enabled=false",
         "--py-files", zpath,
-        "/root/repo/bistro_spark/jobs/lakehouse_maintenance.py",
+        os.path.join(REPO, "bistro_spark", "jobs", "lakehouse_maintenance.py"),
         "--commits", commits_dir,
         "--checkpoint", os.path.join(work, "ck"),
         "--actions", os.path.join(work, "actions.jsonl"),
@@ -56,12 +57,12 @@ def _run(zpath, commits_dir, work):
 
 
 def test_spark_submit_maintenance_job_and_resume(spark, tmp_path):
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO)
     from tools.bench_scaling import build_zip
 
     from bistro_spark.operators.maintenance import maintenance_report
 
-    zpath = build_zip()
+    zpath = build_zip(str(tmp_path))
     rows = _commits()
     commits = str(tmp_path / "commits")
     work = str(tmp_path / "work")

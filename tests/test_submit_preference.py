@@ -13,6 +13,7 @@ import sys
 
 from pyspark.sql import functions as F
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 DOCS = "/root/testdata/sf0.001/documents.parquet"
 
 
@@ -32,7 +33,7 @@ def _run(zpath, cand_dir, work):
         "--conf", "spark.sql.session.timeZone=UTC",
         "--conf", "spark.ui.enabled=false",
         "--py-files", zpath,
-        "/root/repo/bistro_spark/jobs/preference_stream.py",
+        os.path.join(REPO, "bistro_spark", "jobs", "preference_stream.py"),
         "--candidates", cand_dir,
         "--checkpoint", os.path.join(work, "ck"),
         "--pairs", os.path.join(work, "pairs"),
@@ -45,7 +46,7 @@ def _run(zpath, cand_dir, work):
 
 
 def test_spark_submit_preference_job_and_resume(spark, tmp_path):
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO)
     from tools.bench_scaling import build_zip
 
     from bistro_spark.operators.preference import (
@@ -53,7 +54,7 @@ def test_spark_submit_preference_job_and_resume(spark, tmp_path):
         preference_stats,
     )
 
-    zpath = build_zip()
+    zpath = build_zip(str(tmp_path))
     cands = _cands(spark)
     cand_dir = str(tmp_path / "cands")
     work = str(tmp_path / "work")

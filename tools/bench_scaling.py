@@ -21,10 +21,10 @@ import zipfile
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def build_zip() -> str:
-    dist = os.path.join(REPO, "dist")
-    os.makedirs(dist, exist_ok=True)
-    zpath = os.path.join(dist, "bistro_spark.zip")
+def build_zip(dest: str) -> str:
+    """The --py-files zip of the package source, written to ``dest``."""
+    os.makedirs(dest, exist_ok=True)
+    zpath = os.path.join(dest, "bistro_spark.zip")
     with zipfile.ZipFile(zpath, "w", zipfile.ZIP_DEFLATED) as z:
         for root, _dirs, files in os.walk(os.path.join(REPO, "bistro_spark")):
             for fn in files:
@@ -165,7 +165,7 @@ def main() -> None:
     args = ap.parse_args()
     n_rows, n_files, fpt = args.n_rows, args.n_files, args.fpt
     n_cores, n4_cores = args.n_cores, args.n4_cores
-    zpath = build_zip()
+    zpath = build_zip(os.path.join(REPO, "dist"))
     inp = make_input(n_rows, n_files)
 
     runs_n, runs_4n = [], []
