@@ -38,6 +38,7 @@ import functools
 import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from bistro_spark.operators.dedup import ngram_set, ngram_set_sql
 
@@ -449,6 +450,61 @@ def group_lengths(pdf, order_col, len_col, bound, bound_name, who):
     return pdf, pdf[len_col].to_numpy(dtype=np.int64)
 
 
+def fold_groups(
+    src, key, order_col, len_col, capacity, schema, guard, cursors=None
+):
+    """The per-group greedy fold shared by every packer, batch or
+    streaming: each ``key`` group of ``src``, in ``order_col`` order,
+    runs its ``len_col`` vector through :func:`next_fit`. The two columns
+    of the output ``schema`` that ``src`` lacks receive each item's pack
+    id and offset, in that order. ``guard`` is the (bound, bound name,
+    caller) triple of :func:`group_lengths`' row guard.
+
+    ``cursors`` maps a group key to the ``(pack_id, end)`` cursor an
+    earlier fold of that group left behind (a streaming twin's carried
+    state, see :func:`fold_end`): the group's fold resumes there. A group
+    without one starts at pack 0, as every group does in a batch fold."""
+    import pandas as pd
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    pid, off = [n for n in schema.names if n not in src.columns]
+    carry = cursors or {}
+
+    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf, lens = group_lengths(pdf, order_col, len_col, *guard)
+        cursor = carry.get(pdf[key].iloc[0])
+        pdf[pid], pdf[off] = next_fit(lens, capacity, cursor)
+        return pdf
+
+    return src.groupBy(key).applyInPandas(fold, schema)
+
+
+def fold_end(pid: str, off: str, len_col: str, order_col: str) -> Column:
+    """The ``(pack_id, end)`` cursor a :func:`fold_groups` fold leaves in
+    a group, as an aggregate over its output: the last item's pack and
+    the fill that item brings it to."""
+    return F.max_by(
+        F.struct(F.col(pid), (F.col(off) + F.col(len_col)).alias("end")),
+        F.col(order_col),
+    )
+
+
+def pack_shards(df, id_col, len_col, capacity, n_shards, guard, cursors=None):
+    """:func:`pack_sequences`' fold without its corpus-wide row guard:
+    documents shard by ``id % n_shards`` and pack whole, per shard in id
+    order, resuming ``cursors`` (see :func:`fold_groups`)."""
+    src = df.select(
+        F.col(id_col),
+        (F.col(id_col) % n_shards).cast("int").alias("shard"),
+        F.col(len_col).cast("long").alias("len"),
+    )
+    schema = f"{id_col} long, shard int, pack_id long, offset long, len long"
+    return fold_groups(
+        src, "shard", id_col, "len", capacity, schema, guard, cursors
+    )
+
+
 def _pack_sums(values, pack_ids):
     """Per-pack sums of ``values`` for a cursor-less :func:`next_fit`."""
     return np.add.reduceat(values, np.flatnonzero(np.diff(pack_ids, prepend=-1)))
@@ -485,8 +541,6 @@ def pack_sequences(
     the default); an explicit ``n_shards`` that would exceed the bound
     raises with sizing guidance instead of OOM-ing an executor mid-job.
     """
-    import pandas as pd
-
     if n_shards is None:
         n_rows = df.count()
         n_shards = max(1, -(-n_rows // max_rows_per_shard))
@@ -508,23 +562,8 @@ def pack_sequences(
                 f"frame fits in one task"
             )
 
-    shard_expr = (F.col(id_col) % n_shards).cast("int").alias("shard")
-    src = df.select(
-        F.col(id_col), shard_expr, F.col(len_col).cast("long").alias("len")
-    )
-    schema = (
-        f"{id_col} long, shard int, pack_id long, offset long, len long"
-    )
-
-    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf, lens = group_lengths(
-            pdf, id_col, "len", max_rows_per_shard, "max_rows_per_shard",
-            "pack_sequences",
-        )
-        pdf["pack_id"], pdf["offset"] = next_fit(lens, capacity)
-        return pdf[[id_col, "shard", "pack_id", "offset", "len"]]
-
-    return src.groupBy("shard").applyInPandas(pack, schema=schema)
+    guard = (max_rows_per_shard, "max_rows_per_shard", "pack_sequences")
+    return pack_shards(df, id_col, len_col, capacity, n_shards, guard)
 
 
 def pack_sequences_sql(
@@ -3316,6 +3355,71 @@ def repetition_budget_sql(
 # ----------------------------------------------- bin/idx export manifest ----
 
 
+def shard_prefix(
+    base: DataFrame,
+    id_col: str,
+    masses: dict[str, Column],
+    starts: DataFrame | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """The per-shard prefix sum behind every append-only layout (byte
+    offsets, seq indices, token offsets): ``base``, which carries a
+    ``shard`` column, plus one BIGINT column per ``masses`` entry holding
+    the sum of that mass over the shard's earlier rows in ``id_col``
+    order. One window, no pandas kernel.
+
+    ``starts`` is a (shard, *masses) frame of where each shard's layout
+    already stands: a streaming twin's carried cursor. Its shards start
+    there (others at 0), joined in by broadcast. Also returns each
+    shard's mass totals, the cursor advance a twin adds to ``starts``;
+    appending a delta laid out this way to the layout of everything
+    before it IS the layout of the union, when ids arrive in order."""
+    w = (
+        Window.partitionBy("shard")
+        .orderBy(id_col)
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    laid = base.select(
+        *base.columns,
+        *[
+            F.coalesce(F.sum(m).over(w), F.lit(0)).cast("long").alias(n)
+            for n, m in masses.items()
+        ],
+    )
+    if starts is not None:
+        carried = starts.select(
+            "shard", *[F.col(n).alias(f"_at_{n}") for n in masses]
+        )
+        laid = laid.join(F.broadcast(carried), "shard", "left").select(
+            *base.columns,
+            *[
+                (F.col(n) + F.coalesce(f"_at_{n}", F.lit(0))).alias(n)
+                for n in masses
+            ],
+        )
+    totals = base.groupBy("shard").agg(
+        *[F.sum(m).cast("long").alias(n) for n, m in masses.items()]
+    )
+    return laid, totals
+
+
+def binidx_layout(df, id_col, len_col, n_shards, bytes_per_token, starts=None):
+    """:func:`binidx_manifest` from carried per-shard ``starts`` (next
+    seq_index, next byte_offset), with the delta's totals: see
+    :func:`shard_prefix`."""
+    s_, bpt = int(n_shards), int(bytes_per_token)
+    base = df.select(
+        F.col(id_col),
+        F.expr(f"{id_col} % {s_}").cast("long").alias("shard"),
+        F.col(len_col).cast("long").alias("n_tokens"),
+        (F.col(len_col).cast("long") * bpt).alias("n_bytes"),
+    )
+    masses = {"seq_index": F.lit(1), "byte_offset": F.col("n_bytes")}
+    laid, totals = shard_prefix(base, id_col, masses, starts)
+    return laid.select(
+        id_col, "shard", "seq_index", "n_tokens", "n_bytes", "byte_offset"
+    ), totals
+
+
 def binidx_manifest(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -3331,35 +3435,12 @@ def binidx_manifest(
     documents to their precomputed offsets in parallel.
 
     Sharding follows the packer's discipline (``id % n_shards``, id
-    order within shard — same layout on any cluster shape); the offset
-    is ONE per-shard ordered prefix sum (window), which is the
-    semantics: a serialized file is inherently sequential per shard, and
-    shards scale out with ``n_shards``. No pandas kernel — the window
-    stays in whole-stage codegen.
+    order within shard — same layout on any cluster shape); index and
+    offset are ONE per-shard ordered prefix sum (:func:`shard_prefix`),
+    which is the semantics: a serialized file is inherently sequential
+    per shard, and shards scale out with ``n_shards``.
     """
-    s_, bpt = int(n_shards), int(bytes_per_token)
-    base = df.select(
-        F.col(id_col),
-        F.expr(f"{id_col} % {s_}").cast("long").alias("shard"),
-        F.col(len_col).cast("long").alias("n_tokens"),
-        (F.col(len_col).cast("long") * bpt).alias("n_bytes"),
-    )
-    w = Window.partitionBy("shard").orderBy(id_col)
-    return base.select(
-        id_col,
-        "shard",
-        (F.row_number().over(w) - 1).cast("long").alias("seq_index"),
-        "n_tokens",
-        "n_bytes",
-        F.coalesce(
-            F.sum("n_bytes").over(
-                w.rowsBetween(Window.unboundedPreceding, -1)
-            ),
-            F.lit(0),
-        )
-        .cast("long")
-        .alias("byte_offset"),
-    )
+    return binidx_layout(df, id_col, len_col, n_shards, bytes_per_token)[0]
 
 
 def binidx_manifest_sql(

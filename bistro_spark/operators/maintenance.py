@@ -32,7 +32,6 @@ over the plan.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -51,27 +50,37 @@ def compaction_plan(
     get singleton groups). Returns (partition, file_id, bytes, group_id,
     group_offset) — group_id is per-partition, group_offset the file's
     byte offset within its group's rewrite buffer."""
-    tgt = int(target_bytes)
     bound = curation.MAX_ROWS_PER_SHARD
-    out_schema = (
-        files_df.select(partition_col, file_col, bytes_col)
-        .withColumn("group_id", F.lit(0).cast("long"))
+    guard = (bound, "MAX_ROWS_PER_SHARD", "compaction_plan")
+    return compaction_groups(
+        files_df.select(partition_col, file_col, bytes_col),
+        partition_col,
+        file_col,
+        bytes_col,
+        target_bytes,
+        guard,
+    )
+
+
+def compaction_groups(
+    src, partition_col, file_col, bytes_col, target_bytes, guard, cursors=None
+):
+    """:func:`compaction_plan`'s fold over ``src`` (partition, file,
+    bytes), resuming ``cursors``: see ``curation.fold_groups``."""
+    schema = (
+        src.withColumn("group_id", F.lit(0).cast("long"))
         .withColumn("group_offset", F.lit(0).cast("long"))
         .schema
     )
-
-    def _fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf, lens = curation.group_lengths(
-            pdf, file_col, bytes_col, bound, "MAX_ROWS_PER_SHARD",
-            "compaction_plan",
-        )
-        pdf["group_id"], pdf["group_offset"] = curation.next_fit(lens, tgt)
-        return pdf
-
-    return (
-        files_df.select(partition_col, file_col, bytes_col)
-        .groupBy(partition_col)
-        .applyInPandas(_fold, out_schema)
+    return curation.fold_groups(
+        src,
+        partition_col,
+        file_col,
+        bytes_col,
+        int(target_bytes),
+        schema,
+        guard,
+        cursors,
     )
 
 

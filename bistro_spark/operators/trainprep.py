@@ -39,6 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from bistro_spark.operators.curation import shard_prefix
 from bistro_spark.session import local_frame
 
 # ------------------------------------------------- fill-in-the-middle ----
@@ -209,51 +210,110 @@ def concat_chunks(
     ``id % n_shards`` rule, so the layout is identical on any cluster
     shape; zero data-dependent collects, zero joins.
     """
-    cap = int(capacity)
-    sep = int(sep_tokens)
-    from pyspark.sql import Window
+    return concat_layout(
+        df, id_col, len_col, capacity, n_shards, sep_tokens
+    )[0]
 
-    src = df.select(
+
+def _doc_spans(df, id_col, len_col, n_shards, sep_tokens):
+    """(id, shard, n_tokens, _span): each doc's real tokens and its span
+    in the concatenated stream, EOD separators included."""
+    n = F.col(len_col).cast("long")
+    return df.select(
         F.col(id_col),
         (F.col(id_col) % n_shards).cast("int").alias("shard"),
-        (F.col(len_col).cast("long") + sep).alias("_span"),
+        n.alias("n_tokens"),
+        (n + int(sep_tokens)).alias("_span"),
     )
-    w = Window.partitionBy("shard").orderBy(id_col)
-    cum = src.withColumn(
-        "_start",
-        F.coalesce(
-            F.sum("_span").over(
-                w.rowsBetween(Window.unboundedPreceding, -1)
-            ),
-            F.lit(0),
-        ).cast("long"),
-    )
-    ex = cum.select(
+
+
+def _cut_chunks(laid, id_col, capacity, keep=()):
+    """Cut the concatenated stream every ``capacity`` tokens: one row per
+    (doc, chunk) overlap of the doc's ``[token_offset, token_offset +
+    _span)`` span, in :func:`concat_chunks`' columns, then ``keep``."""
+    cap = int(capacity)
+    last = F.expr(f"(token_offset + _span - 1) DIV {cap}")
+    ex = laid.select(
         id_col,
         "shard",
         "_span",
-        "_start",
-        F.explode(
-            F.sequence(
-                F.expr(f"_start DIV {cap}"),
-                F.expr(f"(_start + _span - 1) DIV {cap}"),
-            )
-        ).alias("chunk_id"),
+        "token_offset",
+        *keep,
+        F.explode(F.sequence(F.expr(f"token_offset DIV {cap}"), last)).alias(
+            "chunk_id"
+        ),
     )
     c0 = F.col("chunk_id") * cap
-    lo = F.greatest(F.col("_start"), c0)
-    hi = F.least(F.col("_start") + F.col("_span"), c0 + cap)
+    lo = F.greatest(F.col("token_offset"), c0)
+    hi = F.least(F.col("token_offset") + F.col("_span"), c0 + cap)
     return ex.select(
         "shard",
         F.col("chunk_id").cast("long").alias("chunk_id"),
         id_col,
         (lo - c0).cast("long").alias("start_in_chunk"),
-        (lo - F.col("_start")).cast("long").alias("start_in_doc"),
+        (lo - F.col("token_offset")).cast("long").alias("start_in_doc"),
         (hi - lo).cast("long").alias("n_tok"),
-        (
-            F.expr(f"(_start + _span - 1) DIV {cap}") == F.col("chunk_id")
-        ).alias("has_eod"),
+        (last == F.col("chunk_id")).alias("has_eod"),
+        *keep,
     )
+
+
+def concat_layout(
+    df, id_col, len_col, capacity, n_shards, sep_tokens, starts=None
+):
+    """:func:`concat_chunks` from carried per-shard ``starts`` (next
+    token_offset), with the delta's totals: see
+    ``curation.shard_prefix``."""
+    laid, totals = shard_prefix(
+        _doc_spans(df, id_col, len_col, n_shards, sep_tokens),
+        id_col,
+        {"token_offset": F.col("_span")},
+        starts,
+    )
+    return _cut_chunks(laid, id_col, capacity), totals
+
+
+def chunk_reads(
+    df, id_col, len_col, capacity, n_shards, sep_tokens, bytes_per_token,
+    starts=None,
+):
+    """The per-segment read stage of :func:`chunk_read_plan`: one
+    (shard, chunk_id, id, off, nb) byte range per (doc, chunk) segment
+    holding real tokens. The chunk layout (token offsets, EOD spans
+    included) and the ``.bin`` layout (byte offsets, real tokens only)
+    come from ONE prefix sum pass; each read is clamped to the doc's real
+    token span, so EOD-only segments read nothing. ``starts`` carries
+    (next token_offset, next byte_offset) per shard, with the delta's
+    totals returned: see ``curation.shard_prefix``."""
+    bpt = int(bytes_per_token)
+    masses = {
+        "token_offset": F.col("_span"),
+        "byte_offset": F.col("n_tokens") * bpt,
+    }
+    laid, totals = shard_prefix(
+        _doc_spans(df, id_col, len_col, n_shards, sep_tokens),
+        id_col,
+        masses,
+        starts,
+    )
+    segs = _cut_chunks(
+        laid, id_col, capacity, keep=("n_tokens", "byte_offset")
+    )
+    nb = F.greatest(
+        F.least(F.col("start_in_doc") + F.col("n_tok"), F.col("n_tokens"))
+        - F.col("start_in_doc"),
+        F.lit(0),
+    ) * bpt
+    reads = segs.select(
+        "shard",
+        "chunk_id",
+        id_col,
+        (F.col("byte_offset") + F.col("start_in_doc") * bpt)
+        .cast("long")
+        .alias("off"),
+        nb.cast("long").alias("nb"),
+    ).filter(F.col("nb") > 0)
+    return reads, totals
 
 
 def concat_chunks_sql(
@@ -501,54 +561,27 @@ def chunk_read_plan(
     bytes_per_token: int = 2,
 ) -> DataFrame:
     """The loader's per-chunk I/O plan for the concat-and-cut layout —
-    ``step_read_plan``'s counterpart for :func:`concat_chunks`: join the
-    chunk layout (WHICH doc segment fills each chunk) to the ``.bin``
-    layout (WHERE each doc's tokens live — ``curation.binidx_manifest``)
-    and aggregate each chunk's reads into offset-ordered (offsets,
-    sizes) byte arrays. To materialize training chunk ``c`` of shard
-    ``s``, open the shard file and read exactly these ranges (EOD
-    separators are inserted by the loader, not stored, so EOD-only
-    segments produce no read and every segment's read is clamped to the
-    document's real token span).
+    ``step_read_plan``'s counterpart for :func:`concat_chunks`: lay out
+    the chunks (WHICH doc segment fills each chunk) and the ``.bin``
+    file (WHERE each doc's tokens live — ``curation.binidx_manifest``)
+    in one pass (:func:`chunk_reads`) and aggregate each chunk's reads
+    into offset-ordered (offsets, sizes) byte arrays. To materialize
+    training chunk ``c`` of shard ``s``, open the shard file and read
+    exactly these ranges (EOD separators are inserted by the loader, not
+    stored, so EOD-only segments produce no read and every segment's read
+    is clamped to the document's real token span).
 
-    Scale: one doc-id equi join (both sides corpus-sized, derived from
-    the same input) + one partial-agg shuffle to the (shard, chunk_id)
-    grid; per-cell arrays are capacity-bounded (a chunk holds at most
+    Scale: one per-shard prefix-sum window (both layouts share it, so no
+    join), then the (shard, chunk_id) aggregate, which needs no second
+    shuffle: the window's shard partitioning already clusters it.
+    Per-cell arrays are capacity-bounded (a chunk holds at most
     ``capacity`` segments) — the capacity-bounded-collect discipline.
     """
-    from bistro_spark.operators.curation import binidx_manifest
-
-    bpt = int(bytes_per_token)
-    chunks = concat_chunks(
-        df,
-        id_col=id_col,
-        len_col=len_col,
-        capacity=int(capacity),
-        n_shards=n_shards,
-        sep_tokens=int(sep_tokens),
-    )
-    layout = binidx_manifest(
-        df, id_col, len_col, n_shards, bpt
-    ).select(id_col, "n_tokens", "byte_offset")
-    j = chunks.join(layout, id_col).select(
-        "shard",
-        "chunk_id",
-        (F.col("byte_offset") + F.col("start_in_doc") * bpt).alias("off"),
-        (
-            F.greatest(
-                F.least(
-                    F.col("start_in_doc") + F.col("n_tok"),
-                    F.col("n_tokens"),
-                )
-                - F.col("start_in_doc"),
-                F.lit(0),
-            )
-            * bpt
-        ).alias("nb"),
-    )
+    reads = chunk_reads(
+        df, id_col, len_col, capacity, n_shards, sep_tokens, bytes_per_token
+    )[0]
     return (
-        j.filter(F.col("nb") > 0)
-        .groupBy("shard", "chunk_id")
+        reads.groupBy("shard", "chunk_id")
         .agg(
             F.count("*").cast("long").alias("n_reads"),
             F.sum("nb").cast("long").alias("bytes_total"),

@@ -12,7 +12,8 @@ Per trigger:
 
 - ONE partial-aggregated pass over the delta reduces it to its stats
   row (`bm25_stats` — the only data-sized work);
-- the retained integers absorb it by addition;
+- the grid's one cell (a zero-key ``DriverSumGrid``) absorbs it by
+  addition;
 - the CURRENT batch's documents are scored against the UPDATED
   cumulative model (`bm25_apply`, broadcast one-row crossJoin) and
   emitted — streaming relevance tagging: each doc is scored with
@@ -31,15 +32,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from bistro_spark.operators.text import bm25_apply, bm25_stats
-from bistro_spark.session import local_frame
+from bistro_spark.streaming.incremental import DriverSumGrid
 
 
-class StreamingBM25:
+class StreamingBM25(DriverSumGrid):
     """Incremental BM25 scorer. Feed micro-batch DataFrames to
     :meth:`process_batch` (foreachBatch-shaped); each call returns the
     batch's (query_id, doc_id, n_hits, score) under the
     stats-so-far model. :meth:`rescore` replays any relation under the
-    current model (exact batch parity over the full history)."""
+    current model (exact batch parity over the full history).
+
+    The model is one zero-key cell of the grid, holding ``bm25_stats``'
+    columns; it starts at zero counts, and kill/resume is the grid's
+    snapshot."""
 
     def __init__(
         self,
@@ -48,35 +53,36 @@ class StreamingBM25:
         text_col: str = "text",
         id_col: str = "doc_id",
     ):
-        self.spark = spark
+        self.terms = sorted({t for ts in queries.values() for t in ts})
+        stats = ["_n_docs", "_sum_dl"]
+        stats += [f"_df_{i}" for i in range(len(self.terms))]
+        super().__init__(spark, [], stats, None, "cells")
+        self.absorb([dict.fromkeys(stats, 0)])
         self.queries = queries
         self.text_col = text_col
         self.id_col = id_col
-        self.terms = sorted({t for ts in queries.values() for t in ts})
-        self.n_docs = 0
-        self.sum_dl = 0
-        self.df_t = {t: 0 for t in self.terms}
-        self.batches_seen = 0
+
+    @property
+    def n_docs(self) -> int:
+        return self.rows()[0][0]
+
+    @property
+    def sum_dl(self) -> int:
+        return self.rows()[0][1]
+
+    @property
+    def df_t(self) -> dict[str, int]:
+        return dict(zip(self.terms, self.rows()[0][2:]))
 
     def state_size(self) -> int:
         """Retained integers — 2 + #query-terms, constant for life."""
-        return 2 + len(self.terms)
+        return len(self._values)
 
     def _stats_df(self) -> DataFrame:
-        row = (self.n_docs, self.sum_dl, *[self.df_t[t] for t in self.terms])
-        schema = ", ".join(
-            ["_n_docs long", "_sum_dl long"]
-            + [f"_df_{i} long" for i in range(len(self.terms))]
-        )
-        return local_frame(self.spark, [row], schema)
+        return self.frame(", ".join(f"{c} long" for c in self._values))
 
     def process_batch(self, batch_df: DataFrame) -> DataFrame:
-        self.batches_seen += 1
-        [r] = bm25_stats(batch_df, self.terms, self.text_col).collect()
-        self.n_docs += r["_n_docs"] or 0
-        self.sum_dl += r["_sum_dl"] or 0
-        for i, t in enumerate(self.terms):
-            self.df_t[t] += r[f"_df_{i}"] or 0
+        self.add(bm25_stats(batch_df, self.terms, self.text_col))
         return bm25_apply(
             batch_df, self.queries, self._stats_df(), self.text_col, self.id_col
         )

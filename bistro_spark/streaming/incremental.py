@@ -64,16 +64,18 @@ def merge_grid(
     keys: Sequence[str],
     merge: Mapping[str, str] | None = None,
 ) -> DataFrame:
-    """The additive grid merge: ``delta`` itself on the first trigger,
-    else state ∪ delta regrouped by ``keys``, each other column of
-    ``delta`` folded by its ``merge`` aggregate (``sum`` when unnamed).
-    Columns leave as keys then values in ``delta``'s order; a sum keeps
-    the BIGINT and DECIMAL(38, s) types of the grids that use it."""
-    if state is None:
-        return delta
+    """The additive grid merge: state ∪ delta regrouped by ``keys``, each
+    other column of ``delta`` folded by its ``merge`` aggregate (``sum``
+    when unnamed). Columns leave as keys then values in ``delta``'s
+    order. The first delta is regrouped too (over an empty seed, which
+    the optimizer drops), so the grid's types are fixed from trigger 1
+    on: a sum widens a DECIMAL(p, s) partial to DECIMAL(38, s) once, and
+    keeps BIGINT and DECIMAL(38, s) as they are. A delta whose keys
+    repeat is folded on the first trigger as on any other."""
     merge = merge or {}
     values = [c for c in delta.columns if c not in keys]
-    return state.unionByName(delta).groupBy(*keys).agg(
+    seed = delta.limit(0) if state is None else state
+    return seed.unionByName(delta).groupBy(*keys).agg(
         *[F.expr(f"{merge.get(c, 'sum')}(`{c}`)").alias(c) for c in values]
     )
 
@@ -188,34 +190,20 @@ class IncrementalRunner(PinOwner):
                 retained.coalesce(self.spark.sparkContext.defaultParallelism)
             )
             if self._unfold:
-                from functools import reduce
-
-                parts = [self._partial(prepared)]
+                delta = self._partial(prepared)
                 if keep is not None:
-                    parts.append(self._partial(buf.filter(~keep), negate=True))
-                if self._state is not None:
-                    parts.append(self._state)
-                merged = (
-                    reduce(lambda a, b: a.unionByName(b), parts)
-                    .groupBy(*self.group_keys)
-                    .agg(
-                        *[
-                            F.expr(f"sum({a.name})").alias(a.name)
-                            for a in self.aggs
-                        ],
-                        F.expr(f"sum({self._N})").alias(self._N),
-                    )
-                    # prune fully-evicted groups from STATE, not just from
-                    # read-out: otherwise state grows with all-time
-                    # distinct keys instead of live keys. Safe — a
-                    # reappearing key re-enters via its next delta partial.
-                    # Caveat (documented, inherent to un-fold): double
-                    # add/subtract partials accumulate FP drift vs
-                    # recompute over very long runs; re-anchor periodically
-                    # from the retained buffer if bit-parity matters.
-                    .filter(F.col(self._N) != 0)
-                )
-                self._state = self._pin(merged)
+                    evicted = self._partial(buf.filter(~keep), negate=True)
+                    delta = delta.unionByName(evicted)
+                merged = merge_grid(self._state, delta, self.group_keys)
+                # prune fully-evicted groups from STATE, not just from
+                # read-out: otherwise state grows with all-time distinct
+                # keys instead of live keys. Safe — a reappearing key
+                # re-enters via its next delta partial. Caveat (documented,
+                # inherent to un-fold): double add/subtract partials
+                # accumulate FP drift vs recompute over very long runs;
+                # re-anchor periodically from the retained buffer if
+                # bit-parity matters.
+                self._state = self._pin(merged.filter(F.col(self._N) != 0))
         else:
             partial = prepared.groupBy(*self.group_keys).agg(
                 *[F.expr(a.batch_expr).alias(a.name) for a in self.aggs]

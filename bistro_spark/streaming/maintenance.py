@@ -12,11 +12,12 @@ Shape (the ``StreamingPacker`` discipline, applied to files):
 
 - the greedy no-split fold is sequential per partition, so the monitor
   carries ONE ``(group_id, fill)`` cursor per partition across triggers
-  and resumes the fold where the previous trigger stopped — state is
-  #partitions-sized, never manifest-sized;
+  and runs the batch plan's own fold (``compaction_groups``) over each
+  delta from it — state is #partitions-sized, never manifest-sized;
 - the report counters (n_files, small files, bytes) are ADDITIVE, so
-  they are exact in any arrival order; ``n_files_after`` comes from the
-  fold cursor (group_id + 1).
+  they are a partition-keyed :class:`DriverSumGrid`, exact in any
+  arrival order; ``n_files_after`` comes from the fold cursor
+  (group_id + 1).
 
 **Parity contract (pytest-pinned):** under file_id-monotone arrival per
 partition — the natural case, file ids are assigned at commit time —
@@ -37,8 +38,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bistro_spark.caching import PinOwner
-from bistro_spark.operators.curation import group_lengths, next_fit
+from bistro_spark.operators.curation import fold_end
+from bistro_spark.operators.maintenance import compaction_groups
 from bistro_spark.session import local_frame
+from bistro_spark.streaming.incremental import DriverSumGrid
+
+_COUNTS = ("n_files", "n_small_files", "bytes_total")
 
 
 def _ts(us: int):
@@ -49,7 +54,7 @@ def _ts(us: int):
     return datetime(1970, 1, 1) + timedelta(microseconds=int(us))
 
 
-class StreamingCompactionMonitor(PinOwner):
+class StreamingCompactionMonitor(DriverSumGrid, PinOwner):
     """Feed per-trigger manifest deltas to :meth:`process_batch` (rows:
     partition, file_id, bytes); each call returns the delta's merge-group
     assignments — same schema as batch ``compaction_plan`` — valid until
@@ -66,7 +71,10 @@ class StreamingCompactionMonitor(PinOwner):
         small_bytes: int | None = None,
         max_files_per_batch_partition: int = 50_000_000,
     ):
-        super().__init__(spark)
+        DriverSumGrid.__init__(
+            self, spark, [partition_col], _COUNTS, None, "partitions"
+        )
+        PinOwner.__init__(self, spark)
         self.partition_col = partition_col
         self.file_col = file_col
         self.bytes_col = bytes_col
@@ -75,81 +83,58 @@ class StreamingCompactionMonitor(PinOwner):
             small_bytes if small_bytes is not None else target_bytes // 2
         )
         self.max_files = max_files_per_batch_partition
-        # partition -> [group_id, fill, n_files, n_small, bytes_total]
-        self._state: dict[str, list[int]] = {}
-        self.batches_seen = 0
+        # partition -> (group_id, fill): the fold cursor beside the grid
+        self._cursors: dict[str, tuple[int, int]] = {}
 
     # ------------------------------------------------------- recovery --
     def state_snapshot(self) -> dict[str, list[int]]:
-        """Full recovery state: one 5-int row per touched partition."""
-        return {k: list(v) for k, v in self._state.items()}
+        """Full recovery state: per touched partition, its cursor then
+        its counters (5 ints)."""
+        return {r[0]: [*self._cursors[r[0]], *r[1:]] for r in self.rows()}
 
     def restore_state(self, snapshot: dict[str, list[int]]) -> None:
         """Resume from a snapshot taken after the last COMMITTED trigger
         (persist with the foreachBatch epoch, restore before
         reprocessing) — kill/resume parity is pytest-pinned."""
-        self._state = {str(k): [int(x) for x in v] for k, v in snapshot.items()}
+        super().restore_state(
+            {
+                "columns": [self.partition_col, *_COUNTS],
+                "rows": [[p, *v[2:]] for p, v in snapshot.items()],
+            }
+        )
+        self._cursors = {
+            str(p): (int(v[0]), int(v[1])) for p, v in snapshot.items()
+        }
 
     # ---------------------------------------------------------- fold --
     def process_batch(self, batch_df: DataFrame) -> DataFrame:
-        import pandas as pd
-
-        self.batches_seen += 1
         self._begin()
         pcol, fcol, bcol = self.partition_col, self.file_col, self.bytes_col
-        tgt, max_files = self.target, self.max_files
-        # cursor only (the additive counters stay driver-side)
-        carry = {p: (s[0], s[1]) for p, s in self._state.items()}
-
         src = batch_df.select(
             F.col(pcol), F.col(fcol), F.col(bcol).cast("long").alias(bcol)
         )
-        schema = (
-            src.withColumn("group_id", F.lit(0).cast("long"))
-            .withColumn("group_offset", F.lit(0).cast("long"))
-            .schema
+        guard = (
+            self.max_files,
+            "max_files_per_batch_partition",
+            "StreamingCompactionMonitor",
         )
-
-        def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf, lens = group_lengths(
-                pdf, fcol, bcol, max_files, "max_files_per_batch_partition",
-                "StreamingCompactionMonitor",
-            )
-            cursor = carry.get(pdf[pcol].iloc[0])
-            pdf["group_id"], pdf["group_offset"] = next_fit(lens, tgt, cursor)
-            return pdf
-
-        out = self._pin(
-            src.groupBy(pcol).applyInPandas(fold, schema), trigger=True
+        plan = compaction_groups(
+            src, pcol, fcol, bcol, self.target, guard, dict(self._cursors)
         )
-        # one row per touched partition: cursor advance + additive stats
-        upd = (
-            out.groupBy(pcol)
-            .agg(
-                F.max_by(
-                    F.struct(
-                        F.col("group_id"),
-                        (F.col("group_offset") + F.col(bcol)).alias("fill"),
-                    ),
-                    F.col(fcol),
-                ).alias("c"),
-                F.count("*").cast("long").alias("nf"),
+        out = self._pin(plan, trigger=True)
+        # one row per touched partition: cursor advance + additive counts
+        rows = self.add(
+            out.groupBy(pcol).agg(
+                fold_end("group_id", "group_offset", bcol, fcol).alias("c"),
+                F.count("*").cast("long").alias("n_files"),
                 F.sum((F.col(bcol) < self.small).cast("long"))
                 .cast("long")
-                .alias("ns"),
-                F.sum(bcol).cast("long").alias("bt"),
+                .alias("n_small_files"),
+                F.sum(bcol).cast("long").alias("bytes_total"),
             )
-            .collect()
         )
-        for r in upd:
-            st = self._state.get(r[pcol], [0, 0, 0, 0, 0])
-            self._state[r[pcol]] = [
-                r["c"]["group_id"],
-                r["c"]["fill"],
-                st[2] + r["nf"],
-                st[3] + r["ns"],
-                st[4] + r["bt"],
-            ]
+        for r in rows:
+            self._cursors[r[pcol]] = (r["c"]["group_id"], r["c"]["end"])
         return out
 
     # -------------------------------------------------------- report --
@@ -157,10 +142,10 @@ class StreamingCompactionMonitor(PinOwner):
         """Live decision artifact — same schema and (under monotone
         arrival) same rows as batch ``compaction_report`` over everything
         seen so far."""
-        rows = [
-            (p, s[2], s[3], s[0] + 1, s[2] - (s[0] + 1), s[4])
-            for p, s in sorted(self._state.items())
-        ]
+        rows = []
+        for p, n_files, n_small, n_bytes in self.rows():
+            after = self._cursors[p][0] + 1
+            rows.append((p, n_files, n_small, after, n_files - after, n_bytes))
         return local_frame(
             self.spark,
             rows,

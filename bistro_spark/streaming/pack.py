@@ -15,24 +15,31 @@ the last mile before a trainer is (a) subword-encode arriving text and
 
 - :class:`StreamingPacker` — greedy no-split packing is a sequential
   fold per shard, so its streaming form carries ONE (pack_id, end)
-  cursor per shard across micro-batches and resumes the fold where the
-  previous trigger stopped. State is exactly ``n_shards`` pairs of
-  BIGINTs — partition-count-sized, not stream-sized — held driver-side
-  and snapshot-able into any checkpoint (on a real cluster: the
-  foreachBatch epoch's commit log / an Iceberg metadata row per shard).
+  cursor per shard across micro-batches and runs the batch operator's
+  own fold (``curation.pack_shards``) over each delta from it. State is
+  exactly ``n_shards`` pairs of BIGINTs — partition-count-sized, not
+  stream-sized — held driver-side and snapshot-able into any checkpoint
+  (on a real cluster: the foreachBatch epoch's commit log / an Iceberg
+  metadata row per shard).
 
-  **Parity contract (pytest-pinned):** under id-monotone arrival — each
-  shard's documents arrive in increasing id order across triggers, the
-  natural case when ids are assigned at ingest — the union of per-trigger
-  outputs EQUALS batch ``pack_sequences`` over everything seen: both run
-  the one ``curation.next_fit`` kernel, whose fold depends only on each
-  shard's (len) sequence in id order, and monotone arrival makes the
-  concatenation of per-batch folds THE single fold. Out-of-id-order
-  arrival diverges by construction (a later-arriving smaller id would
-  have packed earlier in the batch fold); the divergence is pinned by
-  counter-example, mirroring the token-budget twin's documented
-  contract, because a packer cannot retroactively reopen an emitted
-  buffer.
+- :class:`StreamingBinidxWriter`, :class:`StreamingConcatChunker`,
+  :class:`StreamingChunkReadPlanner` — append-only layouts (``.bin``
+  byte offsets, the concatenated token stream, both at once). Each
+  shard's cursor is an ADDITIVE mass (documents, bytes, tokens), so the
+  cursors live in a shard-keyed :class:`DriverSumGrid` and each trigger
+  runs the batch operator's layout (``curation.shard_prefix`` under it)
+  over the delta from the carried starts, then adds the delta's totals.
+
+**Parity contract (pytest-pinned):** under id-monotone arrival — each
+shard's documents arrive in increasing id order across triggers, the
+natural case when ids are assigned at ingest — the union of per-trigger
+outputs EQUALS the batch operator over everything seen: a fold (or
+prefix sum) over ``a + b`` equals the fold over ``a``, then over ``b``
+from ``a``'s end cursor, and the twin runs the batch operator's code.
+Out-of-id-order arrival diverges by construction (a later-arriving
+smaller id would have laid out earlier in the batch operator); the
+divergence is pinned by counter-example, because an emitted buffer,
+byte range or chunk cannot be reopened.
 """
 
 from __future__ import annotations
@@ -41,8 +48,20 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bistro_spark.caching import PinOwner
-from bistro_spark.operators.curation import group_lengths, next_fit
-from bistro_spark.session import local_frame
+from bistro_spark.operators.curation import (
+    binidx_layout,
+    fold_end,
+    pack_shards,
+)
+from bistro_spark.operators.trainprep import (
+    chunk_reads,
+    concat_layout,
+    fim_transform,
+    sft_corpus_counts,
+    sft_corpus_stats_from_counts,
+    sft_doc_stats,
+    sft_turn_spans,
+)
 from bistro_spark.streaming.incremental import DriverSumGrid
 
 
@@ -104,72 +123,73 @@ class StreamingPacker(PinOwner):
         self._state = {int(k): (int(v[0]), int(v[1])) for k, v in snapshot.items()}
 
     def process_batch(self, batch_df: DataFrame) -> DataFrame:
-        import pandas as pd
-
         self.batches_seen += 1
         self._begin()
-        id_col, capacity, max_rows = self.id_col, self.capacity, self.max_rows
-        carry = dict(self._state)  # ships via closure: n_shards-sized
-
-        src = batch_df.select(
-            F.col(id_col),
-            (F.col(id_col) % self.n_shards).cast("int").alias("shard"),
-            F.col(self.len_col).cast("long").alias("len"),
+        guard = (self.max_rows, "max_rows_per_batch_shard", "StreamingPacker")
+        packed = pack_shards(
+            batch_df,
+            self.id_col,
+            self.len_col,
+            self.capacity,
+            self.n_shards,
+            guard,
+            dict(self._state),  # ships via closure: n_shards-sized
         )
-        schema = f"{id_col} long, shard int, pack_id long, offset long, len long"
-
-        def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf, lens = group_lengths(
-                pdf, id_col, "len", max_rows, "max_rows_per_batch_shard",
-                "StreamingPacker",
-            )
-            cursor = carry.get(int(pdf["shard"].iloc[0]))
-            pdf["pack_id"], pdf["offset"] = next_fit(lens, capacity, cursor)
-            return pdf[[id_col, "shard", "pack_id", "offset", "len"]]
-
-        out = self._pin(
-            src.groupBy("shard").applyInPandas(pack, schema), trigger=True
-        )
+        out = self._pin(packed, trigger=True)
         # advance each shard's cursor to its max-id row — n_shards rows
-        upd = (
-            out.groupBy("shard")
-            .agg(
-                F.max_by(
-                    F.struct(
-                        F.col("pack_id"),
-                        (F.col("offset") + F.col("len")).alias("end"),
-                    ),
-                    F.col(id_col),
-                ).alias("c")
-            )
-            .collect()
+        ends = out.groupBy("shard").agg(
+            fold_end("pack_id", "offset", "len", self.id_col).alias("c")
         )
-        for r in upd:
+        for r in ends.collect():
             self._state[r["shard"]] = (r["c"]["pack_id"], r["c"]["end"])
         return out
 
 
-class StreamingBinidxWriter(PinOwner):
+class _LayoutTwin(DriverSumGrid, PinOwner):
+    """A streaming twin of an append-only per-shard layout. Its cursors
+    (where each shard's layout stands) are additive masses, so they are a
+    shard-keyed :class:`DriverSumGrid`, whose snapshot is the twin's
+    recovery state. A trigger runs the batch operator's layout
+    (:meth:`_layout`) over the delta from the carried cursors, pins the
+    delta's rows for the trigger and adds the delta's totals to the grid.
+    The first trigger carries no cursor, so it IS the batch operator."""
+
+    def __init__(self, spark: SparkSession, cursors: tuple[str, ...]):
+        DriverSumGrid.__init__(self, spark, ["shard"], cursors, None, "shards")
+        PinOwner.__init__(self, spark)
+
+    def _layout(
+        self, batch_df: DataFrame, starts: DataFrame | None
+    ) -> tuple[DataFrame, DataFrame]:
+        """The batch operator's (rows, per-shard totals) from ``starts``."""
+        raise NotImplementedError
+
+    def process_batch(self, batch_df: DataFrame) -> DataFrame:
+        self._begin()
+        starts = None
+        if self.rows():
+            starts = self.frame(
+                "shard long, " + ", ".join(f"{c} long" for c in self._values)
+            )
+        out, totals = self._layout(batch_df, starts)
+        out = self._pin(out, trigger=True)
+        self.add(totals)
+        return out
+
+
+class StreamingBinidxWriter(_LayoutTwin):
     """Streaming twin of ``operators/curation.binidx_manifest``: the
     ``.bin``/``.idx`` layout assigned live, so an ingest loop can append
     serialized tokens to shard files as documents arrive instead of
     re-planning offsets from the full corpus. Completes the live
     tokenize → pack → export chain next to ``StreamingPacker``.
 
-    State is ONE ``(next_index, next_offset)`` cursor per shard —
-    ``n_shards``-bounded, never corpus-bounded. Per trigger the delta
-    gets in-delta ranks/prefix-sums via a per-shard window over the
-    DELTA ONLY, then the carried cursors are added back via a
-    shard-grid broadcast join — no pandas kernel, no corpus re-scan.
-
-    **Parity contract (pytest-pinned, the StreamingPacker contract):**
-    under id-monotone arrival per shard (ids assigned at commit time —
-    the natural case) the union of per-trigger outputs EQUALS batch
-    ``binidx_manifest`` over everything seen: a serialized file is
-    append-only, so the concatenation of per-batch prefix sums IS the
-    single prefix sum. Out-of-order arrival diverges by construction
-    (bytes already written cannot be moved) — pinned by counter-example.
-    """
+    State is ONE ``(seq_index, byte_offset)`` cursor per shard — the
+    next document's — ``n_shards``-bounded, never corpus-bounded. Per
+    trigger ``curation.binidx_layout`` lays out the DELTA ONLY from the
+    carried cursors. Parity: the module's id-monotone contract (a
+    serialized file is append-only, so bytes already written cannot
+    move)."""
 
     def __init__(
         self,
@@ -179,93 +199,17 @@ class StreamingBinidxWriter(PinOwner):
         id_col: str = "doc_id",
         len_col: str = "n_tok",
     ):
-        super().__init__(spark)
+        super().__init__(spark, ("seq_index", "byte_offset"))
         self.n_shards = int(n_shards)
         self.bpt = int(bytes_per_token)
         self.id_col = id_col
         self.len_col = len_col
-        # shard -> [next_index, next_offset]
-        self._state: dict[int, list[int]] = {}
-        self.batches_seen = 0
 
-    # ------------------------------------------------------- recovery --
-    def state_snapshot(self) -> dict[int, list[int]]:
-        return {k: list(v) for k, v in self._state.items()}
-
-    def restore_state(self, snapshot: dict) -> None:
-        self._state = {int(k): [int(x) for x in v] for k, v in snapshot.items()}
-
-    # ---------------------------------------------------------- fold --
-    def process_batch(self, batch_df: DataFrame) -> DataFrame:
-        from pyspark.sql import Window
-
-        self.batches_seen += 1
-        self._begin()
-        base = batch_df.select(
-            self.id_col,
-            F.expr(f"{self.id_col} % {self.n_shards}")
-            .cast("long")
-            .alias("shard"),
-            F.col(self.len_col).cast("long").alias("n_tokens"),
-            (F.col(self.len_col).cast("long") * self.bpt).alias("n_bytes"),
+    def _layout(self, batch_df, starts):
+        return binidx_layout(
+            batch_df, self.id_col, self.len_col, self.n_shards, self.bpt,
+            starts,
         )
-        w = Window.partitionBy("shard").orderBy(self.id_col)
-        delta = base.select(
-            self.id_col,
-            "shard",
-            (F.row_number().over(w) - 1).cast("long").alias("_didx"),
-            "n_tokens",
-            "n_bytes",
-            F.coalesce(
-                F.sum("n_bytes").over(
-                    w.rowsBetween(Window.unboundedPreceding, -1)
-                ),
-                F.lit(0),
-            )
-            .cast("long")
-            .alias("_doff"),
-        )
-        cur_rows = [
-            (s, v[0], v[1]) for s, v in self._state.items()
-        ] or [(-1, 0, 0)]
-        cursors = local_frame(
-            self.spark, cur_rows, "shard long, _cidx long, _coff long"
-        )
-        out = self._pin(
-            delta.join(F.broadcast(cursors), "shard", "left")
-            .select(
-                self.id_col,
-                "shard",
-                (F.col("_didx") + F.coalesce("_cidx", F.lit(0)))
-                .cast("long")
-                .alias("seq_index"),
-                "n_tokens",
-                "n_bytes",
-                (F.col("_doff") + F.coalesce("_coff", F.lit(0)))
-                .cast("long")
-                .alias("byte_offset"),
-            ),
-            trigger=True,
-        )
-        upd = (
-            out.groupBy("shard")
-            .agg(
-                F.count("*").cast("long").alias("n"),
-                F.max(
-                    F.struct(
-                        F.col("seq_index"),
-                        (F.col("byte_offset") + F.col("n_bytes")).alias("e"),
-                    )
-                ).alias("m"),
-            )
-            .collect()
-        )
-        for r in upd:
-            self._state[int(r["shard"])] = [
-                int(r["m"]["seq_index"]) + 1,
-                int(r["m"]["e"]),
-            ]
-        return out
 
 
 def streaming_fim_gate(
@@ -282,34 +226,21 @@ def streaming_fim_gate(
     output identical to the (oracle-hash-checked) batch transform no
     matter how the stream is micro-batched. The wrapper exists to make
     that contract explicit and tested on a real file-source stream."""
-    from bistro_spark.operators.trainprep import fim_transform
-
     return fim_transform(
         stream_df, id_col, text_col, rate_pct=rate_pct, min_words=min_words
     )
 
 
-class StreamingConcatChunker(PinOwner):
+class StreamingConcatChunker(_LayoutTwin):
     """Streaming twin of ``trainprep.concat_chunks``: the GPT-style
     concat-and-cut chunk layout assigned live as documents arrive.
 
     State is ONE BIGINT per shard — the next global token offset of the
     shard's concatenated stream (``n_shards``-bounded, never
-    corpus-bounded; the offset is additive in the delta's token mass, so
-    the cursor update is a single n_shards-row aggregate). Per trigger
-    the delta gets its in-delta prefix sums via a per-shard window over
-    the DELTA ONLY, carried cursors return via a shard-grid broadcast
-    join, and the chunk explode/projection reuses the batch operator's
-    expressions verbatim.
-
-    **Parity contract (pytest-pinned, the StreamingBinidxWriter
-    contract):** under id-monotone arrival per shard, the union of
-    per-trigger outputs EQUALS batch ``concat_chunks`` over everything
-    seen — a concatenated token stream is append-only, so the
-    concatenation of per-batch prefix sums IS the single prefix sum.
-    Out-of-order arrival diverges by construction (tokens already laid
-    out cannot move) — pinned by counter-example.
-    """
+    corpus-bounded; additive in the delta's token mass). Per trigger
+    ``trainprep.concat_layout`` lays out and cuts the DELTA ONLY from the
+    carried offsets. Parity: the module's id-monotone contract (tokens
+    already laid out cannot move)."""
 
     def __init__(
         self,
@@ -320,99 +251,21 @@ class StreamingConcatChunker(PinOwner):
         id_col: str = "doc_id",
         len_col: str = "n_tok",
     ):
-        super().__init__(spark)
+        super().__init__(spark, ("token_offset",))
         self.capacity = int(capacity)
         self.n_shards = int(n_shards)
         self.sep = int(sep_tokens)
         self.id_col = id_col
         self.len_col = len_col
-        self._state: dict[int, int] = {}  # shard -> next token offset
-        self.batches_seen = 0
 
-    # ------------------------------------------------------- recovery --
-    def state_snapshot(self) -> dict[int, int]:
-        """Full recovery state: one token-offset cursor per touched
-        shard. Persist with the foreachBatch epoch; restore before
-        reprocessing — kill/resume parity is pytest-pinned."""
-        return dict(self._state)
-
-    def restore_state(self, snapshot: dict) -> None:
-        self._state = {int(k): int(v) for k, v in snapshot.items()}
-
-    # ---------------------------------------------------------- fold --
-    def process_batch(self, batch_df: DataFrame) -> DataFrame:
-        from pyspark.sql import Window
-
-        self.batches_seen += 1
-        self._begin()
-        cap = self.capacity
-        base = batch_df.select(
-            self.id_col,
-            (F.col(self.id_col) % self.n_shards).cast("int").alias("shard"),
-            (F.col(self.len_col).cast("long") + self.sep).alias("_span"),
+    def _layout(self, batch_df, starts):
+        return concat_layout(
+            batch_df, self.id_col, self.len_col, self.capacity,
+            self.n_shards, self.sep, starts,
         )
-        w = Window.partitionBy("shard").orderBy(self.id_col)
-        delta = base.withColumn(
-            "_dstart",
-            F.coalesce(
-                F.sum("_span").over(
-                    w.rowsBetween(Window.unboundedPreceding, -1)
-                ),
-                F.lit(0),
-            ).cast("long"),
-        )
-        cur_rows = list(self._state.items()) or [(-1, 0)]
-        cursors = local_frame(
-            self.spark, cur_rows, "shard int, _coff long"
-        )
-        laid = delta.join(F.broadcast(cursors), "shard", "left").withColumn(
-            "_start", F.col("_dstart") + F.coalesce("_coff", F.lit(0))
-        )
-        ex = laid.select(
-            self.id_col,
-            "shard",
-            "_span",
-            "_start",
-            F.explode(
-                F.sequence(
-                    F.expr(f"_start DIV {cap}"),
-                    F.expr(f"(_start + _span - 1) DIV {cap}"),
-                )
-            ).alias("chunk_id"),
-        )
-        c0 = F.col("chunk_id") * cap
-        lo = F.greatest(F.col("_start"), c0)
-        hi = F.least(F.col("_start") + F.col("_span"), c0 + cap)
-        out = self._pin(
-            ex.select(
-                "shard",
-                F.col("chunk_id").cast("long").alias("chunk_id"),
-                self.id_col,
-                (lo - c0).cast("long").alias("start_in_chunk"),
-                (lo - F.col("_start")).cast("long").alias("start_in_doc"),
-                (hi - lo).cast("long").alias("n_tok"),
-                (
-                    F.expr(f"(_start + _span - 1) DIV {cap}")
-                    == F.col("chunk_id")
-                ).alias("has_eod"),
-            ),
-            trigger=True,
-        )
-        # each (doc, chunk) row carries the doc's tokens landing in that
-        # chunk, so per-shard sum(n_tok) over the pinned output equals
-        # the delta's total span mass — no second pass over the delta
-        upd = (
-            out.groupBy("shard")
-            .agg(F.sum("n_tok").cast("long").alias("mass"))
-            .collect()
-        )
-        for r in upd:
-            s = int(r["shard"])
-            self._state[s] = self._state.get(s, 0) + int(r["mass"])
-        return out
 
 
-class StreamingChunkReadPlanner(PinOwner):
+class StreamingChunkReadPlanner(_LayoutTwin):
     """Streaming twin of ``trainprep.chunk_read_plan``: the loader's
     per-chunk I/O entries emitted LIVE as documents arrive — the read
     side of the live tokenize→pack→export chain
@@ -423,22 +276,17 @@ class StreamingChunkReadPlanner(PinOwner):
 
     State is TWO BIGINTs per shard — the next token offset of the
     shard's concatenated chunk stream (incl. EOD spans) and the next
-    byte offset of the shard's ``.bin`` file (real tokens only) —
-    ``n_shards``-bounded, additive in the delta's masses. Per trigger
-    the delta gets in-delta token and byte prefix sums via per-shard
-    windows over the DELTA ONLY, carried cursors return via a
-    shard-grid broadcast join, the chunk explode reuses the batch
-    expressions, every read is clamped to the doc's real byte span
-    (EOD-only segments emit nothing), and read entries
-    (shard, chunk_id, doc_id, off, nb) leave append-only — a doc's
-    reads are emitted exactly once, at arrival.
+    byte offset of the shard's ``.bin`` file (real tokens only). Per
+    trigger the batch operator's read stage (``trainprep.chunk_reads``)
+    runs over the DELTA ONLY from the carried offsets, and read entries
+    (shard, chunk_id, doc_id, off, nb) leave append-only — a doc's reads
+    are emitted exactly once, at arrival.
 
     **Parity contract (pytest-pinned):** under id-monotone arrival per
     shard, the union of per-trigger entries, grouped to offset-ordered
     arrays, EQUALS batch ``chunk_read_plan`` over everything seen.
     Out-of-order arrival diverges by construction (bytes and tokens
-    already laid out cannot move) — pinned by counter-example.
-    Kill/resume via the JSON-safe two-cursor snapshot."""
+    already laid out cannot move) — pinned by counter-example."""
 
     def __init__(
         self,
@@ -450,118 +298,19 @@ class StreamingChunkReadPlanner(PinOwner):
         id_col: str = "doc_id",
         len_col: str = "n_tok",
     ):
-        super().__init__(spark)
+        super().__init__(spark, ("token_offset", "byte_offset"))
         self.capacity = int(capacity)
         self.n_shards = int(n_shards)
         self.sep = int(sep_tokens)
         self.bpt = int(bytes_per_token)
         self.id_col = id_col
         self.len_col = len_col
-        # shard -> [next token offset (incl. EOD), next byte offset]
-        self._state: dict[int, list[int]] = {}
-        self.batches_seen = 0
 
-    # ------------------------------------------------------- recovery --
-    def state_snapshot(self) -> dict:
-        """JSON-safe: one (token, byte) cursor pair per touched shard."""
-        return {str(s): list(v) for s, v in self._state.items()}
-
-    def restore_state(self, snapshot: dict) -> None:
-        self._state = {
-            int(k): [int(v[0]), int(v[1])] for k, v in snapshot.items()
-        }
-
-    # ---------------------------------------------------------- fold --
-    def process_batch(self, batch_df: DataFrame) -> DataFrame:
-        from pyspark.sql import Window
-
-        self.batches_seen += 1
-        self._begin()
-        cap, bpt = self.capacity, self.bpt
-        base = batch_df.select(
-            self.id_col,
-            (F.col(self.id_col) % self.n_shards).cast("int").alias("shard"),
-            F.col(self.len_col).cast("long").alias("_n"),
-            (F.col(self.len_col).cast("long") + self.sep).alias("_span"),
+    def _layout(self, batch_df, starts):
+        return chunk_reads(
+            batch_df, self.id_col, self.len_col, self.capacity,
+            self.n_shards, self.sep, self.bpt, starts,
         )
-        w = (
-            Window.partitionBy("shard")
-            .orderBy(self.id_col)
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        delta = base.withColumn(
-            "_dstart",
-            F.coalesce(F.sum("_span").over(w), F.lit(0)).cast("long"),
-        ).withColumn(
-            "_dbytes",
-            F.coalesce(F.sum(F.col("_n") * bpt).over(w), F.lit(0)).cast(
-                "long"
-            ),
-        )
-        cur_rows = [
-            (s, v[0], v[1]) for s, v in self._state.items()
-        ] or [(-1, 0, 0)]
-        cursors = local_frame(
-            self.spark, cur_rows, "shard int, _coff long, _cboff long"
-        )
-        laid = (
-            delta.join(F.broadcast(cursors), "shard", "left")
-            .withColumn(
-                "_start", F.col("_dstart") + F.coalesce("_coff", F.lit(0))
-            )
-            .withColumn(
-                "_boff", F.col("_dbytes") + F.coalesce("_cboff", F.lit(0))
-            )
-        )
-        ex = laid.select(
-            self.id_col,
-            "shard",
-            "_n",
-            "_span",
-            "_start",
-            "_boff",
-            F.explode(
-                F.sequence(
-                    F.expr(f"_start DIV {cap}"),
-                    F.expr(f"(_start + _span - 1) DIV {cap}"),
-                )
-            ).alias("chunk_id"),
-        )
-        c0 = F.col("chunk_id") * cap
-        sid = F.greatest(F.col("_start"), c0) - F.col("_start")
-        send = F.least(F.col("_start") + F.col("_span"), c0 + cap) - F.col(
-            "_start"
-        )
-        nb = (F.least(send, F.col("_n")) - sid) * bpt
-        out = self._pin(
-            ex.select(
-                "shard",
-                F.col("chunk_id").cast("long").alias("chunk_id"),
-                self.id_col,
-                (F.col("_boff") + sid * bpt).cast("long").alias("off"),
-                nb.cast("long").alias("nb"),
-            ).filter(F.col("nb") > 0),
-            trigger=True,
-        )
-        # cursor update: delta-bounded shard aggregate over the cheap
-        # base projection (the emitted reads exclude EOD spans, so the
-        # token mass cannot be recovered from them)
-        upd = (
-            base.groupBy("shard")
-            .agg(
-                F.sum("_span").cast("long").alias("tmass"),
-                (F.sum("_n") * bpt).cast("long").alias("bmass"),
-            )
-            .collect()
-        )
-        for r in upd:
-            s = int(r["shard"])
-            cur = self._state.get(s, [0, 0])
-            self._state[s] = [
-                cur[0] + int(r["tmass"]),
-                cur[1] + int(r["bmass"]),
-            ]
-        return out
 
 
 def streaming_sft_gate(
@@ -580,8 +329,6 @@ def streaming_sft_gate(
     manifest no matter how the stream is micro-batched (the
     ``streaming_fim_gate`` contract, extended to a row-multiplying but
     row-local transform)."""
-    from bistro_spark.operators.trainprep import sft_turn_spans
-
     return sft_turn_spans(
         stream_df, id_col, text_col, user_tok=user_tok, asst_tok=asst_tok
     )
@@ -651,8 +398,6 @@ class StreamingSftPackMonitor(DriverSumGrid):
     def process_batch(self, batch_df: DataFrame) -> int:
         """Render → pack → account one trigger's documents; returns the
         number of pack cells touched."""
-        from bistro_spark.operators.trainprep import sft_doc_stats
-
         stats = sft_doc_stats(
             batch_df, id_col=self.id_col, text_col=self.text_col
         )
@@ -723,8 +468,6 @@ class StreamingSftCardMonitor(DriverSumGrid):
         self.text_col = text_col
 
     def process_batch(self, batch_df: DataFrame) -> int:
-        from bistro_spark.operators.trainprep import sft_corpus_counts
-
         return len(
             self.add(
                 sft_corpus_counts(
@@ -734,10 +477,6 @@ class StreamingSftCardMonitor(DriverSumGrid):
         )
 
     def report(self) -> DataFrame:
-        from bistro_spark.operators.trainprep import (
-            sft_corpus_stats_from_counts,
-        )
-
         return sft_corpus_stats_from_counts(
             self.frame(
                 f"{self.group_col} string, "

@@ -32,16 +32,17 @@ def _aggs(agg_exprs: dict[str, str | Column]) -> list[Column]:
     ]
 
 
-def tumbling_window_accu(
+def _window_accu(
     df: DataFrame,
-    time_col: str,
-    size: str,
+    win: Column,
     keys: list[str],
     agg_exprs: dict[str, str | Column],
 ) -> DataFrame:
-    """Tumbling-window accumulate: one interval per event (range+proj+accu)."""
+    """The one accumulate body of the three window shapes: group by the
+    window column ``win`` and ``keys``, then flatten the window to
+    (window_start, window_end)."""
     return (
-        df.groupBy(F.window(F.col(time_col), size).alias("win"), *keys)
+        df.groupBy(win.alias("win"), *keys)
         .agg(*_aggs(agg_exprs))
         .select(
             F.col("win.start").alias("window_start"),
@@ -50,6 +51,18 @@ def tumbling_window_accu(
             *[F.col(n) for n in agg_exprs],
         )
     )
+
+
+def tumbling_window_accu(
+    df: DataFrame,
+    time_col: str,
+    size: str,
+    keys: list[str],
+    agg_exprs: dict[str, str | Column],
+) -> DataFrame:
+    """Tumbling-window accumulate: one interval per event (range+proj+accu)."""
+    win = F.window(F.col(time_col), size)
+    return _window_accu(df, win, keys, agg_exprs)
 
 
 def sliding_window_accu(
@@ -61,16 +74,8 @@ def sliding_window_accu(
     agg_exprs: dict[str, str | Column],
 ) -> DataFrame:
     """Sliding-window accumulate (roll analog): overlapping windows."""
-    return (
-        df.groupBy(F.window(F.col(time_col), size, slide).alias("win"), *keys)
-        .agg(*_aggs(agg_exprs))
-        .select(
-            F.col("win.start").alias("window_start"),
-            F.col("win.end").alias("window_end"),
-            *keys,
-            *[F.col(n) for n in agg_exprs],
-        )
-    )
+    win = F.window(F.col(time_col), size, slide)
+    return _window_accu(df, win, keys, agg_exprs)
 
 
 def session_window_accu(
@@ -82,16 +87,8 @@ def session_window_accu(
 ) -> DataFrame:
     """Session-window accumulate: windows close after ``gap`` inactivity
     per key (north-rule extension beyond the reference)."""
-    return (
-        df.groupBy(F.session_window(F.col(time_col), gap).alias("win"), *keys)
-        .agg(*_aggs(agg_exprs))
-        .select(
-            F.col("win.start").alias("window_start"),
-            F.col("win.end").alias("window_end"),
-            *keys,
-            *[F.col(n) for n in agg_exprs],
-        )
-    )
+    win = F.session_window(F.col(time_col), gap)
+    return _window_accu(df, win, keys, agg_exprs)
 
 
 def salted_tumbling_window_accu(

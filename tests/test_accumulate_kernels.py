@@ -274,6 +274,31 @@ def test_incremental_runner_close_returns_pins_to_baseline(spark):
     runner.close()  # idempotent
 
 
+def test_bm25_model_resumes_from_its_grid_snapshot(spark):
+    """StreamingBM25's (N, Σdl, df_t) model is one zero-key grid cell:
+    it starts at zero counts and resumes from a JSON snapshot."""
+    from bistro_spark.streaming.bm25 import StreamingBM25
+
+    docs = local_frame(
+        spark,
+        [(i, f"spark join w{i % 5}") for i in range(12)],
+        "doc_id long, text string",
+    )
+    queries = {0: ["spark", "w1"]}
+    a = StreamingBM25(spark, queries)
+    assert a.rows() == [(0, 0, 0, 0)]
+    a.process_batch(docs.filter("doc_id < 5"))
+    b = StreamingBM25(spark, queries)
+    b.restore_state(json.loads(json.dumps(a.state_snapshot())))
+    for mon in (a, b):
+        mon.process_batch(docs.filter("doc_id >= 5"))
+    assert b.state_snapshot() == a.state_snapshot()
+    assert (b.n_docs, b.sum_dl, b.df_t) == (12, 36, {"spark": 12, "w1": 3})
+    assert sorted(b.rescore(docs).collect()) == sorted(
+        a.rescore(docs).collect()
+    )
+
+
 # ------------------------------------------------------------ guard ----
 
 MIGRATED = {

@@ -284,3 +284,30 @@ def test_incremental_buffer_partitions_bounded(spark):
     }
     assert _res(runner) == oracle
     full.unpersist()
+
+
+def test_incremental_addonly_state_types_fixed_from_first_trigger(spark):
+    """The add-only state keeps one schema from trigger 1 on: a sum over
+    DECIMAL(20, 6) widens to DECIMAL(38, 6) at the first merge, not at the
+    second, and BIGINT stays BIGINT."""
+    runner = IncrementalRunner(
+        spark,
+        lambda b: b,
+        ["k"],
+        [
+            AggSpec("n", "count(*)", "sum", 0),
+            AggSpec("s", "sum(cast(v as decimal(20,6)))", "sum", 0),
+        ],
+    )
+    schemas = []
+    for lo in (0, 10, 20):
+        runner.add_batch(
+            spark.range(lo, lo + 10).select(
+                (F.col("id") % 3).alias("k"), (F.col("id") / 7).alias("v")
+            )
+        )
+        schemas.append(runner.result().schema)
+    assert schemas[0] == schemas[1] == schemas[2]
+    types = {f.name: f.dataType.simpleString() for f in schemas[0]}
+    assert types == {"k": "bigint", "n": "bigint", "s": "decimal(38,6)"}
+    runner.close()

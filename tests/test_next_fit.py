@@ -1,8 +1,9 @@
 """The one next-fit kernel behind the six greedy packing folds.
 
-``curation.next_fit`` holds the rule; ``pack_sequences``, the two
-capacity sweeps, ``compaction_plan``, ``StreamingPacker`` and
-``StreamingCompactionMonitor`` call it. The property tests state, on pure
+``curation.next_fit`` holds the rule. The two capacity sweeps call it;
+``pack_sequences``, ``compaction_plan``, ``StreamingPacker`` and
+``StreamingCompactionMonitor`` call it through the one per-group fold
+``curation.fold_groups``. The property tests state, on pure
 Python, the batch = stream identity the streaming parity rests on; the
 row-guard test covers the shared one-group-per-task bound at all six
 callers; an AST guard keeps the sites on the kernel."""
@@ -182,15 +183,15 @@ def test_row_guard_names_the_bound(spark, monkeypatch, caller):
 
 # -------------------------------------------------------------- guard ----
 
+# pack_sequences, compaction_plan and their streaming twins fold through
+# fold_groups (their references to it are guarded in
+# test_cursor_twins.py)
 SITES = {
     "operators/curation.py": [
-        "pack_sequences",
+        "fold_groups",
         "pack_capacity_sweep",
         "attention_cost_sweep",
     ],
-    "operators/maintenance.py": ["compaction_plan"],
-    "streaming/pack.py": ["StreamingPacker.process_batch"],
-    "streaming/maintenance.py": ["StreamingCompactionMonitor.process_batch"],
 }
 
 

@@ -84,9 +84,10 @@ def test_state_and_pin_bounds(spark):
     wr = StreamingBinidxWriter(spark, n_shards=4)
     wr.process_batch(_df(spark, rows[:20])).collect()
     wr.process_batch(_df(spark, rows[20:])).collect()
-    snap = wr.state_snapshot()
-    assert set(snap) <= {0, 1, 2, 3}
-    assert all(len(v) == 2 for v in snap.values())
+    # one (shard, seq_index, byte_offset) cursor row per touched shard
+    rows = wr.state_snapshot()["rows"]
+    assert {r[0] for r in rows} <= {0, 1, 2, 3}
+    assert all(len(r) == 3 for r in rows)
     extra = pinned_ids(spark) - before
     assert extra == wr.owned_ids and len(extra) <= 2
     release(spark, extra)

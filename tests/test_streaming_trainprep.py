@@ -136,11 +136,12 @@ def test_streaming_chunker_state_and_pin_bounds(spark):
         batch = docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
         ch.process_batch(batch).collect()
     # state is one BIGINT cursor per shard, never corpus-sized
-    assert len(ch._state) <= 4
+    rows = ch.state_snapshot()["rows"]
+    assert len(rows) <= 4
     total = docs.agg(
         F.sum(F.col("n_tok") + 1).cast("long").alias("s")
     ).collect()[0]["s"]
-    assert sum(ch._state.values()) == total
+    assert sum(r[1] for r in rows) == total
     # pins: only the last trigger's output may remain pinned
     ch.close()
     assert pinned_ids(spark) - before == set()
@@ -183,7 +184,7 @@ def test_streaming_read_planner_id_monotone_parity(spark):
     assert _group_reads(got) == want
     assert pl.batches_seen == 4
     # n_shards-bounded state, pins released each trigger
-    assert len(pl._state) <= 4
+    assert len(pl.state_snapshot()["rows"]) <= 4
 
 
 def test_streaming_read_planner_kill_resume(spark):
