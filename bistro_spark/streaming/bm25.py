@@ -90,7 +90,11 @@ class StreamingBM25(DriverSumGrid):
     def rescore(self, df: DataFrame) -> DataFrame:
         """Score ``df`` under the accumulated model — with ``df`` = the
         union of every batch fed so far, this is EXACTLY batch
-        ``bm25_scores`` of that union (additive integer stats)."""
+        ``bm25_scores`` of that union (additive integer stats). A model of
+        zero documents (no trigger yet, or restored from a zero snapshot)
+        has no average length to score against, so it raises."""
+        if self.n_docs == 0:
+            raise ValueError("no rows absorbed yet")
         return bm25_apply(
             df, self.queries, self._stats_df(), self.text_col, self.id_col
         )

@@ -20,7 +20,14 @@ re-aggregates). Two state strategies:
   Structured Streaming's state store does for us in streaming mode).
 - count- or age-based retention: the runner buffers the retained rows
   (state ∝ window size, same asymptotics as Spark's windowed state) and
-  recomputes aggregates per batch.
+  recomputes aggregates per batch, or, when every fold is invertible,
+  un-folds the evicted rows out of a merged state. Either way ``prepare``
+  runs once per delta: its output is pinned for the trigger, and the
+  cutoff, the new buffer and the partial all read that pin. The un-fold
+  path adds the delta and subtracts the evicted rows in ONE signed
+  aggregate. The evict filter and the buffer copy still scan the whole
+  retained window each batch; only the aggregation is ∝ |delta| +
+  |evicted|.
 
 This mode exists for (a) row-for-row parity tests against the oracle with
 scripted batch boundaries, (b) count-based retention, which Structured
@@ -142,12 +149,14 @@ class IncrementalRunner(PinOwner):
         self._buffer: DataFrame | None = None  # retained window (retention mode)
         self._state: DataFrame | None = None  # merged aggregates (add-only mode)
         # un-fold mode: retention active AND every fold is invertible →
-        # aggregate state is updated by (add delta partial, subtract evicted
-        # partial); per-batch AGGREGATION work ∝ |delta| + |evicted| instead
-        # of |window|. The buffer is still retained (eviction membership
-        # needs it), but it is only filtered, never re-aggregated. A hidden
-        # count column tracks live rows per group so fully-evicted groups
-        # drop out of the read-out exactly as they do under recompute.
+        # aggregate state is updated by one signed partial (delta rows +1,
+        # evicted rows −1, a single groupBy); per-batch AGGREGATION work ∝
+        # |delta| + |evicted| instead of |window|. The buffer is still
+        # retained (eviction membership needs it) and still scanned each
+        # batch, by the evict filter and the coalesced copy, but never
+        # re-aggregated. A hidden count column tracks live rows per group
+        # so fully-evicted groups drop out of the read-out exactly as they
+        # do under recompute.
         auto = self._needs_buffer() and bool(aggs) and all(
             a.invertible for a in aggs
         )
@@ -159,15 +168,26 @@ class IncrementalRunner(PinOwner):
         self.batches_seen = 0
 
     _N = "__live_rows"
+    _SIGN = "__sign"
 
-    def _partial(self, df: DataFrame, negate: bool = False) -> DataFrame:
-        sign = -1 if negate else 1
-        return df.groupBy(*self.group_keys).agg(
-            *[
-                (F.expr(a.batch_expr) * sign).alias(a.name)
-                for a in self.aggs
-            ],
-            (F.count(F.lit(1)) * sign).alias(self._N),
+    def _signed_partial(
+        self, delta: DataFrame, evicted: DataFrame | None
+    ) -> DataFrame:
+        """ONE aggregate over the added rows (sign +1) and the evicted rows
+        (sign -1), grouped by (keys, sign): each fold and the live-row
+        count are multiplied by their span's sign, ready for
+        :func:`merge_grid` to add into the state."""
+        sign = F.col(self._SIGN)
+        rows = delta.withColumn(self._SIGN, F.lit(1))
+        if evicted is not None:
+            rows = rows.unionByName(evicted.withColumn(self._SIGN, F.lit(-1)))
+        return (
+            rows.groupBy(*self.group_keys, self._SIGN)
+            .agg(
+                *[(F.expr(a.batch_expr) * sign).alias(a.name) for a in self.aggs],
+                (F.count(F.lit(1)) * sign).alias(self._N),
+            )
+            .drop(self._SIGN)
         )
 
     # -- ActionAdd + ActionEval --------------------------------------------
@@ -178,6 +198,10 @@ class IncrementalRunner(PinOwner):
         prepared = self.prepare(batch_df)
 
         if self._needs_buffer():
+            # one materialisation of the delta serves the cutoff, the new
+            # buffer and the signed partial: prepare (scan, calc, link)
+            # runs once per delta, not once per consumer
+            prepared = self._pin(prepared, trigger=True)
             buf = prepared if self._buffer is None else self._buffer.unionByName(prepared)
             keep = self._keep_predicate(buf)
             retained = buf.filter(keep) if keep is not None else buf
@@ -190,11 +214,12 @@ class IncrementalRunner(PinOwner):
                 retained.coalesce(self.spark.sparkContext.defaultParallelism)
             )
             if self._unfold:
-                delta = self._partial(prepared)
-                if keep is not None:
-                    evicted = self._partial(buf.filter(~keep), negate=True)
-                    delta = delta.unionByName(evicted)
-                merged = merge_grid(self._state, delta, self.group_keys)
+                evicted = buf.filter(~keep) if keep is not None else None
+                merged = merge_grid(
+                    self._state,
+                    self._signed_partial(prepared, evicted),
+                    self.group_keys,
+                )
                 # prune fully-evicted groups from STATE, not just from
                 # read-out: otherwise state grows with all-time distinct
                 # keys instead of live keys. Safe — a reappearing key
@@ -217,8 +242,10 @@ class IncrementalRunner(PinOwner):
                 )
             )
         # the previous buffer/state fed the pins above; freeing them here
-        # keeps a long-running stream at one checkpoint generation
+        # keeps a long-running stream at one checkpoint generation, and
+        # the delta pin goes with this trigger
         self._commit()
+        self._begin()
 
     def _needs_buffer(self) -> bool:
         return self.retention_count is not None or self.retention_age is not None

@@ -7,10 +7,17 @@ contents)."""
 
 from __future__ import annotations
 
+from datetime import datetime, timedelta
+from decimal import Decimal
+
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
+from bistro_spark.caching import pinned_ids
 from bistro_spark.pipeline import prepare_facts
+from bistro_spark.session import local_frame
 from bistro_spark.sources.tokens import token_table_fast
 from bistro_spark.streaming.incremental import AggSpec, IncrementalRunner
 
@@ -311,3 +318,158 @@ def test_incremental_addonly_state_types_fixed_from_first_trigger(spark):
     types = {f.name: f.dataType.simpleString() for f in schemas[0]}
     assert types == {"k": "bigint", "n": "bigint", "s": "decimal(38,6)"}
     runner.close()
+
+
+# -- retention parity, jobs and pins ------------------------------------------
+
+PARITY_SCHEMA = "src string, tok long, v decimal(20,6), batch_ofs long, event_time timestamp"
+PARITY_AGGS = [
+    AggSpec("n", "count(*)", "sum", 0, invertible=True),
+    AggSpec("s_tok", "sum(tok)", "sum", 0, invertible=True),
+    AggSpec("s_v", "sum(v)", "sum", 0, invertible=True),
+]
+# batch_ofs steps of 0 give ties; event_time is t0 + batch_ofs seconds
+PARITY_ROWS = st.lists(
+    st.tuples(
+        st.sampled_from(["a", "b", "c"]),
+        st.integers(min_value=-50, max_value=50),
+        st.integers(min_value=-(10**9), max_value=10**9),
+        st.integers(min_value=0, max_value=2),
+    ),
+    min_size=1,
+    max_size=24,
+)
+
+
+def _parity_rows(drawn):
+    t0 = datetime(2024, 1, 1)
+    rows, ofs = [], 0
+    for src, tok, micros, step in drawn:
+        ofs += step
+        v = Decimal(micros).scaleb(-6)
+        rows.append((src, tok, v, ofs, t0 + timedelta(seconds=ofs)))
+    return rows
+
+
+def _kept(seen, retention):
+    """The rows a FIFO retention keeps out of every row seen so far, in
+    arrival order (ties at the cutoff are all kept)."""
+    if "retention_count" in retention:
+        newest = sorted((r[3] for r in seen), reverse=True)
+        cutoff = newest[: retention["retention_count"]][-1]
+        return [r for r in seen if r[3] >= cutoff]
+    latest = max(r[4] for r in seen)
+    return [r for r in seen if r[4] > latest - timedelta(seconds=retention["age_s"])]
+
+
+def _aggregate(rows):
+    out: dict = {}
+    for src, tok, v, _, _ in rows:
+        n, s_tok, s_v = out.get(src, (0, 0, Decimal(0)))
+        out[src] = (n + 1, s_tok + tok, s_v + v)
+    return out
+
+
+@pytest.mark.parametrize(
+    "retention", [{"retention_count": 5}, {"age_s": 4}], ids=["count", "age"]
+)
+@settings(
+    max_examples=5,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(drawn=PARITY_ROWS, data=st.data())
+def test_incremental_retention_parity_property(spark, retention, drawn, data):
+    """Random delta splits (a delta may outgrow the window, so its rows
+    are added and evicted in one step; batch_ofs ties straddle the
+    cutoff), under count and age retention: after EVERY step the un-fold
+    result, the recompute result and the batch aggregate over the rows
+    retention keeps are equal. No helper column leaks into result() or
+    window(), and the un-fold DECIMAL state is DECIMAL(38, 6) from step 1."""
+    rows = _parity_rows(drawn)
+    cuts = sorted(
+        data.draw(st.lists(st.integers(0, len(rows)), max_size=3))
+    )
+    bounds = [0, *cuts, len(rows)]
+    deltas = [rows[lo:hi] for lo, hi in zip(bounds, bounds[1:])]
+    kwargs = (
+        retention
+        if "retention_count" in retention
+        else {"retention_age": f"{retention['age_s']} seconds"}
+    )
+    runners = [
+        IncrementalRunner(spark, lambda b: b, ["src"], PARITY_AGGS, **kwargs),
+        IncrementalRunner(
+            spark, lambda b: b, ["src"], PARITY_AGGS, unfold=False, **kwargs
+        ),
+    ]
+    assert runners[0]._unfold and not runners[1]._unfold
+    seen = []
+    try:
+        for delta in deltas:
+            seen += delta
+            want = _aggregate(_kept(seen, retention)) if seen else {}
+            frame = local_frame(spark, delta, PARITY_SCHEMA)
+            for runner, s_v in zip(runners, ("decimal(38,6)", "decimal(30,6)")):
+                runner.add_batch(frame)
+                res = runner.result()
+                types = [(f.name, f.dataType.simpleString()) for f in res.schema]
+                assert types == [
+                    ("src", "string"),
+                    ("n", "bigint"),
+                    ("s_tok", "bigint"),
+                    ("s_v", s_v),
+                ]
+                assert runner.window().schema == frame.schema
+                got = {r["src"]: tuple(r)[1:] for r in res.collect()}
+                assert got == want
+    finally:
+        for runner in runners:
+            runner.close()
+
+
+# Spark jobs one steady-state retention add_batch of the calc →
+# broadcast-link delta below ran (4 CPUs) when prepare ran once per
+# consumer (cutoff collect, buffer pin, delta partial, evicted partial),
+# each consumer paying its own broadcast job
+PER_CONSUMER_PREPARE_JOBS = 9
+
+
+def test_incremental_retention_step_jobs_and_pins(spark):
+    """One steady-state un-fold retention step over a cached delta runs at
+    least 2 fewer Spark jobs than the ``PER_CONSUMER_PREPARE_JOBS`` it
+    ran when each consumer prepared the delta (prepare now runs once, and
+    add + evict is one aggregate), and returns holding exactly one buffer
+    and one state generation: the delta's pin is gone."""
+    size, n_deltas = 200, 5
+    full = token_table_fast(spark, size * n_deltas).cache()
+    full.count()
+    deltas = [
+        full.filter(
+            (F.col("batch_ofs") >= lo) & (F.col("batch_ofs") < lo + size)
+        )
+        for lo in range(0, size * n_deltas, size)
+    ]
+    before = pinned_ids(spark)
+    runner = IncrementalRunner(
+        spark, lambda b: prepare_facts(spark, b), ["src"], UNFOLD_AGGS,
+        retention_count=2 * size,
+    )
+    sc = spark.sparkContext
+    jobs = []
+    try:
+        for i, delta in enumerate(deltas):
+            group = f"retention-step-{i}"
+            sc.setJobGroup(group, group)
+            runner.add_batch(delta)
+            sc.setJobGroup("", "")
+            jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+            pinned = pinned_ids(spark) - before
+            assert pinned == runner.owned_ids and len(pinned) == 2, i
+        # steps 2.. evict; the last two are steady state
+        assert max(jobs[-2:]) <= PER_CONSUMER_PREPARE_JOBS - 2, jobs
+        runner.close()
+        assert pinned_ids(spark) == before
+    finally:
+        runner.close()
+        full.unpersist()

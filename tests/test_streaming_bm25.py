@@ -73,3 +73,34 @@ def test_streaming_bm25_empty_batch_is_a_noop(spark):
     out = mon.process_batch(docs.filter("doc_id < 0"))
     assert out.count() == 0
     assert (mon.n_docs, mon.sum_dl) == (n, s)
+
+
+def test_streaming_bm25_rescore_refuses_a_model_of_zero_documents(spark):
+    """A scorer before any trigger, and one restored from a zero
+    snapshot, hold N = 0: rescore raises ValueError rather than dividing
+    Σdl by N inside the engine."""
+    import json
+
+    import pytest
+
+    docs = _batches(spark)[0]
+    cold = StreamingBM25(spark, QUERIES)
+    resumed = StreamingBM25(spark, QUERIES)
+    resumed.restore_state(json.loads(json.dumps(cold.state_snapshot())))
+    for mon in (cold, resumed):
+        assert mon.n_docs == 0
+        with pytest.raises(ValueError, match="no rows absorbed yet"):
+            mon.rescore(docs)
+
+
+def test_streaming_bm25_rescore_after_one_batch_is_batch_bm25(spark):
+    """One trigger is enough to score: rescore of that batch equals batch
+    bm25_scores over it."""
+    from bistro_spark.operators.text import bm25_scores
+
+    batch = _batches(spark)[0]
+    mon = StreamingBM25(spark, QUERIES)
+    mon.process_batch(batch)
+    got = sorted(tuple(r) for r in mon.rescore(batch).collect())
+    want = sorted(tuple(r) for r in bm25_scores(batch, QUERIES).collect())
+    assert got == want and len(got) > 0
