@@ -31,6 +31,9 @@ not Spark Connect) and releases them once their last consumer is done:
   trigger starts (when the frame just returned still reads it). A
   **trigger** pin (``_pin(df, trigger=True)``: deltas and outputs) is
   freed by the next ``_begin()``, called when a trigger starts.
+  ``_carry(frame)`` moves a frame pinned earlier (current generation or
+  trigger lifetime) into the generation being built, so a pin can live
+  as long as its rows are retained without being copied again.
   ``_sweep()`` frees whatever the twin's batch operator pinned
   internally and the owner does not own; ``close()`` frees everything,
   drops the twin's frames and is idempotent; ``owned_ids`` is the owned
@@ -136,15 +139,22 @@ class PinOwner:
         self._gen: set[int] = set()  # the current state generation
         self._next_gen: set[int] = set()  # pinned since the last commit
         self._trigger: set[int] = set()  # freed when the next trigger starts
+        self._ids: dict[DataFrame, frozenset[int]] = {}  # live pins, for _carry
 
     @property
     def owned_ids(self) -> frozenset[int]:
         """Ids of every block this twin owns now (read-only)."""
         return frozenset(self._gen | self._next_gen | self._trigger)
 
+    def _release(self, ids: set[int]) -> None:
+        release(self.spark, ids)
+        self._ids = {
+            df: own for df, own in self._ids.items() if own.isdisjoint(ids)
+        }
+
     def _begin(self) -> None:
         """A trigger starts: free the previous trigger's blocks."""
-        release(self.spark, self._trigger)
+        self._release(self._trigger)
         self._trigger = set()
 
     def _pin(self, df: DataFrame, trigger: bool = False) -> DataFrame:
@@ -152,7 +162,17 @@ class PinOwner:
         trigger lifetime."""
         out, ids = pin(df)
         (self._trigger if trigger else self._next_gen).update(ids)
+        self._ids[out] = frozenset(ids)
         return out
+
+    def _carry(self, frame: DataFrame) -> None:
+        """Keep ``frame``, returned by an earlier :meth:`_pin` of the
+        current generation or of this trigger, alive in the generation
+        being built."""
+        ids = self._ids[frame]
+        self._gen -= ids
+        self._trigger -= ids
+        self._next_gen |= ids
 
     def _commit(self, hold: bool = False) -> None:
         """The generation being built replaces the current one, which is
@@ -162,7 +182,7 @@ class PinOwner:
         if hold:
             self._trigger |= old
         else:
-            release(self.spark, old)
+            self._release(old)
 
     @contextmanager
     def _sweep(self):
@@ -181,6 +201,7 @@ class PinOwner:
         which read them; a second call is a no-op."""
         release(self.spark, self.owned_ids)
         self._gen, self._next_gen, self._trigger = set(), set(), set()
+        self._ids = {}
         for name, value in list(vars(self).items()):
             if isinstance(value, DataFrame):
                 setattr(self, name, None)

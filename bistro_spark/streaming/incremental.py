@@ -18,16 +18,22 @@ re-aggregates). Two state strategies:
 - ``retention=None`` (add-only streams): per-group aggregate state is
   MERGED batch-over-batch (state ∝ #groups — the scalable path, what
   Structured Streaming's state store does for us in streaming mode).
-- count- or age-based retention: the runner buffers the retained rows
-  (state ∝ window size, same asymptotics as Spark's windowed state) and
-  recomputes aggregates per batch, or, when every fold is invertible,
-  un-folds the evicted rows out of a merged state. Either way ``prepare``
-  runs once per delta: its output is pinned for the trigger, and the
-  cutoff, the new buffer and the partial all read that pin. The un-fold
-  path adds the delta and subtracts the evicted rows in ONE signed
-  aggregate. The evict filter and the buffer copy still scan the whole
-  retained window each batch; only the aggregation is ∝ |delta| +
-  |evicted|.
+- count- or age-based retention: the runner keeps the retained rows as
+  a FIFO of **segments** (state ∝ window size, same asymptotics as
+  Spark's windowed state) and recomputes aggregates per batch, or, when
+  every fold is invertible, un-folds the evicted rows out of a merged
+  state. ``prepare`` runs once per delta, whose pin becomes a segment
+  with its stats (rows, min/max of the retention column) observed by
+  the pin's own job. Each step classifies every segment from its stats
+  as wholly kept, wholly evicted or straddling the cutoff: kept segments
+  stay pinned as they are, evicted ones leave whole, and only a
+  straddler is filtered and its kept part re-pinned, so no step copies
+  the retained window. The count cutoff needs no query when the newest
+  segments hold exactly N rows above all others, and otherwise ranks
+  only the segments that can hold it; the age threshold is max(max
+  event time − interval) over the segments. The un-fold path adds the
+  delta and subtracts the evicted rows in ONE signed aggregate, ∝
+  |delta| + |evicted|.
 
 This mode exists for (a) row-for-row parity tests against the oracle with
 scripted batch boundaries, (b) count-based retention, which Structured
@@ -56,9 +62,11 @@ of two places, chosen by the state type:
 from __future__ import annotations
 
 from dataclasses import dataclass
+from decimal import Decimal
+from functools import reduce
 from typing import Callable, Mapping, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from bistro_spark.caching import PinOwner
@@ -109,6 +117,41 @@ class AggSpec:
     invertible: bool = False
 
 
+@dataclass
+class _Segment:
+    """One pinned span of the retained window and the stats its pin
+    observed: rows; for count retention the NULL count and min/max of the
+    order column; for age retention the NULL count and min/max of the
+    event time in microseconds, and ``t_cut``, the age threshold its own
+    newest row implies (max event time − interval, evaluated by Spark)."""
+
+    df: DataFrame
+    rows: int
+    o_nulls: int | None = None
+    lo: object = None
+    hi: object = None
+    t_nulls: int | None = None
+    t_lo: int | None = None
+    t_hi: int | None = None
+    t_cut: int | None = None
+
+
+# cutoffs are compared as DECIMAL(19, 0), which holds every BIGINT: a
+# DECIMAL literal is passed to generated code by reference, so a new
+# cutoff reuses the compiled filter, where a BIGINT literal is inlined
+# into the Java source and recompiles it. (19, 0) is narrower than
+# BIGINT's DECIMAL(20, 0), so the optimizer cannot unwrap the cast back
+# into a BIGINT comparison.
+_EXACT = "decimal(19,0)"
+
+
+def _at_least(col: Column, value, strict: bool = False) -> Column:
+    """``col >= value`` (``>`` when ``strict``) for an integral ``col``,
+    with ``value`` out of the generated code."""
+    col, lit = col.cast(_EXACT), F.lit(Decimal(value)).cast(_EXACT)
+    return col > lit if strict else col >= lit
+
+
 class IncrementalRunner(PinOwner):
     """Scripted micro-batch evaluation of a grouped accumulate pipeline.
 
@@ -146,17 +189,18 @@ class IncrementalRunner(PinOwner):
         self.retention_age = retention_age
         self.order_col = order_col
         self.time_col = time_col
-        self._buffer: DataFrame | None = None  # retained window (retention mode)
+        # retained window (retention mode): segments in arrival order
+        self._segments: list[_Segment] = []
+        self._schema = None  # the prepared rows' schema, once a delta came
         self._state: DataFrame | None = None  # merged aggregates (add-only mode)
         # un-fold mode: retention active AND every fold is invertible →
         # aggregate state is updated by one signed partial (delta rows +1,
         # evicted rows −1, a single groupBy); per-batch AGGREGATION work ∝
-        # |delta| + |evicted| instead of |window|. The buffer is still
-        # retained (eviction membership needs it) and still scanned each
-        # batch, by the evict filter and the coalesced copy, but never
-        # re-aggregated. A hidden count column tracks live rows per group
-        # so fully-evicted groups drop out of the read-out exactly as they
-        # do under recompute.
+        # |delta| + |evicted| instead of |window|. The segments are still
+        # retained (eviction membership needs them) but never re-aggregated,
+        # and only a segment that straddles the cutoff is scanned. A hidden
+        # count column tracks live rows per group so fully-evicted groups
+        # drop out of the read-out exactly as they do under recompute.
         auto = self._needs_buffer() and bool(aggs) and all(
             a.invertible for a in aggs
         )
@@ -194,42 +238,11 @@ class IncrementalRunner(PinOwner):
 
     def add_batch(self, batch_df: DataFrame) -> None:
         """ActionAdd(delta) + ActionRemove(retention) + ActionEval."""
-        self.batches_seen += 1
         prepared = self.prepare(batch_df)
-
         if self._needs_buffer():
-            # one materialisation of the delta serves the cutoff, the new
-            # buffer and the signed partial: prepare (scan, calc, link)
-            # runs once per delta, not once per consumer
-            prepared = self._pin(prepared, trigger=True)
-            buf = prepared if self._buffer is None else self._buffer.unionByName(prepared)
-            keep = self._keep_predicate(buf)
-            retained = buf.filter(keep) if keep is not None else buf
-            # localCheckpoint truncates the ever-growing union lineage —
-            # without it plan depth grows per batch (the classic
-            # iterative-union pitfall). The union also adds the delta's
-            # partitions each batch; coalesce (a no-op at or below the
-            # target) keeps the buffer at one partition per core.
-            self._buffer = self._pin(
-                retained.coalesce(self.spark.sparkContext.defaultParallelism)
-            )
-            if self._unfold:
-                evicted = buf.filter(~keep) if keep is not None else None
-                merged = merge_grid(
-                    self._state,
-                    self._signed_partial(prepared, evicted),
-                    self.group_keys,
-                )
-                # prune fully-evicted groups from STATE, not just from
-                # read-out: otherwise state grows with all-time distinct
-                # keys instead of live keys. Safe — a reappearing key
-                # re-enters via its next delta partial. Caveat (documented,
-                # inherent to un-fold): double add/subtract partials
-                # accumulate FP drift vs recompute over very long runs;
-                # re-anchor periodically from the retained buffer if
-                # bit-parity matters.
-                self._state = self._pin(merged.filter(F.col(self._N) != 0))
+            self._retain(prepared)
         else:
+            self.batches_seen += 1
             partial = prepared.groupBy(*self.group_keys).agg(
                 *[F.expr(a.batch_expr).alias(a.name) for a in self.aggs]
             )
@@ -241,47 +254,174 @@ class IncrementalRunner(PinOwner):
                     {a.name: a.merge_expr for a in self.aggs},
                 )
             )
-        # the previous buffer/state fed the pins above; freeing them here
-        # keeps a long-running stream at one checkpoint generation, and
-        # the delta pin goes with this trigger
+        # the previous generation fed the pins above; freeing it here keeps
+        # a long-running stream at one checkpoint generation, and this
+        # trigger's pins that no segment carried go too
         self._commit()
         self._begin()
+
+    def _retain(self, prepared: DataFrame) -> None:
+        """The retention step: the delta's pin (one run of ``prepare``)
+        becomes the newest segment; every segment is then kept, evicted or
+        split by the cutoff from its stats, and the un-fold state adds the
+        delta and subtracts the evicted rows."""
+        dp = self.spark.sparkContext.defaultParallelism
+        new = self._segment(prepared.coalesce(dp))
+        for col, nulls, what in (
+            (self.order_col, new.o_nulls, "count"),
+            (self.time_col, new.t_nulls, "age"),
+        ):
+            if nulls:
+                self._begin()  # frees the refused delta's pin
+                raise ValueError(
+                    f"IncrementalRunner: {nulls} delta row(s) have a NULL "
+                    f"{col!r}, which {what} retention cannot place"
+                )
+        self.batches_seen += 1
+        if self._schema is None:
+            self._schema = new.df.schema
+        segs = [*self._segments, new] if new.rows else self._segments
+        # an empty delta moves neither the count cutoff nor the max event
+        # time, so nothing evicts
+        cut = thr = None
+        if new.rows and self.retention_count is not None:
+            cut = self._count_cutoff(segs)
+        if new.rows and self.retention_age is not None:
+            thr = max(s.t_cut for s in segs)
+        kept, evicted = [], []
+        for seg in segs:
+            if (cut is not None and seg.hi < cut) or (
+                thr is not None and seg.t_hi <= thr
+            ):
+                evicted.append(seg.df)
+            elif (cut is None or seg.lo >= cut) and (
+                thr is None or seg.t_lo > thr
+            ):
+                kept.append(seg)
+            else:
+                keep = self._keep(cut, thr)
+                part = self._segment(seg.df.filter(keep))
+                if part.rows:  # both retentions together may keep none
+                    kept.append(part)
+                evicted.append(seg.df.filter(~keep))
+        self._segments = self._compact(kept, dp)
+        if self._unfold:
+            merged = merge_grid(
+                self._state,
+                self._signed_partial(
+                    new.df,
+                    reduce(DataFrame.unionByName, evicted) if evicted else None,
+                ),
+                self.group_keys,
+            )
+            # prune fully-evicted groups from STATE, not just from
+            # read-out: otherwise state grows with all-time distinct
+            # keys instead of live keys. Safe — a reappearing key
+            # re-enters via its next delta partial. Caveat (documented,
+            # inherent to un-fold): double add/subtract partials
+            # accumulate FP drift vs recompute over very long runs;
+            # re-anchor periodically from the retained window if
+            # bit-parity matters.
+            self._state = self._pin(merged.filter(F.col(self._N) != 0))
+        # the retained segments outlive this trigger; evicted and split
+        # segments are freed with the old generation
+        for seg in self._segments:
+            self._carry(seg.df)
 
     def _needs_buffer(self) -> bool:
         return self.retention_count is not None or self.retention_age is not None
 
-    def _keep_predicate(self, buf: DataFrame):
-        """ActionRemove as a predicate: FIFO count eviction / age eviction
-        (server/.../actions/ActionRemove.java; age variant = the watermark
-        analog). Returns a Column (rows to KEEP) or None if nothing evicts;
-        the un-fold path negates it to aggregate exactly the evicted span.
-        """
-        preds = []
+    def _segment(self, df: DataFrame) -> _Segment:
+        """Pin ``df`` for this trigger (a retained segment is carried into
+        the next generation) with its stats observed by the pin's own
+        job."""
+        obs = Observation()
+        stats = [F.count(F.lit(1)).alias("rows")]
         if self.retention_count is not None:
-            # keep the newest N by arrival order — the reference's
-            # remove-oldest-beyond-max-length
-            cutoff_row = (
-                buf.select(self.order_col)
-                .orderBy(F.col(self.order_col).desc())
-                .limit(self.retention_count)
-                .agg(F.min(self.order_col).alias("m"))
-                .collect()[0]["m"]
-            )
-            if cutoff_row is not None:
-                preds.append(F.col(self.order_col) >= cutoff_row)
+            o = F.col(self.order_col)
+            stats += [
+                F.count_if(o.isNull()).alias("o_nulls"),
+                F.min(o).alias("lo"),
+                F.max(o).alias("hi"),
+            ]
         if self.retention_age is not None:
-            max_t = buf.agg(F.max(self.time_col).alias("m")).collect()[0]["m"]
-            if max_t is not None:
-                preds.append(
-                    F.col(self.time_col)
-                    > F.lit(max_t) - F.expr(f"INTERVAL {self.retention_age}")
-                )
-        if not preds:
+            t = F.col(self.time_col)
+            stats += [
+                F.count_if(t.isNull()).alias("t_nulls"),
+                F.min(F.unix_micros(t)).alias("t_lo"),
+                F.max(F.unix_micros(t)).alias("t_hi"),
+                F.unix_micros(
+                    F.max(t) - F.expr(f"INTERVAL {self.retention_age}")
+                ).alias("t_cut"),
+            ]
+        out = self._pin(df.observe(obs, *stats), trigger=True)
+        return _Segment(out, **obs.get)
+
+    def _count_cutoff(self, segs: list[_Segment]):
+        """ActionRemove, count variant: the smallest ``order_col`` of the
+        newest ``retention_count`` rows (every row at or above it is kept,
+        ties included), or None when nothing evicts. Newest segments that
+        lie wholly above all older ones are counted off from their stats;
+        if the rest of N is exactly the next segments and they lie above
+        all others, the cutoff is their minimum and no query runs.
+        Otherwise the top-N query ranks only the segments that can hold
+        the cutoff."""
+        n = self.retention_count
+        if sum(s.rows for s in segs) <= n:
             return None
-        pred = preds[0]
-        for p in preds[1:]:
-            pred = pred & p
-        return pred
+        rest = sorted(segs, key=lambda s: s.hi, reverse=True)
+        while rest[0].rows < n and rest[0].lo > max(s.hi for s in rest[1:]):
+            n -= rest.pop(0).rows
+        taken = k = 0
+        while taken < n:
+            taken += rest[k].rows
+            k += 1
+        floor = min(s.lo for s in rest[:k])
+        if taken == n and all(s.hi < floor for s in rest[k:]):
+            return floor
+        # every row of the N newest is >= floor, so a segment wholly
+        # below it holds none of them
+        ranked = reduce(
+            DataFrame.unionByName, [s.df for s in rest if s.hi >= floor]
+        )
+        return (
+            ranked.select(self.order_col)
+            .orderBy(F.col(self.order_col).desc())
+            .limit(n)
+            .agg(F.min(self.order_col).alias("m"))
+            .collect()[0]["m"]
+        )
+
+    def _keep(self, cut, thr: int | None) -> Column:
+        """ActionRemove as a predicate over a straddling segment: the rows
+        to KEEP (``order_col >= cut``, ``event time > thr``); the un-fold
+        path negates it to aggregate exactly the evicted part. NULLs never
+        reach it: such deltas are refused."""
+        preds = []
+        if cut is not None:
+            o = F.col(self.order_col)
+            # an integral column's cutoff comes back as an int
+            preds.append(
+                _at_least(o, cut) if isinstance(cut, int) else o >= F.lit(cut)
+            )
+        if thr is not None:
+            preds.append(
+                _at_least(F.unix_micros(F.col(self.time_col)), thr, strict=True)
+            )
+        return reduce(lambda a, b: a & b, preds)
+
+    def _compact(self, segs: list[_Segment], dp: int) -> list[_Segment]:
+        """Bound pins and partitions: while there are more than 2 × cores
+        segments, the adjacent pair with the fewest rows together is
+        copied into one."""
+        while len(segs) > 2 * dp:
+            i = min(
+                range(len(segs) - 1),
+                key=lambda i: segs[i].rows + segs[i + 1].rows,
+            )
+            pair = segs[i].df.unionByName(segs[i + 1].df).coalesce(dp)
+            segs[i : i + 2] = [self._segment(pair)]
+        return segs
 
     # -- read-out -----------------------------------------------------------
 
@@ -291,15 +431,15 @@ class IncrementalRunner(PinOwner):
 
         In un-fold mode this is a plain read of the maintained state —
         groups whose rows were all evicted are dropped via the hidden
-        live-row count, and NO aggregation over the retained buffer appears
-        in the plan (asserted by tests); recompute mode re-aggregates the
-        buffer (the fallback for non-invertible folds)."""
+        live-row count, and NO aggregation over the retained window
+        appears in the plan (asserted by tests); recompute mode
+        re-aggregates the window (the fallback for non-invertible folds)."""
         if self._needs_buffer():
-            if self._buffer is None:
+            if self._schema is None:
                 raise ValueError("no batches added")
             if self._unfold:
                 return self._state.filter(F.col(self._N) > 0).drop(self._N)
-            return self._buffer.groupBy(*self.group_keys).agg(
+            return self.window().groupBy(*self.group_keys).agg(
                 *[F.expr(a.batch_expr).alias(a.name) for a in self.aggs]
             )
         if self._state is None:
@@ -308,10 +448,19 @@ class IncrementalRunner(PinOwner):
 
     def window(self) -> DataFrame:
         """The retained population (retention mode only) — for roll columns
-        and inspection."""
-        if self._buffer is None:
+        and inspection: the segments' union, read in place and coalesced to
+        one partition per core."""
+        if self._schema is None:
             raise ValueError("retention mode only")
-        return self._buffer
+        if not self._segments:
+            return local_frame(self.spark, [], self._schema)
+        return reduce(
+            DataFrame.unionByName, [s.df for s in self._segments]
+        ).coalesce(self.spark.sparkContext.defaultParallelism)
+
+    def close(self) -> None:
+        super().close()
+        self._segments = []
 
     def state_rows(self) -> int:
         """Rows in the merged aggregate state (0 before the first batch)."""

@@ -11,7 +11,7 @@ from datetime import datetime, timedelta
 from decimal import Decimal
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -328,24 +328,27 @@ PARITY_AGGS = [
     AggSpec("s_tok", "sum(tok)", "sum", 0, invertible=True),
     AggSpec("s_v", "sum(v)", "sum", 0, invertible=True),
 ]
-# batch_ofs steps of 0 give ties; event_time is t0 + batch_ofs seconds
+# the last field is a batch_ofs step under monotone arrival (steps of 0
+# give ties) and the batch_ofs itself under overlapping arrival, where the
+# batch_ofs ranges of deltas interleave; event_time is t0 + batch_ofs
+# seconds
 PARITY_ROWS = st.lists(
     st.tuples(
         st.sampled_from(["a", "b", "c"]),
         st.integers(min_value=-50, max_value=50),
         st.integers(min_value=-(10**9), max_value=10**9),
-        st.integers(min_value=0, max_value=2),
+        st.integers(min_value=0, max_value=12),
     ),
     min_size=1,
     max_size=24,
 )
 
 
-def _parity_rows(drawn):
+def _parity_rows(drawn, arrival):
     t0 = datetime(2024, 1, 1)
     rows, ofs = [], 0
-    for src, tok, micros, step in drawn:
-        ofs += step
+    for src, tok, micros, x in drawn:
+        ofs = ofs + x % 3 if arrival == "monotone" else x
         v = Decimal(micros).scaleb(-6)
         rows.append((src, tok, v, ofs, t0 + timedelta(seconds=ofs)))
     return rows
@@ -378,19 +381,45 @@ def _aggregate(rows):
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
-@given(drawn=PARITY_ROWS, data=st.data())
-def test_incremental_retention_parity_property(spark, retention, drawn, data):
+@given(
+    drawn=PARITY_ROWS,
+    cuts=st.lists(st.integers(0, 24), max_size=3),
+    arrival=st.sampled_from(["monotone", "overlapping"]),
+)
+# three deltas of five rows: the window is exactly the newest segment
+@example(
+    drawn=[("a", 1, 1, 1), ("b", 2, -1, 1), ("c", 3, 5, 1)] * 5,
+    cuts=[5, 10],
+    arrival="monotone",
+)
+# a delta larger than the window, an empty one, then a delta it straddles
+@example(
+    drawn=[("a", 1, 7, 1), ("b", -4, 3, 4), ("c", 2, 0, 2)] * 4,
+    cuts=[9, 9],
+    arrival="monotone",
+)
+# deltas whose batch_ofs ranges interleave
+@example(
+    drawn=[("a", 1, 1, 0), ("b", 2, 2, 6), ("c", 3, 3, 12), ("a", 4, 4, 3),
+           ("b", 5, 5, 9), ("c", 6, 6, 1)] * 2,
+    cuts=[3, 6, 9],
+    arrival="overlapping",
+)
+def test_incremental_retention_parity_property(
+    spark, retention, drawn, cuts, arrival
+):
     """Random delta splits (a delta may outgrow the window, so its rows
-    are added and evicted in one step; batch_ofs ties straddle the
-    cutoff), under count and age retention: after EVERY step the un-fold
-    result, the recompute result and the batch aggregate over the rows
-    retention keeps are equal. No helper column leaks into result() or
-    window(), and the un-fold DECIMAL state is DECIMAL(38, 6) from step 1."""
-    rows = _parity_rows(drawn)
-    cuts = sorted(
-        data.draw(st.lists(st.integers(0, len(rows)), max_size=3))
-    )
-    bounds = [0, *cuts, len(rows)]
+    are added and evicted in one step; deltas may be empty; batch_ofs ties
+    straddle the cutoff; under overlapping arrival the deltas' batch_ofs
+    ranges interleave), under count and age retention: after EVERY step
+    the un-fold result, the recompute result and the batch aggregate over
+    the rows retention keeps are equal. Segments are then kept whole,
+    evicted whole or split, and the count cutoff comes from segment stats
+    or from a top-N query. No helper column leaks into result() or
+    window(), and the un-fold DECIMAL state is DECIMAL(38, 6) from step
+    1."""
+    rows = _parity_rows(drawn, arrival)
+    bounds = [0, *sorted(min(c, len(rows)) for c in cuts), len(rows)]
     deltas = [rows[lo:hi] for lo, hi in zip(bounds, bounds[1:])]
     kwargs = (
         retention
@@ -408,7 +437,7 @@ def test_incremental_retention_parity_property(spark, retention, drawn, data):
     try:
         for delta in deltas:
             seen += delta
-            want = _aggregate(_kept(seen, retention)) if seen else {}
+            kept = _kept(seen, retention) if seen else []
             frame = local_frame(spark, delta, PARITY_SCHEMA)
             for runner, s_v in zip(runners, ("decimal(38,6)", "decimal(30,6)")):
                 runner.add_batch(frame)
@@ -420,28 +449,33 @@ def test_incremental_retention_parity_property(spark, retention, drawn, data):
                     ("s_tok", "bigint"),
                     ("s_v", s_v),
                 ]
-                assert runner.window().schema == frame.schema
+                window = runner.window()
+                assert window.schema == frame.schema
+                assert sorted(window.collect()) == sorted(kept)
                 got = {r["src"]: tuple(r)[1:] for r in res.collect()}
-                assert got == want
+                assert got == _aggregate(kept)
     finally:
         for runner in runners:
             runner.close()
 
 
-# Spark jobs one steady-state retention add_batch of the calc →
-# broadcast-link delta below ran (4 CPUs) when prepare ran once per
-# consumer (cutoff collect, buffer pin, delta partial, evicted partial),
-# each consumer paying its own broadcast job
-PER_CONSUMER_PREPARE_JOBS = 9
+# Spark jobs one aligned steady-state retention add_batch of the calc →
+# broadcast-link delta below ran (4 CPUs) when every step ranked, filtered
+# and re-pinned the whole retained window (cutoff collect, window copy,
+# and an evict filter inside the state pin)
+WINDOW_COPY_JOBS = 7
 
 
 def test_incremental_retention_step_jobs_and_pins(spark):
-    """One steady-state un-fold retention step over a cached delta runs at
-    least 2 fewer Spark jobs than the ``PER_CONSUMER_PREPARE_JOBS`` it
-    ran when each consumer prepared the delta (prepare now runs once, and
-    add + evict is one aggregate), and returns holding exactly one buffer
-    and one state generation: the delta's pin is gone."""
+    """One aligned steady-state un-fold retention step over a cached delta
+    runs at least 2 fewer Spark jobs than the ``WINDOW_COPY_JOBS`` it ran
+    when each step copied the retained window: the delta's pin (its own
+    job observes the segment stats) and the state's pin; the cutoff comes
+    from the stats, and the oldest segment leaves whole. After each step
+    the runner holds one pin per retained segment plus the state, and at
+    most one segment more than the window needs."""
     size, n_deltas = 200, 5
+    retention = 2 * size
     full = token_table_fast(spark, size * n_deltas).cache()
     full.count()
     deltas = [
@@ -453,7 +487,7 @@ def test_incremental_retention_step_jobs_and_pins(spark):
     before = pinned_ids(spark)
     runner = IncrementalRunner(
         spark, lambda b: prepare_facts(spark, b), ["src"], UNFOLD_AGGS,
-        retention_count=2 * size,
+        retention_count=retention,
     )
     sc = spark.sparkContext
     jobs = []
@@ -465,11 +499,143 @@ def test_incremental_retention_step_jobs_and_pins(spark):
             sc.setJobGroup("", "")
             jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
             pinned = pinned_ids(spark) - before
-            assert pinned == runner.owned_ids and len(pinned) == 2, i
+            segments = len(runner._segments)
+            assert pinned == runner.owned_ids, i
+            assert len(pinned) == segments + 1, i
+            assert segments <= -(-retention // size) + 1, i
         # steps 2.. evict; the last two are steady state
-        assert max(jobs[-2:]) <= PER_CONSUMER_PREPARE_JOBS - 2, jobs
+        assert max(jobs[-2:]) <= WINDOW_COPY_JOBS - 2, jobs
         runner.close()
         assert pinned_ids(spark) == before
     finally:
         runner.close()
         full.unpersist()
+
+
+@pytest.mark.parametrize("unfold", [None, False], ids=["unfold", "recompute"])
+@pytest.mark.parametrize(
+    "retention",
+    [{"retention_count": 2}, {"retention_age": "4 seconds"}],
+    ids=["count", "age"],
+)
+def test_incremental_retention_refuses_null_retention_column(
+    spark, retention, unfold
+):
+    """A row whose retention column is NULL can be neither kept nor
+    evicted, so a delta holding one is refused with a ValueError naming
+    the column, read from the delta pin's own stats: the call leaves the
+    result, the owned pins and the session's pins as they were. Later
+    deltas fold as if the refused one never came (count: un-fold ==
+    recompute == window)."""
+    schema = "k string, ofs long, t timestamp"
+    t0 = datetime(2024, 1, 1)
+    at = lambda ofs: t0 + timedelta(seconds=ofs)
+    runner = IncrementalRunner(
+        spark, lambda b: b, ["k"],
+        [AggSpec("n", "count(*)", "sum", 0, invertible=True)],
+        order_col="ofs", time_col="t", unfold=unfold, **retention,
+    )
+    col = "ofs" if "retention_count" in retention else "t"
+    bad = [("a", None, None), ("a", 1, at(1))]
+    try:
+        with pytest.raises(ValueError, match=f"NULL '{col}'"):
+            runner.add_batch(local_frame(spark, bad, schema))
+        assert runner.owned_ids == frozenset() and runner.batches_seen == 0
+        runner.add_batch(local_frame(spark, [("a", 2, at(2)), ("a", 3, at(3))], schema))
+        result = runner.result().collect()
+        owned, pinned = runner.owned_ids, pinned_ids(spark)
+        with pytest.raises(ValueError, match=f"NULL '{col}'"):
+            runner.add_batch(local_frame(spark, bad, schema))
+        assert runner.owned_ids == owned and pinned_ids(spark) == pinned
+        assert runner.result().collect() == result == [("a", 2)]
+        assert runner.window().count() == 2
+    finally:
+        runner.close()
+
+
+def test_incremental_retention_compacts_segments(spark):
+    """40 one-partition deltas of 10 rows under a 300-row window: the
+    segment FIFO is compacted (the adjacent pair with the fewest rows is
+    merged) so it never holds more than 2 × cores segments, the window
+    never has more partitions than cores, the pins are exactly the
+    segments plus the state, and the result is the aggregate of the
+    newest 300 rows."""
+    n_deltas, size, keep = 40, 10, 300
+    cores = spark.sparkContext.defaultParallelism
+    aggs = [
+        AggSpec("n", "count(*)", "sum", 0, invertible=True),
+        AggSpec("s", "sum(batch_ofs)", "sum", 0, invertible=True),
+    ]
+    runner = IncrementalRunner(
+        spark, lambda b: b, ["src"], aggs, retention_count=keep
+    )
+    before = pinned_ids(spark)
+    try:
+        for lo in range(0, n_deltas * size, size):
+            runner.add_batch(
+                spark.range(lo, lo + size, numPartitions=1).select(
+                    F.concat(F.lit("s"), F.col("id") % 3).alias("src"),
+                    F.col("id").alias("batch_ofs"),
+                )
+            )
+            segments = len(runner._segments)
+            pinned = pinned_ids(spark) - before
+            assert segments <= 2 * cores, lo
+            assert pinned == runner.owned_ids, lo
+            assert len(pinned) == segments + 1, lo
+            assert runner.window().rdd.getNumPartitions() <= cores, lo
+        newest = range(n_deltas * size - keep, n_deltas * size)
+        want = {
+            f"s{m}": (len(ofs), sum(ofs))
+            for m in range(3)
+            for ofs in [[o for o in newest if o % 3 == m]]
+        }
+        got = {r["src"]: (r["n"], r["s"]) for r in runner.result().collect()}
+        assert got == want
+        assert runner.window().count() == keep
+    finally:
+        runner.close()
+
+
+
+@pytest.mark.parametrize(
+    "retention", [{"retention_count": 25}, {"retention_age": "24 seconds"}],
+    ids=["count", "age"],
+)
+def test_incremental_retention_cutoff_stays_out_of_generated_code(
+    spark, retention
+):
+    """Deltas of 10 rows under a window that is not a multiple of 10: every
+    evicting step ranks a straddling segment (count) and filters it by a
+    new cutoff. The cutoff reaches the filters by reference, not as an
+    inlined literal, so once each plan shape has compiled, an evicting
+    step compiles nothing (``CodegenMetrics`` counter; an inlined literal
+    recompiled 8 stages every evicting step)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    t0 = datetime(2024, 1, 1)
+    runner = IncrementalRunner(
+        spark, lambda b: b, ["src"], UNFOLD_AGGS, **retention
+    )
+    compiles = []
+    try:
+        for lo in range(0, 120, 10):
+            delta = [
+                ("ab"[o % 2], o, o, t0 + timedelta(seconds=o))
+                for o in range(lo, lo + 10)
+            ]
+            before = metrics.METRIC_COMPILATION_TIME().getCount()
+            runner.add_batch(
+                local_frame(
+                    spark, delta,
+                    "src string, n_tok_calc long, batch_ofs long, "
+                    "event_time timestamp",
+                )
+            )
+            compiles.append(metrics.METRIC_COMPILATION_TIME().getCount() - before)
+        # steps 3.. evict; the first two of them meet their plan shapes
+        assert compiles[4:] == [0] * len(compiles[4:]), compiles
+        assert runner.window().count() == (
+            25 if "retention_count" in retention else 24
+        )
+    finally:
+        runner.close()
