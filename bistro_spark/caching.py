@@ -27,17 +27,13 @@ not Spark Connect) and releases them once their last consumer is done:
   it owns the twin's pinned blocks by lifetime, so no twin keeps its own
   id bookkeeping. A **state** pin (``_pin(df)``) joins the generation
   being built; ``_commit()`` makes it current and frees the generation
-  it replaces, or, with ``hold=True``, keeps that one until the next
-  trigger starts (when the frame just returned still reads it). A
-  **trigger** pin (``_pin(df, trigger=True)``: deltas and outputs) is
-  freed by the next ``_begin()``, called when a trigger starts.
-  ``_carry(frame)`` moves a frame pinned earlier (current generation or
-  trigger lifetime) into the generation being built, so a pin can live
-  as long as its rows are retained without being copied again.
-  ``_sweep()`` frees whatever the twin's batch operator pinned
-  internally and the owner does not own; ``close()`` frees everything,
-  drops the twin's frames and is idempotent; ``owned_ids`` is the owned
-  set, read-only.
+  it replaces. A **trigger** pin (``_pin(df, trigger=True)``: deltas and
+  outputs) is freed by the next ``_begin()``, called when a trigger
+  starts. ``_carry(frame)`` moves a frame pinned earlier (current
+  generation or trigger lifetime) into the generation being built, so a
+  pin can live as long as its rows are retained without being copied
+  again. ``close()`` frees everything, drops the twin's frames and is
+  idempotent; ``owned_ids`` is the owned set, read-only.
 
 CAUTION: a released checkpoint CANNOT be recomputed (the executor raises
 ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``) — only release after every
@@ -174,27 +170,11 @@ class PinOwner:
         self._trigger -= ids
         self._next_gen |= ids
 
-    def _commit(self, hold: bool = False) -> None:
+    def _commit(self) -> None:
         """The generation being built replaces the current one, which is
-        freed now, or at the next :meth:`_begin` when ``hold``. Call it
-        after the last read of the old generation."""
+        freed now. Call it after the last read of the old generation."""
         old, self._gen, self._next_gen = self._gen, self._next_gen, set()
-        if hold:
-            self._trigger |= old
-        else:
-            self._release(old)
-
-    @contextmanager
-    def _sweep(self):
-        """Free, on exit, every block pinned inside that this owner does
-        not own (keep-pinned shared caches excepted: a raw set-difference
-        release would free them, and a released checkpoint cannot be
-        recomputed)."""
-        before = pinned_ids(self.spark)
-        try:
-            yield
-        finally:
-            release_new_pins(self.spark, before, exclude=self.owned_ids)
+        self._release(old)
 
     def close(self) -> None:
         """Free every block this twin owns and drop the twin's frames,

@@ -52,6 +52,7 @@ def main() -> None:
         StreamingOrphanTracker,
         tracker_maintenance_report,
     )
+    from bistro_spark.streaming.sink import write_json_atomic
 
     spark = (
         SparkSession.builder.appName("bistro-lakehouse-maintenance")
@@ -95,14 +96,10 @@ def main() -> None:
                     + "\n"
                 )
         done_epochs.add(epoch_id)
-        with open(state_path, "w") as fh:
-            json.dump(
-                {
-                    "tracker": tracker.state_snapshot(),
-                    "epochs": sorted(done_epochs),
-                },
-                fh,
-            )
+        snapshot = tracker.state_snapshot()
+        write_json_atomic(
+            state_path, {"tracker": snapshot, "epochs": sorted(done_epochs)}
+        )
 
     stream = (
         spark.readStream.schema(

@@ -46,6 +46,7 @@ def main() -> None:
     from pyspark.sql import SparkSession
 
     from bistro_spark.streaming.preference import StreamingPreferenceMiner
+    from bistro_spark.streaming.sink import write_json_atomic
 
     spark = (
         SparkSession.builder.appName("bistro-preference-stream")
@@ -73,14 +74,10 @@ def main() -> None:
             os.path.join(args.pairs, f"epoch={epoch_id}")
         )
         done_epochs.add(epoch_id)
-        with open(state_path, "w") as fh:
-            json.dump(
-                {
-                    "miner": miner.state_snapshot(),
-                    "epochs": sorted(done_epochs),
-                },
-                fh,
-            )
+        write_json_atomic(
+            state_path,
+            {"miner": miner.state_snapshot(), "epochs": sorted(done_epochs)},
+        )
 
     stream = (
         spark.readStream.schema(

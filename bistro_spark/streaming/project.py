@@ -108,104 +108,3 @@ def streaming_exact_dedup(
     return stream_df.withWatermark(time_col, watermark).dropDuplicatesWithinWatermark(
         keys
     )
-
-
-# ----------------------------------------- cross-batch span-dedup store ----
-
-
-class StreamingSpanDeduper(PinOwner):
-    """Streaming twin of ``operators.dedup.incremental_span_dedup`` — the
-    incremental-crawl flow as a foreachBatch stage: every micro-batch's
-    documents are scored against the span-hash store accumulated from all
-    previously RETAINED documents; docs at/over the duplicate-fraction
-    threshold are flagged, survivors contribute their spans to the store.
-
-    Semantics match repeated application of the batch operator with
-    ``old = all surviving docs so far`` (pytest-pinned): documents within
-    one micro-batch do not see each other's spans — exactly the batch
-    op's new/old split, applied per trigger.
-
-    State = DISTINCT span hashes of the retained corpus, localCheckpoint'ed
-    per batch to truncate lineage (on a cluster: an Iceberg/Delta table
-    MERGE'd per batch, or a bloom sketch when approximate pruning is
-    acceptable). State grows with retained-corpus vocabulary of spans —
-    the same asymptote the batch op's old side scans; the probe stays an
-    equi-join on the hash.
-    """
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        size: int = 8,
-        threshold: float = 0.5,
-        id_col: str = "doc_id",
-        text_col: str = "text",
-    ):
-        from fractions import Fraction
-
-        super().__init__(spark)
-        self.size = size
-        self.id_col = id_col
-        self.text_col = text_col
-        self._frac = Fraction(threshold).limit_denominator(10**6)
-        self._store: DataFrame | None = None  # distinct span hashes
-
-    def store_size(self) -> int:
-        return 0 if self._store is None else self._store.count()
-
-    def process_batch(self, batch_df: DataFrame) -> DataFrame:
-        """Score the batch, update the store with survivors' spans, and
-        return (id, n_spans, n_matched, is_dup) for the batch's docs.
-        The returned stats (and any join against them) are valid until the
-        NEXT ``process_batch`` call — their pinned blocks are recycled then
-        (consumed-within-trigger, the foreachBatch contract)."""
-        from bistro_spark.operators.curation import chunk_spans
-
-        spans = chunk_spans(
-            batch_df,
-            id_col=self.id_col,
-            text_col=self.text_col,
-            size=self.size,
-            overlap=0,
-        ).select(
-            self.id_col, F.md5(F.col("chunk_text")).alias("_h")
-        )
-        if self._store is not None:
-            probed = spans.join(
-                self._store.withColumn("_hit", F.lit(1)), "_h", "left"
-            )
-        else:
-            probed = spans.withColumn("_hit", F.lit(None).cast("int"))
-        stats = (
-            probed.groupBy(self.id_col)
-            .agg(
-                F.count("*").cast("long").alias("n_spans"),
-                F.sum(F.coalesce(F.col("_hit"), F.lit(0)))
-                .cast("long")
-                .alias("n_matched"),
-            )
-            .withColumn(
-                "is_dup",
-                (
-                    F.col("n_matched") * self._frac.denominator
-                    >= F.col("n_spans") * self._frac.numerator
-                ).cast("int"),
-            )
-        )
-        # score once: read out AND store
-        stats = self._pin(stats)
-        survivors = stats.filter(F.col("is_dup") == 0).select(self.id_col)
-        surv_spans = (
-            spans.join(survivors, self.id_col, "left_semi")
-            .select("_h")
-            .distinct()
-        )
-        new_store = (
-            surv_spans
-            if self._store is None
-            else self._store.unionByName(surv_spans).distinct()
-        )
-        self._store = self._pin(new_store)
-        # previous batch's store AND stats blocks have no consumers left
-        self._commit()
-        return stats

@@ -22,6 +22,21 @@ import os
 from pyspark.sql import DataFrame
 
 
+def write_json_atomic(path: str, obj) -> None:
+    """Replace ``path`` with ``obj`` as JSON: write a tmp file next to it,
+    then ``os.replace`` it over ``path``. A crash mid-write leaves the
+    previous file whole; an exception also removes the tmp file."""
+    tmp = path + ".tmp"
+    try:
+        with open(tmp, "w") as f:
+            json.dump(obj, f)
+        os.replace(tmp, path)
+    except BaseException:
+        if os.path.exists(tmp):
+            os.remove(tmp)
+        raise
+
+
 class IdempotentParquetSink:
     def __init__(self, root: str):
         self.root = root
@@ -43,7 +58,7 @@ class IdempotentParquetSink:
         Order matters for the exactly-once guarantee: data lands fully
         (overwrite → torn prior attempt erased) BEFORE the marker advances;
         a crash between the two replays the batch, which overwrites again —
-        idempotent. The marker write is a tmp-file + atomic rename.
+        idempotent. The marker write is :func:`write_json_atomic`.
         """
         if batch_id <= self.committed_through():
             # Replay after recovery — output already committed. The batch
@@ -58,10 +73,7 @@ class IdempotentParquetSink:
                 os.path.join(self.root, f"batch_id={batch_id}")
             )
         )
-        tmp = self._commit_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"batch_id": batch_id}, f)
-        os.replace(tmp, self._commit_path)
+        write_json_atomic(self._commit_path, {"batch_id": batch_id})
         return True
 
     def read_committed(self, spark) -> DataFrame:

@@ -1,14 +1,11 @@
-"""bottomk_sample + StreamingBottomKSampler: brute-force parity, the
-TakeOrderedAndProject plan shape, any-order streaming parity at every
-trigger, replay idempotence, O(k) state, kill/resume."""
+"""bottomk_sample and stratified_bottomk: brute-force parity and the
+TakeOrderedAndProject / WindowGroupLimit plan shapes."""
 
 from __future__ import annotations
 
 import hashlib
-import json
 
 from bistro_spark.operators.curation import bottomk_sample
-from bistro_spark.streaming.sample import StreamingBottomKSampler
 
 K = 12
 
@@ -39,40 +36,6 @@ def test_batch_matches_brute_force_and_plan(spark):
     assert "Sort " not in plan.split("TakeOrderedAndProject")[0]
 
 
-def test_streaming_any_order_parity_and_replay(spark):
-    rows = _rows()
-    orders = [rows, sorted(rows, key=lambda r: (r[0] * 7919) % 37)]
-    for order in orders:
-        mon = StreamingBottomKSampler(spark, k=K)
-        cuts = [0, 30, 70, len(order)]
-        seen: list = []
-        for lo, hi in zip(cuts, cuts[1:]):
-            seen.extend(order[lo:hi])
-            mon.process_batch(_df(spark, order[lo:hi]))
-            got = sorted(tuple(r) for r in mon.sample().collect())
-            want = sorted(
-                tuple(r)
-                for r in bottomk_sample(_df(spark, seen), k=K).collect()
-            )
-            assert got == want
-    # replay idempotence: refeeding a batch changes nothing
-    changed = mon.process_batch(_df(spark, rows[:30]))
-    assert changed == 0
-    assert len(mon.state_snapshot()) <= K
-
-
-def test_streaming_kill_resume(spark):
-    rows = _rows()
-    full = StreamingBottomKSampler(spark, k=K)
-    full.process_batch(_df(spark, rows[:50]))
-    snap = json.loads(json.dumps(full.state_snapshot()))
-    full.process_batch(_df(spark, rows[50:]))
-    fresh = StreamingBottomKSampler(spark, k=K)
-    fresh.restore_state(snap)
-    fresh.process_batch(_df(spark, rows[50:]))
-    assert fresh.state_snapshot() == full.state_snapshot()
-
-
 def test_stratified_bottomk_brute_and_plan(spark):
     from bistro_spark.operators.curation import stratified_bottomk
 
@@ -100,43 +63,3 @@ def test_stratified_bottomk_brute_and_plan(spark):
     out.collect()
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "WindowGroupLimit" in plan
-
-
-def test_streaming_stratified_any_order_parity(spark):
-    from bistro_spark.operators.curation import stratified_bottomk
-    from bistro_spark.streaming.sample import StreamingStratifiedSampler
-
-    rows = _rows(120)
-    orders = [rows, sorted(rows, key=lambda r: (r[0] * 7919) % 37)]
-    for order in orders:
-        mon = StreamingStratifiedSampler(spark, k=5)
-        cuts = [0, 40, 90, len(order)]
-        seen: list = []
-        for lo, hi in zip(cuts, cuts[1:]):
-            seen.extend(order[lo:hi])
-            mon.process_batch(_df(spark, order[lo:hi]))
-            got = sorted(tuple(r) for r in mon.sample().collect())
-            want = sorted(
-                tuple(r)
-                for r in stratified_bottomk(_df(spark, seen), k=5).collect()
-            )
-            assert got == want
-
-
-def test_streaming_stratified_resume_and_replay(spark):
-    import json
-
-    from bistro_spark.streaming.sample import StreamingStratifiedSampler
-
-    rows = _rows(120)
-    full = StreamingStratifiedSampler(spark, k=5)
-    full.process_batch(_df(spark, rows[:60]))
-    snap = json.loads(json.dumps(full.state_snapshot()))
-    full.process_batch(_df(spark, rows[60:]))
-    fresh = StreamingStratifiedSampler(spark, k=5)
-    fresh.restore_state(snap)
-    fresh.process_batch(_df(spark, rows[60:]))
-    assert fresh.state_snapshot() == full.state_snapshot()
-    assert fresh.process_batch(_df(spark, rows[:60])) == 0  # replay no-op
-    # state bound: <= k rows per stratum
-    assert all(len(v) <= 5 for v in fresh.state_snapshot().values())

@@ -5,6 +5,7 @@ exactly-once idempotent sink, checkpoint kill/resume."""
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 
@@ -13,7 +14,7 @@ from pyspark.sql import functions as F
 
 from bistro_spark.pipeline import prepare_facts
 from bistro_spark.sources.tokens import TOKEN_SCHEMA, token_table_fast
-from bistro_spark.streaming.sink import IdempotentParquetSink
+from bistro_spark.streaming.sink import IdempotentParquetSink, write_json_atomic
 from bistro_spark.streaming.windows import (
     session_window_accu,
     sliding_window_accu,
@@ -517,3 +518,23 @@ def test_streaming_rocksdb_state_store(spark, stream_dir, tmp_path):
         if k[0] + datetime.timedelta(seconds=60) <= wm
     }
     assert got == closed and len(got) > 0
+
+
+def test_snapshot_write_interrupted_keeps_previous_snapshot(
+    tmp_path, monkeypatch
+):
+    """An exception after the tmp file is opened (a crash mid-write)
+    leaves the previous snapshot loadable and no tmp file beside it."""
+    path = str(tmp_path / "state.json")
+    write_json_atomic(path, {"epochs": [0, 1]})
+
+    def torn_dump(obj, fh):
+        fh.write('{"epochs": [0, 1,')
+        raise OSError("disk gone")
+
+    monkeypatch.setattr(json, "dump", torn_dump)
+    with pytest.raises(OSError, match="disk gone"):
+        write_json_atomic(path, {"epochs": [0, 1, 2]})
+    with open(path) as fh:
+        assert json.load(fh) == {"epochs": [0, 1]}
+    assert os.listdir(tmp_path) == ["state.json"]

@@ -12,17 +12,14 @@ import pytest
 from pyspark.sql import functions as F
 
 from bistro_spark.caching import pinned_ids
-from bistro_spark.streaming import asof, cep, health, incremental, ingest
-from bistro_spark.streaming import maintenance, neardup, pack, project
-from bistro_spark.streaming import select, semdedup, temporal, web
+from bistro_spark.streaming import cep, incremental, maintenance, project
 
 RUNNER = (
     lambda df: df, ["source"], [incremental.AggSpec("n", "count(1)", "sum")]
 )
 
 # name -> (input table, twin factory); every twin is fed through
-# process_batch(delta), except the runner (add_batch) and the as-of
-# linker (left and right delta)
+# process_batch(delta), except the runner (add_batch)
 CASES = {
     "IncrementalRunner": (
         "docs", lambda s: incremental.IncrementalRunner(s, *RUNNER)
@@ -33,74 +30,30 @@ CASES = {
             s, *RUNNER, retention_count=100
         ),
     ),
-    "StreamingAsofLinker": (
-        "events",
-        lambda s: asof.StreamingAsofLinker(s, on="user_id", watermark_s=60.0),
-    ),
     "StreamingCepMatcher": ("events", cep.StreamingCepMatcher),
-    "StreamingCorpusHealth": ("docs", health.StreamingCorpusHealth),
-    "StreamingIngestPipeline": ("docs", ingest.StreamingIngestPipeline),
     "StreamingCompactionMonitor": (
         "docs",
         lambda s: maintenance.StreamingCompactionMonitor(
             s, target_bytes=4096
         ),
     ),
-    "StreamingNeardupLinker": ("emb", neardup.StreamingNeardupLinker),
-    "StreamingPacker": ("docs", pack.StreamingPacker),
-    "StreamingBinidxWriter": ("docs", pack.StreamingBinidxWriter),
-    "StreamingConcatChunker": ("docs", pack.StreamingConcatChunker),
-    "StreamingChunkReadPlanner": ("docs", pack.StreamingChunkReadPlanner),
-    "StreamingSftPackMonitor": (
-        "docs", lambda s: pack.StreamingSftPackMonitor(s, capacity=64)
-    ),
     "StreamingProjector": (
         "docs", lambda s: project.StreamingProjector(s, keys=["source"])
     ),
-    "StreamingSpanDeduper": ("docs", project.StreamingSpanDeduper),
-    "StreamingQuotaSelector": (
-        "docs",
-        lambda s: select.StreamingQuotaSelector(s, "source", "n_chars", n=5),
-    ),
-    "StreamingSkylineSelector": ("docs", select.StreamingSkylineSelector),
-    "StreamingTokenBudgetSelector": (
-        "raw",
-        lambda s: select.StreamingTokenBudgetSelector(
-            s, "source", "n_chars", budget=2000
-        ),
-    ),
-    "StreamingSemDedup": ("emb", semdedup.StreamingSemDedup),
-    "StreamingTransitionCounter": (
-        "events", temporal.StreamingTransitionCounter
-    ),
-    "StreamingSessionizer": (
-        "events", lambda s: temporal.StreamingSessionizer(s, gap_s=600.0)
-    ),
-    "StreamingZScorer": ("events", temporal.StreamingZScorer),
-    "StreamingCohortTracker": ("events", temporal.StreamingCohortTracker),
-    "StreamingDomainStats": ("docs", web.StreamingDomainStats),
 }
 
 
 def _table(spark, data, name):
     """(id column, id cut between the two triggers, frame)."""
-    df = spark.read.parquet(f"{data}/documents.parquet")
-    if name == "raw":  # the token-budget op derives its own n_tok
-        return "doc_id", 250, df
     if name == "docs":
+        df = spark.read.parquet(f"{data}/documents.parquet")
         return "doc_id", 250, df.select(
             "*",
-            (F.col("n_chars") % 97 + 1).alias("n_tok"),
             F.col("doc_id").alias("batch_ofs"),
-            F.col("n_chars").alias("x"),
-            (-F.col("doc_id")).alias("y"),
             F.col("source").alias("part"),
             F.col("doc_id").alias("file_id"),
             F.col("n_chars").alias("bytes"),
         )
-    if name == "emb":
-        emb = spark.read.parquet(f"{data}/embeddings.parquet")
-        return "vec_id", 250, emb
     return "event_id", 500, spark.read.parquet(f"{data}/events.parquet")
 
 
@@ -108,7 +61,7 @@ def _table(spark, data, name):
 def test_close_returns_pins_to_baseline(spark, sf_dir, name):
     table, factory = CASES[name]
     id_col, cut, df = _table(spark, sf_dir, table)
-    # id order is event-time order, the arrival the temporal twins assume
+    # id order is event-time order, the arrival the CEP matcher assumes
     ids = F.col(id_col)
     halves = [df.filter(ids < cut), df.filter(ids >= cut)]
     before = pinned_ids(spark)
@@ -116,8 +69,6 @@ def test_close_returns_pins_to_baseline(spark, sf_dir, name):
     for delta in halves:
         if name.startswith("IncrementalRunner"):
             twin.add_batch(delta)
-        elif name == "StreamingAsofLinker":
-            twin.process_batch(delta, delta)
         else:
             twin.process_batch(delta)
     assert pinned_ids(spark) - before  # the twin holds pinned state

@@ -130,67 +130,3 @@ def test_streaming_exact_dedup(spark, tmp_path):
     got = [r["doc_id"] for r in spark.sql("select doc_id from dedup_out").collect()]
     assert len(got) == 120  # 140 arrivals, 20 replays dropped
     assert len(set(got)) == 120
-
-
-def test_streaming_span_deduper_parity_with_batch_op(spark):
-    """Feeding doc batches through StreamingSpanDeduper must equal
-    repeated application of the batch operator with old = all surviving
-    docs so far — the cross-snapshot incremental-crawl semantics."""
-    from bistro_spark.operators.dedup import incremental_span_dedup
-    from bistro_spark.streaming.project import StreamingSpanDeduper
-
-    docs = (
-        spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-        .select("doc_id", "text")
-    )
-    batches = [
-        docs.filter(f"doc_id % 3 = {i}") for i in range(3)
-    ]
-
-    ded = StreamingSpanDeduper(spark, size=8, threshold=0.3)
-    retained = None  # batch-op view of the surviving corpus
-    cross_batch_matches = 0
-    for i, b in enumerate(batches):
-        got = sorted(tuple(r) for r in ded.process_batch(b).collect())
-        if i > 0:
-            cross_batch_matches += sum(r[2] for r in got)
-        if retained is None:
-            # first batch: nothing to match against
-            want = sorted(
-                tuple(r)
-                for r in incremental_span_dedup(
-                    b, b.limit(0), size=8, threshold=0.3
-                ).collect()
-            )
-        else:
-            want = sorted(
-                tuple(r)
-                for r in incremental_span_dedup(
-                    b, retained, size=8, threshold=0.3
-                ).collect()
-            )
-        assert got == want, f"batch {i} diverges from batch-op semantics"
-        surv_ids = [r[0] for r in got if r[3] == 0]
-        surv = b.filter(F.col("doc_id").isin(surv_ids))
-        retained = surv if retained is None else retained.unionByName(surv)
-        retained = retained.localCheckpoint(eager=True)
-    # the template-similar corpus must produce real cross-batch span
-    # matches (14 batch-1 docs share batch-0 spans pre-filter), else the
-    # parity above proved nothing
-    assert cross_batch_matches > 0 and ded.store_size() > 0
-
-
-def test_streaming_span_deduper_empty_batch(spark):
-    from bistro_spark.streaming.project import StreamingSpanDeduper
-
-    docs = spark.createDataFrame(
-        [(1, "a b c d e f g h")], ["doc_id", "text"]
-    )
-    ded = StreamingSpanDeduper(spark, size=4, threshold=0.5)
-    assert ded.process_batch(docs).count() == 1
-    assert ded.process_batch(docs.limit(0)).count() == 0
-    # the duplicate of doc 1 arriving later is flagged
-    out = ded.process_batch(
-        spark.createDataFrame([(2, "a b c d e f g h")], ["doc_id", "text"])
-    ).collect()[0]
-    assert out.is_dup == 1 and out.n_matched == 2

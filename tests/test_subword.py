@@ -5,8 +5,7 @@ split, the memoized Arrow encode, the fertility report and the SQL
 twins' per-document tail are written once. These tests pin the one
 word-split rule on Python, Spark and DuckDB, run each tokenizer's Spark
 encode and fertility against its DuckDB twin on text with Unicode
-whitespace, and guard by AST that the shared pieces (and the batch
-kernels the streaming twins reuse) stay shared."""
+whitespace, and guard by AST that the shared pieces stay shared."""
 
 from __future__ import annotations
 
@@ -180,39 +179,10 @@ def test_no_eight_line_window_shared_between_tokenizer_modules():
             assert not wins[a] & wins[b], (a, b)
 
 
-def _lookup(module, dotted):
-    node = ast.parse((PKG / module).read_text())
-    for name in dotted.split("."):
-        node = next(
-            n for n in node.body
-            if isinstance(n, (ast.FunctionDef, ast.ClassDef)) and n.name == name
-        )
-    return node
-
-
-STREAM_TWINS = {
-    ("streaming/vocab_growth.py", "StreamingVocabGrowth"): {
-        "vocab_growth_terms", "vocab_growth_from_grid",
-    },
-    ("streaming/pq.py", "pq_gate"): {"pq_encode"},
-    ("streaming/heavy.py", "StreamingHeavyHitters"): {"mg_summaries", "mg_cap"},
-    ("streaming/lm.py", "fit_kn_model"): {"word_ngrams"},
-    ("streaming/lm.py", "fit_kn3_model"): {"word_ngrams"},
-}
-
-
-@pytest.mark.parametrize("site", sorted(STREAM_TWINS), ids=lambda s: s[1])
-def test_streaming_twins_call_the_batch_kernels(site):
-    """The twins call the batch kernel and keep no copy of it: no Arrow
-    map stage, window or n-gram zip of their own."""
-    names = _names(_lookup(*site))
-    assert STREAM_TWINS[site] <= names
-    assert not names & {"mapInPandas", "pandas_udf", "Window", "arrays_zip"}
-
-
 def test_one_ngram_extractor():
     """arrays_zip appears only in curation.word_ngrams."""
-    for module in ["operators/curation.py", "streaming/lm.py"]:
+    for path in sorted(PKG.rglob("*.py")):
+        module = str(path.relative_to(PKG))
         for fn in _functions(module):
             if "arrays_zip" in _names(fn):
                 assert (module, fn.name) == ("operators/curation.py", "word_ngrams")

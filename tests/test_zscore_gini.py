@@ -1,27 +1,17 @@
-"""Expanding z-score (batch + streaming twin) and per-group length Gini
-— closed-form pins, the prior-exclusive contract, full-history streaming
-parity, and the global-rank-offset equivalence for Gini."""
+"""Expanding z-score and per-group length Gini — closed-form pins, the
+prior-exclusive contract and the global-rank-offset equivalence for
+Gini."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from bistro_spark.caching import pinned_ids
 from bistro_spark.operators.olap import length_gini
 from bistro_spark.operators.temporal import expanding_zscore
-from bistro_spark.streaming.temporal import StreamingZScorer
 
 
 def _events(spark):
     return spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-
-
-def _time_split(spark, n=3):
-    ev = _events(spark)
-    us = F.unix_micros(F.col("ts").cast("timestamp"))
-    lo, hi = ev.agg(F.min(us), F.max(us)).collect()[0]
-    cuts = [lo + (hi - lo + 1) * i // n for i in range(n + 1)]
-    return ev, [ev.filter((us >= cuts[i]) & (us < cuts[i + 1])) for i in range(n)]
 
 
 # --------------------------------------------------- expanding z-score ----
@@ -56,34 +46,6 @@ def test_zscore_partitioning_invariant(spark):
     a = sorted(tuple(r) for r in expanding_zscore(ev).collect())
     b = sorted(tuple(r) for r in expanding_zscore(ev.repartition(13)).collect())
     assert a == b
-
-
-def test_streaming_zscore_full_history_parity(spark):
-    """Emissions across any in-order batch split equal the batch op
-    row-for-row — prior-exclusive scoring never needs revision."""
-    ev, deltas = _time_split(spark, n=4)
-    want = sorted(tuple(r) for r in expanding_zscore(ev).collect())
-    z = StreamingZScorer(spark)
-    try:
-        got = []
-        for d in deltas:
-            got.extend(tuple(r) for r in z.process_batch(d).collect())
-        assert sorted(got) == want
-        n_keys = ev.select("user_id").distinct().count()
-        assert 0 < z.state_rows() <= n_keys
-    finally:
-        z.close()
-
-
-def test_streaming_zscore_close_releases_pins(spark):
-    ev, deltas = _time_split(spark)
-    before = pinned_ids(spark)
-    z = StreamingZScorer(spark)
-    for d in deltas:
-        z.process_batch(d)
-    assert len(pinned_ids(spark)) > len(before)
-    z.close()
-    assert pinned_ids(spark) <= before
 
 
 # ---------------------------------------------------------- length Gini ----
