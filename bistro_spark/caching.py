@@ -32,8 +32,10 @@ not Spark Connect) and releases them once their last consumer is done:
   starts. ``_carry(frame)`` moves a frame pinned earlier (current
   generation or trigger lifetime) into the generation being built, so a
   pin can live as long as its rows are retained without being copied
-  again. ``close()`` frees everything, drops the twin's frames and is
-  idempotent; ``owned_ids`` is the owned set, read-only.
+  again. ``_sweep()`` frees whatever the twin's batch operator pinned
+  internally and the owner does not own; ``close()`` frees everything,
+  drops the twin's frames and is idempotent; ``owned_ids`` is the owned
+  set, read-only.
 
 CAUTION: a released checkpoint CANNOT be recomputed (the executor raises
 ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``) — only release after every
@@ -175,6 +177,18 @@ class PinOwner:
         freed now. Call it after the last read of the old generation."""
         old, self._gen, self._next_gen = self._gen, self._next_gen, set()
         self._release(old)
+
+    @contextmanager
+    def _sweep(self):
+        """Free, on exit, every block pinned inside that this owner does
+        not own (keep-pinned shared caches excepted: a raw set-difference
+        release would free them, and a released checkpoint cannot be
+        recomputed)."""
+        before = pinned_ids(self.spark)
+        try:
+            yield
+        finally:
+            release_new_pins(self.spark, before, exclude=self.owned_ids)
 
     def close(self) -> None:
         """Free every block this twin owns and drop the twin's frames,

@@ -30,7 +30,13 @@ Scale design (the reason this is NOT a window query):
   lower-seq upsert arriving after the tombstone must not resurrect the
   key — the struct-max gives that for free.
 - replay tolerance: ``max`` is idempotent, so an at-least-once delivery
-  that re-folds the same log slice leaves the snapshot unchanged.
+  that re-folds the same log slice leaves the snapshot unchanged (the
+  property the streaming twin pins in pytest).
+
+The streaming twin (``streaming/cdc.StreamingUpsertStore``) maintains the
+same fold incrementally with per-key state and matches this operator's
+output EXACTLY at every trigger in ANY arrival order, because max is
+commutative, associative, and idempotent.
 """
 
 from __future__ import annotations

@@ -417,8 +417,8 @@ def next_fit(lens, cap, cursor=None):
     that does not fit opens the next pack at offset 0, so an item longer
     than ``cap`` gets a pack to itself. Returns int64 ``(pack_ids,
     offsets)``. Folding ``a + b`` equals folding ``a``, then ``b`` from
-    ``a``'s end cursor: that is why the streaming compaction monitor
-    equals its batch operator by construction.
+    ``a``'s end cursor: that is why each streaming packer equals its
+    batch operator by construction.
 
     The fold stays a per-item Python loop over ``tolist()`` (~0.5 µs per
     item): a vectorized cumsum+searchsorted "jump per pack" rewrite
@@ -1638,8 +1638,8 @@ def dsir_bucket_counts(
     """DSIR's sufficient statistics: per hash bucket, the target-slice
     and raw-corpus feature counts — ONE partial-aggregated pass down to
     ``n_buckets`` rows. ADDITIVE across corpus splits (they are plain
-    counts), so they can be summed split by split in O(n_buckets)
-    state."""
+    counts), which is what makes the exact streaming twin
+    (`streaming.dsir`) possible with O(n_buckets) state."""
     B = n_buckets
     bucket = (
         F.conv(F.substring(F.md5(F.col("_t")), 1, 8), 16, 10).cast("bigint") % B
@@ -2161,7 +2161,8 @@ def calibrate_signal(
 
 def signal_counts(sig: DataFrame, group_col: str = "source") -> DataFrame:
     """The calibration sufficient statistic: the (group, v, c_eq) level
-    set — ONE partial-aggregated groupBy; additive across batches."""
+    set — ONE partial-aggregated groupBy; additive across batches
+    (the streaming twin's state)."""
     return sig.groupBy(group_col, "v").agg(
         F.count(F.lit(1)).cast("long").alias("c_eq")
     )
@@ -3367,9 +3368,9 @@ def shard_prefix(
     order. One window, no pandas kernel.
 
     ``starts`` is a (shard, *masses) frame of where each shard's layout
-    already stands: a carried cursor. Its shards start there (others at
-    0), joined in by broadcast. Also returns each shard's mass totals,
-    the cursor advance to add to ``starts``;
+    already stands: a streaming twin's carried cursor. Its shards start
+    there (others at 0), joined in by broadcast. Also returns each
+    shard's mass totals, the cursor advance a twin adds to ``starts``;
     appending a delta laid out this way to the layout of everything
     before it IS the layout of the union, when ids arrive in order."""
     w = (

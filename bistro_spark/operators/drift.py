@@ -47,7 +47,8 @@ def _bucket(col):
 def length_counts(df: DataFrame, group_col: str, len_col: str) -> DataFrame:
     """The additive sufficient statistic behind length drift: exact
     (group, bucket, count) rows — at most groups x 16 of them regardless
-    of input size, and mergeable by summation."""
+    of input size, and mergeable by summation (what the streaming twin
+    accumulates as its constant-size state)."""
     return df.groupBy(
         F.col(group_col), _bucket(F.col(len_col)).alias("_bk")
     ).agg(F.count(F.lit(1)).alias("_n"))

@@ -505,8 +505,9 @@ def ks_drift(
 
 
 def ks_from_grid(per: DataFrame, group_col: str = "source") -> DataFrame:
-    """The grid→report core of :func:`ks_drift`, over the additive
-    (group, _len, _c) grid. Everything here is dimension-sized."""
+    """The grid→report core of :func:`ks_drift`, shared with the
+    streaming twin (whose state IS the additive (group, _len, _c) grid).
+    Everything here is dimension-sized."""
     from pyspark.sql import Window as _W
 
     groups = per.groupBy(group_col).agg(

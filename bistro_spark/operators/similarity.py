@@ -816,7 +816,8 @@ def pq_encode(
     smallest index, numpy argmin's rule == the oracle's ORDER BY dist, j).
     Map-only: the codebook closes over the Arrow kernel (the numpy analog
     of F.broadcast), one pass, no shuffle. ``keep`` lists passthrough
-    columns. Pure projection, so it applies verbatim to a stream."""
+    columns. Pure projection, so it applies verbatim to a stream
+    (``streaming/pq.pq_gate``)."""
     import numpy as np
 
     C = np.asarray(codebook, dtype=np.int64)

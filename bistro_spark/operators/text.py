@@ -677,8 +677,8 @@ def bm25_scores(
 def bm25_stats(df: DataFrame, terms: list[str], text_col: str = "text") -> DataFrame:
     """BM25's sufficient statistics as ONE corpus pass -> one row:
     (N, total token count, df per term) — all partial-aggregatable AND
-    additive across corpus splits, so they can be summed split by split
-    in O(#terms) state."""
+    additive across corpus splits, which is what makes the exact
+    streaming twin (`streaming.bm25`) possible with O(#terms) state."""
     words = F.split(F.col(text_col), " ")
     return df.agg(
         F.count(F.lit(1)).cast("long").alias("_n_docs"),

@@ -83,7 +83,7 @@ def fim_transform(
 
     Scale: pure per-row projection — no shuffle, no UDF, one
     whole-stage-codegen span; the same expressions serve a streaming
-    DataFrame verbatim.
+    DataFrame verbatim (``streaming/pack.streaming_fim_gate``).
     Determinism: cut points are md5 functions of the id, so the
     transform is identical on any cluster shape, any partitioning, and
     across re-runs — the property that makes the augmentation
@@ -774,7 +774,8 @@ def sft_turn_spans(
     rows per document, the chunk-explode contract of concat_chunks) —
     no shuffle, no UDF, closed-form integer math only; md5-determined
     turn count makes it checkpoint-safe and cluster-shape-invariant,
-    and the same expressions serve a streaming DataFrame verbatim.
+    and the same expressions serve a streaming DataFrame verbatim
+    (``streaming/pack.streaming_sft_gate``).
     """
     wrd = F.filter(
         F.split(F.col(text_col), " "), lambda x: x != F.lit("")

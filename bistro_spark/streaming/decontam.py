@@ -4,9 +4,9 @@ documents on a LIVE ingest stream.
 The batch scan (``operators/curation.contamination``) counts each train
 document's n-gram collisions against a broadcast eval-gram set — and
 that count is a pure function of the ROW (its own grams) and the FIXED
-eval set, so the streaming form is a stateless map-only Arrow gate, the
-``streaming/lm.py`` contract: fit once batch-side, project live, no
-state store, no watermark, no shuffle.
+eval set, so the streaming form is a stateless map-only Arrow gate: fit
+once batch-side, project live, no state store, no watermark, no
+shuffle.
 
 The kernel reproduces ``dedup.ngram_set``'s gram definition exactly —
 consecutive word n-grams of the space-split text, hashed to the first 8

@@ -39,7 +39,7 @@ This mode exists for (a) row-for-row parity tests against the oracle with
 scripted batch boundaries, (b) count-based retention, which Structured
 Streaming cannot express (no count-based windows) — SURVEY.md §7.3/§7.4.
 
-An additive streaming accumulate is this loop with retention off: per
+The additive streaming monitors are this loop with retention off: per
 trigger a partial aggregate over the delta (the batch operator's own
 partials), merged into a key grid, and a report that is the batch
 operator's finalizer over that grid. Counts and sums commute, so the
@@ -53,9 +53,9 @@ of two places, chosen by the state type:
   vocabulary-sized stores stay in the engine, where they can grow past
   driver memory.
 - :class:`DriverSumGrid` keeps a small keyed BIGINT grid on the driver.
-  Its finalizer runs in Python or over a ``local_frame`` (the
-  compaction monitor's report counters); it snapshots to JSON for
-  kill/resume, and a trigger costs one collect, with no checkpoint job.
+  Its finalizers run in Python (the DSIR log-ratio table) or over a
+  ``local_frame``; it snapshots to JSON for kill/resume, and a
+  trigger costs one collect, with no checkpoint job.
 """
 
 from __future__ import annotations

@@ -8,7 +8,7 @@ epoch just committed), keep the greedy merge-group fold warm per
 partition, and read the decision artifact live instead of re-scanning
 the full manifest per maintenance cycle.
 
-Shape (a carried fold cursor, applied to files):
+Shape (the ``StreamingPacker`` discipline, applied to files):
 
 - the greedy no-split fold is sequential per partition, so the monitor
   carries ONE ``(group_id, fill)`` cursor per partition across triggers

@@ -3,7 +3,7 @@ to their m-byte PQ codes LIVE, against a codebook fitted once batch-side.
 
 The batch encode (``operators/similarity.pq_encode``) is a pure function
 of the ROW (its own vector) and the FIXED codebook, so the streaming
-form is the stateless map-only Arrow gate of ``streaming/lm.py`` /
+form is the stateless map-only Arrow gate of
 ``streaming/decontam.py``: fit once on a corpus snapshot
 (``pq_sample_codebook`` — deterministic md5-bottom-k, so refitting on
 the same snapshot reproduces the same codebook), project live, no state

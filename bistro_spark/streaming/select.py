@@ -21,7 +21,7 @@ Semantics vs the batch op over FULL history:
   semantics). Example: budget 10, A(order 5, 8 tok) kept, B(order 4,
   8 tok) rejected; a later C(order 3, 1 tok) is kept here (8+1 ≤ 10)
   while a full-history recompute would count B and reject C. The parity
-  contract (pytest-pinned, mirroring StreamingSpanDeduper) is therefore
+  contract (pytest-pinned) is therefore
   with the batch op applied to (retained ∪ delta) each trigger.
 
 State is a keep-released localCheckpoint chain (``bistro_spark.caching``):

@@ -16,8 +16,7 @@ in a nightly batch:
   * seen-URL membership (url_norm-keyed, append-only): the delta's
     distinct new URLs are found with one anti-join probe; on a real
     cluster this is an Iceberg table bucketed by url_norm so the probe
-    is storage-partition-local and delta-bounded (the same discipline as
-    ``streaming/neardup.py``'s bucket store).
+    is storage-partition-local and delta-bounded.
   * the domain grid (domain, n_pages, n_docs): ADDITIVE — every batch
     doc increments its domain's n_docs exactly once, every first-seen
     URL increments n_pages exactly once, so the merge is a

@@ -1,12 +1,13 @@
 """CDC changelog application: batch snapshot semantics (last write wins,
-tombstones, no-resurrect), the no-window plan shape and the as-of
-history."""
+tombstones, no-resurrect), the no-window plan shape, and the streaming
+upsert store's any-order / replay / kill-resume parity contract."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from bistro_spark.operators.cdc import apply_changelog
+from bistro_spark.streaming.cdc import StreamingUpsertStore
 
 SCHEMA = "entity_id long, seq long, op string, event_type string, value double"
 
@@ -73,6 +74,87 @@ def test_apply_changelog_empty_and_all_deleted(spark):
         _df(spark, [(7, 1, "U", "signup", 1.0), (7, 2, "D", "error", 0.0)])
     )
     assert dead.count() == 0
+
+
+def _snap_rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def test_streaming_any_order_parity_every_trigger(spark):
+    """Snapshot equals batch apply_changelog over everything seen, at
+    EVERY trigger, in ANY arrival order (max is commutative/associative)."""
+    orders = [
+        sorted(LOG, key=lambda r: r[1]),  # seq-monotone arrival
+        sorted(LOG, key=lambda r: (r[1] * 7919) % 23),  # scrambled
+        list(reversed(sorted(LOG, key=lambda r: r[1]))),  # reverse
+    ]
+    for rows in orders:
+        store = StreamingUpsertStore(spark)
+        cuts = [0, 3, 6, len(rows)]
+        seen = []
+        for lo, hi in zip(cuts, cuts[1:]):
+            seen.extend(rows[lo:hi])
+            store.process_batch(_df(spark, rows[lo:hi]))
+            assert _snap_rows(store.snapshot()) == _snap_rows(
+                apply_changelog(_df(spark, seen))
+            )
+
+
+def test_streaming_tombstone_blocks_late_upsert(spark):
+    store = StreamingUpsertStore(spark)
+    store.process_batch(_df(spark, [(4, 40, "D", "error", 0.0)]))
+    store.process_batch(_df(spark, [(4, 35, "U", "view", 4.0)]))
+    assert store.snapshot().count() == 0
+    # ...but a HIGHER-seq upsert resurrects
+    store.process_batch(_df(spark, [(4, 41, "U", "view", 5.0)]))
+    assert _snap_rows(store.snapshot()) == [(4, 41, "view", 5.0)]
+
+
+def test_streaming_replay_idempotent(spark):
+    """At-least-once delivery: re-folding the same delta is a no-op."""
+    store = StreamingUpsertStore(spark)
+    batch = LOG[:5]
+    assert store.process_batch(_df(spark, batch)) > 0
+    before = _snap_rows(store.snapshot())
+    assert store.process_batch(_df(spark, batch)) == 0
+    assert _snap_rows(store.snapshot()) == before
+
+
+def test_streaming_kill_resume_parity(spark):
+    rows = sorted(LOG, key=lambda r: r[1])
+    cuts = [0, 4, 7, len(rows)]
+    full = StreamingUpsertStore(spark)
+    snaps = []
+    for lo, hi in zip(cuts, cuts[1:]):
+        full.process_batch(_df(spark, rows[lo:hi]))
+        snaps.append(full.state_snapshot())
+    resumed = StreamingUpsertStore(spark)
+    resumed.process_batch(_df(spark, rows[cuts[0] : cuts[1]]))
+    fresh = StreamingUpsertStore(spark)
+    fresh.restore_state(snaps[0])
+    for lo, hi in zip(cuts[1:], cuts[2:]):
+        fresh.process_batch(_df(spark, rows[lo:hi]))
+    assert fresh.state_snapshot() == snaps[-1]
+    assert _snap_rows(fresh.snapshot()) == _snap_rows(full.snapshot())
+
+
+def test_streaming_state_entity_bounded(spark):
+    store = StreamingUpsertStore(spark)
+    store.process_batch(_df(spark, LOG))
+    # one state row per DISTINCT key (tombstones retained), not per log row
+    snap = store.state_snapshot()
+    assert set(snap) == {1, 2, 3, 4, 5}
+    assert len(snap) < len(LOG)
+    # guard fires when the key budget would be exceeded
+    tiny = StreamingUpsertStore(spark, max_keys=2)
+    try:
+        tiny.process_batch(_df(spark, LOG))
+        raise AssertionError("max_keys guard did not fire")
+    except ValueError as e:
+        assert "key count" in str(e)
+
+
+# ------------------------------------------------------ SCD2 history ----
 
 
 def test_changelog_history_worked_example(spark):

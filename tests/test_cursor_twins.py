@@ -1,12 +1,13 @@
-"""A cursor twin runs its batch operator from a carried cursor.
+"""The five cursor twins run their batch operator from a carried cursor.
 
-An id-monotone twin (the compaction monitor) runs its batch operator's
-own code over the delta, starting where the previous trigger left the
-shard. So under id-monotone arrival, cut anywhere and killed/resumed
-anywhere, the union of its trigger outputs equals the batch operator
-over the union. The AST guards keep the twin on that code (no window,
-explode, pandas kernel or fold of its own) and the batch operators on
-the shared kernels."""
+Each id-monotone twin (the packer, the three append-only layout twins
+and the compaction monitor) runs its batch operator's own code over the
+delta, starting where the previous trigger left the shard. So under
+id-monotone arrival, cut anywhere and killed/resumed anywhere, the union
+of its trigger outputs equals the batch operator over the union. The
+AST guard keeps the twins on that code: no window, explode, pandas
+kernel or fold of their own, and the layout twins' recovery state is
+their cursor grid's."""
 
 from __future__ import annotations
 
@@ -17,21 +18,72 @@ from pathlib import Path
 
 import pytest
 
+from bistro_spark.operators.curation import binidx_manifest, pack_sequences
 from bistro_spark.operators.maintenance import compaction_plan
+from bistro_spark.operators.trainprep import chunk_read_plan, concat_chunks
 from bistro_spark.session import local_frame
 from bistro_spark.streaming.maintenance import StreamingCompactionMonitor
+from bistro_spark.streaming.pack import (
+    StreamingBinidxWriter,
+    StreamingChunkReadPlanner,
+    StreamingConcatChunker,
+    StreamingPacker,
+)
 
 PKG = Path(__file__).resolve().parents[1] / "bistro_spark"
 N = 160
+
+
+def _docs(rng):
+    return [(i, rng.randint(1, 90)) for i in range(N)]
 
 
 def _files(rng):
     return [(f"p{i % 3}", i, rng.randint(1, 120)) for i in range(N)]
 
 
+def _reads(rows):
+    """Read entries grouped to chunk_read_plan's offset-ordered arrays."""
+    plans: dict = {}
+    for shard, chunk_id, _doc, off, nb in rows:
+        plans.setdefault((shard, chunk_id), []).append((off, nb))
+    return sorted((k, tuple(sorted(v))) for k, v in plans.items())
+
+
+def _plan_rows(rows):
+    return sorted(
+        ((r[0], r[1]), tuple(zip(r[4], r[5]))) for r in rows
+    )
+
+
+DOC = "doc_id long, n_tok long"
 # twin factory, input rows, input schema, id column, batch operator,
 # canonical form of the twin's rows, canonical form of the batch rows
 CASES = {
+    "StreamingPacker": (
+        lambda s: StreamingPacker(s, capacity=100, n_shards=4),
+        _docs, DOC, "doc_id",
+        lambda df: pack_sequences(df, len_col="n_tok", capacity=100),
+        sorted, sorted,
+    ),
+    "StreamingBinidxWriter": (
+        lambda s: StreamingBinidxWriter(s, n_shards=4),
+        _docs, DOC, "doc_id",
+        lambda df: binidx_manifest(df, len_col="n_tok"),
+        sorted, sorted,
+    ),
+    "StreamingConcatChunker": (
+        lambda s: StreamingConcatChunker(s, capacity=64, n_shards=4),
+        _docs, DOC, "doc_id",
+        lambda df: concat_chunks(df, len_col="n_tok", capacity=64),
+        sorted, sorted,
+    ),
+    "StreamingChunkReadPlanner": (
+        lambda s: StreamingChunkReadPlanner(s, capacity=64, n_shards=4),
+        _docs, DOC, "doc_id",
+        lambda df: chunk_read_plan(df, len_col="n_tok", capacity=64),
+        _reads, _plan_rows,
+    ),
     "StreamingCompactionMonitor": (
         lambda s: StreamingCompactionMonitor(s, target_bytes=300),
         _files, "part string, file_id long, bytes long", "file_id",
@@ -69,9 +121,20 @@ def test_trigger_union_equals_batch_over_union(spark, name, seed):
 # ------------------------------------------------------------- guard ----
 
 KERNELS = {
+    "streaming/pack.py": {
+        "StreamingPacker": "pack_shards",
+        "StreamingBinidxWriter": "binidx_layout",
+        "StreamingConcatChunker": "concat_layout",
+        "StreamingChunkReadPlanner": "chunk_reads",
+    },
     "streaming/maintenance.py": {
         "StreamingCompactionMonitor": "compaction_groups",
     },
+}
+PREFIX_TWINS = {
+    "StreamingBinidxWriter",
+    "StreamingConcatChunker",
+    "StreamingChunkReadPlanner",
 }
 OWN_CODE = {
     "Window", "sequence", "explode", "applyInPandas", "next_fit",
@@ -80,7 +143,8 @@ OWN_CODE = {
 
 
 def test_cursor_twins_run_their_batch_kernel():
-    """Each twin names its batch kernel and re-writes none of it."""
+    """Each twin names its batch kernel and re-writes none of it; the
+    layout twins keep no snapshot format of their own."""
     found, offenders = set(), []
     for module, kernels in KERNELS.items():
         tree = ast.parse((PKG / module).read_text())
@@ -96,6 +160,13 @@ def test_cursor_twins_run_their_batch_kernel():
             if kernels[cls.name] not in names:
                 offenders.append(f"{cls.name}: no {kernels[cls.name]}")
             offenders += [f"{cls.name}: {n}" for n in sorted(names & OWN_CODE)]
+            if cls.name in PREFIX_TWINS:
+                offenders += [
+                    f"{cls.name}.{n.name}"
+                    for n in cls.body
+                    if isinstance(n, ast.FunctionDef)
+                    and n.name in ("state_snapshot", "restore_state")
+                ]
     assert found == {n for k in KERNELS.values() for n in k}
     assert offenders == []
 

@@ -1,12 +1,12 @@
-"""The one next-fit kernel behind the five greedy packing folds.
+"""The one next-fit kernel behind the six greedy packing folds.
 
 ``curation.next_fit`` holds the rule. The two capacity sweeps call it;
-``pack_sequences``, ``compaction_plan`` and ``StreamingCompactionMonitor``
-call it through the one per-group fold ``curation.fold_groups``. The
-property tests state, on pure Python, the batch = stream identity the
-streaming parity rests on; the row-guard test covers the shared
-one-group-per-task bound at all five callers; an AST guard keeps the
-sites on the kernel."""
+``pack_sequences``, ``compaction_plan``, ``StreamingPacker`` and
+``StreamingCompactionMonitor`` call it through the one per-group fold
+``curation.fold_groups``. The property tests state, on pure
+Python, the batch = stream identity the streaming parity rests on; the
+row-guard test covers the shared one-group-per-task bound at all six
+callers; an AST guard keeps the sites on the kernel."""
 
 from __future__ import annotations
 
@@ -139,6 +139,15 @@ def _compaction(spark, n):
     return compaction_plan(_files(spark, n), partition_col="part")
 
 
+def _stream_pack(spark, n):
+    from bistro_spark.streaming.pack import StreamingPacker
+
+    packer = StreamingPacker(
+        spark, n_shards=1, len_col="n_words", max_rows_per_batch_shard=BOUND
+    )
+    return packer.process_batch(_docs(spark, n))
+
+
 def _stream_compaction(spark, n):
     from bistro_spark.streaming.maintenance import StreamingCompactionMonitor
 
@@ -153,6 +162,7 @@ CALLERS = {
     "pack_capacity_sweep": (_capacity_sweep, "MAX_ROWS_PER_SHARD"),
     "attention_cost_sweep": (_attention_sweep, "MAX_ROWS_PER_SHARD"),
     "compaction_plan": (_compaction, "MAX_ROWS_PER_SHARD"),
+    "StreamingPacker": (_stream_pack, "max_rows_per_batch_shard"),
     "StreamingCompactionMonitor": (
         _stream_compaction,
         "max_files_per_batch_partition",
@@ -173,7 +183,7 @@ def test_row_guard_names_the_bound(spark, monkeypatch, caller):
 
 # -------------------------------------------------------------- guard ----
 
-# pack_sequences, compaction_plan and the compaction twin fold through
+# pack_sequences, compaction_plan and their streaming twins fold through
 # fold_groups (their references to it are guarded in
 # test_cursor_twins.py)
 SITES = {

@@ -12,7 +12,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from bistro_spark.caching import pinned_ids
-from bistro_spark.streaming import cep, incremental, maintenance, project
+from bistro_spark.streaming import cep, incremental, maintenance, pack
+from bistro_spark.streaming import project, select, web
 
 RUNNER = (
     lambda df: df, ["source"], [incremental.AggSpec("n", "count(1)", "sum")]
@@ -37,19 +38,43 @@ CASES = {
             s, target_bytes=4096
         ),
     ),
+    "StreamingPacker": ("docs", pack.StreamingPacker),
+    "StreamingBinidxWriter": ("docs", pack.StreamingBinidxWriter),
+    "StreamingConcatChunker": ("docs", pack.StreamingConcatChunker),
+    "StreamingChunkReadPlanner": ("docs", pack.StreamingChunkReadPlanner),
+    "StreamingSftPackMonitor": (
+        "docs", lambda s: pack.StreamingSftPackMonitor(s, capacity=64)
+    ),
     "StreamingProjector": (
         "docs", lambda s: project.StreamingProjector(s, keys=["source"])
     ),
+    "StreamingQuotaSelector": (
+        "docs",
+        lambda s: select.StreamingQuotaSelector(s, "source", "n_chars", n=5),
+    ),
+    "StreamingSkylineSelector": ("docs", select.StreamingSkylineSelector),
+    "StreamingTokenBudgetSelector": (
+        "raw",
+        lambda s: select.StreamingTokenBudgetSelector(
+            s, "source", "n_chars", budget=2000
+        ),
+    ),
+    "StreamingDomainStats": ("docs", web.StreamingDomainStats),
 }
 
 
 def _table(spark, data, name):
     """(id column, id cut between the two triggers, frame)."""
+    df = spark.read.parquet(f"{data}/documents.parquet")
+    if name == "raw":  # the token-budget op derives its own n_tok
+        return "doc_id", 250, df
     if name == "docs":
-        df = spark.read.parquet(f"{data}/documents.parquet")
         return "doc_id", 250, df.select(
             "*",
+            (F.col("n_chars") % 97 + 1).alias("n_tok"),
             F.col("doc_id").alias("batch_ofs"),
+            F.col("n_chars").alias("x"),
+            (-F.col("doc_id")).alias("y"),
             F.col("source").alias("part"),
             F.col("doc_id").alias("file_id"),
             F.col("n_chars").alias("bytes"),

@@ -1,23 +1,16 @@
-"""Streaming twins of the web family and SemDeDup: full-history parity
-with the batch ops (domain grid: ANY arrival order; semdedup:
-id-monotone arrival, plus the pinned out-of-order divergence
-counter-example), the stateless URL gate on a real stream, and pin
-lifecycle bounds."""
+"""Streaming twins of the web family: full-history parity of the domain
+grid with the batch op in ANY arrival order, the stateless URL gate on a
+real stream, and pin lifecycle bounds."""
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import functions as F
-
 from bistro_spark.caching import pinned_ids
-from bistro_spark.operators.similarity import semdedup
 from bistro_spark.operators.web import domain_stats, with_normalized_urls
-from bistro_spark.streaming.semdedup import StreamingSemDedup
 from bistro_spark.streaming.web import StreamingDomainStats, streaming_url_gate
 
 DOCS = "/root/testdata/sf0.001/documents.parquet"
-EMB = "/root/testdata/sf0.001/embeddings.parquet"
 
 
 # ----------------------------------------------------------- url gate --
@@ -110,93 +103,3 @@ def test_streaming_domain_stats_pin_lifecycle_bounded(spark):
     s.close()
     assert pinned_ids(spark) <= before
 
-
-# ------------------------------------------------------------ semdedup --
-
-
-def _emb_corpus(spark):
-    """Embeddings + exact copies of vec_id<15 (ids +100000) so
-    same-cluster ≥0.99 pairs exist across triggers."""
-    emb = spark.read.parquet(EMB).select("vec_id", "embedding")
-    dups = emb.filter("vec_id < 15").withColumn(
-        "vec_id", F.col("vec_id") + 100000
-    )
-    return emb.unionByName(dups)
-
-
-KW = dict(n_clusters=8, threshold=0.99, dim=64)
-
-
-def test_streaming_semdedup_id_monotone_parity(spark):
-    """Id-monotone arrival: after every trigger the union of emissions
-    equals batch semdedup over everything seen (id, cluster, is_dup)."""
-    corpus = _emb_corpus(spark)
-    cuts = [(0, 200), (200, 500), (500, 200000)]
-    s = StreamingSemDedup(spark, **KW)
-    emitted: dict = {}
-    seen = None
-    for lo, hi in cuts:
-        b = corpus.filter(f"vec_id >= {lo} AND vec_id < {hi}")
-        out = s.process_batch(b).collect()
-        for r in out:
-            emitted[r["id"]] = (r["cluster"], r["is_dup"])
-        seen = b if seen is None else seen.unionByName(b)
-        want = {
-            r["vec_id"]: (r["cluster"], r["is_dup"])
-            for r in semdedup(seen, **KW).collect()
-        }
-        assert emitted == want
-    # the injected copies were flagged
-    assert sum(1 for c, d in emitted.values() if d) >= 15
-    s.close()
-
-
-def test_streaming_semdedup_out_of_order_divergence_pinned(spark):
-    """The documented counter-example: when a higher-id copy arrives
-    BEFORE its lower-id original, the stream must emit it against the
-    rows seen so far (keep), and the original's later arrival cannot
-    retroflip that emission — batch over the full corpus marks the
-    higher id dup instead. Each trigger still exactly matches batch
-    semdedup over what had ARRIVED when it fired."""
-    corpus = _emb_corpus(spark)
-    hi = corpus.filter("vec_id >= 100000")  # the copies (higher ids)
-    lo = corpus.filter("vec_id < 100000")
-    s = StreamingSemDedup(spark, **KW)
-    first = {r["id"]: r["is_dup"] for r in s.process_batch(hi).collect()}
-    # trigger-local parity: identical to batch over the arrived prefix
-    want_hi = {
-        r["vec_id"]: r["is_dup"] for r in semdedup(hi, **KW).collect()
-    }
-    assert first == want_hi
-    second = {r["id"]: r["is_dup"] for r in s.process_batch(lo).collect()}
-    # the keep-first rule anchors on LOWER ids only, so the late-arriving
-    # originals are not flagged against their higher-id copies
-    assert not any(second[i] for i in range(15))
-    batch = {
-        r["vec_id"]: r["is_dup"]
-        for r in semdedup(corpus, **KW).collect()
-    }
-    # pinned divergence: batch flags high-id copies as dups of their
-    # originals; the stream already emitted (at least some of) them as
-    # keeps because the originals had not arrived yet
-    div = [i for i in range(15) if batch[i + 100000] and not first[i + 100000]]
-    assert div
-    s.close()
-
-
-def test_streaming_semdedup_pin_lifecycle_and_store(spark):
-    corpus = _emb_corpus(spark)
-    s = StreamingSemDedup(spark, **KW)
-    before = set(pinned_ids(spark))
-    total = 0
-    for i in range(2):
-        b = corpus.filter(f"vec_id % 2 = {i}")
-        s.process_batch(b).collect()
-        total += b.count()
-        assert s.store_rows() == total
-    during = pinned_ids(spark) - before
-    assert len(during) <= 4  # store + previous-trigger blocks only
-    sizes = {r["cluster"]: r["n_in_cluster"] for r in s.cluster_sizes().collect()}
-    assert sum(sizes.values()) == total
-    s.close()
-    assert pinned_ids(spark) <= before

@@ -5,7 +5,8 @@ split, the memoized Arrow encode, the fertility report and the SQL
 twins' per-document tail are written once. These tests pin the one
 word-split rule on Python, Spark and DuckDB, run each tokenizer's Spark
 encode and fertility against its DuckDB twin on text with Unicode
-whitespace, and guard by AST that the shared pieces stay shared."""
+whitespace, and guard by AST that the shared pieces (and the batch
+kernels the streaming twins reuse) stay shared."""
 
 from __future__ import annotations
 
@@ -177,6 +178,31 @@ def test_no_eight_line_window_shared_between_tokenizer_modules():
     for i, a in enumerate(TOKENIZER_MODULES):
         for b in TOKENIZER_MODULES[i + 1 :]:
             assert not wins[a] & wins[b], (a, b)
+
+
+def _lookup(module, dotted):
+    node = ast.parse((PKG / module).read_text())
+    for name in dotted.split("."):
+        node = next(
+            n for n in node.body
+            if isinstance(n, (ast.FunctionDef, ast.ClassDef)) and n.name == name
+        )
+    return node
+
+
+STREAM_TWINS = {
+    ("streaming/pq.py", "pq_gate"): {"pq_encode"},
+    ("streaming/heavy.py", "StreamingHeavyHitters"): {"mg_summaries", "mg_cap"},
+}
+
+
+@pytest.mark.parametrize("site", sorted(STREAM_TWINS), ids=lambda s: s[1])
+def test_streaming_twins_call_the_batch_kernels(site):
+    """The twins call the batch kernel and keep no copy of it: no Arrow
+    map stage, window or n-gram zip of their own."""
+    names = _names(_lookup(*site))
+    assert STREAM_TWINS[site] <= names
+    assert not names & {"mapInPandas", "pandas_udf", "Window", "arrays_zip"}
 
 
 def test_one_ngram_extractor():
