@@ -1100,34 +1100,18 @@ def vocab_growth(
     fit is bit-identical cross-engine. One corpus pass + grid windows;
     output is n_checkpoints rows.
     """
-    return vocab_growth_from_grid(
-        vocab_growth_grid(df, id_col, text_col, n_checkpoints)
-    )
-
-
-def vocab_growth_terms(
-    df: DataFrame, id_col: str, text_col: str, n_checkpoints: int
-) -> DataFrame:
-    """(b, term): every non-empty token tagged with its document's md5
-    checkpoint bucket."""
+    # every non-empty token tagged with its document's md5 checkpoint
     bucket = (
         F.conv(
             F.substring(F.md5(F.col(id_col).cast("string")), 1, 8), 16, 10
         ).cast("bigint")
         % int(n_checkpoints)
     )
-    return df.select(
+    terms = df.select(
         bucket.alias("b"), F.explode(F.split(F.col(text_col), " ")).alias("term")
     ).filter(F.col("term") != "")
-
-
-def vocab_growth_grid(
-    df: DataFrame, id_col: str, text_col: str, n_checkpoints: int
-) -> DataFrame:
-    """The partials of :func:`vocab_growth`: the (b, n_tokens, new_terms)
-    checkpoint grid — tokens per checkpoint and terms whose first
-    appearance falls in it."""
-    terms = vocab_growth_terms(df, id_col, text_col, n_checkpoints)
+    # the (b, n_tokens, new_terms) checkpoint grid: tokens per checkpoint
+    # and terms whose first appearance falls in it
     tok = terms.groupBy("b").agg(F.count("*").cast("long").alias("n_tokens"))
     first = (
         terms.groupBy("term")
@@ -1140,18 +1124,14 @@ def vocab_growth_grid(
     # a broadcast LEFT join (grid-sized build side) replaces the
     # full-outer the first draft used (full-outer cannot broadcast and
     # planned two SortMergeJoins over 10-row inputs)
-    return tok.join(
+    grid = tok.join(
         F.broadcast(first.withColumnRenamed("fb", "b")), "b", "left"
     ).select(
         "b",
         F.coalesce("n_tokens", F.lit(0)).alias("n_tokens"),
         F.coalesce("new_terms", F.lit(0)).alias("new_terms"),
     )
-
-
-def vocab_growth_from_grid(grid: DataFrame) -> DataFrame:
-    """The finalizer of :func:`vocab_growth` over a
-    :func:`vocab_growth_grid`: running sums and the log-log fit."""
+    # running sums over the grid and the log-log fit
     w = Window.orderBy("b").rowsBetween(Window.unboundedPreceding, 0)
     curve = grid.select(
         F.col("b").cast("long").alias("checkpoint"),

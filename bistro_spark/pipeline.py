@@ -5,8 +5,10 @@ batch of pre-tokenized sequences (doc_id, tokens, n_tok, source):
 
   1. calc:  recompute ``n_tok_calc = size(tokens)`` (native Catalyst)
      plus a content fingerprint — reference ``Column.java#calc``.
-  2. link:  attach the ``sources`` dimension on ``source`` via broadcast
-     hash join (no fact shuffle) — reference ``Column.java#link``.
+  2. link:  attach the ``sources`` dimension on ``source`` — reference
+     ``Column.java#link``. The dim is driver-side rows, so the link is a
+     map lookup inside the fact projection: no join, no fact shuffle and
+     no broadcast job.
   3. accu:  per-source aggregates (sequence count, token sum, weighted
      token sum through the link path) — reference ``Column.java#accu``;
      Spark runs it partial+final so the skewed ``source`` key (zipf 8:4:2:1)
@@ -60,8 +62,9 @@ def prepare_facts(
 ) -> DataFrame:
     """The calc+link phase only (no accumulate) — the per-delta part of the
     pipeline, reused by the incremental runner and streaming mode. calc and
-    link are per-row/broadcast ops, so applying them to just the delta is
-    exact (the reference evaluates them over only the added span).
+    link are per-row ops, so applying them to just the delta is exact (the
+    reference evaluates them over only the added span). The dim frame and
+    its link's lookup are built once per session, not once per delta.
 
     ``sketch=True`` swaps the two JVM token calcs (size + xxhash64) for the
     fused Arrow sketch stage (n_tok + MinHash signature + sketch-derived

@@ -14,7 +14,8 @@ Design (NOT a port): the reference materializes each column into its own
 in-memory array and evaluates per-row Java lambdas in dependency order.  Here
 a Table is a *recipe*: a base DataFrame (or prod/range generator) plus an
 ordered list of column ops.  ``Table.df()`` compiles the whole recipe into a
-single Catalyst plan — withColumn for calc, broadcast left-join for link,
+single Catalyst plan — withColumn for calc, broadcast left-join for link
+(an in-plan map lookup when the target is driver-side rows),
 groupBy().agg() + broadcast join-back for accumulate, Window frames for roll —
 and Catalyst performs the topological ordering, common-subplan sharing,
 column pruning and predicate pushdown that the reference hand-implements in
@@ -37,6 +38,13 @@ from typing import Any, Callable, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    BooleanType,
+    DataType,
+    DateType,
+    NumericType,
+    StringType,
+)
 
 # Separator used to materialize a ColumnPath hop ("link.attr") as a flat
 # column name ("link__attr") — Spark column names with dots need escaping
@@ -411,41 +419,43 @@ class Table:
         raise TypeError(f"unknown op {op!r}")
 
     def _apply_link(self, df: DataFrame, op: LinkDef) -> DataFrame:
-        """Broadcast left equi-join; link value = matched target key.
+        """Left equi-link; link value = matched target key.
 
-        Scale notes: dims broadcast (no shuffle of the fact side); if the
-        target is large, drop ``_broadcast_as_dim`` and Spark picks
-        SMJ/shuffled-hash with AQE skew splitting.  Only the key + requested
-        ``bring`` columns of the target are selected → scan-level column
-        pruning on the dim.
+        A target of driver-side rows (see :func:`_link_lookup`) becomes a
+        map lookup inside the fact projection: no join and no broadcast
+        job. Any other target is a broadcast left join. Scale notes: dims
+        broadcast (no shuffle of the fact side); if the target is large,
+        drop ``_broadcast_as_dim`` and Spark picks SMJ/shuffled-hash with
+        AQE skew splitting. Only the key + requested ``bring`` columns of
+        the target are selected → scan-level column pruning on the dim.
         """
         tkeys = list(op.on.values())
-        bring = sorted(op.bring)
-        tdf = op.target._compile(as_dim_for=set(tkeys) | op.bring).select(
-            *[F.col(k) for k in tkeys],
-            *[F.col(c) for c in bring if c not in tkeys],
-        )
-        # Rename target side to avoid collisions: key cols -> name (single key)
-        # or name__key; bring cols -> name__col.
-        renames: dict[str, str] = {}
+        cols = [*tkeys, *[c for c in sorted(op.bring) if c not in tkeys]]
+        # the target side is renamed to avoid collisions: a single key
+        # becomes the link name, keys of a compound link name__key, and
+        # brought columns name__col
+        names = {c: f"{op.name}{PATH_SEP}{c}" for c in cols}
         if len(tkeys) == 1:
-            renames[tkeys[0]] = op.name
-        else:
-            for k in tkeys:
-                renames[k] = f"{op.name}{PATH_SEP}{k}"
-        for c in bring:
-            if c not in tkeys:
-                renames[c] = f"{op.name}{PATH_SEP}{c}"
-        tdf = tdf.select(*[F.col(c).alias(renames[c]) for c in tdf.columns])
+            names[tkeys[0]] = op.name
+        src = [_as_column(s) for s in op.on]
+        lookup = _link_lookup(op, len(tkeys), cols)
+        if lookup is not None:
+            table, key_types = lookup
+            if [f.dataType for f in df.select(*src).schema] == key_types:
+                # a struct key is never NULL, and struct equality matches
+                # NULL fields, so a NULL fact key finds a NULL dim key as
+                # eqNullSafe does
+                hit = table[F.struct(*[c.alias(k) for c, k in zip(src, tkeys)])]
+                return df.select("*", *[hit[c].alias(names[c]) for c in cols])
+        tdf = op.target._compile(as_dim_for=set(cols)).select(
+            *[F.col(c).alias(names[c]) for c in cols]
+        )
         if op.target._broadcast_as_dim:
             tdf = F.broadcast(tdf)
         cond = None
-        key_alias = (
-            [op.name] if len(tkeys) == 1 else [f"{op.name}{PATH_SEP}{k}" for k in tkeys]
-        )
-        for (src, _tgt), ka in zip(op.on.items(), key_alias):
-            c = _as_column(src).eqNullSafe(F.col(ka))
-            cond = c if cond is None else (cond & c)
+        for c, k in zip(src, tkeys):
+            eq = c.eqNullSafe(F.col(names[k]))
+            cond = eq if cond is None else (cond & eq)
         return df.join(tdf, cond, "left")
 
     def _apply_accu(self, df: DataFrame, op: AccuDef) -> DataFrame:
@@ -499,6 +509,68 @@ class Table:
         available as ``link__col`` after the link join."""
         self._links[link].bring.update(cols)
         return self
+
+
+# a link target compiles to an in-plan lookup when its key + bring frame
+# optimizes to a LocalRelation of at most this many rows (the map is
+# searched linearly for each fact row) whose columns all have these types,
+# which survive a round trip through Python literals
+_LOOKUP_ROWS = 64
+_LOOKUP_TYPES = (StringType, BooleanType, NumericType, DateType)
+
+
+def _link_lookup(
+    op: LinkDef, n_keys: int, cols: list[str]
+) -> tuple[Column, list[DataType]] | None:
+    """The link target's rows as a map from a struct of the first
+    ``n_keys`` of ``cols`` to a struct of all of ``cols``, with the key
+    types; None when the link must join.
+
+    Only driver-side rows qualify: a target whose compiled frame
+    optimizes to a ``LocalRelation`` (a ``local_frame``) carries its rows
+    in every plan that reads it, and collecting them runs no job. The map
+    replaces the broadcast, a job per query. It is built once per target
+    frame: for a target with no filter and no column of its own in
+    ``cols`` the compiled frame is its base frame's, so the result is
+    cached on that frame and lives as long as it does (a frame belongs to
+    one session). A duplicated key raises: a link is many-to-one.
+    """
+    t = op.target
+    plain = t._base is not None and not t._filters and all(
+        isinstance(o, AccuDef) and o.name not in cols for o in t._ops
+    )
+    # on the frame: {(#keys, *columns): lookup or None}
+    cache = t._base.__dict__.setdefault("_link_lookups", {}) if plain else {}
+    key = (n_keys, *cols)
+    if key in cache:
+        return cache[key]
+    tdf = t._compile(as_dim_for=set(cols)).select(*cols)
+    fields = tdf.schema.fields
+    lookup = None
+    if (
+        all(isinstance(f.dataType, _LOOKUP_TYPES) for f in fields)
+        and tdf._jdf.queryExecution().optimizedPlan().getClass().getSimpleName()
+        == "LocalRelation"
+    ):
+        rows = tdf.collect()
+        if len({tuple(r[:n_keys]) for r in rows}) < len(rows):
+            raise ValueError(
+                f"link {op.name!r}: target {t.name!r} repeats a key of "
+                f"{cols[:n_keys]}; a link is many-to-one"
+            )
+        if 0 < len(rows) <= _LOOKUP_ROWS:
+
+            def struct(values, fs):
+                return F.struct(
+                    *[F.lit(v).cast(f.dataType).alias(f.name) for v, f in zip(values, fs)]
+                )
+
+            entries = []
+            for r in rows:
+                entries += [struct(r[:n_keys], fields[:n_keys]), struct(r, fields)]
+            lookup = (F.create_map(*entries), [f.dataType for f in fields[:n_keys]])
+    cache[key] = lookup
+    return lookup
 
 
 class Schema:

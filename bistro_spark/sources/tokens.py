@@ -139,13 +139,25 @@ def sources_dim(spark: SparkSession) -> DataFrame:
     includes a group that receives no facts ('archive') so empty-group
     defaults are exercised. Built with :func:`local_frame`, so it is a JVM
     ``LocalRelation``: queries that link to it scan it without Python
-    workers.
+    workers, and a link to it compiles to an in-plan lookup, not a
+    broadcast join (``schema._link_lookup``).
+
+    One frame per session: every call with the same session returns the
+    same DataFrame, so a per-delta ``prepare_facts`` neither rebuilds it
+    nor its link's lookup, which is cached on the frame. The frame is held
+    by the session object, so it goes with that session.
     """
-    rows = [
-        ("web", 1.0, "crawl"),
-        ("code", 0.5, "github"),
-        ("books", 2.0, "scan"),
-        ("wiki", 1.5, "dump"),
-        ("archive", 9.9, "cold"),  # receives no facts
-    ]
-    return local_frame(spark, rows, "source string, weight double, origin string")
+    dim = getattr(spark, "_bistro_sources_dim", None)
+    if dim is None:
+        rows = [
+            ("web", 1.0, "crawl"),
+            ("code", 0.5, "github"),
+            ("books", 2.0, "scan"),
+            ("wiki", 1.5, "dump"),
+            ("archive", 9.9, "cold"),  # receives no facts
+        ]
+        dim = local_frame(
+            spark, rows, "source string, weight double, origin string"
+        )
+        spark._bistro_sources_dim = dim
+    return dim

@@ -32,8 +32,11 @@ re-aggregates). Two state strategies:
   segments hold exactly N rows above all others, and otherwise ranks
   only the segments that can hold it; the age threshold is max(max
   event time − interval) over the segments. The un-fold path adds the
-  delta and subtracts the evicted rows in ONE signed aggregate, ∝
-  |delta| + |evicted|.
+  delta and subtracts the evicted rows in ONE :func:`merge_grid` fold
+  into the state: each invertible fold has a per-row form (``count(*)``
+  → 1, ``sum(e)`` → e), so the delta rows carry it with sign +1 and the
+  evicted rows with sign −1, and the state is regrouped once, ∝
+  |delta| + |evicted| + |state|.
 
 This mode exists for (a) row-for-row parity tests against the oracle with
 scripted batch boundaries, (b) count-based retention, which Structured
@@ -44,9 +47,10 @@ trigger a partial aggregate over the delta (the batch operator's own
 partials), merged into a key grid, and a report that is the batch
 operator's finalizer over that grid. Counts and sums commute, so the
 report after k triggers equals the batch operator over the union of all
-deltas, in any arrival order; addition is not idempotent, so replay
-protection belongs to the foreachBatch epoch guard. The grid lives in one
-of two places, chosen by the state type:
+deltas, in any arrival order. Addition is not idempotent, and neither
+kernel has replay protection: no snapshot carries a batch id, so a
+replayed trigger is folded twice (ROADMAP direction E). The grid lives
+in one of two places, chosen by the state type:
 
 - :class:`IncrementalRunner` (``retention=None``) keeps it in executor
   storage as a pinned checkpoint. Sketch merges (``hll_union_agg``) and
@@ -60,6 +64,7 @@ of two places, chosen by the state type:
 
 from __future__ import annotations
 
+import re
 from dataclasses import dataclass
 from decimal import Decimal
 from functools import reduce
@@ -69,6 +74,7 @@ from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from bistro_spark.caching import PinOwner
+from bistro_spark.schema import _QUOTED_SPAN
 from bistro_spark.session import local_frame
 
 
@@ -102,11 +108,13 @@ class AggSpec:
     (sum, count) pairs and finalized — the classic partial-aggregate trick
     Spark itself uses for partial+final aggregation.
 
-    ``invertible=True`` declares the merge additive (sum/count): eviction
-    can then be UN-folded by subtracting the evicted span's partial instead
-    of re-aggregating the whole retained buffer (the reference's accu
-    shrink-on-remove, ColumnDefinitionAccu over the removed span). min/max
-    have no inverse — leave False and the runner falls back to recompute.
+    ``invertible=True`` declares the merge additive: eviction can then be
+    UN-folded by subtracting the evicted rows instead of re-aggregating the
+    whole retained buffer (the reference's accu shrink-on-remove,
+    ColumnDefinitionAccu over the removed span). Only ``count(*)``,
+    ``count(1)`` and ``sum(e)`` may declare it; any other ``batch_expr``
+    raises ``ValueError`` here. min/max have no inverse — leave False and
+    the runner falls back to recompute.
     """
 
     name: str
@@ -114,6 +122,37 @@ class AggSpec:
     merge_expr: str  # merge partials, e.g. "sum" | "min" | "max"
     default: object = 0
     invertible: bool = False
+
+    def __post_init__(self):
+        if self.invertible:
+            _row_form(self)
+
+
+_FOLD = re.compile(r"\s*(count|sum)\s*\((.*)\)\s*", re.I | re.S)
+
+
+def _row_form(spec: AggSpec) -> str:
+    """The per-row value of an invertible fold, as SQL: the fold over a
+    span is the sum of it over the span's rows (``count(*)`` and
+    ``count(1)`` → ``1``, ``sum(e)`` → ``e``). Any other fold raises
+    ``ValueError`` naming the spec."""
+    m = _FOLD.fullmatch(spec.batch_expr)
+    arg = m.group(2).strip() if m else ""
+    depth, depths = 0, []
+    for ch in _QUOTED_SPAN.sub("''", arg):
+        depth += {"(": 1, ")": -1}.get(ch, 0)
+        depths.append(depth)
+    # the argument must be one balanced expression, so that the call's
+    # closing parenthesis is the last character
+    if arg and depth == 0 and min(depths) >= 0:
+        if m.group(1).lower() == "sum" and not re.match(r"distinct\b", arg, re.I):
+            return arg
+        if m.group(1).lower() == "count" and arg in ("*", "1"):
+            return "1"
+    raise ValueError(
+        f"AggSpec {spec.name!r}: invertible=True needs count(*), count(1) "
+        f"or sum(e), not {spec.batch_expr!r}"
+    )
 
 
 @dataclass
@@ -193,13 +232,14 @@ class IncrementalRunner(PinOwner):
         self._schema = None  # the prepared rows' schema, once a delta came
         self._state: DataFrame | None = None  # merged aggregates (add-only mode)
         # un-fold mode: retention active AND every fold is invertible →
-        # aggregate state is updated by one signed partial (delta rows +1,
-        # evicted rows −1, a single groupBy); per-batch AGGREGATION work ∝
-        # |delta| + |evicted| instead of |window|. The segments are still
-        # retained (eviction membership needs them) but never re-aggregated,
-        # and only a segment that straddles the cutoff is scanned. A hidden
-        # count column tracks live rows per group so fully-evicted groups
-        # drop out of the read-out exactly as they do under recompute.
+        # the state takes the delta rows' per-row fold values (+) and the
+        # evicted rows' (−) in one merge_grid fold; per-batch AGGREGATION
+        # work ∝ |delta| + |evicted| + |state| instead of |window|. The
+        # segments are still retained (eviction membership needs them) but
+        # never re-aggregated, and only a segment that straddles the cutoff
+        # is scanned. A hidden count column tracks live rows per group so
+        # fully-evicted groups drop out of the read-out exactly as they do
+        # under recompute.
         auto = self._needs_buffer() and bool(aggs) and all(
             a.invertible for a in aggs
         )
@@ -208,30 +248,17 @@ class IncrementalRunner(PinOwner):
                 "unfold=True requires retention and all-invertible aggs"
             )
         self._unfold = auto if unfold is None else unfold
+        self._forms = [_row_form(a) for a in aggs] if self._unfold else []
+        # sign (+1 added, −1 evicted) → the columns a row carries into the
+        # state: keys, each fold's per-row value times the sign, and the
+        # sign as its live-row count. Built from the first delta's schema:
+        # each value is cast to its batch aggregate's result type, so the
+        # state is the sum of that type from trigger 1 on, as under
+        # add-only.
+        self._signed: dict[int, list[Column]] = {}
         self.batches_seen = 0
 
     _N = "__live_rows"
-    _SIGN = "__sign"
-
-    def _signed_partial(
-        self, delta: DataFrame, evicted: DataFrame | None
-    ) -> DataFrame:
-        """ONE aggregate over the added rows (sign +1) and the evicted rows
-        (sign -1), grouped by (keys, sign): each fold and the live-row
-        count are multiplied by their span's sign, ready for
-        :func:`merge_grid` to add into the state."""
-        sign = F.col(self._SIGN)
-        rows = delta.withColumn(self._SIGN, F.lit(1))
-        if evicted is not None:
-            rows = rows.unionByName(evicted.withColumn(self._SIGN, F.lit(-1)))
-        return (
-            rows.groupBy(*self.group_keys, self._SIGN)
-            .agg(
-                *[(F.expr(a.batch_expr) * sign).alias(a.name) for a in self.aggs],
-                (F.count(F.lit(1)) * sign).alias(self._N),
-            )
-            .drop(self._SIGN)
-        )
 
     # -- ActionAdd + ActionEval --------------------------------------------
 
@@ -279,6 +306,20 @@ class IncrementalRunner(PinOwner):
         self.batches_seen += 1
         if self._schema is None:
             self._schema = new.df.schema
+            if self._unfold:
+                typed = new.df.agg(*[F.expr(a.batch_expr) for a in self.aggs])
+                values = [
+                    (a.name, F.expr(form).cast(f.dataType))
+                    for a, form, f in zip(self.aggs, self._forms, typed.schema)
+                ]
+                self._signed = {
+                    sign: [
+                        *map(F.col, self.group_keys),
+                        *[(v if sign > 0 else -v).alias(n) for n, v in values],
+                        F.lit(sign).cast("bigint").alias(self._N),
+                    ]
+                    for sign in (1, -1)
+                }
         segs = [*self._segments, new] if new.rows else self._segments
         # an empty delta moves neither the count cutoff nor the max event
         # time, so nothing evicts
@@ -305,12 +346,13 @@ class IncrementalRunner(PinOwner):
                 evicted.append(seg.df.filter(~keep))
         self._segments = self._compact(kept, dp)
         if self._unfold:
+            signed = [
+                new.df.select(*self._signed[1]),
+                *[df.select(*self._signed[-1]) for df in evicted],
+            ]
             merged = merge_grid(
                 self._state,
-                self._signed_partial(
-                    new.df,
-                    reduce(DataFrame.unionByName, evicted) if evicted else None,
-                ),
+                reduce(DataFrame.unionByName, signed),
                 self.group_keys,
             )
             # prune fully-evicted groups from STATE, not just from

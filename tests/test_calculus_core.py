@@ -371,3 +371,108 @@ def test_formula_bracket_grammar(spark):
     assert got[1]["weighted"] == 4.0
     assert got[2]["density"] == 10.0
     assert got[2]["weighted"] == 5.0
+
+
+# ------------------------------------------- link: lookup vs join parity ----
+
+LINK_DIM_SCHEMA = "k1 string, k2 int, weight double, origin string"
+LINK_DIM_ROWS = [
+    ("web", 1, 1.0, "crawl"),
+    ("web", 2, 0.5, None),
+    ("code", 1, 2.0, "github"),
+    (None, 1, 9.5, "null key"),
+    ("wiki", None, 1.5, "null k2"),
+]
+LINK_FACT_ROWS = [
+    (1, "web", 1),
+    (2, "web", 2),
+    (3, "code", 1),
+    (4, "zzz", 1),  # missing from the dim
+    (5, None, 1),  # NULL key: eqNullSafe finds the NULL dim key
+    (6, "wiki", None),
+    (7, "code", 7),
+    (8, None, None),
+]
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.mark.parametrize(
+    "on, bring",
+    [
+        ({"f1": "k1"}, ["origin"]),  # keys repeat: only k1 = 'code' is unique
+        ({"f1": "k1", "f2": "k2"}, ["weight", "origin"]),
+    ],
+    ids=["one-key", "two-keys"],
+)
+def test_link_lookup_matches_broadcast_join(spark, tmp_path, on, bring):
+    """The same dim rows as a ``local_frame`` (an in-plan lookup) and read
+    from parquet (a broadcast join) link the same facts to the same rows
+    and the same StructType, nullability included: a missing key links
+    NULL with NULL brought columns, a NULL fact key matches a NULL dim key
+    (eqNullSafe), and a two-column key matches on both."""
+    from bistro_spark.session import local_frame
+
+    rows = LINK_DIM_ROWS
+    if len(on) == 1:  # a one-key link needs unique k1
+        rows = [r for r in rows if r[1] == 1 or r[0] == "wiki"]
+    local = local_frame(spark, rows, LINK_DIM_SCHEMA)
+    path = str(tmp_path / "dim")
+    local.write.parquet(path)
+    out = []
+    for dim_df in (local, spark.read.parquet(path)):
+        s = Schema(spark)
+        dim = s.table("dim", dim_df, key=list(on.values()))
+        facts = s.table(
+            "facts", local_frame(spark, LINK_FACT_ROWS, "fid long, f1 string, f2 int")
+        )
+        facts.link("lk", dim, on=on).bring("lk", *bring)
+        out.append(facts.df())
+    lookup, join = out
+    assert "Join" not in _plan(lookup)
+    assert "BroadcastHashJoin" in _plan(join)
+    assert lookup.schema == join.schema
+    got, want = sorted(lookup.collect()), sorted(join.collect())
+    assert got == want
+    by = _by(got, "fid")
+    link = "lk" if len(on) == 1 else "lk__k1"
+    assert by[4][link] is None and by[4]["lk__origin"] is None
+    assert by[5][link] is None and by[5]["lk__origin"] == "null key"
+    if len(on) == 2:
+        assert by[2]["lk__weight"] == 0.5 and by[2]["lk__origin"] is None
+        assert by[6]["lk__origin"] == "null k2"
+        assert by[7]["lk__k1"] is None
+
+
+def test_link_lookup_refuses_duplicated_key(spark):
+    """A link is many-to-one: a driver-side dim whose key repeats raises,
+    naming the link, instead of multiplying fact rows."""
+    from bistro_spark.session import local_frame
+
+    s = Schema(spark)
+    dim = s.table(
+        "dim", local_frame(spark, LINK_DIM_ROWS, LINK_DIM_SCHEMA), key=["k1"]
+    )
+    facts = s.table("facts", local_frame(spark, LINK_FACT_ROWS, "fid long, f1 string, f2 int"))
+    facts.link("lk", dim, on={"f1": "k1"})
+    with pytest.raises(ValueError, match="link 'lk'.*many-to-one"):
+        facts.df()
+
+
+def test_sources_dim_is_one_frame_per_session(spark):
+    """``sources_dim`` returns one frame per session, and a link to it
+    compiles its lookup once: a later schema reuses the cached map."""
+    from bistro_spark.pipeline import prepare_facts
+    from bistro_spark.sources.tokens import sources_dim, token_table
+
+    dim = sources_dim(spark)
+    assert sources_dim(spark) is dim
+    assert sources_dim(spark.newSession()) is not dim
+    batch = token_table(spark, 10)
+    prepare_facts(spark, batch)
+    cached = dict(dim._link_lookups)
+    prepare_facts(spark, batch)
+    assert dim._link_lookups.keys() == cached.keys()
+    assert all(v is cached[k] for k, v in dim._link_lookups.items())

@@ -15,11 +15,11 @@ from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from bistro_spark.caching import pinned_ids
+from bistro_spark.caching import pin, pinned_ids, release
 from bistro_spark.pipeline import prepare_facts
 from bistro_spark.session import local_frame
 from bistro_spark.sources.tokens import token_table_fast
-from bistro_spark.streaming.incremental import AggSpec, IncrementalRunner
+from bistro_spark.streaming.incremental import AggSpec, IncrementalRunner, _row_form
 
 N = 1000
 SPLITS = [100, 400, 50, 450]  # uneven on purpose (FIXTURES.md F3)
@@ -459,20 +459,18 @@ def test_incremental_retention_parity_property(
             runner.close()
 
 
-# Spark jobs one aligned steady-state retention add_batch of the calc →
-# broadcast-link delta below ran (4 CPUs) when every step ranked, filtered
-# and re-pinned the whole retained window (cutoff collect, window copy,
-# and an evict filter inside the state pin)
-WINDOW_COPY_JOBS = 7
+# Spark jobs of one aligned steady-state retention add_batch of the calc →
+# link delta below: the delta's pin, then the state pin's one merge_grid
+# fold (its shuffle's map stage and the pin)
+STEP_JOBS = 3
 
 
 def test_incremental_retention_step_jobs_and_pins(spark):
-    """One aligned steady-state un-fold retention step over a cached delta
-    runs at least 2 fewer Spark jobs than the ``WINDOW_COPY_JOBS`` it ran
-    when each step copied the retained window: the delta's pin (its own
-    job observes the segment stats) and the state's pin; the cutoff comes
-    from the stats, and the oldest segment leaves whole. After each step
-    the runner holds one pin per retained segment plus the state, and at
+    """Pinning a prepared delta runs its one job, none for the dim. One
+    aligned steady-state un-fold retention step over a cached delta runs
+    at most ``STEP_JOBS`` Spark jobs: the cutoff comes from the segment
+    stats, and the oldest segment leaves whole. After each step the
+    runner holds one pin per retained segment plus the state, and at
     most one segment more than the window needs."""
     size, n_deltas = 200, 5
     retention = 2 * size
@@ -484,12 +482,19 @@ def test_incremental_retention_step_jobs_and_pins(spark):
         )
         for lo in range(0, size * n_deltas, size)
     ]
+    sc = spark.sparkContext
+    for i in range(2):  # the first may build the dim's lookup
+        group = f"prepare-pin-{i}"
+        sc.setJobGroup(group, group)
+        _, ids = pin(prepare_facts(spark, deltas[0]))
+        sc.setJobGroup("", "")
+        release(spark, ids)
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1, i
     before = pinned_ids(spark)
     runner = IncrementalRunner(
         spark, lambda b: prepare_facts(spark, b), ["src"], UNFOLD_AGGS,
         retention_count=retention,
     )
-    sc = spark.sparkContext
     jobs = []
     try:
         for i, delta in enumerate(deltas):
@@ -504,12 +509,37 @@ def test_incremental_retention_step_jobs_and_pins(spark):
             assert len(pinned) == segments + 1, i
             assert segments <= -(-retention // size) + 1, i
         # steps 2.. evict; the last two are steady state
-        assert max(jobs[-2:]) <= WINDOW_COPY_JOBS - 2, jobs
+        assert max(jobs[-2:]) <= STEP_JOBS, jobs
         runner.close()
         assert pinned_ids(spark) == before
     finally:
         runner.close()
         full.unpersist()
+
+
+@pytest.mark.parametrize(
+    "expr, form",
+    [("count(*)", "1"), ("COUNT( 1 )", "1"), ("sum(x)", "x"),
+     ("sum(cast(x as decimal(20,6)))", "cast(x as decimal(20,6))"),
+     ("sum(a * (b + 1))", "a * (b + 1)"), ("sum(concat(')', x))", "concat(')', x)")],
+)
+def test_invertible_aggspec_row_form(expr, form):
+    """An invertible fold's per-row form, whose sum over a span is the
+    fold over it: 1 for a row count, e for sum(e)."""
+    assert _row_form(AggSpec("a", expr, "sum", invertible=True)) == form
+
+
+@pytest.mark.parametrize(
+    "expr", ["avg(x)", "sum(distinct x)", "count(x)", "count(distinct x)",
+             "sum(a) + sum(b)", "sum(a) - count(*)", "max(x)", "sum()",
+             "sum(x) filter (where y)", "2 * sum(x)"],
+)
+def test_invertible_aggspec_refuses_other_folds(expr):
+    """Only count(*), count(1) and sum(e) have a per-row form whose sum
+    is the fold; any other invertible spec raises at construction."""
+    with pytest.raises(ValueError, match="'a'"):
+        AggSpec("a", expr, "sum", invertible=True)
+    AggSpec("a", expr, "sum")  # not invertible: recompute folds it
 
 
 @pytest.mark.parametrize("unfold", [None, False], ids=["unfold", "recompute"])

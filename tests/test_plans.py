@@ -2,7 +2,8 @@
 
 Correctness tests prove the operators compute the right values; these
 prove Catalyst compiles our recipes into the plans that survive scale:
-broadcast link joins (no fact shuffle), fused partial+final accumulates
+links that never shuffle the facts (an in-plan lookup for driver-side
+dims, a broadcast join otherwise), fused partial+final accumulates
 (one exchange for N accu columns), scan-level column pruning, parquet
 filter pushdown, and whole-stage codegen coverage. A regression here is a
 silent 10-100x slowdown at cluster scale long before any test fails.
@@ -37,17 +38,35 @@ def token_parquet(spark, tmp_path_factory):
 
 
 def test_link_is_broadcast_join_no_fact_shuffle(spark):
-    """C3 link compiles to BroadcastHashJoin: the dim ships to the facts,
-    the fact side never exchanges (Column.java#link is a per-row lookup —
-    shuffling the facts for it would be the classic scale mistake)."""
+    """C3 link never shuffles the facts (Column.java#link is a per-row
+    lookup — shuffling the facts for it would be the classic scale
+    mistake). The flagship's ``sources_dim`` is driver-side rows, so its
+    link is a map lookup inside the fact projection: no exchange at all,
+    not even the dim's broadcast, and no join."""
     from bistro_spark.pipeline import build_pipeline
 
     _, facts, _ = build_pipeline(spark, token_table(spark, 100))
     plan = plan_of(facts.df())
+    assert "Exchange" not in plan
+    assert "SortMergeJoin" not in plan
+    assert "Join" not in plan
+
+
+def test_parquet_link_is_broadcast_join_no_fact_shuffle(spark, tmp_path):
+    """A dim read from parquet still compiles to a BroadcastHashJoin: the
+    dim ships to the facts, and the only exchange is its broadcast, never
+    a hash repartition of the facts."""
+    from bistro_spark.sources.tokens import sources_dim
+
+    path = str(tmp_path / "sources")
+    sources_dim(spark).write.parquet(path)
+    s = Schema(spark)
+    dim = s.table("sources", spark.read.parquet(path), key=["source"])
+    facts = s.table("tokens", token_table(spark, 100))
+    facts.link("src", dim, on={"source": "source"}).bring("src", "weight")
+    plan = plan_of(facts.df())
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
-    # the only exchange is the broadcast of the dim, never a hash
-    # repartition of the facts
     assert "Exchange hashpartitioning" not in plan
 
 
